@@ -20,8 +20,10 @@ import graft.translate.Translate
   * are dropped from later ones. The seen-key sets are CHECKPOINTED parquet
   * snapshots (SURVEY §7.2-5): each write commits a new version via
   * [[CheckpointStore]], so lineage stays one-snapshot deep regardless of
-  * how many write calls the session makes, cache memory is bounded (the
-  * per-call fresh set is unpersisted after use), and a NEW session over
+  * how many write calls the session makes, cache memory is bounded (each
+  * call's deduplicated, keyed batch is cached once, feeds both the sink's
+  * fresh rows and the next snapshot's keys, and is released after the
+  * commit), and a NEW session over
   * the same output directory resumes the seen state — idempotent re-runs
   * across JVMs, which the reference's in-memory Deduplicator cannot do.
   * Rel-as-node entities get the same treatment keyed on (label, node id)
@@ -97,24 +99,26 @@ final class KgSession(
       }
     }
 
-  /** Anti-join `keyed` (payload + one `_k` column, distinct per key after
-    * the upstream dedup) against the live seen set, run `use` on the fresh
-    * rows, then commit the COMPACTED next snapshot: live-and-not-resighted
-    * keys keep their stamp, every key in this batch (fresh or resighted)
-    * refreshes to now, expired keys drop out, and the superseded snapshot
-    * version is deleted — one live snapshot per key space, bounded by the
-    * TTL horizon. */
+  /** Cache `keyed` (payload + one `_k` column, distinct per key after the
+    * upstream dedup) once, then derive both consumers from that cache: `use`
+    * runs on the fresh rows (`keyed` anti-join the live seen keys), and the
+    * COMPACTED next snapshot takes every key of the batch. Live-and-not-
+    * resighted keys keep their stamp, every key in this batch (fresh or
+    * resighted) refreshes to now, expired keys drop out, and the superseded
+    * snapshot version is deleted — one live snapshot per key space, bounded
+    * by the TTL horizon. The cache is released once the commit has
+    * finished, so the call's input (scan, translation, dedup exchange) is
+    * evaluated exactly once. */
   private def withFresh[T](space: String, keyed: DataFrame)(use: DataFrame => T): T = {
     val now = nowMs()
     val live = seenLive(space, now)
-    val fresh = live match {
-      case Some(s) => keyed.join(s.select("_k"), Seq("_k"), "left_anti")
-      case None    => keyed
-    }
-    val freshCached = fresh.cache()
+    val batch = keyed.cache()
     try {
-      val r = use(freshCached)
-      val incoming = keyed.select(col("_k")).withColumn("_ts", lit(now))
+      val r = use(live match {
+        case Some(s) => batch.join(s.select("_k"), Seq("_k"), "left_anti")
+        case None    => batch
+      })
+      val incoming = batch.select(col("_k")).withColumn("_ts", lit(now))
       val nextKeys = live match {
         case Some(s) =>
           s.select(col("_k"), col("_ts"))
@@ -128,7 +132,7 @@ final class KgSession(
       store.drop(s"$space/v${v - 1}") // compaction: one live snapshot
       version(space) = v
       r
-    } finally freshCached.unpersist(blocking = false)
+    } finally batch.unpersist(blocking = false)
   }
 
   private def edgeKey(d: Dataset[KgEdge]) = d.withColumn("_k",

@@ -480,13 +480,24 @@ object KgPipeline {
     * per-query work — 30+ query builders each paid them before this memo
     * (guide §1.2 "per-task work" at the driver). Keyed on the CONTEXT
     * (broadcasts are context-level, so one pipeline serves child sessions
-    * too — the streaming rows already rely on that); not a result cache:
-    * nothing here derives from input data. */
+    * too — the streaming rows already rely on that; its internal datasets
+    * resolve against the FIRST caller's session); not a result cache:
+    * nothing here derives from input data. Entries whose context has
+    * stopped are evicted on the next lookup, so a stopped context's
+    * broadcasts and session are not held for the life of the JVM. */
   private val pipelines =
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.SparkContext, KgConfig), KgPipeline]()
 
   /** The standard demo pipeline over the analytics domain. */
-  def analytics(spark: SparkSession, config: KgConfig = KgConfig()): KgPipeline =
+  def analytics(spark: SparkSession, config: KgConfig = KgConfig()): KgPipeline = {
+    pipelines.keySet.removeIf(_._1.isStopped)
     pipelines.computeIfAbsent((spark.sparkContext, config), _ =>
       new KgPipeline(spark, AnalyticsDomain.context(config), AnalyticsDomain.dict))
+  }
+
+  /** Contexts that currently hold a memoized pipeline. */
+  private[graft] def memoizedContexts: Set[org.apache.spark.SparkContext] = {
+    import scala.jdk.CollectionConverters._
+    pipelines.keySet.asScala.map(_._1).toSet
+  }
 }

@@ -684,10 +684,14 @@ object SparkEntry {
       // overlap them so the edge stages back-fill the node write's task tail
       // (guide §2.6). Layout maps touched are disjoint (nodeLayouts vs
       // edgeLayouts), staging dirs are UUID-distinct, rename targets are
-      // disjoint file names.
+      // disjoint file names: the schema's node and edge file labels are
+      // required disjoint before the fork.
       locally {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
+        pg.requireDisjointFileLabels(
+          ctx.specs.collect { case (c, sp) if sp.representedAs == "node" => c },
+          ctx.specs.collect { case (c, sp) if sp.representedAs == "edge" => sp.labelAsEdge.getOrElse(c) })
         // materialize the shared dm cache once BEFORE forking, so the two
         // concurrent first-actions don't race to compute the same blocks
         dm.count()

@@ -1,8 +1,10 @@
 package graft.checkpoint
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Iceberg-style checkpointed stage store ("IcebergishStore", SURVEY §7.2-8).
   *
@@ -31,31 +33,39 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
 
   /** Write `df` as the stage snapshot + lineage manifest; returns the
     * read-back DataFrame (so downstream reads the committed snapshot, not
-    * the recomputed plan). Overwrites any partial previous attempt —
-    * the manifest is written last, so a crash mid-write leaves the stage
-    * uncommitted and a rerun redoes it (idempotent). */
+    * the recomputed plan). The read-back takes the written frame's schema
+    * (made nullable, as Parquet stores it), so no schema is inferred from
+    * files this store just wrote. The manifest's per-file rows and bytes
+    * come from the committed files' Parquet footers and listing: O(files)
+    * on the driver, no scan of the snapshot. Overwrites any partial
+    * previous attempt — the manifest is written last, so a crash
+    * mid-write leaves the stage uncommitted and a rerun redoes it
+    * (idempotent). */
   def commit(stage: String, df: DataFrame): DataFrame = {
     val dir = stageDir(stage)
     val t0 = System.nanoTime()
     df.write.mode("overwrite").parquet(dir.toString)
     val wallMs = (System.nanoTime() - t0) / 1000000
-    val back = spark.read.parquet(dir.toString)
-    // per-file (= per committed partition) lineage rows
-    val perFile = back.groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("rows")).collect()
-    val files = perFile.map { r =>
-      val f = r.getString(0)
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      val size = try fs.getFileStatus(new Path(dir, name)).getLen
-        catch { case _: Exception => -1L }
-      s"""{"file":${q(name)},"rows":${r.getLong(1)},"bytes":$size}"""
+    // per-file (= per committed partition) lineage rows; files without
+    // rows (an empty partition's schema-only file) are not listed
+    val conf = spark.sparkContext.hadoopConfiguration
+    val perFile = fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val rows = try reader.getRecordCount finally reader.close()
+        (st.getPath.getName, rows, st.getLen)
+      }
+      .filter(_._2 > 0).sortBy(_._1)
+    val files = perFile.map { case (name, rows, bytes) =>
+      s"""{"file":${q(name)},"rows":$rows,"bytes":$bytes}"""
     }
     val manifest =
       s"""{"stage":${q(stage)},"wall_ms":$wallMs,"n_files":${files.length},
-         |"total_rows":${perFile.map(_.getLong(1)).sum},
+         |"total_rows":${perFile.map(_._2).sum},
          |"partitions":[${files.mkString(",")}]}""".stripMargin.replace("\n", "")
     writeString(manifestPath(stage), manifest)
-    back
+    spark.read.schema(CheckpointStore.nullable(df.schema)).parquet(dir.toString)
   }
 
   /** Remove a committed snapshot (compaction); no-op when absent. */
@@ -153,4 +163,19 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
 
   private def q(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+}
+
+object CheckpointStore {
+
+  /** The schema Spark's Parquet writer stores for `t`: every field, array
+    * element and map value nullable (Spark's own `asNullable` is internal). */
+  private def nullable(t: StructType): StructType = nullableType(t).asInstanceOf[StructType]
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType   => MapType(nullableType(m.keyType), nullableType(m.valueType), valueContainsNull = true)
+    case other        => other
+  }
 }

@@ -236,6 +236,16 @@ abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntityS
   def writeImportCall(): String =
     writeDriverFile(outDir, importScriptName, constructImportCall())
 
+  /** A node write and an edge write may run at the same time into this
+    * sink's outDir only over disjoint file labels: each write numbers and
+    * renames the part files of its own labels, so a shared file label
+    * would race on part numbers. Driver-side and label-bounded. */
+  def requireDisjointFileLabels(nodeLabels: Iterable[String], edgeLabels: Iterable[String]): Unit = {
+    val shared = nodeLabels.map(fileLabel).toSet.intersect(edgeLabels.map(fileLabel).toSet)
+    require(shared.isEmpty,
+      s"node and edge writes share file labels ${shared.toSeq.sorted.mkString(", ")}")
+  }
+
   /** Part files of a label, sorted (for import-call assembly). */
   def partsOf(fileLabel: String): Seq[String] = {
     val out = new org.apache.hadoop.fs.Path(outDir)

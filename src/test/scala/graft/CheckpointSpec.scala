@@ -60,4 +60,50 @@ class CheckpointSpec extends AnyFunSuite {
     assert(row.getAs[Long]("total_rows") == 50)
     assert(row.getAs[Long]("n_files") >= 1)
   }
+
+  /** The manifest's partitions as (file, rows) plus its n_files/total_rows. */
+  private def manifest(store: CheckpointStore, stage: String) = {
+    val row = store.lineage().filter(col("stage") === stage).head()
+    val parts = row.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("partitions")
+    (Option(parts).getOrElse(Nil).map(p => p.getAs[String]("file") -> p.getAs[Long]("rows")).toMap,
+      row.getAs[Long]("n_files"), row.getAs[Long]("total_rows"))
+  }
+
+  /** (file, rows) counted by scanning the committed files. */
+  private def scanned(root: String, stage: String): Map[String, Long] =
+    spark.read.parquet(s"$root/stage=$stage")
+      .groupBy(input_file_name().as("f")).count().as[(String, Long)].collect()
+      .map { case (f, n) => f.substring(f.lastIndexOf('/') + 1) -> n }.toMap
+
+  test("footer-based manifest matches a scan of the committed files") {
+    val root = Files.createTempDirectory("graft-ckpt-").toString
+    val store = new CheckpointStore(spark, root)
+    // 4 hash partitions over 3 distinct keys: at least one partition is empty
+    store.commit("multi", spark.range(200).repartition(4, col("id") % 3).toDF("id"))
+    val (parts, nFiles, total) = manifest(store, "multi")
+    assert(parts == scanned(root, "multi"))
+    assert(nFiles == parts.size && nFiles >= 1 && nFiles <= 3 && total == 200)
+    store.commit("spread", spark.range(200).repartition(4).toDF("id"))
+    val (sParts, sFiles, sTotal) = manifest(store, "spread")
+    assert(sParts == scanned(root, "spread"))
+    assert(sFiles == 4 && sTotal == 200 && sParts.values.sum == 200)
+    store.commit("empty", spark.range(0).toDF("id"))
+    val (eParts, eFiles, eTotal) = manifest(store, "empty")
+    assert(eParts.isEmpty && scanned(root, "empty").isEmpty)
+    assert(eFiles == 0 && eTotal == 0)
+  }
+
+  test("commit returns the committed schema, nullability included") {
+    val root = Files.createTempDirectory("graft-ckpt-").toString
+    val store = new CheckpointStore(spark, root)
+    val df = spark.range(5).toDF("id").withColumn("tag", lit("t"))
+      .withColumn("xs", array(lit(1), lit(2)))
+    assert(!df.schema("tag").nullable && !df.schema("id").nullable)
+    val first = store.readOrCompute("s")(df)
+    val onDisk = spark.read.parquet(s"$root/stage=s").schema
+    assert(first.schema == onDisk)
+    val resumed = store.readOrCompute("s")(fail("a committed stage must not recompute"))
+    assert(resumed.schema == first.schema)
+    assert(first.orderBy("id").collect().toSeq == resumed.orderBy("id").collect().toSeq)
+  }
 }

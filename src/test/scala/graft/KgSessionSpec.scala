@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.util.LongAccumulator
 import graft.model._
 import graft.model.Props.Props
 
@@ -20,6 +21,23 @@ class KgSessionSpec extends AnyFunSuite {
     RawNode(id, "protein", Props.of(
       "name" -> PV.str("x"), "score" -> PV.dbl(1.0),
       "taxon" -> PV.int(9606), "genes" -> PV.arr(Seq("g"))))
+
+  private def partLines(dir: String, fileLabel: String): List[String] = {
+    val it = Files.list(java.nio.file.Path.of(dir)).iterator()
+    var rows = List.empty[String]
+    while (it.hasNext) {
+      val p = it.next()
+      if (p.getFileName.toString.startsWith(s"$fileLabel-part"))
+        rows ++= Files.readAllLines(p).toArray(Array.empty[String]).toList
+    }
+    rows
+  }
+
+  private def seenKeys(dir: String, space: String): Set[String] = {
+    val base = s"$dir/_graft_checkpoint/stage=$space"
+    val live = new java.io.File(base).list().filter(_.startsWith("v")).map(_.drop(1).toInt).max
+    spark.read.parquet(s"$base/v$live").select("_k").as[String].collect().toSet
+  }
 
   test("duplicates are dropped across successive add calls (first wins)") {
     val s = session()
@@ -90,15 +108,51 @@ class KgSessionSpec extends AnyFunSuite {
     s.writeNodes(spark.createDataset(Seq(protein("p1"))))
     s.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"))))
     // p1 written once: part000 has 1 row, part001 has only p2
-    val all = Files.list(java.nio.file.Path.of(s.outDir)).iterator()
-    var rows = List.empty[String]
-    while (all.hasNext) {
-      val p = all.next()
-      if (p.getFileName.toString.startsWith("Protein-part"))
-        rows ++= Files.readAllLines(p).toArray(Array.empty[String]).toList
-    }
+    val rows = partLines(s.outDir, "Protein")
     assert(rows.count(_.startsWith("p1;")) == 1)
     assert(rows.count(_.startsWith("p2;")) == 1)
+  }
+
+  test("writeNodes evaluates its input once when a live snapshot exists") {
+    val s = session()
+    s.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"))))
+    val acc = spark.sparkContext.longAccumulator("node input rows")
+    val input = Seq(protein("p2"), protein("p3"), protein("p3"), protein("p4"))
+    s.writeNodes(spark.createDataset(input).map(KgSessionSpec.countingNode(acc)))
+    assert(acc.value == input.length,
+      s"each input row must be evaluated once, saw ${acc.value} for ${input.length}")
+    val lines = partLines(s.outDir, "Protein")
+    assert(Seq("p1", "p2", "p3", "p4").map(id => lines.count(_.startsWith(s"$id;"))) ==
+      Seq(1, 1, 1, 1))
+    assert(lines.length == 4)
+    assert(seenKeys(s.outDir, "seen_node_ids") == Set("p1", "p2", "p3", "p4"))
+  }
+
+  test("writeEdges evaluates its input once: rel-as-node and plain edges") {
+    val s = session()
+    val directed = Props.of("directed" -> PV.bool(true))
+    s.writeEdges(spark.createDataset(Seq(
+      RawEdge("r1", "p1", "p2", "phosphorylation", Props.empty),
+      RawEdge("t1", "a", "b", "post_translational", directed))))
+    val acc = spark.sparkContext.longAccumulator("edge input rows")
+    val input = Seq(
+      RawEdge("r1", "p1", "p2", "phosphorylation", Props.empty), // seen
+      RawEdge("r2", "p2", "p3", "phosphorylation", Props.empty),
+      RawEdge("t1", "a", "b", "post_translational", directed), // seen
+      RawEdge("t2", "c", "d", "post_translational", directed),
+      RawEdge("t2", "c", "d", "post_translational", directed)) // in-call duplicate
+    s.writeEdges(spark.createDataset(input).map(KgSessionSpec.countingEdge(acc)))
+    assert(acc.value == input.length,
+      s"each input row must be evaluated once, saw ${acc.value} for ${input.length}")
+    assert(partLines(s.outDir, "Phosphorylation").map(_.split(";")(0)).sorted == List("p1", "p2"))
+    assert(partLines(s.outDir, "PostTranslationalInteraction").map(_.split(";")(0)).sorted ==
+      List("t1", "t2"))
+    assert(partLines(s.outDir, "IS_SOURCE_OF").length == 2)
+    assert(partLines(s.outDir, "IS_TARGET_OF").length == 2)
+    assert(seenKeys(s.outDir, "seen_edge_keys") ==
+      Set("phosphorylation\u0000r1", "phosphorylation\u0000r2"))
+    assert(seenKeys(s.outDir, "seen_rel_keys") ==
+      Set("post translational interaction\u0000t1", "post translational interaction\u0000t2"))
   }
 
   test("seen state is checkpointed: a NEW session over the same outDir resumes dedup") {
@@ -108,13 +162,7 @@ class KgSessionSpec extends AnyFunSuite {
     // fresh session, same outDir: p1/p2 already seen (checkpointed snapshot)
     val b = new KgSession(spark, SparkTestBase.ctx, dir)
     b.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"), protein("p3"))))
-    val all = Files.list(java.nio.file.Path.of(dir)).iterator()
-    var rows = List.empty[String]
-    while (all.hasNext) {
-      val p = all.next()
-      if (p.getFileName.toString.startsWith("Protein-part"))
-        rows ++= Files.readAllLines(p).toArray(Array.empty[String]).toList
-    }
+    val rows = partLines(dir, "Protein")
     assert(rows.count(_.startsWith("p1;")) == 1)
     assert(rows.count(_.startsWith("p2;")) == 1)
     assert(rows.count(_.startsWith("p3;")) == 1)
@@ -127,14 +175,7 @@ class KgSessionSpec extends AnyFunSuite {
         Props.of("directed" -> PV.bool(true)))))
     s.writeEdges(raw)
     s.writeEdges(raw) // same reified relationship again: must NOT rewrite
-    val files = Files.list(java.nio.file.Path.of(s.outDir)).iterator()
-    var relRows = List.empty[String]
-    while (files.hasNext) {
-      val p = files.next()
-      if (p.getFileName.toString.startsWith("PostTranslationalInteraction-part"))
-        relRows ++= Files.readAllLines(p).toArray(Array.empty[String]).toList
-    }
-    assert(relRows.length == 1)
+    assert(partLines(s.outDir, "PostTranslationalInteraction").length == 1)
   }
 
   test("sink factory covers rdf, plain csv and networkx writers") {
@@ -383,4 +424,12 @@ class KgSessionSpec extends AnyFunSuite {
     val ids2 = s2.toDf()("protein").select("node_id").as[String].collect().sorted.toSeq
     assert(ids2 == Seq("d"), s"resumed compacted snapshot must still dedup 'a'; got $ids2")
   }
+}
+
+object KgSessionSpec {
+
+  // Row builders for the input-count specs: defined here, not in the suite,
+  // so the map closures capture only the accumulator.
+  def countingNode(acc: LongAccumulator): RawNode => RawNode = { n => acc.add(1); n }
+  def countingEdge(acc: LongAccumulator): RawEdge => RawEdge = { e => acc.add(1); e }
 }

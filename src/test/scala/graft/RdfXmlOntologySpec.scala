@@ -3,20 +3,20 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ontology._
 
-/** OWL (RDF/XML) ontology loading, mirroring the reference's real-world
-  * fixtures and assertions (reference: test/test_ontology.py:17-29 adapter
-  * cases, :37-91 hybridisation; fixtures test/ontologies/{go,so,mondo}.owl).
-  * The fixtures are read from the reference checkout as test INPUTS — the
-  * parser and graph algebra are this repo's own. */
+/** OWL (RDF/XML) ontology loading, mirroring the reference's adapter and
+  * hybridisation tests (reference: test/test_ontology.py:17-29 adapter
+  * cases, :37-91 hybridisation). The fixtures under
+  * `src/test/resources/graft/owl/` are small hand-written stand-ins for
+  * the reference's GO, SO and Mondo files: every expected value below is
+  * read off the fixture text (the class hierarchy each fixture's comment
+  * describes), not produced by running the parser. */
 class RdfXmlOntologySpec extends AnyFunSuite {
 
-  private def owl(name: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"/root/reference/test/ontologies/$name")), "UTF-8")
+  private def owl(name: String): String = TestFixtures.resource(s"owl/$name")
 
-  lazy val go = new OntologySource(RdfXmlLite.parse(owl("go.owl")), "molecular_function")
-  lazy val so = new OntologySource(RdfXmlLite.parse(owl("so.owl")), "sequence_variant")
-  lazy val mondo = new OntologySource(RdfXmlLite.parse(owl("mondo.owl")), "disease")
+  lazy val go = new OntologySource(RdfXmlLite.parse(owl("go_mini.owl")), "molecular_function")
+  lazy val so = new OntologySource(RdfXmlLite.parse(owl("so_mini.owl")), "sequence_variant")
+  lazy val mondo = new OntologySource(RdfXmlLite.parse(owl("mondo_mini.owl")), "disease")
 
   test("go adapter: root node and ancestor chain (test_go_adapter)") {
     assert(go.rootNode == "molecular function")
@@ -26,8 +26,12 @@ class RdfXmlOntologySpec extends AnyFunSuite {
   test("so adapter: root, ancestors, subgraph size (test_so_adapter)") {
     assert(so.rootNode == "sequence variant")
     assert(so.graph.dfsAncestors("lethal variant").contains("sequence variant"))
-    // reference: len(first_tail_ontology) == 6
+    // reference: len(first_tail_ontology) == 6; here the six classes that
+    // reach sequence_variant in so_mini.owl
     assert(so.graph.nodes.size == 6)
+    assert(so.graph.nodes.keySet == Set("sequence variant", "functional effect variant",
+      "lethal variant", "altered gene product level", "decreased gene product level",
+      "increased gene product level"))
   }
 
   test("mondo adapter: root and ancestors (test_mondo_adapter)") {
@@ -37,7 +41,7 @@ class RdfXmlOntologySpec extends AnyFunSuite {
 
   test("missing root label raises (test_ontology_adapter_root_node_missing)") {
     val e = intercept[IllegalArgumentException] {
-      new OntologySource(RdfXmlLite.parse(owl("so.owl")), "not_in_tree").graph
+      new OntologySource(RdfXmlLite.parse(owl("so_mini.owl")), "not_in_tree").graph
     }
     assert(e.getMessage.contains("not_in_tree"))
   }
@@ -52,8 +56,8 @@ class RdfXmlOntologySpec extends AnyFunSuite {
     val head = TestFixtures.resource("biolink_mini.ttl")
     val onto = Ontology.fromText(head, "entity",
       tails = List(
-        (owl("so.owl"), "sequence_variant", "sequence variant", true),
-        (owl("mondo.owl"), "human disease", "disease", false),
+        (owl("so_mini.owl"), "sequence_variant", "sequence variant", true),
+        (owl("mondo_mini.owl"), "human disease", "disease", false),
       ))
     val dgpl = onto.getAncestors("decreased gene product level")
     assert(dgpl.contains("decreased gene product level"))
@@ -78,6 +82,8 @@ class RdfXmlOntologySpec extends AnyFunSuite {
   test("format sniffing: parseAuto handles both serializations") {
     val ttl = TestFixtures.resource("biolink_mini.ttl")
     assert(RdfXmlLite.parseAuto(ttl).triples.nonEmpty)
-    assert(RdfXmlLite.parseAuto(owl("go.owl")).triples.nonEmpty)
+    assert(RdfXmlLite.parseAuto(owl("go_mini.owl")).triples.nonEmpty)
+    // no XML declaration: sniffed from the leading rdf:RDF element
+    assert(RdfXmlLite.parseAuto(owl("multiple_parent_nodes.owl")).triples.nonEmpty)
   }
 }

@@ -121,4 +121,18 @@ class RelationalSinkSpec extends AnyFunSuite {
     assert(script.contains("Protein-header.csv"))
     assert(script.contains("Protein-part000.csv"))
   }
+
+  test("concurrent node and edge writes require disjoint file labels") {
+    val pg = new PostgresCsvSink(pgCtx, tmpDir())
+    // the analytics domain's own split, as kg_import_call forks it
+    pg.requireDisjointFileLabels(Seq("relational operator", "document"),
+      Seq("MENTIONS", "COOCCURS_WITH"))
+    // a node class and an edge label that meet in one PascalCase file label
+    val e = intercept[IllegalArgumentException] {
+      pg.requireDisjointFileLabels(Seq("protein", "gene to disease association"),
+        Seq("GeneToDiseaseAssociation", "INTERACTS"))
+    }
+    assert(e.getMessage.contains("GeneToDiseaseAssociation"))
+    assert(!e.getMessage.contains("Protein"))
+  }
 }
