@@ -1,8 +1,9 @@
 package graft
 
 import scala.collection.immutable.ListMap
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.checkpoint.CheckpointStore
 import graft.dedup.Dedup
 import graft.model._
@@ -65,24 +66,22 @@ final class KgSession(
 
   private val store = new CheckpointStore(spark, s"$outDir/_graft_checkpoint")
 
-  /** Latest committed version per key space (resumes across sessions).
-    * Discovered by LISTING (not by probing v1 upward): compaction deletes
-    * superseded versions, so the live version is the max committed vN, and
-    * lower numbers may be holes. */
-  private val version: scala.collection.mutable.Map[String, Int] = {
-    val m = scala.collection.mutable.Map[String, Int]()
-    Seq("seen_node_ids", "seen_edge_keys", "seen_rel_keys").foreach { space =>
-      // Listing goes through the store (Hadoop FS, ADVICE r5): a non-local
-      // outDir resolves its real filesystem, and no fd is leaked.
-      m(space) = store.committedVersions(space).maxOption.getOrElse(0)
-    }
-    m
-  }
+  /** Live snapshot per key space: its committed version and frame. A space
+    * is listed and read from disk at most once per session, with the
+    * snapshot's known schema (no schema inference); after that, the frame a
+    * commit returns is the next call's snapshot. Discovered by LISTING (not
+    * by probing v1 upward): compaction deletes superseded versions, so the
+    * live version is the max committed vN, and lower numbers may be holes.
+    * Listing goes through the store (Hadoop FS, ADVICE r5): a non-local
+    * outDir resolves its real filesystem, and no fd is leaked. */
+  private val snapshots = scala.collection.mutable.Map[String, (Int, DataFrame)]()
 
-  private def seen(space: String): Option[DataFrame] =
-    version(space) match {
-      case 0 => None
-      case v => Some(store.read(s"$space/v$v"))
+  private def snapshot(space: String): Option[(Int, DataFrame)] =
+    snapshots.get(space).orElse {
+      val found = store.committedVersions(space).maxOption
+        .map(v => v -> store.read(s"$space/v$v", Some(KgSession.SeenSchema)))
+      found.foreach(snapshots(space) = _)
+      found
     }
 
   /** The LIVE (non-expired) seen keys as of `now`: snapshots carry a `_ts`
@@ -91,46 +90,49 @@ final class KgSession(
     * (exact-within-horizon; VERDICT r4 #9). Pre-TTL snapshots (no `_ts`
     * column) are treated as just-seen. */
   private def seenLive(space: String, now: Long): Option[DataFrame] =
-    seen(space).map { s =>
-      val withTs = if (s.columns.contains("_ts")) s else s.withColumn("_ts", lit(now))
+    snapshot(space).map { case (_, s) =>
+      val withTs = s.select(col("_k"), coalesce(col("_ts"), KgSession.perCall(now)).as("_ts"))
       seenTtlMs match {
-        case Some(ttl) => withTs.filter(col("_ts") >= now - ttl)
+        case Some(ttl) => withTs.filter(col("_ts") >= KgSession.perCall(now - ttl))
         case None      => withTs
       }
     }
 
   /** Cache `keyed` (payload + one `_k` column, distinct per key after the
     * upstream dedup) once, then derive both consumers from that cache: `use`
-    * runs on the fresh rows (`keyed` anti-join the live seen keys), and the
-    * COMPACTED next snapshot takes every key of the batch. Live-and-not-
+    * runs on the fresh rows (`keyed` anti-join the live seen keys), and each
+    * key space's COMPACTED next snapshot takes its keys of the batch. A
+    * batch that spans several key spaces tags each space's keys with its
+    * non-empty tag (`spaces` pairs a space with its tag). Live-and-not-
     * resighted keys keep their stamp, every key in this batch (fresh or
     * resighted) refreshes to now, expired keys drop out, and the superseded
     * snapshot version is deleted — one live snapshot per key space, bounded
-    * by the TTL horizon. The cache is released once the commit has
+    * by the TTL horizon. The cache is released once the commits have
     * finished, so the call's input (scan, translation, dedup exchange) is
     * evaluated exactly once. */
-  private def withFresh[T](space: String, keyed: DataFrame)(use: DataFrame => T): T = {
+  private def withFresh[T](spaces: Seq[(String, String)], keyed: DataFrame)(use: DataFrame => T): T = {
     val now = nowMs()
-    val live = seenLive(space, now)
+    val live = spaces.map { case (space, _) => space -> seenLive(space, now) }.toMap
+    val seenKeys = spaces.flatMap { case (space, tag) =>
+      live(space).map(_.select((if (tag.isEmpty) col("_k") else concat(lit(tag), col("_k"))).as("_k")))
+    }.reduceOption(_ union _)
     val batch = keyed.cache()
     try {
-      val r = use(live match {
-        case Some(s) => batch.join(s.select("_k"), Seq("_k"), "left_anti")
-        case None    => batch
-      })
-      val incoming = batch.select(col("_k")).withColumn("_ts", lit(now))
-      val nextKeys = live match {
-        case Some(s) =>
-          s.select(col("_k"), col("_ts"))
-            .join(incoming.select("_k"), Seq("_k"), "left_anti")
-            .select(col("_k"), col("_ts"))
-            .union(incoming)
-        case None => incoming
+      val r = use(seenKeys.fold(batch)(s => batch.join(s, Seq("_k"), "left_anti")))
+      val stamp = KgSession.perCall(now)
+      spaces.foreach { case (space, tag) =>
+        val keys =
+          if (tag.isEmpty) batch.select(col("_k"))
+          else batch.filter(col("_k").startsWith(tag))
+            .select(col("_k").substr(tag.length + 1, Int.MaxValue).as("_k"))
+        val incoming = keys.withColumn("_ts", stamp)
+        val nextKeys = live(space).fold(incoming)(s =>
+          s.join(incoming.select("_k"), Seq("_k"), "left_anti").union(incoming))
+        val v = snapshot(space).fold(0)(_._1) + 1
+        val committed = store.commit(s"$space/v$v", nextKeys)
+        store.drop(s"$space/v${v - 1}") // compaction: one live snapshot
+        snapshots(space) = v -> committed
       }
-      val v = version(space) + 1
-      store.commit(s"$space/v$v", nextKeys)
-      store.drop(s"$space/v${v - 1}") // compaction: one live snapshot
-      version(space) = v
       r
     } finally batch.unpersist(blocking = false)
   }
@@ -142,37 +144,66 @@ final class KgSession(
     concat_ws("\u0000", col("node.label"), col("node.id")))
 
   private def dedupNodesAgainstSeen[T](ns: Dataset[KgNode])(use: Dataset[KgNode] => T): T =
-    withFresh("seen_node_ids", Dedup.nodes(ns).withColumn("_k", col("id"))) { fresh =>
+    withFresh(KgSession.NodeSpace, Dedup.nodes(ns).withColumn("_k", col("id"))) { fresh =>
       use(fresh.drop("_k").as[KgNode])
     }
 
   private def dedupEdgesAgainstSeen[T](es: Dataset[KgEdge])(use: Dataset[KgEdge] => T): T =
-    withFresh("seen_edge_keys", edgeKey(Dedup.edges(es))) { fresh =>
+    withFresh(Seq("seen_edge_keys" -> ""), edgeKey(Dedup.edges(es))) { fresh =>
       use(fresh.drop("_k").as[KgEdge])
     }
 
   private def dedupRelsAgainstSeen[T](rs: Dataset[RelAsNode])(use: Dataset[RelAsNode] => T): T =
-    withFresh("seen_rel_keys", relKey(Dedup.relAsNodes(rs))) { fresh =>
+    withFresh(Seq("seen_rel_keys" -> ""), relKey(Dedup.relAsNodes(rs))) { fresh =>
       use(fresh.drop("_k").as[RelAsNode])
     }
 
   // ----------------------------------------------------------- write path
 
+  // The batch sinks (neo4j, postgres, sqlite, arango) take the flat line
+  // path: each write call renders its entities to one (_k, lines) row shape
+  // ([[graft.sinks.Rendered]]) before the dedup, so the dedup, the seen
+  // anti-join, the call's one cache, the seen commits and the one write run
+  // on that shape for every entity kind and every call
+  // ([[graft.sinks.BatchSink]] says why). The other sinks write entities.
+
+  /** Dedup the rendered batch (incl. vs earlier calls AND earlier sessions
+    * over this outDir) and write its fresh lines. `probe` says whether the
+    * batch can hold a label whose layout the write must probe. */
+  private def writeRendered(b: BatchSink, spaces: Seq[(String, String)],
+      rendered: Dataset[Rendered], probe: Boolean): Unit =
+    withFresh(spaces, rendered.toDF().dropDuplicates("_k"))(b.writeLines(_, probe))
+
+  /** Classes the translation can emit. */
+  private lazy val translatedClasses = ctx.inputLabelToClass.values.toSet
+
   /** Translate raw node tuples, dedup (incl. vs earlier calls AND earlier
     * sessions over this outDir), write. */
-  def writeNodes(raw: Dataset[RawNode]): Unit =
-    dedupNodesAgainstSeen(Translate.nodes(raw, bcCtx))(sink.writeNodes)
+  def writeNodes(raw: Dataset[RawNode]): Unit = sink match {
+    case b: BatchSink =>
+      writeRendered(b, KgSession.NodeSpace, KgSession.renderNodes(b, Translate.nodes(raw, bcCtx)),
+        probe = translatedClasses.exists(c => b.declaredNodeLayout(c).isEmpty))
+    case _ => dedupNodesAgainstSeen(Translate.nodes(raw, bcCtx))(sink.writeNodes)
+  }
 
   /** Translate raw edge tuples; plain edges written as edges, rel-as-node
-    * entities flattened nodes-first (reference: _batch_writer.py:363-369).
-    * Both are session-deduped (rel-as-node keyed on (label, node id),
-    * reference rel_as_node_seen). */
-  def writeEdges(raw: Dataset[RawEdge]): Unit = {
-    val entities = Translate.edges(raw, bcCtx).cache()
-    try {
-      dedupRelsAgainstSeen(entities.filter(_.rel != null).map(_.rel))(sink.writeRelAsNodes)
-      dedupEdgesAgainstSeen(entities.filter(_.edge != null).map(_.edge))(sink.writeEdges)
-    } finally entities.unpersist(blocking = false)
+    * entities flattened to their node and connector edges (reference:
+    * _batch_writer.py:363-369). Both are session-deduped (rel-as-node keyed
+    * on (label, node id), reference rel_as_node_seen). */
+  def writeEdges(raw: Dataset[RawEdge]): Unit = sink match {
+    case b: BatchSink =>
+      writeRendered(b, KgSession.EdgeSpaces, KgSession.renderEdges(b, Translate.edges(raw, bcCtx)),
+        probe = translatedClasses.exists { c =>
+          val spec = ctx.specs(c)
+          if (spec.representedAs == "node") b.declaredNodeLayout(c).isEmpty
+          else b.declaredEdgeLayout(spec.labelAsEdge.getOrElse(c)).isEmpty
+        })
+    case _ =>
+      val entities = Translate.edges(raw, bcCtx).cache()
+      try {
+        dedupRelsAgainstSeen(entities.filter(_.rel != null).map(_.rel))(sink.writeRelAsNodes)
+        dedupEdgesAgainstSeen(entities.filter(_.edge != null).map(_.edge))(sink.writeEdges)
+      } finally entities.unpersist(blocking = false)
   }
 
   /** Force path (reference `write_nodes(…, force=True)`,
@@ -184,8 +215,11 @@ final class KgSession(
     * because adapters with pre-translated entities need the same door.
     * Session dedup still applies (the reference's force flag skips
     * translation, not the Deduplicator). */
-  def writeNodesForce(nodes: Dataset[KgNode]): Unit =
-    dedupNodesAgainstSeen(nodes)(sink.writeNodes)
+  def writeNodesForce(nodes: Dataset[KgNode]): Unit = sink match {
+    case b: BatchSink =>
+      writeRendered(b, KgSession.NodeSpace, KgSession.renderNodes(b, nodes), probe = true)
+    case _ => dedupNodesAgainstSeen(nodes)(sink.writeNodes)
+  }
 
   def writeHeaders(): Unit = sink match {
     case b: BatchSink => b.writeHeaders()
@@ -470,6 +504,39 @@ final class KgSession(
 }
 
 object KgSession {
+
+  private val NodeSpace = Seq("seen_node_ids" -> "")
+  // one edge batch spans two key spaces, so their keys carry a tag
+  private val RelTag = "r"
+  private val EdgeTag = "e"
+  private val EdgeSpaces = Seq("seen_rel_keys" -> RelTag, "seen_edge_keys" -> EdgeTag)
+
+  /** The schema of a seen snapshot. */
+  private val SeenSchema = new StructType().add("_k", StringType).add("_ts", LongType)
+
+  /** A per-call value as a zero-argument non-deterministic UDF: it reaches
+    * the plan by reference, where a literal would be compiled into the
+    * generated code and make every call compile new classes. */
+  private def perCall(v: Long): Column = udf(() => v).asNondeterministic()()
+
+  /** concat_ws: null parts are skipped. */
+  private def concatWs(sep: String, parts: String*): String = parts.filter(_ != null).mkString(sep)
+
+  private def renderNodes(b: BatchSink, ds: Dataset[KgNode]): Dataset[Rendered] =
+    ds.map(n => Rendered(n.id, b.nodeLines(n)))(BatchSink.RenderedEncoder)
+
+  /** Rel-as-node keys are (node label, node id), plain-edge keys (label,
+    * relId or src_tgt), as the entity path's `relKey` and `edgeKey`. */
+  private def renderEdges(b: BatchSink, ds: Dataset[Entity]): Dataset[Rendered] =
+    ds.map { e =>
+      if (e.rel != null)
+        Rendered(RelTag + concatWs("\u0000", e.rel.node.label, e.rel.node.id), b.relLines(e.rel))
+      else {
+        val x = e.edge
+        val k = if (x.relId != null) x.relId else concatWs("_", x.src, x.tgt)
+        Rendered(EdgeTag + concatWs("\u0000", x.label, k), b.edgeLines(x))
+      }
+    }(BatchSink.RenderedEncoder)
 
   /** Session whose dbms + sink settings come from layered YAML config
     * (reference: _config/__init__.py:70-95 — module defaults <- user conf

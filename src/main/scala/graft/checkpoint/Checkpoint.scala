@@ -74,10 +74,11 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
     if (fs.exists(dir)) fs.delete(dir, true)
   }
 
-  /** Read a committed snapshot (stage must be committed). */
-  def read(stage: String): DataFrame = {
+  /** Read a committed snapshot (stage must be committed). With the
+    * snapshot's `schema` given, no schema is inferred from its files. */
+  def read(stage: String, schema: Option[StructType] = None): DataFrame = {
     require(isCommitted(stage), s"stage $stage is not committed")
-    spark.read.parquet(stageDir(stage).toString)
+    schema.fold(spark.read)(spark.read.schema).parquet(stageDir(stage).toString)
   }
 
   /** Read the committed snapshot, or compute + commit it. */

@@ -83,7 +83,10 @@ object DedupOps {
     // itself. Shingles are per-doc-distinct, so each doc appears once per
     // list; the hot-shingle anti-join above caps every list at maxDf, so
     // the collected list is bounded (hub-safe) and pair emission per
-    // shingle is exactly the self-join's doc_a < doc_b output.
+    // shingle is exactly the self-join's doc_a < doc_b output. A doc that
+    // appears twice in one list (a doc_id listed twice, or two of its
+    // shingles colliding in the 56-bit hash) would pair with itself; the
+    // doc_a =!= doc_b filter keeps the self-join's strict inequality.
     val grouped = sh.groupBy(col("shingle"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) >= 2)
@@ -91,6 +94,7 @@ object DedupOps {
       transform(slice(col("ids"), i + 2, size(col("ids"))),
         y => struct(x.as("doc_a"), y.as("doc_b")))))
     val pairs = grouped.select(explode(pairExpr).as("p"))
+      .filter(col("p.doc_a") =!= col("p.doc_b"))
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(count(lit(1)).as("n_common"))
     // counts feeds BOTH endpoint joins — barrier it too (per-doc rows)

@@ -2,8 +2,8 @@ package graft.sinks
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, first}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, explode, first}
 import graft.KgContext
 import graft.model._
 import graft.model.Props.Props
@@ -18,18 +18,41 @@ final case class LabelLayout(
     skipId: Boolean,           // edge-only: omit id column
 )
 
+/** One line of a bulk-import part file. `label` is a one-letter kind tag
+  * (see [[BatchSink]]) followed by the internal label; a null `label`
+  * carries a render error as data, raised only if the line is written. */
+final case class Line(label: String, value: String)
+
+/** A translated entity in the batch write path's flat shape: its dedup key
+  * and its lines (one for a node or a plain edge, none for a plain edge
+  * with a missing endpoint, the node line plus the valid connector lines
+  * for a rel-as-node). */
+final case class Rendered(_k: String, lines: Seq[Line])
+
 /** Abstract bulk-import batch sink — the Spark-native realization of the
   * reference's `_BatchWriter` (reference: output/write/_batch_writer.py)
   * with the same five format hooks its writer subclasses override
   * (`_batch_writer.py:21-104`): quote, array string, headers, import call,
   * script name.
   *
-  * Shared machinery: rows are rendered to final CSV lines by a typed map
-  * (pipelined with the upstream dedup exchange, no extra shuffle) and
-  * written with `partitionBy(fileLabel)` so per-label grouping, batching
+  * Shared machinery: every entity kind renders to one flat row shape,
+  * [[Rendered]] — a key and an array of tagged lines — by a typed map that
+  * pipelines with translation. `KgSession` dedups, anti-joins and caches
+  * that shape, and [[writeLines]] writes a whole call's lines with ONE
+  * `partitionBy(label)` write, so per-label grouping, batching
   * (`maxRecordsPerFile` = the reference's `batch_size`) and part numbering
   * are handled by the distributed commit protocol; a cheap driver-side pass
-  * renames committed files into the `{Label}-partNNN.csv` grammar.
+  * renames committed files into the `{Label}-partNNN.csv` grammar. The
+  * shape is the same for nodes, edges and rel-as-nodes, and per-call values
+  * never enter generated code, because the library cannot size the
+  * caller's codegen cache (`spark.sql.codegen.cache.maxEntries` is a static
+  * session setting): the batch write path has to fit it, so every call
+  * after the first reuses the same generated classes.
+  *
+  * A label whose properties the schema declares renders straight away. Any
+  * other label (an open class, a forced or public write) renders pending:
+  * the write takes its layout from its first written row, as the reference
+  * does, then renders it.
   */
 abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntitySink {
 
@@ -114,6 +137,10 @@ abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntityS
 
   def renderNodeLine(n: KgNode, lay: LabelLayout): String = {
     checkConsistent(n.props, lay, s"node ${n.id}", n.label)
+    nodeLine(n, lay)
+  }
+
+  private def nodeLine(n: KgNode, lay: LabelLayout): String = {
     val sb = new StringBuilder(n.id)
     if (lay.propKeys.nonEmpty) {
       val byKey = n.props.map(p => p.k -> p.v).toMap
@@ -131,6 +158,10 @@ abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntityS
 
   def renderEdgeLine(e: KgEdge, lay: LabelLayout): String = {
     checkConsistent(e.props, lay, s"edge ${e.src}-${e.tgt}", e.label)
+    edgeLine(e, lay)
+  }
+
+  private def edgeLine(e: KgEdge, lay: LabelLayout): String = {
     val byKey = e.props.map(p => p.k -> p.v).toMap
     val parts = Vector.newBuilder[String]
     parts += e.src
@@ -141,6 +172,75 @@ abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntityS
     parts += e.tgt
     parts += Naming.nameSentenceToPascal(e.label)
     parts.result().mkString(delim)
+  }
+
+  // ----------------------------------------------------------- flat lines
+
+  // Schema layouts per internal label. Transient: an executor's copy of the
+  // sink derives them once per task instead of shipping them.
+  @transient private lazy val schemaNodeLayouts: Map[String, LabelLayout] =
+    ctx.specs.collect { case (c, sp) if sp.properties.nonEmpty => c -> nodeLayout(c, Props.empty) }
+  @transient private lazy val schemaEdgeLayouts: Map[String, LabelLayout] =
+    (ctx.specs.keys ++ ctx.labelAsEdgeToClass.keys)
+      .filter(l => ctx.schemaClassForEdgeLabel(l).flatMap(ctx.spec).exists(_.properties.nonEmpty))
+      .map(l => l -> edgeLayout(l, Props.empty)).toMap
+  @transient private lazy val builtinConnectorLayouts: Map[String, LabelLayout] =
+    BuiltinRelLabels.map(l => l -> edgeLayout(l, Props.empty)).toMap
+
+  /** The layout of a node label whose properties the schema declares. */
+  def declaredNodeLayout(label: String): Option[LabelLayout] = schemaNodeLayouts.get(label)
+
+  /** The layout of an edge label whose schema class declares properties. */
+  def declaredEdgeLayout(label: String): Option[LabelLayout] = schemaEdgeLayouts.get(label)
+
+  /** Rel-as-node connector edges are built only by translation, always
+    * without properties: they take the no-property layout. */
+  private def connectorLayout(label: String): LabelLayout =
+    builtinConnectorLayouts.getOrElse(label, edgeLayout(label, Props.empty))
+
+  /** A node's line: rendered with its schema layout when the schema
+    * declares its label's properties, else pending until the write has
+    * probed the label's first row. */
+  def nodeLines(n: KgNode): Seq[Line] = Seq(declaredNodeLayout(n.label) match {
+    case Some(lay) => rendered(NodeTag, lay,
+      inconsistency(n.props, lay, s"node ${n.id}", n.label), nodeLine(n, lay))
+    case None => Line(PendingNodeTag + n.label, Pending.pack(n.id, null, null, n.props))
+  })
+
+  /** A plain edge's line; none when an endpoint is missing (the reference
+    * skips such edges: they cannot be rendered into the :START_ID/:END_ID
+    * grammar). */
+  def edgeLines(e: KgEdge): Seq[Line] =
+    if (!hasEndpoints(e)) Nil
+    else Seq(declaredEdgeLayout(e.label) match {
+      case Some(lay) => rendered(EdgeTag, lay,
+        inconsistency(e.props, lay, s"edge ${e.src}-${e.tgt}", e.label), edgeLine(e, lay))
+      case None => Line(PendingEdgeTag + e.label, Pending.pack(e.src, e.relId, e.tgt, e.props))
+    })
+
+  /** A rel-as-node's node line, then its connector lines with both
+    * endpoints (reference: _batch_writer.py:363-369). */
+  def relLines(r: RelAsNode): Seq[Line] =
+    nodeLines(r.node) ++ Seq(r.sourceEdge, r.targetEdge).filter(hasEndpoints).map { e =>
+      val lay = connectorLayout(e.label)
+      rendered(ConnectorTag, lay,
+        inconsistency(e.props, lay, s"edge ${e.src}-${e.tgt}", e.label), edgeLine(e, lay))
+    }
+
+  /** A rendered line, or its render error carried as data (label null): the
+    * write raises it only if the row survives dedup and the seen anti-join. */
+  private def rendered(tag: String, lay: LabelLayout, problem: Option[String], line: => String): Line =
+    problem match {
+      case Some(msg) => Line(null, msg)
+      case None      => Line(tag + lay.label, line)
+    }
+
+  /** A pending line rendered with its label's probed layout. */
+  private def renderPending(l: Line, lay: LabelLayout): Line = {
+    val (a, b, c, props) = Pending.unpack(l.value)
+    if (l.label.startsWith(PendingNodeTag))
+      Line(NodeTag + lay.label, renderNodeLine(KgNode(a, lay.label, null, props), lay))
+    else Line(EdgeTag + lay.label, renderEdgeLine(KgEdge(b, a, c, lay.label, props), lay))
   }
 
   // ---------------------------------------------------------------- writes
@@ -172,25 +272,10 @@ abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntityS
     layouts
   }
 
-  import BatchSink.withWriteCache
-
-  def writeNodes(ds: Dataset[KgNode]): Unit = withWriteCache(ds) { input =>
-    val spark = input.sparkSession
-    import spark.implicits._
-    val layouts = probeNodeLayouts(input)
-    val bc = spark.sparkContext.broadcast(layouts)
-    val self = this
-    val rendered = input.map { n =>
-      val lay = bc.value(n.label)
-      (lay.fileLabel, self.renderNodeLine(n, lay))
-    }.toDF("label", "value")
-    writePartitioned(spark, rendered, outDir, conf.batchSize)
-  }
-
   /** Drop edges with a missing endpoint (reference skips them with a
     * warning; they cannot be rendered into the :START_ID/:END_ID grammar). */
   protected def validEdges(ds: Dataset[KgEdge]): Dataset[KgEdge] =
-    ds.filter(e => e.src != null && e.src.nonEmpty && e.tgt != null && e.tgt.nonEmpty)
+    ds.filter(e => hasEndpoints(e))
 
   /** Edge twin of [[probeNodeLayouts]] (same declared-vs-inferred split:
     * thin label probe; fat first(props) scan only for schema-undeclared
@@ -210,27 +295,77 @@ abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntityS
     layouts
   }
 
-  def writeEdges(ds: Dataset[KgEdge]): Unit = withWriteCache(ds) { input =>
-    val spark = input.sparkSession
-    import spark.implicits._
-    val valid = validEdges(input)
-    val layouts = probeEdgeLayouts(input)
-    val bc = spark.sparkContext.broadcast(layouts)
+  // A public write may hold any label, so it always probes.
+  def writeNodes(ds: Dataset[KgNode]): Unit = {
     val self = this
-    val rendered = valid.map { e =>
-      val lay = bc.value(e.label)
-      (lay.fileLabel, self.renderEdgeLine(e, lay))
-    }.toDF("label", "value")
-    writePartitioned(spark, rendered, outDir, conf.batchSize)
+    writeCached(ds.map(n => Rendered(null, self.nodeLines(n)))(RenderedEncoder))
   }
 
-  /** Nodes first (referential integrity; reference writes RelAsNode nodes
-    * before edges, _batch_writer.py:363-369), then both connector edges. */
+  def writeEdges(ds: Dataset[KgEdge]): Unit = {
+    val self = this
+    writeCached(ds.map(e => Rendered(null, self.edgeLines(e)))(RenderedEncoder))
+  }
+
+  /** Nodes and both connector edges, in one write. */
   def writeRelAsNodes(ds: Dataset[RelAsNode]): Unit = {
-    val spark = ds.sparkSession
+    val self = this
+    writeCached(ds.map(r => Rendered(null, self.relLines(r)))(RenderedEncoder))
+  }
+
+  /** The rendered lines are cached once for the probe and the write, so the
+    * input is evaluated once. */
+  private def writeCached(rendered: Dataset[Rendered]): Unit = {
+    val cached = rendered.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try writeLines(cached.toDF(), probe = true) finally cached.unpersist(blocking = false)
+  }
+
+  /** Write one batch in the flat shape (a `lines: array<struct<label,
+    * value>>` column, see [[Line]]) as ONE partitioned write, so every call
+    * runs the same plan. With `probe`, a pending label first gets its
+    * layout from its first line in `batch`: one aggregate over `batch`,
+    * which the caller has cached. Render errors raise here, so only rows
+    * that reach the write can fail it. The header registry records exactly
+    * the labels written; node and edge file labels must be disjoint. */
+  def writeLines(batch: DataFrame, probe: Boolean): Unit = {
+    val spark = batch.sparkSession
     import spark.implicits._
-    writeNodes(ds.map(_.node))
-    writeEdges(ds.flatMap(r => Seq(r.sourceEdge, r.targetEdge)))
+    val lines = batch.select(explode(col("lines")).as("l"))
+      .select(col("l.label").as("label"), col("l.value").as("value")).as[Line]
+    val probed: Map[String, LabelLayout] =
+      if (!probe) Map.empty
+      else lines.filter(col("label").startsWith(PendingNodeTag) || col("label").startsWith(PendingEdgeTag))
+        .groupBy(col("label")).agg(first(col("value")).as("value")).as[Line].collect()
+        .map { case Line(tagged, value) =>
+          val props = Pending.unpack(value)._4
+          val label = tagged.drop(1)
+          if (tagged.startsWith(PendingNodeTag)) NodeTag + label -> nodeLayout(label, props)
+          else EdgeTag + label -> edgeLayout(label, props)
+        }.toMap
+    val bc = spark.sparkContext.broadcast(probed)
+    val self = this
+    val out = lines.map { l =>
+      if (l.label == null) throw new IllegalStateException(l.value)
+      if (l.label.startsWith(PendingNodeTag) || l.label.startsWith(PendingEdgeTag))
+        self.renderPending(l, bc.value(l.label.head.toLower +: l.label.tail))
+      else l
+    }
+    val written = try writePartitioned(spark, out.toDF(), outDir, conf.batchSize,
+      fileLabels = { tagged =>
+        val (nodes, edges) = tagged.partition(_.startsWith(NodeTag))
+        requireDisjointFileLabels(nodes.map(_.tail), edges.map(_.tail))
+        tagged.map(t => t -> fileLabel(t.tail)).toMap
+      }) finally bc.destroy()
+    val layouts = written.sorted.map { t =>
+      t -> probed.getOrElse(t,
+        if (t.startsWith(NodeTag)) nodeLayout(t.tail, Props.empty) else edgeLayout(t.tail, Props.empty))
+    }
+    def registered(tag: String) =
+      ListMap(layouts.collect { case (t, lay) if t.startsWith(tag) => lay.label -> lay }: _*)
+    // a public node write and edge write may run concurrently on one sink:
+    // each assigns only the registry it adds to
+    val (ns, es) = (registered(NodeTag), registered(ConnectorTag) ++ registered(EdgeTag))
+    if (ns.nonEmpty) nodeLayouts = nodeLayouts ++ ns
+    if (es.nonEmpty) edgeLayouts = edgeLayouts ++ es
   }
 
   def writeImportCall(): String =
@@ -263,13 +398,69 @@ abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntityS
 
 object BatchSink {
 
+  // Tags of a [[Line]]'s label: the kind of line, then the internal label.
+  // Pending lines are upper case: their label's layout is probed at write.
+  private[sinks] val NodeTag = "n"
+  private[sinks] val EdgeTag = "e"
+  private[sinks] val ConnectorTag = "c"
+  private[sinks] val PendingNodeTag = "N"
+  private[sinks] val PendingEdgeTag = "E"
+
+  val RenderedEncoder: Encoder[Rendered] = Encoders.product[Rendered]
+
+  /** The value of a pending line: the fields the line is rendered from once
+    * its label's layout is known — (id, null, null, props) for a node,
+    * (src, relId, tgt, props) for an edge — each written as
+    * `<length>:<text>`, or `~` for null. */
+  private[sinks] object Pending {
+    def pack(a: String, b: String, c: String, props: Props): String = {
+      val sb = new StringBuilder
+      def put(s: String): Unit =
+        if (s == null) sb += '~' else { sb ++= s.length.toString; sb += ':'; sb ++= s }
+      put(a); put(b); put(c)
+      put(props.length.toString)
+      props.foreach { p =>
+        put(p.k)
+        if (p.v == null) put(null)
+        else {
+          put(p.v.t); put(p.v.s)
+          if (p.v.arr == null) put(null) else { put(p.v.arr.length.toString); p.v.arr.foreach(put) }
+        }
+      }
+      sb.toString
+    }
+
+    def unpack(s: String): (String, String, String, Props) = {
+      var i = 0
+      def next(): String =
+        if (s.charAt(i) == '~') { i += 1; null }
+        else {
+          val colon = s.indexOf(':', i)
+          val end = colon + 1 + s.substring(i, colon).toInt
+          i = end
+          s.substring(colon + 1, end)
+        }
+      val (a, b, c) = (next(), next(), next())
+      val props = Vector.fill(next().toInt) {
+        val k = next()
+        val t = next()
+        if (t == null) Prop(k, null)
+        else {
+          val v = next()
+          val n = next()
+          Prop(k, PV(v, if (n == null) null else Vector.fill(n.toInt)(next()), t))
+        }
+      }
+      (a, b, c, props)
+    }
+  }
+
   /** Persist `ds` for the duration of `use` unless the caller already
-    * persisted this exact dataset: sink writes evaluate their input more
-    * than once (layout probe + render pass, or a decls/body branch pair
-    * in one union), and an unpersisted upstream (pipeline aggregates)
-    * would recompute per evaluation. A dataset DERIVED from a cached plan
-    * reads its parent's cache, so the extra persist is bounded by the
-    * write's own (post-dedup) row set either way. */
+    * persisted this exact dataset: a sink write that evaluates its input
+    * more than once (a decls/body branch pair in one union) would otherwise
+    * recompute an unpersisted upstream per evaluation. A dataset DERIVED
+    * from a cached plan reads its parent's cache, so the extra persist is
+    * bounded by the write's own (post-dedup) row set either way. */
   private[sinks] def withWriteCache[T, A](ds: Dataset[T])(use: Dataset[T] => A): A =
     if (ds.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
       val cached = ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -277,6 +468,9 @@ object BatchSink {
     } else use(ds)
 
   val BuiltinRelLabels = Set("IS_SOURCE_OF", "IS_TARGET_OF", "IS_PART_OF")
+
+  private def hasEndpoints(e: KgEdge): Boolean =
+    e.src != null && e.src.nonEmpty && e.tgt != null && e.tgt.nonEmpty
 
   val NumericBoolTypes: Set[String] =
     Set("int", "integer", "long", "float", "double", "dbl", "bool", "boolean")
@@ -296,6 +490,9 @@ object BatchSink {
 
   /** partitionBy write + rename into the `{Label}-partNNN.{ext}` grammar,
     * continuing any existing numbering (reference: _batch_writer.py:925-975).
+    * Returns the `label` values written. `fileLabels` maps them to file
+    * labels (identity by default) and may reject them before any rename;
+    * the staging directory is removed either way.
     *
     * Cluster-safe commit (VERDICT r3 #2): every filesystem operation goes
     * through the Hadoop `FileSystem` API resolved from the OUTPUT path —
@@ -313,55 +510,65 @@ object BatchSink {
     * rather than pure commit-protocol naming: part numbering is contiguous
     * per label and CONTINUES across sessions, which no task can know at
     * commit time — assigning NNN needs the global per-label file list. */
-  def writePartitioned(spark: SparkSession, df: org.apache.spark.sql.DataFrame,
-      outDir: String, batchSize: Long, extension: String = "csv"): Unit = {
+  def writePartitioned(spark: SparkSession, df: DataFrame, outDir: String, batchSize: Long,
+      extension: String = "csv",
+      fileLabels: Seq[String] => Map[String, String] = ls => ls.map(l => l -> l).toMap,
+  ): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val hconf = spark.sparkContext.hadoopConfiguration
     val out = new Path(outDir)
     val fs = out.getFileSystem(hconf)
     fs.mkdirs(out)
     val tmp = new Path(out, "_graft_tmp_" + java.util.UUID.randomUUID().toString.take(8))
-    df.write.mode("overwrite")
-      .option("maxRecordsPerFile", batchSize)
-      .partitionBy("label")
-      .text(tmp.toString)
-    // plan the renames on the driver (names only — no I/O beyond listing)
-    val moves: Seq[(String, String)] = fs.listStatus(tmp).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("label="))
-      .flatMap { dir =>
-        val label = unescapePartitionValue(dir.getPath.getName.stripPrefix("label="))
-        val start = nextPartNumber(fs, out, label, extension)
-        fs.listStatus(dir.getPath).toSeq
-          .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-          .map(_.getPath).sortBy(_.getName).zipWithIndex
-          .map { case (f, i) =>
+    try {
+      df.write.mode("overwrite")
+        .option("maxRecordsPerFile", batchSize)
+        .partitionBy("label")
+        .text(tmp.toString)
+      // plan the renames on the driver (names only — no I/O beyond listing);
+      // `fileLabels` names each written label's files, and labels that share
+      // a file label continue one part sequence
+      val dirs = fs.listStatus(tmp).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("label="))
+        .map(d => unescapePartitionValue(d.getPath.getName.stripPrefix("label=")) -> d.getPath)
+        .sortBy(_._1)
+      val names = fileLabels(dirs.map(_._1))
+      val moves: Seq[(String, String)] = dirs.groupBy(d => names(d._1)).toSeq.flatMap {
+        case (label, group) =>
+          val start = nextPartNumber(fs, out, label, extension)
+          group.flatMap { case (_, dir) =>
+            fs.listStatus(dir).toSeq
+              .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+              .map(_.getPath).sortBy(_.getName)
+          }.zipWithIndex.map { case (f, i) =>
             f.toString -> new Path(out, f"$label-part${start + i}%03d.$extension").toString
           }
       }
-    if (moves.nonEmpty) {
-      val confSer = new SerializableHadoopConf(hconf)
-      val slices = math.min(moves.size, spark.sparkContext.defaultParallelism)
-      spark.sparkContext.parallelize(moves, slices).foreach { case (src, dst) =>
-        val sp = new Path(src); val dp = new Path(dst)
-        val efs = sp.getFileSystem(confSer.value)
-        if (!efs.exists(sp)) {
-          // a prior attempt already moved it — idempotent success, as long
-          // as the target is really there
-          if (!efs.exists(dp))
-            throw new IllegalStateException(s"rename lost: $src -> $dst")
-        } else {
-          // replace a leftover dp ONLY while sp still exists: a zombie or
-          // speculative twin whose source is gone must never delete the
-          // target its sibling just committed (ADVICE r4)
-          if (efs.exists(dp)) efs.delete(dp, false)
-          // a concurrent twin may still win between the checks: rename
-          // failure with the source gone and the target present IS success
-          if (!efs.rename(sp, dp) && !(efs.exists(dp) && !efs.exists(sp)))
-            throw new IllegalStateException(s"rename failed: $src -> $dst")
+      if (moves.nonEmpty) {
+        val confSer = new SerializableHadoopConf(hconf)
+        val slices = math.min(moves.size, spark.sparkContext.defaultParallelism)
+        spark.sparkContext.parallelize(moves, slices).foreach { case (src, dst) =>
+          val sp = new Path(src); val dp = new Path(dst)
+          val efs = sp.getFileSystem(confSer.value)
+          if (!efs.exists(sp)) {
+            // a prior attempt already moved it — idempotent success, as long
+            // as the target is really there
+            if (!efs.exists(dp))
+              throw new IllegalStateException(s"rename lost: $src -> $dst")
+          } else {
+            // replace a leftover dp ONLY while sp still exists: a zombie or
+            // speculative twin whose source is gone must never delete the
+            // target its sibling just committed (ADVICE r4)
+            if (efs.exists(dp)) efs.delete(dp, false)
+            // a concurrent twin may still win between the checks: rename
+            // failure with the source gone and the target present IS success
+            if (!efs.rename(sp, dp) && !(efs.exists(dp) && !efs.exists(sp)))
+              throw new IllegalStateException(s"rename failed: $src -> $dst")
+          }
         }
       }
-    }
-    fs.delete(tmp, true)
+      dirs.map(_._1)
+    } finally fs.delete(tmp, true)
   }
 
   private def nextPartNumber(fs: org.apache.hadoop.fs.FileSystem,
@@ -395,13 +602,15 @@ object BatchSink {
   }
 
   /** Property-set consistency check (reference: _batch_writer.py:598-619). */
-  def checkConsistent(props: Props, lay: LabelLayout, what: String, label: String): Unit = {
+  def checkConsistent(props: Props, lay: LabelLayout, what: String, label: String): Unit =
+    inconsistency(props, lay, what, label).foreach(msg => throw new IllegalStateException(msg))
+
+  /** The consistency check's message, when the check fails. */
+  def inconsistency(props: Props, lay: LabelLayout, what: String, label: String): Option[String] = {
     val keys = props.map(_.k).toSet
-    val ref = lay.propKeys.toSet
-    if (keys != ref)
-      throw new IllegalStateException(
-        s"At least one $what of the class $label has more or fewer properties than another. " +
-          s"Reference properties: ${lay.propKeys.mkString(",")}, entity properties: ${keys.mkString(",")}.")
+    if (keys == lay.propKeys.toSet) None
+    else Some(s"At least one $what of the class $label has more or fewer properties than another. " +
+      s"Reference properties: ${lay.propKeys.mkString(",")}, entity properties: ${keys.mkString(",")}.")
   }
 
   /** Neo4j header type suffix (reference: graph/_neo4j.py:105-125). */

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.util.LongAccumulator
 import graft.model._
 import graft.model.Props.Props
@@ -153,6 +154,66 @@ class KgSessionSpec extends AnyFunSuite {
       Set("phosphorylation\u0000r1", "phosphorylation\u0000r2"))
     assert(seenKeys(s.outDir, "seen_rel_keys") ==
       Set("post translational interaction\u0000t1", "post translational interaction\u0000t2"))
+  }
+
+  test("a second session's four write calls compile no new classes (codegen cache reuse)") {
+    val ctx = KgSessionSpec.declaredCtx
+    def gene(i: Int) = RawNode(s"hgnc:$i", "gene", Props.of(
+      "name" -> PV.str(s"G$i"), "start" -> PV.int(i * 100L), "aliases" -> PV.arr(Seq(s"a$i"))))
+    def disease(i: Int) = RawNode(s"mondo:$i", "disease", Props.of("name" -> PV.str(s"D$i")))
+    def gda(i: Int) = RawEdge(s"gda:$i", s"hgnc:$i", s"mondo:${i % 3}", "gene_disease", Props.of(
+      "score" -> PV.dbl(i / 10.0), "directed" -> PV.bool(i % 2 == 0)))
+    def gg(i: Int) = RawEdge(null, s"hgnc:$i", s"hgnc:${i + 1}", "gg", Props.of("score" -> PV.dbl(0.5)))
+    def job(): Unit = {
+      val s = new KgSession(spark, ctx, Files.createTempDirectory("graft-codegen-").toString)
+      s.writeNodes(spark.createDataset((0 until 6).map(gene) ++ (0 until 3).map(disease) :+ gene(0)))
+      s.writeEdges(spark.createDataset((0 until 6).map(gda) ++ (0 until 5).map(gg) :+ gda(1)))
+      s.writeNodes(spark.createDataset((4 until 9).map(gene) ++ (2 until 4).map(disease)))
+      s.writeEdges(spark.createDataset((4 until 9).map(gda) ++ (3 until 8).map(gg)))
+      s.writeImportCall()
+      assert(partLines(s.outDir, "Gene").length == 9)
+      assert(partLines(s.outDir, "GeneToDiseaseAssociation").length == 9)
+      assert(partLines(s.outDir, "INTERACTS_WITH").length == 8)
+    }
+    job()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    job()
+    val more = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(more == 0, s"the second session compiled $more new classes")
+  }
+
+  test("a re-sent seen id never raises; a fresh inconsistent row does") {
+    val s = session()
+    val declared = protein("p").props
+    def forced(id: String, props: Props) = KgNode.make(id, "protein", "uniprot", props)
+    val other = Props.of("other" -> PV.str("x"))
+    s.writeNodesForce(spark.createDataset(Seq(forced("p1", declared))))
+    // p1 is seen: its row is dropped before the write, so it cannot raise
+    s.writeNodesForce(spark.createDataset(Seq(forced("p1", other), forced("p2", declared))))
+    assert(partLines(s.outDir, "Protein").map(_.split(";")(0)).sorted == List("p1", "p2"))
+    // an open class: the layout comes from the first fresh row, not the seen one
+    s.writeNodes(spark.createDataset(Seq(RawNode("m1", "mirna", Props.of("name" -> PV.str("a"))))))
+    s.writeNodes(spark.createDataset(Seq(RawNode("m1", "mirna", other),
+      RawNode("m2", "mirna", Props.of("name" -> PV.str("b"))))))
+    assert(partLines(s.outDir, "MicroRNA").map(_.split(";")(0)).sorted == List("m1", "m2"))
+    val ex = intercept[Exception] {
+      s.writeNodesForce(spark.createDataset(Seq(forced("p3", other))))
+    }
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null &&
+      m.contains("At least one node p3 of the class protein has more or fewer properties than another.")))
+  }
+
+  test("an open schema class written through writeNodes: header and cells from the row's props") {
+    val s = session()
+    s.writeNodes(spark.createDataset(Seq(RawNode("m1", "mirna", Props.of(
+      "name" -> PV.str("let-7"), "length" -> PV.int(22), "targets" -> PV.arr(Seq("a", "b")))))))
+    s.writeImportCall()
+    assert(Files.readString(java.nio.file.Path.of(s.outDir, "MicroRNA-header.csv")) ==
+      ":ID;name;length:long;targets;id;preferred_id;:LABEL")
+    val lines = partLines(s.outDir, "MicroRNA")
+    assert(lines.length == 1 && lines.head.startsWith("m1;'let-7';22;'a|b';'m1';'mirbase.mature';"),
+      s"got $lines")
   }
 
   test("seen state is checkpointed: a NEW session over the same outDir resumes dedup") {
@@ -427,6 +488,48 @@ class KgSessionSpec extends AnyFunSuite {
 }
 
 object KgSessionSpec {
+
+  /** A context whose classes all declare their properties: two node
+    * classes, a rel-as-node association and a plain edge class. */
+  lazy val declaredCtx: KgContext = KgContext.build(
+    """gene:
+      |  represented_as: node
+      |  preferred_id: hgnc
+      |  input_label: gene
+      |  properties:
+      |    name: str
+      |    start: int
+      |    aliases: str[]
+      |disease:
+      |  represented_as: node
+      |  preferred_id: mondo
+      |  input_label: disease
+      |  properties:
+      |    name: str
+      |gene to disease association:
+      |  is_a: association
+      |  represented_as: node
+      |  input_label: gene_disease
+      |  properties:
+      |    score: float
+      |    directed: bool
+      |gene interaction:
+      |  is_a: association
+      |  represented_as: edge
+      |  label_as_edge: INTERACTS_WITH
+      |  input_label: gg
+      |  properties:
+      |    score: float
+      |""".stripMargin,
+    """@prefix : <https://example.org/graft/> .
+      |@prefix owl: <http://www.w3.org/2002/07/owl#> .
+      |@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+      |:Entity a owl:Class ; rdfs:label "entity" .
+      |:Gene a owl:Class ; rdfs:subClassOf :Entity ; rdfs:label "gene" .
+      |:Disease a owl:Class ; rdfs:subClassOf :Entity ; rdfs:label "disease" .
+      |:Association a owl:Class ; rdfs:subClassOf :Entity ; rdfs:label "association" .
+      |""".stripMargin,
+    "entity")
 
   // Row builders for the input-count specs: defined here, not in the suite,
   // so the map closures capture only the accumulator.

@@ -91,6 +91,25 @@ class Neo4jSinkSpec extends AnyFunSuite {
     assert(Files.readString(Path.of(dir, "MicroRNA-header.csv")) == ":ID;id;preferred_id;:LABEL")
   }
 
+  test("open-label rows render exactly as their first row's layout, whatever their text") {
+    // the values carry the characters a pending line's field codec uses
+    // (digits, ':', '~'), empty strings, None values and lists
+    val dir = tmpDir()
+    val sink = new Neo4jCsvSink(ctx, dir)
+    val n = KgNode.make("m:1~", "microRNA", "id", Props.of(
+      "name" -> PV.str("3:ab~"), "empty" -> PV.str(""), "none" -> PV.None_,
+      "tags" -> PV.arr(Seq("x:1", "", "~")), "len" -> PV.int(12)))
+    val e = KgEdge.make(null, "a:1", "b~2", "open_rel", Props.of(
+      "note" -> PV.str("1:x"), "n" -> PV.dbl(0.5)))
+    sink.writeNodes(spark.createDataset(Seq(n)))
+    sink.writeEdges(spark.createDataset(Seq(e)))
+    val nodeLay = sink.nodeLayout("microRNA", n.props)
+    val edgeLay = sink.edgeLayout("open_rel", e.props)
+    assert(readAll(dir, "MicroRNA").linesIterator.toSeq == Seq(sink.renderNodeLine(n, nodeLay)))
+    assert(readAll(dir, "Open_rel").linesIterator.toSeq == Seq(sink.renderEdgeLine(e, edgeLay)))
+    assert(sink.nodeLayouts("microRNA") == nodeLay && sink.edgeLayouts("open_rel") == edgeLay)
+  }
+
   test("quote character is escaped by doubling (graph/_neo4j.py:47-52)") {
     assert(Render.quote("it's", "'") == "'it''s'")
   }

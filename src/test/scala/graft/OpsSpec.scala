@@ -347,6 +347,21 @@ class OpsSpec extends AnyFunSuite {
     assert(capped.count() == 0)
   }
 
+  test("jaccardPairs emits no self-pair when a doc_id is listed twice") {
+    // doc 1 is listed twice with overlapping text, so its id appears twice
+    // in the member list of every shingle the two rows share
+    val docs = Seq(
+      (1L, "a b c d"),
+      (1L, "a b c x"),
+      (2L, "a b c d"),
+    ).toDF("doc_id", "text")
+    val out = DedupOps.jaccardPairs(docs, n = 2, minJ = 0.0)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect()
+    assert(out.nonEmpty && out.forall { case (a, b) => a != b },
+      s"no pair may join a doc with itself: ${out.mkString(",")}")
+    assert(out.toSeq == Seq((1L, 2L)))
+  }
+
   test("verifiedNearDupPairs: exact jaccard verifies LSH candidates") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
