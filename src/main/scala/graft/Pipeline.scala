@@ -39,6 +39,7 @@ final class KgPipeline(
   val bcDict = spark.sparkContext.broadcast(dict)
 
   import spark.implicits._
+  import org.apache.spark.sql.GraftColumnBridge.{column => exprCol, expression => colExpr}
 
   /** Occurrence-level mentions (provenance API; tests, audits). */
   def mentions(docs: Dataset[Doc]): Dataset[Mention] = Mentions.detect(docs, bcDict)
@@ -52,14 +53,13 @@ final class KgPipeline(
   def docMentionsCompact(docs: Dataset[Doc]): Dataset[DocMentionC] =
     Mentions.detectPerDocCompact(docs, bcDict)
 
-  /** Driver-sized (rank, curie) decode table for post-aggregation broadcast
-    * joins — the dictionary-decoding edge of the compact path. */
-  @transient private lazy val rankCurie: DataFrame = {
-    import spark.implicits._
-    spark.createDataset(
-      bcDict.value.byRank.toSeq.zipWithIndex.map { case (e, r) => (r, e.curie) }
-    ).toDF("rank", "curie")
-  }
+  /** The curie of an int `rank` column: a projection through the broadcast
+    * dictionary ([[graft.functions.RankCurie]], one array index per row).
+    * Why not a join: a driver-built (rank, curie) table is a LocalRelation
+    * whose rows every analyzer and optimizer rule re-walks on every query,
+    * so a plan must not hold data of dictionary size. */
+  private def curieOf(rank: org.apache.spark.sql.Column) =
+    exprCol(graft.functions.RankCurie(colExpr(rank), bcDict))
 
   /** Entity + document nodes, translated and globally deduped. The big
     * distincts run on thin string columns; fat property rows are built
@@ -171,37 +171,33 @@ final class KgPipeline(
     coocToEdges(Mentions.cooccurrencePairs(docs, bcDict))
 
   /** [[mentionEdges]] over the dictionary-coded working set: the curie
-    * string re-enters via a broadcast hash join on the int rank (codegen'd,
-    * scales to million-term dictionaries where a plan-literal array would
-    * not) — the corpus-sized rows stay int-keyed until this last select. */
+    * string re-enters as a projection through the broadcast dictionary
+    * ([[curieOf]]) — the corpus-sized rows stay int-keyed until this last
+    * select. */
   def mentionEdgesCompact(dmc: Dataset[DocMentionC]): Dataset[KgEdge] = {
     val cls = ctxRef.inputLabelToClass("mentions")
     val spec = ctxRef.specs(cls)
     val label = spec.labelAsEdge.getOrElse(cls)
-    dmc.join(broadcast(rankCurie), Seq("rank"))
-      .select(
-        lit(null).cast("string").as("relId"),
-        col("doc_id").as("src"),
-        col("curie").as("tgt"),
-        lit(label).as("label"),
-        propsCol(("n", col("n"), "int")).as("props"),
-      ).as[KgEdge]
+    dmc.select(
+      lit(null).cast("string").as("relId"),
+      col("doc_id").as("src"),
+      curieOf(col("rank")).as("tgt"),
+      lit(label).as("label"),
+      propsCol(("n", col("n"), "int")).as("props"),
+    ).as[KgEdge]
   }
 
   /** [[cooccurrenceEdgesFrom]]'s dictionary-coded twin: the pair aggregate
-    * shuffles (int, int) keys; ranks decode to curies via two broadcast
-    * joins AFTER the aggregate (output is distinct-pair-sized). */
+    * shuffles (int, int) keys; ranks decode to curies by a projection
+    * through the broadcast dictionary AFTER the aggregate. */
   def cooccurrenceEdgesFromCompact(dmc: Dataset[DocMentionC]): Dataset[KgEdge] = {
     val cls = ctxRef.inputLabelToClass("cooccurs")
     val label = ctxRef.specs(cls).labelAsEdge.getOrElse(cls)
     Mentions.cooccurrencePairsFromCompact(dmc, bcDict)
-      .join(broadcast(rankCurie.select(col("rank").as("src_rank"), col("curie").as("src"))),
-        Seq("src_rank"))
-      .join(broadcast(rankCurie.select(col("rank").as("tgt_rank"), col("curie").as("tgt"))),
-        Seq("tgt_rank"))
       .select(
         lit(null).cast("string").as("relId"),
-        col("src"), col("tgt"),
+        curieOf(col("src_rank")).as("src"),
+        curieOf(col("tgt_rank")).as("tgt"),
         lit(label).as("label"),
         propsCol(("n_docs", col("n_docs"), "int")).as("props"),
       ).as[KgEdge]
@@ -278,8 +274,6 @@ final class KgPipeline(
 
   // ---- fused mention-set path (the production scale path) -------------------
 
-  import org.apache.spark.sql.GraftColumnBridge.{column => exprCol, expression => colExpr}
-
   /** The FUSED working set: one row per document with >= 1 mention,
     * `(doc_id, pm: array<long>)`, each element `(rank << 32) | n` — built by
     * the codegen'd [[graft.functions.ExtractMentions]] walking span bytes in
@@ -317,23 +311,19 @@ final class KgPipeline(
         ms.select(col("pm")).as[Array[Long]], bcDict).toDF("rank"),
       ms.select(col("doc_id")).as[String])
 
-  /** [[mentionEdgesCompact]] over the mention-set table: explode + decode
-    * join, all codegen. */
+  /** [[mentionEdgesCompact]] over the mention-set table: explode + a
+    * projection through the broadcast dictionary, all codegen. */
   def mentionEdgesFromSets(ms: DataFrame): Dataset[KgEdge] = {
     val cls = ctxRef.inputLabelToClass("mentions")
     val spec = ctxRef.specs(cls)
     val label = spec.labelAsEdge.getOrElse(cls)
     ms.select(col("doc_id"), explode(col("pm")).as("p"))
-      .select(col("doc_id"),
-        shiftright(col("p"), 32).cast("int").as("rank"),
-        col("p").bitwiseAND(lit(0xffffffffL)).as("n"))
-      .join(broadcast(rankCurie), Seq("rank"))
       .select(
         lit(null).cast("string").as("relId"),
         col("doc_id").as("src"),
-        col("curie").as("tgt"),
+        curieOf(shiftright(col("p"), 32).cast("int")).as("tgt"),
         lit(label).as("label"),
-        propsCol(("n", col("n"), "int")).as("props"),
+        propsCol(("n", col("p").bitwiseAND(lit(0xffffffffL)), "int")).as("props"),
       ).as[KgEdge]
   }
 
@@ -352,16 +342,9 @@ final class KgPipeline(
       .toDF("pair", "cnt")
       .groupBy(col("pair")).agg(sum(col("cnt")).as("n_docs"))
       .select(
-        shiftright(col("pair"), 32).cast("int").as("src_rank"),
-        col("pair").bitwiseAND(lit(0xffffffffL)).cast("int").as("tgt_rank"),
-        col("n_docs"))
-      .join(broadcast(rankCurie.select(col("rank").as("src_rank"), col("curie").as("src"))),
-        Seq("src_rank"))
-      .join(broadcast(rankCurie.select(col("rank").as("tgt_rank"), col("curie").as("tgt"))),
-        Seq("tgt_rank"))
-      .select(
         lit(null).cast("string").as("relId"),
-        col("src"), col("tgt"),
+        curieOf(shiftright(col("pair"), 32).cast("int")).as("src"),
+        curieOf(col("pair").bitwiseAND(lit(0xffffffffL)).cast("int")).as("tgt"),
         lit(label).as("label"),
         propsCol(("n_docs", col("n_docs"), "int")).as("props"),
       ).as[KgEdge]
@@ -395,8 +378,9 @@ final class KgPipeline(
     *    because the data is ≤ C(|dict|, 2) longs and job-level retry is
     *    cheap at that size. Both paths spec-proven identical
     *    (PipelineSpec);
-    *  - mention triples are explode + broadcast rank decode + a 3-column
-    *    select (the KgEdge path built a props bag per row);
+    *  - mention triples are explode + a 3-column select that decodes the
+    *    rank by a projection through the broadcast dictionary (the KgEdge
+    *    path built a props bag per row);
     *  - doc rdf:type triples are a doc_id-only cache read (nested-column
     *    pruned) + the same broadcast anti-join as the node path — the
     *    constant obj is resolved on the driver from the SAME translation
@@ -440,19 +424,12 @@ final class KgPipeline(
     val mentionCls = ctxRef.inputLabelToClass("mentions")
     val mentionLabel = ctxRef.specs(mentionCls).labelAsEdge.getOrElse(mentionCls)
     val mentionTriples = ms.select(col("doc_id"), explode(col("pm")).as("p"))
-      .select(col("doc_id"), shiftright(col("p"), 32).cast("int").as("rank"))
-      .join(broadcast(rankCurie), Seq("rank"))
-      .select(col("doc_id").as("subj"),
-        lit(mentionLabel).as("pred"), col("curie").as("obj"))
+      .select(col("doc_id").as("subj"), lit(mentionLabel).as("pred"),
+        curieOf(shiftright(col("p"), 32).cast("int")).as("obj"))
     val coocCls = ctxRef.inputLabelToClass("cooccurs")
     val coocLabel = ctxRef.specs(coocCls).labelAsEdge.getOrElse(coocCls)
     val coocTriples = keys.filter(hi =!= lo)
-      .select(hi.as("src_rank"), lo.as("tgt_rank"))
-      .join(broadcast(rankCurie.select(col("rank").as("src_rank"), col("curie").as("src"))),
-        Seq("src_rank"))
-      .join(broadcast(rankCurie.select(col("rank").as("tgt_rank"), col("curie").as("tgt"))),
-        Seq("tgt_rank"))
-      .select(col("src").as("subj"), lit(coocLabel).as("pred"), col("tgt").as("obj"))
+      .select(curieOf(hi).as("subj"), lit(coocLabel).as("pred"), curieOf(lo).as("obj"))
     entityType.union(docType).union(mentionTriples).union(coocTriples).as[Triple]
   }
 

@@ -3,6 +3,7 @@ package graft.extract
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model._
 import graft.model.Props.Props
 
@@ -34,6 +35,12 @@ final class MentionDict private (
     * dictionary instead of paying 8 bytes/row of cache bandwidth. */
   @transient lazy val scoreUnitByRank: Array[Double] =
     byRank.map(e => e.prior * e.surface.length)
+  /** rank -> curie as Catalyst's string type, for the codegen'd rank decode
+    * ([[graft.functions.RankCurie]]): built once per executor per broadcast,
+    * so no task closure or generated class carries the dictionary's
+    * strings. */
+  @transient lazy val curieByRank: Array[UTF8String] =
+    byRank.map(e => UTF8String.fromString(e.curie))
 }
 
 object MentionDict {
@@ -78,12 +85,13 @@ final case class DocMention(
   * This is the SCALE-PATH working row: the corpus-sized cache, shuffles and
   * aggregations carry one int instead of three strings (curie/cls/surface),
   * and rank order == curie order, so every downstream sort/pair semantics is
-  * preserved exactly. Strings re-enter via a broadcast rank join (or the
-  * driver-sized [[MentionDict.byRank]] table) AFTER the big aggregations —
-  * dictionary encoding end-to-end, decoded at the edges. The mention score
-  * is NOT carried: it is `scoreUnitByRank(rank) * n`, rederived from the
-  * broadcast dictionary by the one consumer that needs it (the co-occurrence
-  * cap tie-break) instead of widening every cached row by 8 bytes. */
+  * preserved exactly. Strings re-enter by a projection through the
+  * broadcast dictionary ([[graft.functions.RankCurie]]) AFTER the big
+  * aggregations — dictionary encoding end-to-end, decoded at the edges. The
+  * mention score is NOT carried: it is `scoreUnitByRank(rank) * n`,
+  * rederived from the broadcast dictionary by the one consumer that needs
+  * it (the co-occurrence cap tie-break) instead of widening every cached
+  * row by 8 bytes. */
 final case class DocMentionC(
     doc_id: String,
     rank: Int,
@@ -532,12 +540,12 @@ object Mentions {
     * (BASELINE.json input_hint). Pure Catalyst expression. */
   def spanSignature(spansCol: Column): Column = {
     val rendered = transform(spansCol, s =>
-      concat_ws("",
-        coalesce(s.getField("kind"), lit(" ")),
-        coalesce(s.getField("text"), lit(" ")),
-        coalesce(s.getField("media_ref"), lit(" ")),
+      concat_ws("\u0001",
+        coalesce(s.getField("kind"), lit("\u0000")),
+        coalesce(s.getField("text"), lit("\u0000")),
+        coalesce(s.getField("media_ref"), lit("\u0000")),
         s.getField("offset").cast("string")))
-    md5(to_binary(array_join(rendered, ""), lit("utf-8")))
+    md5(to_binary(array_join(rendered, "\u0002"), lit("utf-8")))
   }
 
   /** Assert the invariant holds between two doc tables (same doc_ids, same

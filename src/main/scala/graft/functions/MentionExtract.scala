@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.{MentionDict, Mentions}
@@ -254,5 +254,47 @@ final class CoocPairsWorker(bcDict: Broadcast[MentionDict], maxEntities: Int)
       a += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** Codegen'd rank -> curie decode through the broadcast dictionary: ranks
+  * are dense (`0 until |dict|`), so the decode is one array index per row
+  * into [[MentionDict.curieByRank]], with no hash probe and no
+  * dictionary-sized table in the plan. The child is an int rank; a null
+  * rank gives null. Every rank the pipeline decodes comes from
+  * [[ExtractMentions]], so an out-of-range rank is a broken contract: it
+  * raises, naming the rank and the dictionary size. */
+case class RankCurie(child: Expression, bcDict: Broadcast[MentionDict])
+    extends UnaryExpression {
+
+  override def dataType: DataType = StringType
+
+  @transient private lazy val helper = new RankCurieLookup(bcDict)
+
+  override protected def nullSafeEval(input: Any): Any =
+    helper.curie(input.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val h = ctx.addReferenceObj("rankCurie", helper, classOf[RankCurieLookup].getName)
+      s"${ev.value} = $h.curie($c);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): RankCurie =
+    copy(child = newChild)
+}
+
+/** The executor-side worker behind [[RankCurie]]: holds only the broadcast
+  * handle; the curie array is the dictionary's own per-executor lazy val. */
+final class RankCurieLookup(bcDict: Broadcast[MentionDict]) extends Serializable {
+
+  @transient private lazy val curies = bcDict.value.curieByRank
+
+  def curie(rank: Int): UTF8String = {
+    val cs = curies
+    if (rank < 0 || rank >= cs.length)
+      throw new IllegalArgumentException(
+        s"rank $rank is outside a dictionary of ${cs.length} entries")
+    cs(rank)
   }
 }

@@ -100,7 +100,7 @@ object Translate {
         nodes(df.select(col(idCol)).as[String](encS)
           .map(id => RawNode(id, inputLabel, Props.empty))(encRaw), bc)
       case Some(cls) =>
-        val placeholder = "__graft_const_id__"
+        val placeholder = "\u0001__graft_const_id__"
         val tpl = KgNode.make(placeholder, cls, preferredId(ctx, cls),
           filterProps(ctx, cls, Props.empty))
         // Py.sanitize: "\r\n"→" ", then "\n"→" ", then "\r"→" " — the

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
-import graft.functions.{AffineMinHash, QuantizedCosine, QuantizedCosinePair}
+import graft.functions.{AffineMinHash, QuantizedCosine, QuantizedCosinePair, RankCurie}
 
 /** Codegen'd Catalyst expressions: interpreted eval vs whole-stage-codegen
   * parity, and equivalence with the HOF formulations they replaced. */
@@ -68,11 +68,56 @@ class FunctionsSpec extends AnyFunSuite {
     got.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
 
-  test("expressions survive interpreted eval (codegen disabled)") {
+  /** Runs `body` with whole-stage codegen off and expressions interpreted. */
+  private def interpreted[T](body: => T): T = {
     val prev = spark.conf.getOption("spark.sql.codegen.wholeStage")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    try body
+    finally {
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.codegen.wholeStage", v)
+        case None    => spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
+  test("RankCurie: codegen and interpreted decode == byRank(r).curie, null-safe, loud out of range") {
+    import graft.extract.{DictEntry, MentionDict}
+    val dict = MentionDict.build((0 until 300).map(i =>
+      DictEntry(f"s$i%03d", f"c:${(i * 7919) % 300}%03d", "c", 1.0)))
+    val bc = spark.sparkContext.broadcast(dict)
+    val n = dict.byRank.length
+    // spark.range keeps the rows out of a LocalRelation, so the optimizer
+    // cannot fold the projection on the driver; every 7th rank is null
+    val ranks = spark.range(0, n, 1, 3).select(
+      when(col("id") % 7 === 3, lit(null)).otherwise(col("id").cast("int")).as("r"))
+    def decode(rs: org.apache.spark.sql.DataFrame) =
+      rs.select(col("r"), column(RankCurie(expression(col("r")), bc)).as("c"))
+    val want = (0 until n).map(r => if (r % 7 == 3) (null, null) else (r, dict.byRank(r).curie)).toSet
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.get(0), r.getString(1))).toSet
+    val generated = decode(ranks)
+    assert(generated.queryExecution.executedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]))
+    assert(rows(generated) == want)
+    assert(interpreted(rows(decode(ranks))) == want)
+    def rootCause(t: Throwable): Throwable =
+      if (t.getCause == null || (t.getCause eq t)) t else rootCause(t.getCause)
+    for (bad <- Seq(n, -1)) {
+      val badRanks = spark.range(0, 4, 1, 1).select(
+        when(col("id") === 2, lit(bad)).otherwise(col("id").cast("int")).as("r"))
+      def raised = rootCause(intercept[Exception](decode(badRanks).collect()))
+      for (e <- Seq(raised, interpreted(raised))) {
+        assert(e.isInstanceOf[IllegalArgumentException], s"rank $bad: $e")
+        assert(e.getMessage.contains(s"rank $bad") && e.getMessage.contains(s"$n entries"), e.getMessage)
+      }
+    }
+  }
+
+  test("expressions survive interpreted eval (codegen disabled)") {
+    interpreted {
       val r = Seq(Seq(0.5f, -0.5f)).toDF("e")
         .select(
           column(QuantizedCosine(expression(col("e")), Array(500L, -500L),
@@ -81,12 +126,6 @@ class FunctionsSpec extends AnyFunSuite {
         ).head()
       assert(math.abs(r.getDouble(0) - 1.0) < 1e-9)
       assert(r.getSeq[Long](1).length == 4)
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.codegen.wholeStage", v)
-        case None    => spark.conf.unset("spark.sql.codegen.wholeStage")
-      }
     }
   }
 }

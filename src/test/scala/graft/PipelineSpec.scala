@@ -89,6 +89,40 @@ class PipelineSpec extends AnyFunSuite {
     docs.unpersist()
   }
 
+  test("fused and compact plans hold no dictionary-sized LocalRelation (hash-combiner dictionary)") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+    import graft.extract.CoocCombine
+    // 5000 surfaces: above both dense combiner gates, so the fused path runs
+    // the hash combiners; a decode table of this size would be re-walked by
+    // every Catalyst rule on every query
+    val surfaces = (0 until 5000).map(i => f"kw$i%04d")
+    assert(surfaces.size > CoocCombine.DenseMaxDict && surfaces.size > CoocCombine.DenseMaxDictCounts)
+    val classes = AnalyticsDomain.dictionary.map(_._2).distinct
+    val dict = MentionDict.build(surfaces.zipWithIndex.map { case (s, i) =>
+      DictEntry(s, s"e:$s", classes(i % classes.size), 1.0) })
+    val pipe = new KgPipeline(spark, AnalyticsDomain.context(), dict)
+    // a sparse vocabulary (one word in three a surface) keeps the string
+    // path's pair count small
+    val vocab = surfaces.take(600) ++ surfaces.take(600).map(_ + "x") ++ surfaces.take(600).map("y" + _)
+    val docs = Corpus.synthesize(spark, 300, vocab, seed = 11).persist()
+    def bigLocal(plan: LogicalPlan): Seq[Int] =
+      plan.collectWithSubqueries { case l: LocalRelation if l.data.size > 64 => l.data.size }
+    val (nsF, esF, tsF) = pipe.runFused(docs)
+    val (nsC, esC, tsC) = pipe.runCompact(docs)
+    for ((name, ds) <- Seq("fused nodes" -> nsF, "fused edges" -> esF, "fused triples" -> tsF,
+        "compact nodes" -> nsC, "compact edges" -> esC, "compact triples" -> tsC)) {
+      val qe = ds.queryExecution
+      assert(bigLocal(qe.analyzed).isEmpty, s"$name: analyzed plan holds LocalRelation(s) ${bigLocal(qe.analyzed)}")
+      assert(bigLocal(qe.optimizedPlan).isEmpty, s"$name: optimized plan holds LocalRelation(s) ${bigLocal(qe.optimizedPlan)}")
+    }
+    val (_, es, ts) = pipe.run(docs)
+    val want = ts.collect().toSet
+    assert(want.exists(_.pred == "COOCCURS_WITH"), "corpus must produce co-occurrence triples")
+    assert(tsF.collect().toSet == want)
+    assert(esF.collect().toSet == es.collect().toSet)
+    docs.unpersist()
+  }
+
   test("pair+rank key combiner: dense bitset path == hash-map path") {
     // the analytics dict (22 terms) takes the dense path; denseMax = 0
     // forces the open-dictionary hash fallback on the same input — the
