@@ -21,11 +21,11 @@ object BenchPipeline {
       // partition count changes the physical plan (and block sizes) per
       // leg; AQE coalesces the small exchanges either way
       .config("spark.sql.shuffle.partitions", "32")
-      // uncompressed in-memory cache: the compact working set (doc_id,
-      // rank:int, n, score) gains little from dictionary/RLE encoding but
-      // pays per-batch encode+decode CPU on the build and EVERY consumer —
-      // measured 7.15s vs 9.8s on the 16-core leg at 4M docs. ~2 GB at 4M
-      // docs; at any scale the per-partition slice stays ~50 MB.
+      // uncompressed in-memory cache: a thin integer-keyed working set
+      // gains little from dictionary/RLE encoding but pays per-batch
+      // encode+decode CPU on the build and EVERY consumer — measured 7.15s
+      // vs 9.8s on the 16-core leg at 4M docs (dictionary-coded rows).
+      // ~2 GB at 4M docs; at any scale the per-partition slice stays ~50 MB.
       .config("spark.sql.inMemoryColumnarStorage.compressed",
         sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "false"))
       // ONE FILE = ONE TASK for the staged input: the snappy'd doc files

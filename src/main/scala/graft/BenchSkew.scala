@@ -17,8 +17,7 @@ import graft.corpus.{AnalyticsDomain, Corpus}
   *    max is scheduling/codegen jitter, not data skew).
   * The straggler bar is max <= 4x median. `graft.Bench` runs this as a
   * subprocess each official line (kg_skew_* fields), replacing the
-  * manually-refreshed `tools/ScratchSkew` evidence; ScratchSkew remains
-  * the richer interactive probe (per-stage dump, string-path compare).
+  * manually-refreshed probe evidence recorded in BASELINE.md.
   * args = (cores, nDocs). */
 object BenchSkew {
 

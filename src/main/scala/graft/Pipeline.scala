@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.AnalyticsDomain
-import graft.dedup.Dedup
-import graft.extract.{DocMention, DocMentionC, Mention, MentionDict, Mentions}
+import graft.extract.{DocMention, MentionDict, Mentions}
 import graft.model._
 import graft.model.Props.Props
 import graft.translate.Translate
@@ -22,7 +21,7 @@ import graft.translate.Translate
   *    would force ObjectHashAggregate's sort-based fallback — measured
   *    15x slower at 300k docs); the one struct-min winner pass in the
   *    string path is a SortAggregate by HashAggregateExec's buffer rules
-  *    (see [[nodes]]) — the scale paths aggregate ints only;
+  *    (see [[nodes]]) — the fused path aggregates ints only;
   *  - property bags are attached AFTER the shuffles, in narrow maps;
   *  - the dictionary/ontology side is broadcast, never shuffled.
   * Total exchanges per run: doc-distinct, entity-distinct, co-occurrence
@@ -41,17 +40,9 @@ final class KgPipeline(
   import spark.implicits._
   import org.apache.spark.sql.GraftColumnBridge.{column => exprCol, expression => colExpr}
 
-  /** Occurrence-level mentions (provenance API; tests, audits). */
-  def mentions(docs: Dataset[Doc]): Dataset[Mention] = Mentions.detect(docs, bcDict)
-
   /** Per-(doc, entity) mentions — the pipeline's working set. */
   def docMentions(docs: Dataset[Doc]): Dataset[DocMention] =
     Mentions.detectPerDoc(docs, bcDict)
-
-  /** Dictionary-coded working set (the scale path): one int rank instead of
-    * three entity strings per row — see [[DocMentionC]]. */
-  def docMentionsCompact(docs: Dataset[Doc]): Dataset[DocMentionC] =
-    Mentions.detectPerDocCompact(docs, bcDict)
 
   /** The curie of an int `rank` column: a projection through the broadcast
     * dictionary ([[graft.functions.RankCurie]], one array index per row).
@@ -76,33 +67,18 @@ final class KgPipeline(
     // survivors) is merged straight back by RemoveRedundantAggregates
     // (min is duplicate-insensitive, so Catalyst deletes the inner
     // distinct). Accepted: this is the reference-parity path; the scale
-    // path (nodesFromSets/nodesFromRanks) never aggregates structs over
-    // corpus-sized input - its big pass is a dictionary-bounded rank-set
-    // combiner.
+    // path (nodesFromSets) never aggregates structs over corpus-sized
+    // input - its big pass is a dictionary-bounded rank-set combiner.
     val entityThin = dm.groupBy(col("curie"))
       .agg(min(struct(col("cls"), col("surface"))).as("cs"))
       .select(col("curie"), col("cs.cls").as("cls"), col("cs.surface").as("surface"))
     nodesFrom(entityThin, Mentions.distinctDocIds(dm))
   }
 
-  /** [[nodes]] over the dictionary-coded working set: the corpus-sized
-    * distinct runs on ONE int column (map-side partial HashAggregate over
-    * 4-byte keys); the string entity triple is decoded from the broadcast
-    * dictionary only for the tiny distinct survivors. */
-  def nodesCompact(dmc: Dataset[DocMentionC]): Dataset[KgNode] =
-    nodesFromRanks(dmc.select(col("rank")), Mentions.distinctDocIdsC(dmc))
-
-  /** Shared tail of the rank-coded node paths: `ranks` is a one-int-column
-    * corpus-sized frame (possibly with duplicates), `docIds` already
-    * distinct. */
-  private def nodesFromRanks(ranks: DataFrame, docIds: Dataset[String]): Dataset[KgNode] =
-    nodesFrom(entityThinFromRanks(ranks), docIds)
-
   /** Dictionary-bounded (curie, cls, surface) winners for a one-int-column
     * `rank` frame (duplicates allowed): decode via the broadcast dictionary,
     * then the same deterministic min(cls, surface) winner per curie as the
-    * string path — shared by the rank-coded node paths and the fused
-    * triples path. */
+    * string path — shared by the fused node and triples paths. */
   private def entityThinFromRanks(ranks: DataFrame): DataFrame = {
     val bd = bcDict
     ranks.distinct()
@@ -116,12 +92,15 @@ final class KgPipeline(
       .select(col("curie"), col("cs.cls").as("cls"), col("cs.surface").as("surface"))
   }
 
-  private def nodesFrom(entityThin: DataFrame, docIds: Dataset[String]): Dataset[KgNode] = {
-    val entityRaw = entityThin
+  /** Translated entity nodes for (curie, cls, surface) winner rows. */
+  private def entityNodes(entityThin: DataFrame): Dataset[KgNode] =
+    Translate.nodes(entityThin
       .as[(String, String, String)]
       .map { case (curie, cls, surface) =>
         RawNode(curie, cls, Props.of("name" -> PV.str(surface)))
-      }
+      }, bcCtx)
+
+  private def nodesFrom(entityThin: DataFrame, docIds: Dataset[String]): Dataset[KgNode] = {
     // global cross-label id dedup (reference semantics): both branches are
     // already distinct, so only the cross-branch overlap needs removing —
     // a thin broadcast anti-join (entity ids are few), NOT a fat-row
@@ -132,8 +111,15 @@ final class KgPipeline(
     // label-constant; the typed flatMap allocated 3 objects per document).
     val docFiltered = docIds.toDF("doc_id")
       .join(broadcast(entityThin.select(col("curie").as("doc_id"))), Seq("doc_id"), "left_anti")
-    Translate.nodes(entityRaw, bcCtx)
+    entityNodes(entityThin)
       .union(Translate.constNodes(docFiltered, "doc_id", "document", bcCtx))
+  }
+
+  /** The edge label an input label translates to (its class's
+    * `label_as_edge`, else the class name): a driver-side constant. */
+  private def edgeLabel(inputLabel: String): String = {
+    val cls = ctxRef.inputLabelToClass(inputLabel)
+    ctxRef.specs(cls).labelAsEdge.getOrElse(cls)
   }
 
   /** One property bag column `[(k, (s, arr, t))]` built in Catalyst. */
@@ -151,57 +137,14 @@ final class KgPipeline(
     * into a pure Catalyst select: the 10^7-row hot path never round-trips
     * through JVM objects (measured: the typed-map variant allocated ~10GB/s
     * and drowned in kernel time at 32 threads). */
-  def mentionEdges(dm: Dataset[DocMention]): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("mentions")
-    val spec = ctxRef.specs(cls)
-    val label = spec.labelAsEdge.getOrElse(cls)
+  def mentionEdges(dm: Dataset[DocMention]): Dataset[KgEdge] =
     dm.select(
       lit(null).cast("string").as("relId"),
       col("doc_id").as("src"),
       col("curie").as("tgt"),
-      lit(label).as("label"),
+      lit(edgeLabel("mentions")).as("label"),
       propsCol(("n", col("n"), "int")).as("props"),
     ).as[KgEdge]
-  }
-
-  /** COOCCURS_WITH edges between entities sharing a doc (a < b), with doc
-    * counts. Pairs are emitted doc-locally in the extraction pass (narrow),
-    * so the only exchange is the final tiny aggregate — no self-join. */
-  def cooccurrenceEdges(docs: Dataset[Doc]): Dataset[KgEdge] =
-    coocToEdges(Mentions.cooccurrencePairs(docs, bcDict))
-
-  /** [[mentionEdges]] over the dictionary-coded working set: the curie
-    * string re-enters as a projection through the broadcast dictionary
-    * ([[curieOf]]) — the corpus-sized rows stay int-keyed until this last
-    * select. */
-  def mentionEdgesCompact(dmc: Dataset[DocMentionC]): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("mentions")
-    val spec = ctxRef.specs(cls)
-    val label = spec.labelAsEdge.getOrElse(cls)
-    dmc.select(
-      lit(null).cast("string").as("relId"),
-      col("doc_id").as("src"),
-      curieOf(col("rank")).as("tgt"),
-      lit(label).as("label"),
-      propsCol(("n", col("n"), "int")).as("props"),
-    ).as[KgEdge]
-  }
-
-  /** [[cooccurrenceEdgesFrom]]'s dictionary-coded twin: the pair aggregate
-    * shuffles (int, int) keys; ranks decode to curies by a projection
-    * through the broadcast dictionary AFTER the aggregate. */
-  def cooccurrenceEdgesFromCompact(dmc: Dataset[DocMentionC]): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("cooccurs")
-    val label = ctxRef.specs(cls).labelAsEdge.getOrElse(cls)
-    Mentions.cooccurrencePairsFromCompact(dmc, bcDict)
-      .select(
-        lit(null).cast("string").as("relId"),
-        curieOf(col("src_rank")).as("src"),
-        curieOf(col("tgt_rank")).as("tgt"),
-        lit(label).as("label"),
-        propsCol(("n_docs", col("n_docs"), "int")).as("props"),
-      ).as[KgEdge]
-  }
 
   /** Co-occurrence edges derived from the (persisted) DocMention table —
     * no second corpus scan / trie pass; see
@@ -209,19 +152,18 @@ final class KgPipeline(
     * contract. This is the path [[run]] uses: one extraction pass feeds
     * nodes, mention edges AND co-occurrence pairs. */
   def cooccurrenceEdgesFrom(dm: Dataset[DocMention]): Dataset[KgEdge] =
-    coocToEdges(Mentions.cooccurrencePairsFromDocMentions(dm))
-
-  private def coocToEdges(cooc: DataFrame): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("cooccurs")
-    val label = ctxRef.specs(cls).labelAsEdge.getOrElse(cls)
-    cooc.select(
+    Mentions.cooccurrencePairsFromDocMentions(dm).select(
       lit(null).cast("string").as("relId"),
       col("src"),
       col("tgt"),
-      lit(label).as("label"),
+      lit(edgeLabel("cooccurs")).as("label"),
       propsCol(("n_docs", col("n_docs"), "int")).as("props"),
     ).as[KgEdge]
-  }
+
+  /** The string path's edge set: MENTIONS plus COOCCURS_WITH, both from
+    * the one extraction pass in `dm`. */
+  def edges(dm: Dataset[DocMention]): Dataset[KgEdge] =
+    mentionEdges(dm).union(cooccurrenceEdgesFrom(dm))
 
   /** Tiny label -> head-ancestor-type map, folded into triple plans as a
     * literal. */
@@ -252,23 +194,7 @@ final class KgPipeline(
     val dm = docMentions(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ns = nodes(dm)
-    val es = mentionEdges(dm).union(cooccurrenceEdgesFrom(dm))
-    (ns, es, triples(ns, es))
-  }
-
-  /** [[run]] on the dictionary-coded scale path: the persisted working set
-    * carries (doc_id, rank:int, n, score) — the cache, every corpus-sized
-    * aggregate, and the pair shuffle are int-keyed; strings decode from the
-    * broadcast dictionary after the big exchanges. Output is identical to
-    * [[run]] (spec-proven) — this is the path the throughput benchmark and
-    * a 100-TB deployment use. */
-  def runCompact(docs: Dataset[Doc],
-      cacheLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : (Dataset[KgNode], Dataset[KgEdge], Dataset[Triple]) = {
-    val dmc = docMentionsCompact(docs).persist(cacheLevel)
-    val ns = nodesCompact(dmc)
-    val es = mentionEdgesCompact(dmc).union(cooccurrenceEdgesFromCompact(dmc))
+    val es = edges(dm)
     (ns, es, triples(ns, es))
   }
 
@@ -294,7 +220,7 @@ final class KgPipeline(
     // inline the expression into the filter UNDER the projection, and
     // whole-stage codegen shares no subexpressions across Filter/Project —
     // the trie walk ran TWICE per document (measured +2-3s at 16M docs /
-    // 16 cores; ScratchDoubleEval). The Generate evaluates it once and the
+    // 16 cores; BASELINE.md). The Generate evaluates it once and the
     // filter reads the generated column.
     docs.toDF().select(col("doc_id"), explode(array(extract)).as("pm"))
       .where(size(col("pm")) > 0)
@@ -306,26 +232,22 @@ final class KgPipeline(
     * corpus mention stream, no per-mention hash probe); doc ids are
     * one-per-row already. */
   def nodesFromSets(ms: DataFrame): Dataset[KgNode] =
-    nodesFromRanks(
-      graft.extract.CoocCombine.partialRankSets(
-        ms.select(col("pm")).as[Array[Long]], bcDict).toDF("rank"),
+    nodesFrom(
+      entityThinFromRanks(graft.extract.CoocCombine.partialRankSets(
+        ms.select(col("pm")).as[Array[Long]], bcDict).toDF("rank")),
       ms.select(col("doc_id")).as[String])
 
-  /** [[mentionEdgesCompact]] over the mention-set table: explode + a
-    * projection through the broadcast dictionary, all codegen. */
-  def mentionEdgesFromSets(ms: DataFrame): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("mentions")
-    val spec = ctxRef.specs(cls)
-    val label = spec.labelAsEdge.getOrElse(cls)
+  /** [[mentionEdges]] over the mention-set table: explode + a projection
+    * through the broadcast dictionary, all codegen. */
+  def mentionEdgesFromSets(ms: DataFrame): Dataset[KgEdge] =
     ms.select(col("doc_id"), explode(col("pm")).as("p"))
       .select(
         lit(null).cast("string").as("relId"),
         col("doc_id").as("src"),
         curieOf(shiftright(col("p"), 32).cast("int")).as("tgt"),
-        lit(label).as("label"),
+        lit(edgeLabel("mentions")).as("label"),
         propsCol(("n", col("p").bitwiseAND(lit(0xffffffffL)), "int")).as("props"),
       ).as[KgEdge]
-  }
 
   /** Co-occurrence edges over the mention-set table: per-doc pair emission
     * and the partial count run in ONE primitive per-partition combiner
@@ -334,9 +256,7 @@ final class KgPipeline(
     * the only exchange carries dictionary-bounded (pair, partial) rows,
     * summed in one small final aggregate. */
   def cooccurrenceEdgesFromSets(ms: DataFrame,
-      maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("cooccurs")
-    val label = ctxRef.specs(cls).labelAsEdge.getOrElse(cls)
+      maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): Dataset[KgEdge] =
     graft.extract.CoocCombine.partialPairCounts(
         ms.select(col("pm")).as[Array[Long]], bcDict, maxEntitiesPerDoc)
       .toDF("pair", "cnt")
@@ -345,10 +265,9 @@ final class KgPipeline(
         lit(null).cast("string").as("relId"),
         curieOf(shiftright(col("pair"), 32).cast("int")).as("src"),
         curieOf(col("pair").bitwiseAND(lit(0xffffffffL)).cast("int")).as("tgt"),
-        lit(label).as("label"),
+        lit(edgeLabel("cooccurs")).as("label"),
         propsCol(("n_docs", col("n_docs"), "int")).as("props"),
       ).as[KgEdge]
-  }
 
   /** [[triples]] built STRAIGHT from the packed mention-set cache — no
     * KgNode/KgEdge row building, no property bags, no count aggregation (a
@@ -400,12 +319,7 @@ final class KgPipeline(
     val hi = shiftright(col("k"), 32).cast("int")
     val lo = col("k").bitwiseAND(lit(0xffffffffL)).cast("int")
     val entityThin = entityThinFromRanks(keys.filter(hi === lo).select(hi.as("rank")))
-    val entityRaw = entityThin
-      .as[(String, String, String)]
-      .map { case (curie, cls, surface) =>
-        RawNode(curie, cls, Props.of("name" -> PV.str(surface)))
-      }
-    val entityType = Translate.nodes(entityRaw, bcCtx).select(
+    val entityType = entityNodes(entityThin).select(
       col("id").as("subj"),
       lit("rdf:type").as("pred"),
       coalesce(element_at(typeMap, col("label")), col("label")).as("obj"))
@@ -421,21 +335,17 @@ final class KgPipeline(
           .select(col("doc_id").as("subj"),
             lit("rdf:type").as("pred"), lit(obj).as("obj"))
     }
-    val mentionCls = ctxRef.inputLabelToClass("mentions")
-    val mentionLabel = ctxRef.specs(mentionCls).labelAsEdge.getOrElse(mentionCls)
     val mentionTriples = ms.select(col("doc_id"), explode(col("pm")).as("p"))
-      .select(col("doc_id").as("subj"), lit(mentionLabel).as("pred"),
+      .select(col("doc_id").as("subj"), lit(edgeLabel("mentions")).as("pred"),
         curieOf(shiftright(col("p"), 32).cast("int")).as("obj"))
-    val coocCls = ctxRef.inputLabelToClass("cooccurs")
-    val coocLabel = ctxRef.specs(coocCls).labelAsEdge.getOrElse(coocCls)
     val coocTriples = keys.filter(hi =!= lo)
-      .select(curieOf(hi).as("subj"), lit(coocLabel).as("pred"), curieOf(lo).as("obj"))
+      .select(curieOf(hi).as("subj"), lit(edgeLabel("cooccurs")).as("pred"), curieOf(lo).as("obj"))
     entityType.union(docType).union(mentionTriples).union(coocTriples).as[Triple]
   }
 
   /** [[run]] on the fused mention-set path — the path the throughput
-    * benchmark and a 100-TB deployment use. Output identical to [[run]] and
-    * [[runCompact]] (spec-proven). The triple table is built by
+    * benchmark and a 100-TB deployment use. Output identical to [[run]]
+    * (spec-proven). The triple table is built by
     * [[triplesFromSets]] (same rows as `triples(ns, es)`, shared-scan
     * plan); `ns`/`es` stay lazy, so a triples-only consumer never pays the
     * entity-row builds. */

@@ -209,7 +209,7 @@ object SparkEntry {
       // state-commit overhead. The query runs on a CHILD session (shared
       // SparkContext, own SQL conf) with 2 shuffle partitions: stateful-op
       // parallelism == state-store count, and the per-store delta-commit
-      // fs traffic dominates the drain at this data size — ScratchStream
+      // fs traffic dominates the drain at this data size — BASELINE.md
       // r7 warm drains: p8 1.92s, p4 1.74s, p2 1.67s, p1 2.31s (p1 loses
       // task parallelism), RocksDB no better than HDFS at p8 (VERDICT r5
       // #2 cut 32 -> 8; r6 #4 cut 8 -> 2). Drained under
@@ -493,7 +493,7 @@ object SparkEntry {
       // lifetime since the returned plan outlives this builder (ADVICE r7 #1)
       val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
       val ns = pipe.nodes(dm)
-      val es = pipe.mentionEdges(dm).union(pipe.cooccurrenceEdgesFrom(dm))
+      val es = pipe.edges(dm)
       graft.sinks.Tables.schemaInfo(pipe.bcCtx.value, ns, es)
         .select(col("label"), col("kind"), col("n"))
     }),
@@ -513,7 +513,7 @@ object SparkEntry {
       val sink = new graft.sinks.Neo4jCsvSink(pipe.bcCtx.value,
         "/tmp/graft-hdr-unwritten")
       sink.probeNodeLayouts(pipe.nodes(dm))
-      sink.probeEdgeLayouts(pipe.mentionEdges(dm).union(pipe.cooccurrenceEdgesFrom(dm)))
+      sink.probeEdgeLayouts(pipe.edges(dm))
       sink.headerRows().toDF("label", "header")
     }),
     "kg_label_hierarchy" -> ((s, dir) => {
@@ -641,8 +641,7 @@ object SparkEntry {
       // pair aggregate is expensive enough that re-deriving it from the dm
       // checkpoint per consumer measurably loses to replaying the
       // (edge-sized) checkpoint blocks
-      val es = pipe.mentionEdges(dm).union(pipe.cooccurrenceEdgesFrom(dm))
-        .localCheckpoint(false)
+      val es = pipe.edges(dm).localCheckpoint(false)
       // single-frame consumer: release the shared base (see kg_node_frame)
       val (frames, base) = graft.sinks.Tables.edgeFramesWithHandle(pipe.bcCtx.value, es)
       base.unpersist(blocking = false)
@@ -676,7 +675,7 @@ object SparkEntry {
       // the whole node/edge pipeline once per side before the real exchange
       val ns0 = pipe.nodes(dm)
       val ns = ns0.repartition(8, ns0("label"))
-      val es0 = pipe.mentionEdges(dm).union(pipe.cooccurrenceEdgesFrom(dm))
+      val es0 = pipe.edges(dm)
       val es = es0.repartition(4, es0("label"))
       val out = workDir(s, "import")
       val pg = new graft.sinks.PostgresCsvSink(ctx, out)
@@ -725,7 +724,7 @@ object SparkEntry {
       // predicate nodes with biocypher:subject/object links, _rdf.py:127-165)
       val pipe = KgPipeline.analytics(s)
       val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
-      val es = pipe.mentionEdges(dm).union(pipe.cooccurrenceEdgesFrom(dm))
+      val es = pipe.edges(dm)
       new graft.sinks.RdfSink(pipe.bcCtx.value, workDir(s, "rdf")).reifiedEdgeTriples(es)
     }),
     // the four dedup-family rows share ONE computed candidate artifact
@@ -784,7 +783,7 @@ object SparkEntry {
       val sigs = DedupOps.minhashSignaturesFrom(hashed, k = 16).localCheckpoint(false)
       val sets = DedupOps.shingleSetsFrom(hashed).localCheckpoint(false)
       // three INDEPENDENT verify branches over the shared barriered
-      // sigs/sets (ScratchSweep shape comparison: a verify-the-union chain
+      // sigs/sets (OPTIMIZATION_r09.md shape comparison: a verify-the-union chain
       // serializes the critical path — sigs → cands → verify — and
       // measured 5.0-10.1s; three branches over shared checkpoints keep
       // every stage independent so the scheduler overlaps them, 4.2-5.2s;

@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.model._
@@ -30,7 +30,7 @@ final class MentionDict private (
   @transient lazy val byRank: Array[DictEntry] =
     linkFor.indices.sortBy(i => linkFor(i).curie).map(linkFor).toArray
   /** rank -> per-occurrence score unit (prior x surface length): a mention's
-    * score is `scoreUnitByRank(rank) * n`, so the cached compact row need
+    * score is `scoreUnitByRank(rank) * n`, so the packed mention set need
     * not carry it — executor-side consumers rederive it from the broadcast
     * dictionary instead of paying 8 bytes/row of cache bandwidth. */
   @transient lazy val scoreUnitByRank: Array[Double] =
@@ -80,24 +80,6 @@ final case class DocMention(
     score: Double,
 )
 
-/** Dictionary-coded per-document mention: the entity is the pattern's
-  * curie-lexicographic RANK (see [[MentionDict.rankOf]]), not its strings.
-  * This is the SCALE-PATH working row: the corpus-sized cache, shuffles and
-  * aggregations carry one int instead of three strings (curie/cls/surface),
-  * and rank order == curie order, so every downstream sort/pair semantics is
-  * preserved exactly. Strings re-enter by a projection through the
-  * broadcast dictionary ([[graft.functions.RankCurie]]) AFTER the big
-  * aggregations — dictionary encoding end-to-end, decoded at the edges. The
-  * mention score is NOT carried: it is `scoreUnitByRank(rank) * n`,
-  * rederived from the broadcast dictionary by the one consumer that needs
-  * it (the co-occurrence cap tie-break) instead of widening every cached
-  * row by 8 bytes. */
-final case class DocMentionC(
-    doc_id: String,
-    rank: Int,
-    n: Long,
-)
-
 /** Mention detection + entity linking over interleaved text+media documents
   * — the web-scale "adapter" stage (BASELINE.json north rule; replaces the
   * reference's user-generator source, biocypher/_core.py:421-461).
@@ -119,10 +101,10 @@ object Mentions {
 
   /** Per-doc occurrence counts saturate at 2³¹-1: the fused packed-long path
     * ([[graft.functions.ExtractMentions]]) has only 32 bits for the count
-    * half of its `(rank << 32) | n` encoding, so the string and compact
-    * paths clamp at the same bound — all three pipeline paths agree by
-    * construction (ADVICE r5), and a single doc would need >2 G occurrences
-    * of one entity to ever reach it. */
+    * half of its `(rank << 32) | n` encoding, so the string path clamps at
+    * the same bound — both pipeline paths agree by construction (ADVICE
+    * r5), and a single doc would need >2 G occurrences of one entity to
+    * ever reach it. */
   val MaxOccurrencesPerDoc: Long = 0x7fffffffL
 
   @inline private def clampN(n: Long): Long =
@@ -199,10 +181,24 @@ object Mentions {
     }
   }
 
+  /** Trie-counts every text span of `doc` into `counts`, recording each
+    * newly hit pattern index in `touched`; returns the number touched. The
+    * caller reads `counts(touched(i))` for `i < n` and must zero them
+    * before the next doc. */
+  private def countDoc(dict: MentionDict, doc: Doc,
+      counts: Array[Long], touched: Array[Int]): Int = {
+    var nTouched = 0
+    doc.spans.foreach { span =>
+      if (span.kind == "text" && span.text != null)
+        nTouched = dict.trie.countWholeWords(span.text, counts, touched, nTouched)
+    }
+    nTouched
+  }
+
   /** Occurrence mentions aggregated per document inside the same narrow
     * pass (a per-doc hash map in the flatMap — no shuffle): one row per
     * (doc, entity) with occurrence count and summed score. This is the
-    * scale-path entry: downstream dedups operate on these thin rows. */
+    * string path's entry: downstream dedups operate on these thin rows. */
   def detectPerDoc(docs: Dataset[Doc], bcDict: Broadcast[MentionDict]): Dataset[DocMention] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[DocMention]
     docs.mapPartitions { it =>
@@ -212,11 +208,7 @@ object Mentions {
       val counts = new Array[Long](dict.linkFor.length)
       val touched = new Array[Int](dict.linkFor.length)
       it.flatMap { doc =>
-        var nTouched = 0
-        doc.spans.foreach { span =>
-          if (span.kind == "text" && span.text != null)
-            nTouched = dict.trie.countWholeWords(span.text, counts, touched, nTouched)
-        }
+        val nTouched = countDoc(dict, doc, counts, touched)
         val out = new Array[DocMention](nTouched)
         var i = 0
         while (i < nTouched) {
@@ -225,36 +217,6 @@ object Mentions {
           val n = clampN(counts(pi))
           out(i) = DocMention(doc.doc_id, e.curie, e.cls, e.surface, n,
             e.prior * e.surface.length * n)
-          counts(pi) = 0
-          i += 1
-        }
-        out
-      }
-    }
-  }
-
-  /** [[detectPerDoc]]'s dictionary-coded twin: one (doc_id, rank, n) row
-    * per (doc, entity). Same trie pass, same per-doc aggregation — the
-    * emission carries the pattern's curie-lex rank instead of the three
-    * entity strings. See [[DocMentionC]] for why this is the row the
-    * 100-TB path caches and shuffles. */
-  def detectPerDocCompact(docs: Dataset[Doc], bcDict: Broadcast[MentionDict]): Dataset[DocMentionC] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[DocMentionC]
-    docs.mapPartitions { it =>
-      val dict = bcDict.value
-      val counts = new Array[Long](dict.linkFor.length)
-      val touched = new Array[Int](dict.linkFor.length)
-      it.flatMap { doc =>
-        var nTouched = 0
-        doc.spans.foreach { span =>
-          if (span.kind == "text" && span.text != null)
-            nTouched = dict.trie.countWholeWords(span.text, counts, touched, nTouched)
-        }
-        val out = new Array[DocMentionC](nTouched)
-        var i = 0
-        while (i < nTouched) {
-          val pi = touched(i)
-          out(i) = DocMentionC(doc.doc_id, dict.rankOf(pi), clampN(counts(pi)))
           counts(pi) = 0
           i += 1
         }
@@ -281,19 +243,14 @@ object Mentions {
       it.flatMap { doc =>
         // distinct entity RANKS per doc (curie lexicographic order preserved
         // via integer ranks — keeps a < b semantics without string sorting)
-        var nTouched = 0
-        doc.spans.foreach { span =>
-          if (span.kind == "text" && span.text != null)
-            nTouched = dict.trie.countWholeWords(span.text, counts, touched, nTouched)
-        }
+        val nTouched = countDoc(dict, doc, counts, touched)
         var arr = new Array[Int](nTouched)
         val scores = new Array[Double](nTouched)
         var i = 0
         while (i < nTouched) {
           val pi = touched(i)
           arr(i) = dict.rankOf(pi)
-          val e = dict.linkFor(pi)
-          scores(i) = e.prior * e.surface.length * clampN(counts(pi))
+          scores(i) = dict.scoreUnitByRank(arr(i)) * clampN(counts(pi))
           counts(pi) = 0
           i += 1
         }
@@ -388,95 +345,15 @@ object Mentions {
     pairs.groupBy(col("src"), col("tgt")).agg(count(lit(1)).as("n_docs"))
   }
 
-  /** [[cooccurrencePairsFromDocMentions]]'s dictionary-coded twin over
-    * [[DocMentionC]]: pair rows are (src_rank, tgt_rank) INTS — rank order
-    * == curie order, so `src_rank < tgt_rank` reproduces the `a < b` curie
-    * pair semantics (and the score/rank cap tie-break) exactly, while the
-    * only corpus-sized exchange carries 8 bytes per pair instead of two
-    * strings. Columns: (src_rank, tgt_rank, n_docs); decode ranks AFTER
-    * this aggregate. Same doc-run contiguity contract and runtime guard. */
-  def cooccurrencePairsFromCompact(dmc: Dataset[DocMentionC],
-      bcDict: Broadcast[MentionDict],
-      maxEntitiesPerDoc: Int = DefaultMaxEntitiesPerDoc,
-      guard: Boolean = true): DataFrame = {
-    val spark = dmc.sparkSession
-    import spark.implicits._
-    val droppedDocs = spark.sparkContext.longAccumulator("cooccurrence_capped_docs")
-    // pairs are PACKED into one long (srcRank << 32 | tgtRank): the only
-    // corpus-sized exchange shuffles a single 8-byte key (16 B/row unsafe
-    // format vs 24 B for two int columns) and aggregates on one primitive
-    val packed = dmc.mapPartitions { it =>
-      // cap tie-break scores rederive from the broadcast dictionary
-      // (score = scoreUnit(rank) * n) — the cached row doesn't carry them
-      val su = bcDict.value.scoreUnitByRank
-      val base = it.buffered
-      val seenRuns = if (guard) new LongHashSet(1 << 16) else null
-      var ranks = new Array[Int](256)
-      var scores = new Array[Double](256)
-      new Iterator[Long] {
-        private var out: Iterator[Long] = Iterator.empty
-        private def advance(): Unit = {
-          while (!out.hasNext && base.hasNext) {
-            val docId = base.head.doc_id
-            if (guard && !seenRuns.add(docHash(docId)))
-              throw new IllegalStateException(
-                s"doc-run contiguity violated: doc_id $docId reappeared after its run " +
-                  "ended — the DocMentionC dataset was shuffled between detectPerDocCompact " +
-                  "and pair emission (pass guard=false only if contiguity is certain)")
-            var n = 0
-            while (base.hasNext && base.head.doc_id == docId) {
-              if (n == ranks.length) {
-                ranks = java.util.Arrays.copyOf(ranks, n * 2)
-                scores = java.util.Arrays.copyOf(scores, n * 2)
-              }
-              val m = base.next()
-              ranks(n) = m.rank; scores(n) = su(m.rank) * m.n; n += 1
-            }
-            if (n >= 2) {
-              val arr: Array[Int] =
-                if (n > maxEntitiesPerDoc) {
-                  droppedDocs.add(1)
-                  topRanksByScore(java.util.Arrays.copyOf(ranks, n),
-                    java.util.Arrays.copyOf(scores, n), maxEntitiesPerDoc)
-                } else {
-                  val a = java.util.Arrays.copyOf(ranks, n)
-                  java.util.Arrays.sort(a)
-                  a
-                }
-              out = for {
-                a <- arr.indices.iterator
-                b <- ((a + 1) until arr.length).iterator
-              } yield (arr(a).toLong << 32) | arr(b).toLong
-            }
-          }
-        }
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): Long = { advance(); out.next() }
-      }
-    }(org.apache.spark.sql.Encoders.scalaLong).toDF("pair")
-    packed.groupBy(col("pair")).agg(count(lit(1)).as("n_docs"))
-      .select(
-        shiftright(col("pair"), 32).cast("int").as("src_rank"),
-        col("pair").bitwiseAND(lit(0xffffffffL)).cast("int").as("tgt_rank"),
-        col("n_docs"))
-  }
-
   /** Distinct doc ids from an UNSHUFFLED DocMention dataset (same
     * contiguity contract — and runtime guard — as
     * [[cooccurrencePairsFromDocMentions]]): each doc is one contiguous run
     * in exactly one partition, so emitting one id per run IS the global
     * distinct — no 10⁶-key shuffle. */
-  def distinctDocIds(dm: Dataset[DocMention], guard: Boolean = true): Dataset[String] =
-    distinctRunIds(dm.sparkSession, dm.map(_.doc_id)(org.apache.spark.sql.Encoders.STRING), guard)
-
-  /** [[distinctDocIds]] over the dictionary-coded rows — same contract. */
-  def distinctDocIdsC(dmc: Dataset[DocMentionC], guard: Boolean = true): Dataset[String] =
-    distinctRunIds(dmc.sparkSession, dmc.map(_.doc_id)(org.apache.spark.sql.Encoders.STRING), guard)
-
-  private def distinctRunIds(spark: SparkSession, ids: Dataset[String],
-      guard: Boolean): Dataset[String] = {
+  def distinctDocIds(dm: Dataset[DocMention], guard: Boolean = true): Dataset[String] = {
+    val spark = dm.sparkSession
     import spark.implicits._
-    ids.mapPartitions { it =>
+    dm.map(_.doc_id).mapPartitions { it =>
       val seenRuns = if (guard) new LongHashSet(1 << 16) else null
       var last: String = null
       it.flatMap { id =>
@@ -506,33 +383,12 @@ object Mentions {
     }
   }
 
-  /** Entity nodes from text mentions: canonical id = CURIE; the surface and
-    * detection stats become properties downstream of dedup. */
-  def toRawNodes(mentions: Dataset[Mention]): Dataset[RawNode] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[RawNode]
-    mentions.filter(_.cls != "media").map { m =>
-      RawNode(m.curie, m.cls, Props.of("name" -> PV.str(m.surface)))
-    }
-  }
-
   /** Document->entity mention edges. */
   def toMentionEdges(mentions: Dataset[Mention], inputLabel: String = "mentions"): Dataset[RawEdge] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[RawEdge]
     mentions.filter(_.cls != "media").map { m =>
       RawEdge(null, m.doc_id, m.curie, inputLabel, Props.empty)
     }
-  }
-
-  /** Distinct co-occurring entity pairs per doc (a < b), with pair counts —
-    * pure Catalyst (exploded self-join per doc on the deduped per-doc entity
-    * list, no UDF). */
-  def cooccurrence(mentions: Dataset[Mention]): DataFrame = {
-    val perDoc = mentions.filter(col("cls") =!= "media")
-      .select(col("doc_id"), col("curie")).distinct()
-    val a = perDoc.as("a"); val b = perDoc.as("b")
-    a.join(b, col("a.doc_id") === col("b.doc_id") && col("a.curie") < col("b.curie"))
-      .groupBy(col("a.curie").as("src"), col("b.curie").as("tgt"))
-      .agg(count(lit(1)).as("n_docs"))
   }
 
   /** Span-sequence signature per doc: md5 over the ordered

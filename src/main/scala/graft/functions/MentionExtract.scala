@@ -130,7 +130,7 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
       val pi = touched(i)
       val n = counts(pi)
       // saturate at Mentions.MaxOccurrencesPerDoc — the 32-bit count half of
-      // the packed long; the string/compact paths clamp identically
+      // the packed long; the string path clamps identically
       out(i) = (dict.rankOf(pi).toLong << 32) |
         (if (n > graft.extract.Mentions.MaxOccurrencesPerDoc)
            graft.extract.Mentions.MaxOccurrencesPerDoc else n)
@@ -205,7 +205,7 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
   * pair semantics exactly. Docs above `maxEntities` keep their top entities
   * by (score desc, rank asc), score rederived from the broadcast dictionary
   * as `scoreUnit(rank) * n` — identical cap semantics to
-  * [[Mentions.cooccurrencePairsFromCompact]].
+  * [[Mentions.cooccurrencePairs]].
   *
   * Because the input row IS the document, there is no run-walking and no
   * contiguity contract: this works on any (even shuffled) mention-set table.

@@ -36,7 +36,7 @@ object DeltaOps {
     * one side is a small changed-batch rebuild, AQE broadcasts it.
     *
     * Two contract knobs unlock the fully co-located pass
-    * (`ScratchDeltaBucket` evidence: 4 exchanges unbucketed → 2 bucketed
+    * (runtime plan evidence in PLANS.md: 4 exchanges unbucketed → 2 bucketed
     * → 0 bucketed + both knobs):
     *  - `assumeDistinct = true` skips the defensive per-side dedup —
     *    correct whenever the inputs are real snapshots (the sink's

@@ -144,8 +144,8 @@ object SampleOps {
     * carries thin (id, long) rows, and nothing is collected to the
     * driver. The partials branch and the main branch share the range
     * exchange: both subtrees are pure Catalyst, so AQE's ReusedExchange
-    * fires and the input is scanned once (verified at runtime,
-    * `tools/ScratchPackPlan` — unlike object-operator subtrees, which
+    * fires and the input is scanned once (verified at runtime, PLANS.md
+    * r8 plan audits — unlike object-operator subtrees, which
     * AQE does not unify; see `KgPipeline.triplesFromSets`).
     * Deterministic: the offsets depend only on the global id order, not
     * on the partition boundaries (spec-proven identical at 1 and 7
@@ -346,7 +346,7 @@ object SampleOps {
       // partitioning column that column pruning cannot inline into the
       // bucket expression on the partials branch — without it the two
       // range-exchange subtrees canonicalize differently and AQE scans +
-      // tokenizes the corpus TWICE (measured, ScratchShufflePlan; a
+      // tokenizes the corpus TWICE (measured, PLANS.md r8 audits; a
       // count("n_tokens") pin fails too: the optimizer rewrites
       // non-null-column counts back to count(1) and pruning re-inlines)
       .repartitionByRange(p, col("bucket"), col("_k"), col("doc_id"),

@@ -56,7 +56,7 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("occurrence counts saturate identically on string, compact and fused paths") {
+  test("occurrence counts saturate identically on string and fused paths") {
     // can't build a >2^31-occurrence doc; assert the clamp constant is the
     // packed-long bound and that normal counts are untouched
     assert(Mentions.MaxOccurrencesPerDoc == 0x7fffffffL)
@@ -65,17 +65,6 @@ class PipelineSpec extends AnyFunSuite {
       graft.model.Span("text", "scan scan scan join", null, 0)))).toDS()
     val n = Mentions.detectPerDoc(docs, bc).collect().map(m => m.curie -> m.n).toMap
     assert(n("op:scan") == 3 && n("op:join") == 1)
-  }
-
-  test("dictionary-coded (compact) pipeline == string pipeline, end to end") {
-    val docs = Corpus.synthesize(spark, 400, AnalyticsDomain.vocab).persist()
-    val pipe = graft.KgPipeline.analytics(spark)
-    val (ns, es, ts) = pipe.run(docs)
-    val (nsC, esC, tsC) = pipe.runCompact(docs)
-    assert(nsC.collect().toSet == ns.collect().toSet)
-    assert(esC.collect().toSet == es.collect().toSet)
-    assert(tsC.collect().toSet == ts.collect().toSet)
-    docs.unpersist()
   }
 
   test("fused mention-set pipeline == string pipeline, end to end") {
@@ -108,9 +97,7 @@ class PipelineSpec extends AnyFunSuite {
     def bigLocal(plan: LogicalPlan): Seq[Int] =
       plan.collectWithSubqueries { case l: LocalRelation if l.data.size > 64 => l.data.size }
     val (nsF, esF, tsF) = pipe.runFused(docs)
-    val (nsC, esC, tsC) = pipe.runCompact(docs)
-    for ((name, ds) <- Seq("fused nodes" -> nsF, "fused edges" -> esF, "fused triples" -> tsF,
-        "compact nodes" -> nsC, "compact edges" -> esC, "compact triples" -> tsC)) {
+    for ((name, ds) <- Seq("fused nodes" -> nsF, "fused edges" -> esF, "fused triples" -> tsF)) {
       val qe = ds.queryExecution
       assert(bigLocal(qe.analyzed).isEmpty, s"$name: analyzed plan holds LocalRelation(s) ${bigLocal(qe.analyzed)}")
       assert(bigLocal(qe.optimizedPlan).isEmpty, s"$name: optimized plan holds LocalRelation(s) ${bigLocal(qe.optimizedPlan)}")
@@ -249,9 +236,10 @@ class PipelineSpec extends AnyFunSuite {
         .select(col("doc_id"), explode(col("pm")).as("p"))
         .select(col("doc_id"), shiftright(col("p"), 32).cast("int"),
           col("p").bitwiseAND(lit(0xffffffffL)))
-        .as[(String, Int, Long)].collect().toSet
-      val expected = Mentions.detectPerDocCompact(docs, bc).collect()
-        .map(m => (m.doc_id, m.rank, m.n)).toSet
+        .as[(String, Int, Long)].collect()
+        .map { case (d, r, n) => val e = dict.byRank(r); (d, e.curie, e.surface, n) }.toSet
+      val expected = Mentions.detectPerDoc(docs, bc).collect()
+        .map(m => (m.doc_id, m.curie, m.surface, m.n)).toSet
       assert(got == expected, s"dict=${dict.linkFor.map(_.surface).mkString(",")}")
     }
   }

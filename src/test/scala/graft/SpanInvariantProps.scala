@@ -2,6 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Properties, Test => ScTest}
 import org.scalacheck.Prop.forAll
+import org.apache.spark.sql.functions.{col, explode, lit, shiftright}
 import graft.corpus.AnalyticsDomain
 import graft.extract.{AhoCorasick, Mentions}
 import graft.model.{Doc, Span}
@@ -91,19 +92,15 @@ object SpanPipelineProps extends Properties("SpanPipeline") {
       val ds = spark.createDataset(docs)
       val pipe = KgPipeline.analytics(spark)
       val (ns, es, ts) = pipe.run(ds)
-      val (nsC, esC, tsC) = pipe.runCompact(ds)
       val (nsF, esF, tsF) = pipe.runFused(ds)
-      val ok = nsC.collect().toSet == ns.collect().toSet &&
-        esC.collect().toSet == es.collect().toSet &&
-        tsC.collect().toSet == ts.collect().toSet &&
-        nsF.collect().toSet == ns.collect().toSet &&
+      val ok = nsF.collect().toSet == ns.collect().toSet &&
         esF.collect().toSet == es.collect().toSet &&
         tsF.collect().toSet == ts.collect().toSet
-      spark.catalog.clearCache() // the three runs persist their working sets
+      spark.catalog.clearCache() // both runs persist their working sets
       ok
     }
 
-  property("detectPerDoc == detect aggregated; compact decodes to the same rows") =
+  property("detectPerDoc == detect aggregated; fused ExtractMentions decodes to the same rows") =
     forAll(PropGen.corpus) { docs =>
       import spark.implicits._
       val ds = spark.createDataset(docs)
@@ -113,9 +110,13 @@ object SpanPipelineProps extends Properties("SpanPipeline") {
       val perDoc = Mentions.detectPerDoc(ds, bc).collect()
         .map(m => (m.doc_id, m.curie) -> m.n).toMap
       val dict = AnalyticsDomain.dict
-      val compact = Mentions.detectPerDocCompact(ds, bc).collect()
-        .map(m => (m.doc_id, dict.byRank(m.rank).curie) -> m.n).toMap
-      occ == perDoc && perDoc == compact
+      val fused = KgPipeline.analytics(spark).mentionSets(ds)
+        .select(col("doc_id"), explode(col("pm")).as("p"))
+        .select(col("doc_id"), shiftright(col("p"), 32).cast("int"),
+          col("p").bitwiseAND(lit(0xffffffffL)))
+        .as[(String, Int, Long)].collect()
+        .map { case (d, r, n) => (d, dict.byRank(r).curie) -> n }.toMap
+      occ == perDoc && perDoc == fused
     }
 
   property("media spans pass through detect as provenance mentions, counts exact") =
