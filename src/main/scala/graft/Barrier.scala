@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.Dataset
 
-/** The engine's one lineage-barrier policy (VERDICT r7 #1), shared by every
-  * operator that materializes a small intermediate consumed by several
-  * branches (`Pipeline.triplesFromSets`' key set, `GraphOps`' edge lists,
-  * `TextOps.bm25TopK`'s per-doc stats, `ResolveOps`' name set):
+/** The one lineage barrier in main: every materialization of a shared
+  * intermediate (an operator's multi-consumer frame, an iterative round,
+  * a per-corpus artifact) goes through `Barrier`, so one rule decides how
+  * it is stored:
   *
   *  - with a SparkContext checkpoint dir configured (cluster operation)
   *    and `spark.graft.barrier` not forced to `local`, the barrier is a
@@ -19,7 +19,9 @@ import org.apache.spark.sql.Dataset
   * the default after exercising the reliable branch). Both branches are
   * spec-proven result-identical (PipelineSpec). Lazy in both cases: the
   * barrier materializes with the first action, so building a plan never
-  * triggers jobs (the lmScore lesson).
+  * triggers jobs (the lmScore lesson); a caller that needs it built now
+  * runs one action on it. `SourceHygieneSpec` keeps raw checkpoint calls
+  * out of the rest of main.
   */
 object Barrier {
   def apply[T](ds: Dataset[T]): Dataset[T] = {

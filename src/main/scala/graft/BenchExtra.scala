@@ -21,19 +21,19 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
 
   /** Same minimal stateful streaming drain as Bench's private warmup
-    * (duplicated here because Bench.scala is frozen for measurement): loads
-    * the incremental planner / state-store / WAL classes once so streaming
-    * rows measure operators, not class loading. */
+    * (Bench.scala is frozen, so it keeps its own copy): loads the
+    * incremental planner / state-store / WAL classes once so streaming rows
+    * measure operators, not class loading. */
   private def streamingWarmup(spark: SparkSession): Unit = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val base = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(System.getProperty("java.io.tmpdir")),
       "graft-streamwarm-" + java.util.UUID.randomUUID().toString.take(8))
     val in = new org.apache.hadoop.fs.Path(base, "in").toString
     spark.range(16).selectExpr("id", "id % 4 as k").repartition(2)
       .write.mode("overwrite").parquet(in)
-    val q = spark.readStream
+    val counts = spark.readStream
       .schema("id LONG, k LONG").option("maxFilesPerTrigger", 1).parquet(in)
       .as[(Long, Long)]
       .groupByKey(_._2)
@@ -42,12 +42,8 @@ object BenchExtra {
           val n = st.getOption.getOrElse(0L) + rows.size
           st.update(n); Iterator.single(n)
       }
-      .writeStream.format("memory").queryName("graft_stream_warm_extra")
-      .outputMode("append")
-      .option("checkpointLocation", new org.apache.hadoop.fs.Path(base, "ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    graft.streaming.Streaming.drainToMemory(counts.toDF(),
+      new org.apache.hadoop.fs.Path(base, "ckpt").toString)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(base, true)
   }

@@ -88,15 +88,10 @@ object BenchPipeline {
     * table). */
   def pipelineRun(spark: SparkSession, nDocs: Long): (Double, Long) = {
     import spark.implicits._
-    val docs =
-      if (sys.env.get("SPARK_GRAFT_BENCH_SYNTH").contains("inline"))
-        Corpus.synthesize(spark, nDocs, AnalyticsDomain.vocab, numPartitions = layoutParts(nDocs))
-      else spark.read.parquet(ensureInput(spark, nDocs)).as[graft.model.Doc]
+    val docs = spark.read.parquet(ensureInput(spark, nDocs)).as[graft.model.Doc]
     val pipe = KgPipeline.analytics(spark)
     val t0 = System.nanoTime()
-    import org.apache.spark.storage.StorageLevel
-    val (ns, es, ts) = pipe.runFused(docs, StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_CACHE_LEVEL", "MEMORY_AND_DISK")))
+    val (ns, es, ts) = pipe.runFused(docs)
     val _ = (ns, es)
     val n = ts.count()
     spark.sharedState.cacheManager.clearCache()

@@ -202,7 +202,7 @@ final class KgPipeline(
 
   /** The FUSED working set: one row per document with >= 1 mention,
     * `(doc_id, pm: array<long>)`, each element `(rank << 32) | n` — built by
-    * the codegen'd [[graft.functions.ExtractMentions]] walking span bytes in
+    * the codegen'd [[graft.functions.ExtractMentionsKT]] walking span bytes in
     * place (no Doc/Span/String materialization, no encoder round trip).
     * Versus the row-per-mention working set this pays the doc_id string once
     * per DOCUMENT (~4x less cache traffic at ~14 mentions/doc), doc ids are
@@ -211,8 +211,8 @@ final class KgPipeline(
   def mentionSets(docs: Dataset[Doc]): DataFrame = {
     // kind/text as parallel GetArrayStructFields extractions: nested schema
     // pruning narrows the parquet ReadSchema to spans.{kind,text} — the
-    // scan never decodes media_ref/offset (the whole-struct ExtractMentions
-    // form read all four nested columns)
+    // scan never decodes media_ref/offset (a whole-struct `spans` input
+    // reads all four nested columns)
     val extract = exprCol(graft.functions.ExtractMentionsKT(
       colExpr(col("spans.kind")), colExpr(col("spans.text")), bcDict))
     // explode(array(e)) is a pushdown barrier, not a transformation: a bare
@@ -278,25 +278,15 @@ final class KgPipeline(
     *  - rank presence AND co-occurrence pairs come from ONE shared combiner
     *    scan ([[graft.extract.CoocCombine.partialPairAndRankKeys]] — ranks
     *    ride as self-pairs, unambiguous because real pairs are strictly
-    *    a < b): the distinct packed keys are dictionary-bounded and lazily
-    *    `localCheckpoint`ed, so the corpus-sized scan + combiner + distinct
+    *    a < b): the distinct packed keys are dictionary-bounded and sit
+    *    behind a [[Barrier]], so the corpus-sized scan + combiner + distinct
     *    exchange run ONCE per action no matter how many consumers sit above
     *    (measured: AQE did NOT stage-reuse the three analyzer-cloned copies
     *    of the object-operator subtree, so plan-level sharing alone
-    *    re-scanned the cache per consumer). The checkpoint is a leaf — a
-    *    free pushdown barrier — and its blocks are freed by the
-    *    ContextCleaner when the dataset goes unreachable (no cache leak).
-    *    Cluster note: the barrier is config-gated. When the SparkContext
-    *    has a checkpoint dir (`sc.setCheckpointDir` / a cluster's
-    *    `spark.checkpoint.dir`) — and `spark.graft.barrier` is not forced
-    *    to `local` — the barrier is a RELIABLE `Dataset.checkpoint(eager =
-    *    false)`: blocks live on the cluster FS, so an executor loss
-    *    recomputes nothing and fails nothing. Without a checkpoint dir
-    *    (the sandbox default) it stays `localCheckpoint`, whose blocks are
-    *    lineage-truncated — an executor loss fails the job, acceptable
-    *    because the data is ≤ C(|dict|, 2) longs and job-level retry is
-    *    cheap at that size. Both paths spec-proven identical
-    *    (PipelineSpec);
+    *    re-scanned the cache per consumer). The barrier is a leaf — a free
+    *    pushdown barrier. Without a checkpoint dir its blocks are local, so
+    *    an executor loss fails the job; acceptable here because the data is
+    *    ≤ C(|dict|, 2) longs and job-level retry is cheap at that size;
     *  - mention triples are explode + a 3-column select that decodes the
     *    rank by a projection through the broadcast dictionary (the KgEdge
     *    path built a props bag per row);
@@ -312,9 +302,6 @@ final class KgPipeline(
     val distinctKeys = graft.extract.CoocCombine.partialPairAndRankKeys(
         ms.select(col("pm")).as[Array[Long]], bcDict, maxEntitiesPerDoc)
       .toDF("k").distinct()
-    // lazy barrier: materializes with the first action; reliable (cluster-FS)
-    // when a checkpoint dir is configured, local blocks otherwise — see the
-    // cluster note above and graft.Barrier.
     val keys = Barrier(distinctKeys)
     val hi = shiftright(col("k"), 32).cast("int")
     val lo = col("k").bitwiseAND(lit(0xffffffffL)).cast("int")
@@ -349,11 +336,8 @@ final class KgPipeline(
     * [[triplesFromSets]] (same rows as `triples(ns, es)`, shared-scan
     * plan); `ns`/`es` stay lazy, so a triples-only consumer never pays the
     * entity-row builds. */
-  def runFused(docs: Dataset[Doc],
-      cacheLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : (Dataset[KgNode], Dataset[KgEdge], Dataset[Triple]) = {
-    val ms = mentionSets(docs).persist(cacheLevel)
+  def runFused(docs: Dataset[Doc]): (Dataset[KgNode], Dataset[KgEdge], Dataset[Triple]) = {
+    val ms = mentionSets(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ns = nodesFromSets(ms)
     val es = mentionEdgesFromSets(ms).union(cooccurrenceEdgesFromSets(ms))
     (ns, es, triplesFromSets(ms))

@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.{AnalyticsDomain, Corpus}
+import graft.model.Doc
 import graft.ops.{AnnOps, DedupOps, MultimodalOps, TextOps}
+import graft.streaming.Streaming
 
 /** Driver contract — one `queries` entry per implemented operator
   * (SURVEY.md §2 + the training-data operator set), each with a DuckDB
@@ -59,22 +61,32 @@ object SparkEntry {
       tmp
     })
 
+  /** Per-corpus DataFrame artifacts, one barriered frame per (context,
+    * corpus dir). A frame is bound to the context that built it, so the
+    * key carries the context, and entries whose context has stopped are
+    * evicted on lookup (the `KgPipeline.analytics` discipline). */
+  private final class FrameMemo {
+    private val frames = new java.util.concurrent.ConcurrentHashMap[
+      (org.apache.spark.SparkContext, String), DataFrame]()
+    def apply(s: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
+      frames.keySet.removeIf(_._1.isStopped)
+      frames.computeIfAbsent((s.sparkContext, dir), _ => Barrier(build))
+    }
+  }
+
   /** The LSH candidate-pair set is a dedup-family ARTIFACT (VERDICT r4 #3):
     * candidates/clusters/verified/apply all consume one computed set per
-    * corpus dir, eagerly materialized via localCheckpoint — exactly the
-    * ivfCentCache discipline (candidates belong to an artifact, not a
-    * query). */
-  private val lshCandCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * corpus dir — exactly the ivfCentCache discipline (candidates belong to
+    * an artifact, not a query). */
+  private val lshCandCache = new FrameMemo
   private def lshCandArtifact(s: SparkSession, dir: String): DataFrame =
-    lshCandCache.computeIfAbsent(dir, _ =>
-      DedupOps.lshCandidates(tbl(s, dir, "documents"), n = 2, k = 16, r = 8)
-        .localCheckpoint())
+    lshCandCache(s, dir)(
+      DedupOps.lshCandidates(tbl(s, dir, "documents"), n = 2, k = 16, r = 8))
 
   /** Near-dup cluster assignment derived from the shared candidate set. */
-  private val dedupClusterCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val dedupClusterCache = new FrameMemo
   private def dedupClustersArtifact(s: SparkSession, dir: String): DataFrame =
-    dedupClusterCache.computeIfAbsent(dir, _ =>
-      DedupOps.dedupClusters(lshCandArtifact(s, dir)).localCheckpoint())
+    dedupClusterCache(s, dir)(DedupOps.dedupClusters(lshCandArtifact(s, dir)))
 
   /** Staged multi-file stream-source input per corpus dir: the sf test
     * table is a single parquet FILE, and the file stream source wants a
@@ -92,6 +104,25 @@ object SparkEntry {
       streamIn
     })
 
+  /** The streaming rows' shared input: the staged corpus read as a file
+    * stream, 4 files per trigger — 2 micro-batches, so cross-batch dedup
+    * state is genuinely exercised without paying 8x the per-batch
+    * state-commit overhead. The stream runs on a CHILD session (shared
+    * SparkContext, own SQL conf) with 2 shuffle partitions: stateful-op
+    * parallelism == state-store count, and the per-store delta-commit fs
+    * traffic dominates the drain at this data size — BASELINE.md r7 warm
+    * drains: p8 1.92s, p4 1.74s, p2 1.67s, p1 2.31s (p1 loses task
+    * parallelism), RocksDB no better than HDFS at p8 (VERDICT r5 #2 cut
+    * 32 -> 8; r6 #4 cut 8 -> 2). */
+  private def docsStream(s: SparkSession, dir: String): Dataset[Doc] = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "2")
+    val streamIn = streamInputArtifact(s, dir)
+    val schema = ss.read.parquet(streamIn).schema
+    Corpus.fromDocumentsTable(
+      ss.readStream.schema(schema).option("maxFilesPerTrigger", 4).parquet(streamIn))
+  }
+
   /** Learned BPE merge table per corpus dir (tokenizer-training artifact:
     * one word-frequency aggregate + driver-side greedy merging over the
     * capped dict). */
@@ -107,8 +138,8 @@ object SparkEntry {
   def artifactBuilders: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "ivf_centroids" -> ((s, dir) => { ivfCents(s, dir); () }),
     "ivf_index" -> ((s, dir) => { ivfIndex(s, dir); () }),
-    "lsh_candidates" -> ((s, dir) => { lshCandArtifact(s, dir); () }),
-    "dedup_clusters" -> ((s, dir) => { dedupClustersArtifact(s, dir); () }),
+    "lsh_candidates" -> ((s, dir) => { lshCandArtifact(s, dir).count(); () }),
+    "dedup_clusters" -> ((s, dir) => { dedupClustersArtifact(s, dir).count(); () }),
     "bpe_merges" -> ((s, dir) => { bpeMerges(s, dir); () }),
     "stream_input" -> ((s, dir) => { streamInputArtifact(s, dir); () }),
   )
@@ -177,12 +208,8 @@ object SparkEntry {
       // dropDuplicates winner is invisible to the hash compare.
       val pipe = KgPipeline.analytics(s)
       import s.implicits._
-      // lazy localCheckpoint, NOT persist: the blocks are freed by the
-      // ContextCleaner once the dataset goes unreachable, while a SQL-cache
-      // entry would outlive the query and accumulate across bench reps
-      // (ADVICE r7 #1). Materializes once with the first action and is
-      // shared by the entity and doc branches below.
-      val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
+      // shared by the entity and doc branches below
+      val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
       val entityRaw = dm.select(col("curie"), col("cls"), col("surface"))
         .as[(String, String, String)]
         .map { case (c, cls, sf) =>
@@ -197,87 +224,45 @@ object SparkEntry {
     }),
     "kg_stream_nodes" -> ((s, dir) => {
       // streaming slice, batch-twin oracled (VERDICT r4 #6): the SAME docs
-      // corpus ingested as a Structured Streaming file source (one file per
-      // micro-batch), run through the streaming mention->translate->
-      // cross-batch-dedup slice into a memory sink, must equal the batch
-      // pipeline's node set EXACTLY — the oracle is kg_nodes' oracle
+      // corpus ingested as a Structured Streaming file source, run through
+      // the streaming mention->translate->cross-batch-dedup slice into a
+      // memory sink, must equal the batch pipeline's node set EXACTLY — the
+      // oracle is kg_nodes' oracle
       val pipe = KgPipeline.analytics(s)
-      // the test table is a single parquet FILE; the file stream source
-      // wants a DIRECTORY, so stage the same corpus as 8 files and trigger
-      // 4 at a time — a real multi-micro-batch run (2 batches: cross-batch
-      // dedup state genuinely exercised) without paying 8x the per-batch
-      // state-commit overhead. The query runs on a CHILD session (shared
-      // SparkContext, own SQL conf) with 2 shuffle partitions: stateful-op
-      // parallelism == state-store count, and the per-store delta-commit
-      // fs traffic dominates the drain at this data size — BASELINE.md
-      // r7 warm drains: p8 1.92s, p4 1.74s, p2 1.67s, p1 2.31s (p1 loses
-      // task parallelism), RocksDB no better than HDFS at p8 (VERDICT r5
-      // #2 cut 32 -> 8; r6 #4 cut 8 -> 2). Drained under
-      // Trigger.AvailableNow — terminates deterministically when the
-      // staged files are consumed, instead of processAllAvailable's
-      // polling settle.
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
-      val streamIn = streamInputArtifact(s, dir)
-      val schema = ss.read.parquet(streamIn).schema
-      val docsStream = Corpus.fromDocumentsTable(
-        ss.readStream.schema(schema).option("maxFilesPerTrigger", 4)
-          .parquet(streamIn))
+      val docs = docsStream(s, dir)
       // ttl = null: processing-time TTL timers schedule no-data micro-
       // batches forever (and AvailableNow would drop unexpired timers at
       // drain end anyway); the TTL path has its own spec (StreamingSpec),
       // and unbounded state is exact — which is what a batch-equality
       // check needs
-      val nodes = graft.streaming.Streaming.ingestNodesStream(
-        docsStream, pipe.bcDict, pipe.bcCtx, ttl = null)
-      val sinkName = "kg_stream_nodes_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-      val q = nodes.toDF().writeStream.format("memory").queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", workDir(s, "stream-ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      ss.table(sinkName)
+      val nodes = Streaming.ingestNodesStream(docs, pipe.bcDict, pipe.bcCtx, ttl = null)
+      Streaming.drainToMemory(nodes.toDF(), workDir(s, "stream-ckpt"))
         .select(col("id"), col("label"), col("preferredId").as("preferred_id"))
     }),
     "kg_stream_edges" -> ((s, dir) => {
       // edge half of the streaming KG slice, batch-twin oracled (VERDICT
-      // r6 #2): same staging as kg_stream_nodes (8 staged files, 4 per
-      // trigger -> 2 micro-batches, child session with 2 state partitions,
-      // AvailableNow drain), run through ingestEdgesStream — mention
-      // detection -> RawEdge -> translation -> TTL-bounded cross-batch
-      // edge dedup on (label, src_tgt). Must equal the batch mention-edge
-      // set exactly; (src, tgt, label) are all functions of the dedup key,
-      // so the first-seen winner is deterministic under the hash compare.
+      // r6 #2), same staging and drain as kg_stream_nodes, run through
+      // ingestEdgesStream — mention detection -> RawEdge -> translation ->
+      // cross-batch edge dedup on (label, src_tgt). Must equal the batch
+      // mention-edge set exactly; (src, tgt, label) are all functions of
+      // the dedup key, so the first-seen winner is deterministic under the
+      // hash compare.
       val pipe = KgPipeline.analytics(s)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
-      val streamIn = streamInputArtifact(s, dir)
-      val schema = ss.read.parquet(streamIn).schema
-      val docsStream = Corpus.fromDocumentsTable(
-        ss.readStream.schema(schema).option("maxFilesPerTrigger", 4)
-          .parquet(streamIn))
-      val edges = graft.streaming.Streaming.ingestEdgesStream(
-        docsStream, pipe.bcDict, pipe.bcCtx, ttl = null)
-      val sinkName = "kg_stream_edges_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-      val q = edges.toDF().writeStream.format("memory").queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", workDir(s, "stream-edges-ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      ss.table(sinkName).select(col("src"), col("tgt"), col("label"))
+      val docs = docsStream(s, dir)
+      val edges = Streaming.ingestEdgesStream(docs, pipe.bcDict, pipe.bcCtx, ttl = null)
+      Streaming.drainToMemory(edges.toDF(), workDir(s, "stream-ckpt"))
+        .select(col("src"), col("tgt"), col("label"))
     }),
     "kg_stream_delta" -> ((s, dir) => {
       // streaming incremental maintenance: the docs corpus streams in and
       // ONLY nodes absent from the previous snapshot (the doc_id % 3 <> 0
       // subset — kg_delta's snapshot A, in production read back from the
       // sink) emerge. The snapshot seeds the dedup STATE (initialState) —
-      // no per-micro-batch join against it; same staging/trigger/state
-      // sizing as kg_stream_nodes.
+      // no per-micro-batch join against it; same staging and drain as
+      // kg_stream_nodes.
       val pipe = KgPipeline.analytics(s)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
+      val docs = docsStream(s, dir)
+      val ss = docs.sparkSession
       import ss.implicits._
       // NOTE (r9): deriving the snapshot ids through the fused path
       // (triplesFromSets rdf:type subjects) was tried and measured SLOWER
@@ -288,35 +273,23 @@ object SparkEntry {
           ss.read.parquet(s"$dir/documents.parquet")
             .filter(col("doc_id") % 3 =!= 0))))
         .map(_.id)
-      val streamIn = streamInputArtifact(s, dir)
-      val schema = ss.read.parquet(streamIn).schema
-      val docsStream = Corpus.fromDocumentsTable(
-        ss.readStream.schema(schema).option("maxFilesPerTrigger", 4)
-          .parquet(streamIn))
       val nodes0 = graft.translate.Translate.nodes(
         graft.extract.Mentions.toRawNodesWithDocs(
-          graft.extract.Mentions.detect(docsStream, pipe.bcDict)), pipe.bcCtx)
+          graft.extract.Mentions.detect(docs, pipe.bcDict)), pipe.bcCtx)
       // ttl = null: unbounded state is exact, which the batch-twin oracle
       // needs (the TTL path has its own spec)
-      val adds = graft.streaming.Streaming.nodeAddsStream(nodes0, prevIds, ttl = null)
-      val sinkName = "kg_stream_delta_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-      val q = adds.toDF().writeStream.format("memory").queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", workDir(s, "stream-delta-ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      ss.table(sinkName)
+      val adds = Streaming.nodeAddsStream(nodes0, prevIds, ttl = null)
+      Streaming.drainToMemory(adds.toDF(), workDir(s, "stream-ckpt"))
         .select(col("id"), col("label"), col("preferredId").as("preferred_id"))
     }),
     "kg_stream_delta_edges" -> ((s, dir) => {
       // edge half of the streaming incremental slice: only mention edges
       // whose (label, key) is absent from the previous snapshot emerge;
       // snapshot keys seed the state store (initialState), same staging
-      // as kg_stream_delta
+      // and drain as kg_stream_delta
       val pipe = KgPipeline.analytics(s)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "2")
+      val docs = docsStream(s, dir)
+      val ss = docs.sparkSession
       import ss.implicits._
       // snapshot edge keys in pure Catalyst: mention edges carry no relId,
       // so dedupKey(e) == src + "_" + tgt — a two-column select over the
@@ -328,24 +301,13 @@ object SparkEntry {
         .toDF()
         .select(col("label"), concat(col("src"), lit("_"), col("tgt")).as("k"))
         .as[(String, String)]
-      val streamIn = streamInputArtifact(s, dir)
-      val schema = ss.read.parquet(streamIn).schema
-      val docsStream = Corpus.fromDocumentsTable(
-        ss.readStream.schema(schema).option("maxFilesPerTrigger", 4)
-          .parquet(streamIn))
       val edges0 = graft.translate.Translate.edges(
         graft.extract.Mentions.toMentionEdges(
-          graft.extract.Mentions.detect(docsStream, pipe.bcDict)), pipe.bcCtx)
+          graft.extract.Mentions.detect(docs, pipe.bcDict)), pipe.bcCtx)
         .filter(_.edge != null).map(_.edge)
-      val adds = graft.streaming.Streaming.edgeAddsStream(edges0, prevKeys, ttl = null)
-      val sinkName = "kg_stream_delta_e_" + java.util.UUID.randomUUID().toString.take(8).replace("-", "")
-      val q = adds.toDF().writeStream.format("memory").queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", workDir(s, "stream-delta-e-ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      ss.table(sinkName).select(col("src"), col("tgt"), col("label"))
+      val adds = Streaming.edgeAddsStream(edges0, prevKeys, ttl = null)
+      Streaming.drainToMemory(adds.toDF(), workDir(s, "stream-ckpt"))
+        .select(col("src"), col("tgt"), col("label"))
     }),
     "kg_triples" -> ((s, dir) => {
       val pipe = KgPipeline.analytics(s)
@@ -356,14 +318,9 @@ object SparkEntry {
       // the PRODUCTION fused path (mentionSets -> triplesFromSets: packed
       // mention-set cache, shared rank+pair combiner, dense bitset) under
       // the same oracle as kg_triples — the bench path is now directly
-      // driver-gated, not only spec-parity-proven. The mention-set cache
-      // is a lazy localCheckpoint, not runFused's persist: identical
-      // sharing, but the blocks free themselves when the returned plan
-      // goes unreachable instead of leaking a CacheManager entry per
-      // invocation (ADVICE r7 #1 discipline).
+      // oracle-gated, not only spec-parity-proven
       val pipe = KgPipeline.analytics(s)
-      pipe.triplesFromSets(pipe.mentionSets(kgDocs(s, dir)).localCheckpoint(false))
-        .toDF()
+      pipe.triplesFromSets(Barrier(pipe.mentionSets(kgDocs(s, dir)))).toDF()
     }),
     "kg_cooccurrence" -> ((s, dir) => {
       val pipe = KgPipeline.analytics(s)
@@ -371,11 +328,9 @@ object SparkEntry {
     }),
     "kg_degree_hist" -> ((s, dir) => {
       // graph-shape QA over the production fused triple path: out-degree
-      // distribution (two map-side-combined hash aggs, hub-safe). Same
-      // lazy-localCheckpoint cache as kg_triples_fused (no persist leak).
+      // distribution (two map-side-combined hash aggs, hub-safe)
       val pipe = KgPipeline.analytics(s)
-      val t = pipe.triplesFromSets(
-        pipe.mentionSets(kgDocs(s, dir)).localCheckpoint(false))
+      val t = pipe.triplesFromSets(Barrier(pipe.mentionSets(kgDocs(s, dir))))
       graft.sinks.Tables.degreeHistogram(t.toDF())
     }),
     "kg_pagerank" -> ((s, dir) => {
@@ -413,10 +368,10 @@ object SparkEntry {
     "kg_pmi_edges" -> ((s, dir) => {
       // PMI edge confidence: integer fixed-point lift over the pair
       // aggregate, both frequency sides broadcast. ONE detect pass shared
-      // by the pair builder and the df side (lazy localCheckpoint —
-      // blocks are ContextCleaner-freed; contiguity preserved, no shuffle)
+      // by the pair builder and the df side (contiguity preserved, no
+      // shuffle)
       val pipe = KgPipeline.analytics(s)
-      val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
+      val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
       val pairs = graft.extract.Mentions.cooccurrencePairsFromDocMentions(dm)
       graft.ops.GraphOps.pmiEdges(pairs,
         dm.toDF().select(col("doc_id"), col("curie")))
@@ -470,28 +425,24 @@ object SparkEntry {
       // lesson. Kept as two parallel passes deliberately.
       def snap(keep: org.apache.spark.sql.Column): DataFrame = {
         // one extraction pass per snapshot shared by the node and edge
-        // branches (lazy localCheckpoint, ContextCleaner-freed)
-        val dm = pipe.docMentions(Corpus.fromDocumentsTable(docs.filter(keep)))
-          .localCheckpoint(false)
-        pipe.nodes(dm).toDF()
+        // branches
+        val dm = Barrier(pipe.docMentions(Corpus.fromDocumentsTable(docs.filter(keep))))
+        // each snapshot feeds BOTH delta directions; barrier the KG-sized
+        // projection so its dedup shuffles run once, not twice
+        Barrier(pipe.nodes(dm).toDF()
           .select(lit("node").as("kind"), col("id").as("a"),
             lit("-").as("b"), col("label"))
           .unionByName(pipe.mentionEdges(dm).toDF()
             .select(lit("edge").as("kind"), col("src").as("a"),
-              col("tgt").as("b"), col("label")))
-          // each snapshot feeds BOTH delta directions; barrier the
-          // KG-sized projection so its dedup shuffles run once, not twice
-          .localCheckpoint(false)
+              col("tgt").as("b"), col("label"))))
       }
       graft.ops.DeltaOps.snapshotDelta(
         snap(col("doc_id") % 3 =!= 0), snap(col("doc_id") % 3 =!= 1))
     }),
     "kg_schema_info" -> ((s, dir) => {
       val pipe = KgPipeline.analytics(s)
-      // lazy localCheckpoint, not persist: blocks are ContextCleaner-freed
-      // when unreachable; a SQL-cache entry would leak for the session
-      // lifetime since the returned plan outlives this builder (ADVICE r7 #1)
-      val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
+      // shared by the node and edge sides
+      val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
       val ns = pipe.nodes(dm)
       val es = pipe.edges(dm)
       graft.sinks.Tables.schemaInfo(pipe.bcCtx.value, ns, es)
@@ -505,11 +456,11 @@ object SparkEntry {
       // nothing is consumed twice: no persists — the r8 shape cached dm,
       // ns AND es at MEMORY_AND_DISK to feed two passes per probe, paying
       // three fat materializations for what one scan per side computes.
-      // dm stays barriered (lazy localCheckpoint): the node and edge
-      // probes both start from the extraction pass. The remaining cost is
-      // the honest floor of whole-corpus label discovery (mention pass +
-      // node agg + co-occurrence agg).
-      val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
+      // dm stays barriered: the node and edge probes both start from the
+      // extraction pass. The remaining cost is the honest floor of
+      // whole-corpus label discovery (mention pass + node agg +
+      // co-occurrence agg).
+      val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
       val sink = new graft.sinks.Neo4jCsvSink(pipe.bcCtx.value,
         "/tmp/graft-hdr-unwritten")
       sink.probeNodeLayouts(pipe.nodes(dm))
@@ -529,7 +480,7 @@ object SparkEntry {
       // a failed batch), so the report has real dangling endpoints; two
       // thin anti-joins + one map-side-combined count
       val pipe = KgPipeline.analytics(s)
-      val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
+      val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
       val partialIds = pipe.nodes(dm).toDF()
         .filter(!(col("label") === "document" && col("id").endsWith("0")))
         .select(col("id"))
@@ -616,11 +567,10 @@ object SparkEntry {
     "kg_node_frame" -> ((s, dir) => {
       // in-memory KG materialization (reference in_memory/_pandas.py):
       // pivoted per-label frame for one class. The deduped node table is
-      // checkpointed (lazy, local) so the frame machinery's label probe +
-      // frame scan run one pipeline pass, not two — and the blocks free
-      // themselves when the frame goes unreachable (ADVICE r7 #1)
+      // barriered so the frame machinery's label probe + frame scan run
+      // one pipeline pass, not two
       val pipe = KgPipeline.analytics(s)
-      val ns = pipe.nodes(pipe.docMentions(kgDocs(s, dir))).localCheckpoint(false)
+      val ns = Barrier(pipe.nodes(pipe.docMentions(kgDocs(s, dir))))
       // single-frame consumer: release the shared frame base immediately —
       // it buys nothing when only one label's frame is read, and holding
       // it would leak a CacheManager entry per invocation (ADVICE r7 #1);
@@ -635,13 +585,13 @@ object SparkEntry {
       // (reference in_memory/_pandas.py:87-95: json_normalize carries the
       // four relationship columns PLUS one column per property)
       val pipe = KgPipeline.analytics(s)
-      val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
+      val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
       // barrier the edge union too: the frame machinery's label probe and
       // the returned frame's scan are two consumers, and the co-occurrence
       // pair aggregate is expensive enough that re-deriving it from the dm
       // checkpoint per consumer measurably loses to replaying the
       // (edge-sized) checkpoint blocks
-      val es = pipe.edges(dm).localCheckpoint(false)
+      val es = Barrier(pipe.edges(dm))
       // single-frame consumer: release the shared base (see kg_node_frame)
       val (frames, base) = graft.sinks.Tables.edgeFramesWithHandle(pipe.bcCtx.value, es)
       base.unpersist(blocking = false)
@@ -723,7 +673,7 @@ object SparkEntry {
       // reified-edge triple table (reference RDF semantics: edges become
       // predicate nodes with biocypher:subject/object links, _rdf.py:127-165)
       val pipe = KgPipeline.analytics(s)
-      val dm = pipe.docMentions(kgDocs(s, dir)).localCheckpoint(false)
+      val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
       val es = pipe.edges(dm)
       new graft.sinks.RdfSink(pipe.bcCtx.value, workDir(s, "rdf")).reifiedEdgeTriples(es)
     }),
@@ -765,12 +715,9 @@ object SparkEntry {
       // operating point. Narrower bands (smaller r) hash more, coarser
       // buckets -> more candidates -> recall non-increasing in r.
       val docs = tbl(s, dir, "documents")
-      // lazy localCheckpoint, NOT persist: shared by the three r-branches
-      // of one union plan, materialized once by the first action, blocks
-      // freed when unreachable — no CacheManager leak (ADVICE r7 #1)
-      val truth = DedupOps.jaccardPairs(docs, n = 2, minJ = 0.3)
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint(false)
+      // shared by the three r-branches of one union plan
+      val truth = Barrier(DedupOps.jaccardPairs(docs, n = 2, minJ = 0.3)
+        .select(col("doc_a"), col("doc_b")))
       // the shingle-hash pass is operating-point-INDEPENDENT: one barriered
       // (doc_id, hv) frame feeds the signature side (r = 2, 4 candidate
       // generation) and the verification side of all three branches — the
@@ -780,8 +727,8 @@ object SparkEntry {
       // once anyway, and storing the raw hv arrays a third time costs more
       // than the one extra scan it saves)
       val hashed = DedupOps.shingleHashes(docs, n = 2)
-      val sigs = DedupOps.minhashSignaturesFrom(hashed, k = 16).localCheckpoint(false)
-      val sets = DedupOps.shingleSetsFrom(hashed).localCheckpoint(false)
+      val sigs = Barrier(DedupOps.minhashSignaturesFrom(hashed, k = 16))
+      val sets = Barrier(DedupOps.shingleSetsFrom(hashed))
       // three INDEPENDENT verify branches over the shared barriered
       // sigs/sets (OPTIMIZATION_r09.md shape comparison: a verify-the-union chain
       // serializes the critical path — sigs → cands → verify — and
@@ -1047,10 +994,8 @@ object SparkEntry {
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble)
       val k = 20
-      // lazy localCheckpoint (shared by the four nProbe branches, freed
-      // when unreachable — ADVICE r7 #1)
-      val exact = AnnOps.cosineTopK(emb, q, excludeId = 0L, k).select("vec_id")
-        .localCheckpoint(false)
+      // shared by the four nProbe branches
+      val exact = Barrier(AnnOps.cosineTopK(emb, q, excludeId = 0L, k).select("vec_id"))
       Seq(1, 2, 4, 8).map { np =>
         val approx = AnnOps.ivfTopKFromIndex(s, ivfIndex(s, dir), q,
           excludeId = 0L, k, nProbe = np).select("vec_id")
@@ -1085,9 +1030,8 @@ object SparkEntry {
       // truth, one row per table count — quantifying the measured
       // multi-table repair on this corpus
       val emb = tbl(s, dir, "embeddings")
-      val truth = AnnOps.cosinePairsBrute(emb, minCos = 0.3)
-        .select(col("vec_a"), col("vec_b"))
-        .localCheckpoint(false)
+      val truth = Barrier(AnnOps.cosinePairsBrute(emb, minCos = 0.3)
+        .select(col("vec_a"), col("vec_b")))
       Seq(1, 2).map { t =>
         val got = (if (t == 1) AnnOps.cosineNearDupPairs(emb, minCos = 0.3)
           else AnnOps.cosineNearDupPairsMulti(emb, minCos = 0.3, tables = 2))
@@ -1106,9 +1050,8 @@ object SparkEntry {
       // has a measured recall row (cluster-scoped proposal catches the
       // sign-straddling pairs the LSH tables miss; quantified here)
       val emb = tbl(s, dir, "embeddings")
-      val truth = AnnOps.cosinePairsBrute(emb, minCos = 0.3)
-        .select(col("vec_a"), col("vec_b"))
-        .localCheckpoint(false)
+      val truth = Barrier(AnnOps.cosinePairsBrute(emb, minCos = 0.3)
+        .select(col("vec_a"), col("vec_b")))
       val got = AnnOps.semanticNearDupPairs(emb, ivfCents(s, dir), minCos = 0.3)
         .select(col("vec_a"), col("vec_b")).withColumn("_hit", lit(1L))
       truth.join(got, Seq("vec_a", "vec_b"), "left")

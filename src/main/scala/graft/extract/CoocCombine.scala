@@ -48,7 +48,7 @@ object CoocCombine {
   }
 
   /** partialPairCounts is a public API whose input contract (one pm entry
-    * per DISTINCT entity rank, as ExtractMentions emits) is enforced here:
+    * per DISTINCT entity rank, as ExtractMentionsKT emits) is enforced here:
     * a duplicate rank would otherwise emit a semantically meaningless
     * self-pair (ADVICE r5). Free in the common branch (already sorted). */
   private def assertDistinct(ranks: Array[Int], sorted: Boolean): Unit = {
@@ -58,7 +58,7 @@ object CoocCombine {
       if (ranks(i) == ranks(i - 1))
         throw new IllegalArgumentException(
           s"duplicate entity rank ${ranks(i)} in a packed mention row — pm rows " +
-            "must carry one entry per distinct entity (ExtractMentions contract)")
+            "must carry one entry per distinct entity (ExtractMentionsKT contract)")
       i += 1
     }
   }
@@ -169,7 +169,7 @@ object CoocCombine {
     * co-occurrence pairs as `(a, b)`. Counts are not tracked: a triple is
     * presence, not frequency, so the downstream aggregate is a plain
     * `distinct` over the packed key, which
-    * [[graft.KgPipeline.triplesFromSets]] lazily localCheckpoints so this
+    * [[graft.KgPipeline.triplesFromSets]] puts behind a barrier so this
     * scan runs once per action no matter how many consumers sit above.
     *
     * Self keys cover ALL ranks of every doc (including singleton docs and

@@ -100,7 +100,7 @@ object Mentions {
   val DefaultMaxEntitiesPerDoc = 256
 
   /** Per-doc occurrence counts saturate at 2³¹-1: the fused packed-long path
-    * ([[graft.functions.ExtractMentions]]) has only 32 bits for the count
+    * ([[graft.functions.ExtractMentionsKT]]) has only 32 bits for the count
     * half of its `(rank << 32) | n` encoding, so the string path clamps at
     * the same bound — both pipeline paths agree by construction (ADVICE
     * r5), and a single doc would need >2 G occurrences of one entity to

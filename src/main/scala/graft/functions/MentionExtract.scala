@@ -4,15 +4,16 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.{MentionDict, Mentions}
 
-/** Codegen'd mention extraction over a `spans` column: for each document row
-  * returns the PACKED MENTION SET `array<long>` with one element
-  * `(rank << 32) | n` per distinct matched entity (curie-lex rank, per-doc
-  * occurrence count, first-touch order).
+/** Codegen'd mention extraction over a document's two PARALLEL span arrays
+  * `spans.kind` / `spans.text`: for each document row returns the PACKED
+  * MENTION SET `array<long>` with one element `(rank << 32) | n` per
+  * distinct matched entity (curie-lex rank, per-doc occurrence count,
+  * first-touch order).
   *
   * This is the zero-allocation scale path for the adapter stage: the
   * Aho-Corasick walk runs directly over the span text's UTF8 bytes inside
@@ -22,42 +23,16 @@ import graft.extract.{MentionDict, Mentions}
   * Non-ASCII spans (or a non-ASCII dictionary) fall back to the String walk
   * for exact parity with [[Mentions.detectPerDoc]] — spec-asserted.
   *
+  * Each input is a plain `GetArrayStructFields` extraction, so Catalyst's
+  * nested schema pruning narrows the parquet ReadSchema to exactly those
+  * two nested fields — the scan never decodes `media_ref`/`offset`. A null
+  * struct element yields null entries in both arrays and is skipped.
+  *
   * One output ROW PER DOCUMENT (pre-explode): doc boundaries are row
   * boundaries, so downstream per-doc logic ([[CoocPackedPairs]]) needs no
   * run-contiguity contract, and the cached working set pays the doc_id
   * string once per document instead of once per mention.
   */
-case class ExtractMentions(child: Expression, bcDict: Broadcast[MentionDict])
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  @transient private lazy val helper: MentionExtractor = {
-    val st = child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-    new MentionExtractor(bcDict, st.fieldIndex("kind"), st.fieldIndex("text"), st.size)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    helper.extract(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val h = ctx.addReferenceObj("mentionExtractor", helper,
-        classOf[MentionExtractor].getName)
-      s"${ev.value} = $h.extract($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): ExtractMentions =
-    copy(child = newChild)
-}
-
-/** [[ExtractMentions]] over two PARALLEL arrays `spans.kind` / `spans.text`
-  * (each a plain `GetArrayStructFields` extraction): Catalyst's nested
-  * schema pruning then narrows the parquet ReadSchema to exactly those two
-  * nested fields — the scan never decodes `media_ref`/`offset`, which the
-  * whole-struct form forced it to read. Semantics identical to
-  * [[ExtractMentions]] (spec-asserted): a null struct element yields null
-  * entries in both arrays and is skipped either way. */
 case class ExtractMentionsKT(kinds: Expression, texts: Expression,
     bcDict: Broadcast[MentionDict])
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -66,8 +41,7 @@ case class ExtractMentionsKT(kinds: Expression, texts: Expression,
   override def right: Expression = texts
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  @transient private lazy val helper: MentionExtractor =
-    new MentionExtractor(bcDict, -1, -1, -1) // struct indices unused on this path
+  @transient private lazy val helper = new MentionExtractor(bcDict)
 
   override protected def nullSafeEval(k: Any, t: Any): Any =
     helper.extractKT(k.asInstanceOf[ArrayData], t.asInstanceOf[ArrayData])
@@ -84,11 +58,10 @@ case class ExtractMentionsKT(kinds: Expression, texts: Expression,
     copy(kinds = newLeft, texts = newRight)
 }
 
-/** The executor-side worker behind [[ExtractMentions]] (shipped inside the
-  * codegen references array; one instance per plan, thread-safe via
+/** The executor-side worker behind [[ExtractMentionsKT]] (shipped inside
+  * the codegen references array; one instance per plan, thread-safe via
   * per-thread scratch buffers sized to the dictionary). */
-final class MentionExtractor(bcDict: Broadcast[MentionDict],
-    kindIdx: Int, textIdx: Int, numFields: Int) extends Serializable {
+final class MentionExtractor(bcDict: Broadcast[MentionDict]) extends Serializable {
 
   @transient private lazy val TEXT = UTF8String.fromString("text")
 
@@ -100,51 +73,9 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
     override def initialValue(): Scratch = new Scratch
   }
 
-  def extract(spans: ArrayData): ArrayData = {
-    val dict = bcDict.value
-    val sc = scratch.get()
-    val counts = sc.counts
-    val touched = sc.touched
-    var nTouched = 0
-    val nSpans = spans.numElements()
-    var si = 0
-    while (si < nSpans) {
-      if (!spans.isNullAt(si)) {
-        val row = spans.getStruct(si, numFields)
-        if (!row.isNullAt(kindIdx) && !row.isNullAt(textIdx) &&
-            row.getUTF8String(kindIdx).equals(TEXT)) {
-          val t = row.getUTF8String(textIdx)
-          nTouched =
-            if (dict.trie.isAsciiDense && isAscii(t))
-              dict.trie.countWholeWordsAscii(t.getBaseObject, t.getBaseOffset,
-                t.numBytes, counts, touched, nTouched)
-            else // exact parity on non-ASCII text / dictionaries
-              dict.trie.countWholeWords(t.toString, counts, touched, nTouched)
-        }
-      }
-      si += 1
-    }
-    val out = new Array[Long](nTouched)
-    var i = 0
-    while (i < nTouched) {
-      val pi = touched(i)
-      val n = counts(pi)
-      // saturate at Mentions.MaxOccurrencesPerDoc — the 32-bit count half of
-      // the packed long; the string path clamps identically
-      out(i) = (dict.rankOf(pi).toLong << 32) |
-        (if (n > graft.extract.Mentions.MaxOccurrencesPerDoc)
-           graft.extract.Mentions.MaxOccurrencesPerDoc else n)
-      counts(pi) = 0
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  /** [[extract]] over pre-extracted parallel `spans.kind` / `spans.text`
-    * arrays (see [[ExtractMentionsKT]]): same trie walk, same packing, same
-    * clamp — only the span-struct access pattern differs (a null struct
-    * element surfaces as null entries in BOTH arrays, so the null checks
-    * subsume the original element-null check). */
+  /** Trie-count every `text` span of one document, then pack and clamp:
+    * a null struct element surfaces as null entries in BOTH arrays, so the
+    * per-entry null checks cover it. */
   def extractKT(kinds: ArrayData, texts: ArrayData): ArrayData = {
     val dict = bcDict.value
     val sc = scratch.get()
@@ -161,7 +92,7 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
           if (dict.trie.isAsciiDense && isAscii(t))
             dict.trie.countWholeWordsAscii(t.getBaseObject, t.getBaseOffset,
               t.numBytes, counts, touched, nTouched)
-          else
+          else // exact parity on non-ASCII text / dictionaries
             dict.trie.countWholeWords(t.toString, counts, touched, nTouched)
       }
       si += 1
@@ -171,6 +102,8 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
     while (i < nTouched) {
       val pi = touched(i)
       val c = counts(pi)
+      // saturate at Mentions.MaxOccurrencesPerDoc — the 32-bit count half of
+      // the packed long; the string path clamps identically
       out(i) = (dict.rankOf(pi).toLong << 32) |
         (if (c > graft.extract.Mentions.MaxOccurrencesPerDoc)
            graft.extract.Mentions.MaxOccurrencesPerDoc else c)
@@ -199,7 +132,7 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
 }
 
 /** Codegen'd per-document co-occurrence pair emission over a packed mention
-  * set (the [[ExtractMentions]] output): returns `array<long>` of packed
+  * set (the [[ExtractMentionsKT]] output): returns `array<long>` of packed
   * `(srcRank << 32) | tgtRank` pairs with `srcRank < tgtRank` — rank order
   * == curie order, so this reproduces the string pipeline's `a < b` curie
   * pair semantics exactly. Docs above `maxEntities` keep their top entities
@@ -262,7 +195,7 @@ final class CoocPairsWorker(bcDict: Broadcast[MentionDict], maxEntities: Int)
   * into [[MentionDict.curieByRank]], with no hash probe and no
   * dictionary-sized table in the plan. The child is an int rank; a null
   * rank gives null. Every rank the pipeline decodes comes from
-  * [[ExtractMentions]], so an out-of-range rank is a broken contract: it
+  * [[ExtractMentionsKT]], so an out-of-range rank is a broken contract: it
   * raises, naming the rank and the dictionary size. */
 case class RankCurie(child: Expression, bcDict: Broadcast[MentionDict])
     extends UnaryExpression {

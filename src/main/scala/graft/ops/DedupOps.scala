@@ -55,12 +55,8 @@ object DedupOps {
       maxDf: Int = 100): DataFrame = {
     // join on the 56-bit shingle hash: long equi-join beats string compare,
     // and the md5-derived hash is what the oracle uses anyway. BARRIER the
-    // hashed shingle table (lazy localCheckpoint via graft.Barrier, not
-    // .cache(): same one-materialization sharing for its three consumers —
-    // df aggregate, per-doc counts, pair groups — but the blocks free
-    // themselves when the result goes unreachable, so the result no longer
-    // needs an EAGER checkpoint + unpersist dance and the whole operator
-    // stays lazy: one job at action time instead of a build-time job).
+    // hashed shingle table: one materialization for its three consumers —
+    // df aggregate, per-doc counts, pair groups.
     // Hashing is the fused ShingleHashSet expression (r9, guide §4): the
     // builtin shingles() chain built every window string in an INTERPRETED
     // transform lambda and round-tripped md5 through hex+conv — parity
@@ -270,12 +266,11 @@ object DedupOps {
     * component min, so rounds are O(log n) in the component size even on
     * adversarial chains (web-scale boilerplate families), vs O(diameter)
     * for plain min-label propagation. Each round is two join+agg jobs over
-    * the (shrinking-toward-star) edge set, eagerly `localCheckpoint`ed so
-    * lineage stays one round deep and the convergence fingerprint is a
-    * cheap local re-scan; superseded round RDDs are reclaimed by the
-    * context cleaner. Convergence = the edge set's (count, hash-xor)
-    * fingerprint is unchanged — at that fixed point the edges form stars
-    * (u, componentMin). */
+    * the (shrinking-toward-star) edge set, behind a [[graft.Barrier]] that
+    * the round's convergence fingerprint materializes, so lineage stays one
+    * round deep and the next round re-scans the barrier's blocks.
+    * Convergence = the edge set's (count, hash-xor) fingerprint is
+    * unchanged — at that fixed point the edges form stars (u, componentMin). */
   def dedupClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame =
     dedupClustersStats(pairs, maxIter)._1
 
@@ -351,9 +346,9 @@ object DedupOps {
     * (spec hook for the O(log n) convergence bound).
     *
     * NOTE this method is EAGER: building the returned DataFrame runs jobs
-    * (the canonical edge set is eagerly checkpointed and counted — the
-    * count IS the size gate below, so it cannot be deferred). Callers
-    * composing plans lazily should call it last (VERDICT r8).
+    * (the canonical edge set is barriered and counted — the count IS the
+    * size gate below, so it cannot be deferred). Callers composing plans
+    * lazily should call it last (VERDICT r8).
     *
     * `localThreshold` is
     * the adaptive small-graph gate: when the (already bucket-capped)
@@ -367,12 +362,11 @@ object DedupOps {
   def dedupClustersStats(pairs: DataFrame, maxIter: Int = 50,
       localThreshold: Long = 1L << 20): (DataFrame, Int) = {
     // canonical orientation big -> small; the star edges keep it throughout
-    var e = pairs
+    var e = graft.Barrier(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("src"),
         least(col("doc_a"), col("doc_b")).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
 
     val longKeyed = e.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
@@ -417,7 +411,7 @@ object DedupOps {
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
+      val next = graft.Barrier(smallStar(largeStar(e)))
       val nfp = fingerprint(next)
       converged = nfp == fp
       fp = nfp

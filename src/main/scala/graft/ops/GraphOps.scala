@@ -189,10 +189,6 @@ object GraphOps {
     var reached = Seq((seed, 0L)).toDF("node", "dist")
     var frontier = reached.select(col("node"))
     for (k <- 1 to hops) {
-      // graft.Barrier, not a bare localCheckpoint: every iterative op
-      // shares the one cluster-durable barrier policy (reliable checkpoint
-      // when a checkpoint dir is configured — an executor loss mid-BFS
-      // re-serves blocks instead of failing the job)
       val next = graft.Barrier(
         und.join(broadcast(frontier), col("u") === col("node"))
           .select(col("v").as("node")).distinct()

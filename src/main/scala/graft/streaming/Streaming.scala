@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.model.{KgEdge, KgNode}
 
 /** Structured Streaming facets of the engine.
@@ -20,8 +20,29 @@ import graft.model.{KgEdge, KgNode}
   * forgotten and would be re-emitted if it reappears later — the standard
   * bounded-state trade (exact-within-horizon), and the horizon is the
   * caller's knob. Pass `ttl = null` to opt into unbounded state explicitly.
+  *
+  * [[drainToMemory]] is the one bounded drain: it runs a stream to the end
+  * of its current input and hands back the result as a table, for the
+  * batch-twin oracle rows and the benchmark warm-up.
   */
 object Streaming {
+
+  /** Drain `stream` into a memory sink under a unique query name with
+    * `Trigger.AvailableNow` (terminates deterministically once the input
+    * present at start is consumed, instead of processAllAvailable's polling
+    * settle), stop the query, and return the sink table from the stream's
+    * own session. Append output mode; `checkpointDir` holds the offsets
+    * and state store. */
+  def drainToMemory(stream: DataFrame, checkpointDir: String): DataFrame = {
+    val name = "graft_drain_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = stream.writeStream.format("memory").queryName(name)
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    stream.sparkSession.table(name)
+  }
 
   val DefaultTtl = "30 days"
 

@@ -78,7 +78,7 @@ class PipelineSpec extends AnyFunSuite {
     docs.unpersist()
   }
 
-  test("fused and compact plans hold no dictionary-sized LocalRelation (hash-combiner dictionary)") {
+  test("fused plans hold no dictionary-sized LocalRelation (hash-combiner dictionary)") {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
     import graft.extract.CoocCombine
     // 5000 surfaces: above both dense combiner gates, so the fused path runs
@@ -231,8 +231,9 @@ class PipelineSpec extends AnyFunSuite {
     for (dict <- dicts) {
       val bc = spark.sparkContext.broadcast(dict)
       val got = docs.toDF().select(col("doc_id"),
-          GraftColumnBridge.column(graft.functions.ExtractMentions(
-            GraftColumnBridge.expression(col("spans")), bc)).as("pm"))
+          GraftColumnBridge.column(graft.functions.ExtractMentionsKT(
+            GraftColumnBridge.expression(col("spans.kind")),
+            GraftColumnBridge.expression(col("spans.text")), bc)).as("pm"))
         .select(col("doc_id"), explode(col("pm")).as("p"))
         .select(col("doc_id"), shiftright(col("p"), 32).cast("int"),
           col("p").bitwiseAND(lit(0xffffffffL)))
@@ -392,8 +393,9 @@ class PipelineSpec extends AnyFunSuite {
     // tie-break: same pair count, same lexicographically-smallest survivors
     import org.apache.spark.sql.GraftColumnBridge
     val pmDf = docs.toDF().select(
-      GraftColumnBridge.column(graft.functions.ExtractMentions(
-        GraftColumnBridge.expression(col("spans")), bc)).as("pm"))
+      GraftColumnBridge.column(graft.functions.ExtractMentionsKT(
+        GraftColumnBridge.expression(col("spans.kind")),
+        GraftColumnBridge.expression(col("spans.text")), bc)).as("pm"))
     val fusedPairs = pmDf.select(explode(GraftColumnBridge.column(
       graft.functions.CoocPackedPairs(GraftColumnBridge.expression(col("pm")),
         bc, Mentions.DefaultMaxEntitiesPerDoc))).as("pair"))

@@ -86,7 +86,7 @@ object SpanPipelineProps extends Properties("SpanPipeline") {
 
   private lazy val spark = SparkTestBase.spark
 
-  property("string == compact == fused pipeline on arbitrary corpora") =
+  property("string == fused pipeline on arbitrary corpora") =
     forAll(PropGen.corpus) { docs =>
       import spark.implicits._
       val ds = spark.createDataset(docs)
