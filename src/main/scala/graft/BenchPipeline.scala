@@ -26,8 +26,7 @@ object BenchPipeline {
       // encode+decode CPU on the build and EVERY consumer — measured 7.15s
       // vs 9.8s on the 16-core leg at 4M docs (dictionary-coded rows).
       // ~2 GB at 4M docs; at any scale the per-partition slice stays ~50 MB.
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "false"))
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       // ONE FILE = ONE TASK for the staged input: the snappy'd doc files
       // are ~12 MB, and default packing (maxPartitionBytes 128m, openCost
       // 4m) would merge 2-3 files per partition — measured at 4M docs that
@@ -37,8 +36,7 @@ object BenchPipeline {
       // forbids packing; no file exceeds 64m so none is split either.
       .config("spark.sql.files.maxPartitionBytes", "64m")
       .config("spark.sql.files.openCostInBytes", "64m")
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.get("SPARK_GRAFT_AQE").contains("off")).toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .config("spark.ui.enabled", "false")
@@ -54,10 +52,10 @@ object BenchPipeline {
     * two full waves of extract tasks (straggler slack), the 4-core leg
     * eight — both saturated, as a 100-TB table's thousands of splits would
     * keep any executor count. */
-  private def layoutParts(nDocs: Long): Int = {
-    val docsPerSplit = sys.env.getOrElse("SPARK_GRAFT_DOCS_PER_SPLIT", "125000").toLong
-    math.max(8, math.ceil(nDocs.toDouble / docsPerSplit).toInt)
-  }
+  private val DocsPerSplit = 125000L
+
+  private def layoutParts(nDocs: Long): Int =
+    math.max(8, math.ceil(nDocs.toDouble / DocsPerSplit).toInt)
 
   /** Stage the deterministic corpus as a parquet table (once per nDocs,
     * shared across legs/JVMs): the timed job then READS its input like any
@@ -82,9 +80,9 @@ object BenchPipeline {
   /** One full KG-construction run over the staged `nDocs` corpus, on the
     * FUSED mention-set path ([[KgPipeline.runFused]]): extraction is a
     * codegen'd byte-walk expression, the persisted working set is one
-    * packed-array row per document, and per-doc pair emission is a codegen'd
-    * expression — no object materialization anywhere in the corpus-sized
-    * plan. The timed region starts at the input scan (the staged parquet
+    * packed-array row per document, and per-doc pair emission runs in the
+    * primitive per-partition combiner — no object materialization anywhere
+    * in the corpus-sized plan. The timed region starts at the input scan (the staged parquet
     * table). */
   def pipelineRun(spark: SparkSession, nDocs: Long): (Double, Long) = {
     import spark.implicits._

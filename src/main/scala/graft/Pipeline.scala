@@ -249,25 +249,37 @@ final class KgPipeline(
         propsCol(("n", col("p").bitwiseAND(lit(0xffffffffL)), "int")).as("props"),
       ).as[KgEdge]
 
-  /** Co-occurrence edges over the mention-set table: per-doc pair emission
-    * and the partial count run in ONE primitive per-partition combiner
-    * ([[graft.extract.CoocCombine]] — open-addressing long→long map over
-    * packed pairs, spill-safe, no object churn, no contiguity contract);
-    * the only exchange carries dictionary-bounded (pair, partial) rows,
-    * summed in one small final aggregate. */
-  def cooccurrenceEdgesFromSets(ms: DataFrame,
-      maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): Dataset[KgEdge] =
+  /** Co-occurrence pairs `(src, tgt, n_docs)` over the mention-set table,
+    * `src < tgt` by curie: per-doc pair emission and the partial count run
+    * in ONE primitive per-partition combiner
+    * ([[graft.extract.CoocCombine.partialPairCounts]] — no object churn, no
+    * contiguity contract); the only exchange carries dictionary-bounded
+    * (pair, partial) rows, summed in one small final aggregate, and the
+    * ranks decode by projection. The pair frame every co-occurrence graph
+    * row reads; [[Mentions.cooccurrencePairsFromDocMentions]] is its string
+    * reference. */
+  def cooccurrencePairsFromSets(ms: DataFrame,
+      maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): DataFrame =
     graft.extract.CoocCombine.partialPairCounts(
         ms.select(col("pm")).as[Array[Long]], bcDict, maxEntitiesPerDoc)
       .toDF("pair", "cnt")
       .groupBy(col("pair")).agg(sum(col("cnt")).as("n_docs"))
       .select(
-        lit(null).cast("string").as("relId"),
         curieOf(shiftright(col("pair"), 32).cast("int")).as("src"),
         curieOf(col("pair").bitwiseAND(lit(0xffffffffL)).cast("int")).as("tgt"),
-        lit(edgeLabel("cooccurs")).as("label"),
-        propsCol(("n_docs", col("n_docs"), "int")).as("props"),
-      ).as[KgEdge]
+        col("n_docs"))
+
+  /** Co-occurrence edges over the mention-set table: the edge view of
+    * [[cooccurrencePairsFromSets]]. */
+  def cooccurrenceEdgesFromSets(ms: DataFrame,
+      maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): Dataset[KgEdge] =
+    cooccurrencePairsFromSets(ms, maxEntitiesPerDoc).select(
+      lit(null).cast("string").as("relId"),
+      col("src"),
+      col("tgt"),
+      lit(edgeLabel("cooccurs")).as("label"),
+      propsCol(("n_docs", col("n_docs"), "int")).as("props"),
+    ).as[KgEdge]
 
   /** [[triples]] built STRAIGHT from the packed mention-set cache — no
     * KgNode/KgEdge row building, no property bags, no count aggregation (a

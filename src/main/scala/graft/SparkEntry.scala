@@ -30,6 +30,13 @@ object SparkEntry {
   private def kgDocs(s: SparkSession, dir: String) =
     Corpus.fromDocumentsTable(tbl(s, dir, "documents"))
 
+  /** The co-occurrence pair frame `(src, tgt, n_docs)` every graph row
+    * reads: the fused mention sets through the pair combiner. */
+  private def kgPairs(s: SparkSession, dir: String): DataFrame = {
+    val pipe = KgPipeline.analytics(s)
+    pipe.cooccurrencePairsFromSets(pipe.mentionSets(kgDocs(s, dir)))
+  }
+
   /** Trained IVF centroids are an index artifact, not a per-query cost:
     * train once per corpus and share them across every IVF row (VERDICT r3:
     * three rows each retraining from scratch cost 8.7s of a 42.5s bench). */
@@ -49,6 +56,12 @@ object SparkEntry {
       s"graft-$tag-" + java.util.UUID.randomUUID().toString.take(8))
     p.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(p)
     p.toString
+  }
+
+  /** Deletes a [[workDir]] and everything under it. */
+  private def dropWorkDir(s: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** The persisted ivf_cid-partitioned index, built once per corpus from
@@ -316,16 +329,13 @@ object SparkEntry {
     }),
     "kg_triples_fused" -> ((s, dir) => {
       // the PRODUCTION fused path (mentionSets -> triplesFromSets: packed
-      // mention-set cache, shared rank+pair combiner, dense bitset) under
-      // the same oracle as kg_triples — the bench path is now directly
-      // oracle-gated, not only spec-parity-proven
+      // mention-set cache, shared rank+pair combiner) under the same
+      // oracle as kg_triples — the bench path is now directly oracle-gated,
+      // not only spec-parity-proven
       val pipe = KgPipeline.analytics(s)
       pipe.triplesFromSets(Barrier(pipe.mentionSets(kgDocs(s, dir)))).toDF()
     }),
-    "kg_cooccurrence" -> ((s, dir) => {
-      val pipe = KgPipeline.analytics(s)
-      graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
-    }),
+    "kg_cooccurrence" -> ((s, dir) => kgPairs(s, dir)),
     "kg_degree_hist" -> ((s, dir) => {
       // graph-shape QA over the production fused triple path: out-degree
       // distribution (two map-side-combined hash aggs, hub-safe)
@@ -337,33 +347,25 @@ object SparkEntry {
       // entity centrality over the co-occurrence graph: 3 integer
       // fixed-point power iterations; the rank table is dictionary-bounded
       // so every iteration is a broadcast join — zero shuffled joins
-      val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
-      graft.ops.GraphOps.pageRank(pairs)
+      graft.ops.GraphOps.pageRank(kgPairs(s, dir))
     }),
     "kg_ppr" -> ((s, dir) => {
       // personalized PageRank: every entity's relevance to the hub seed —
       // teleport mass confined to the seed set; same integral broadcast
       // schedule as kg_pagerank (|S| replaces N in the unit)
-      val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
-      graft.ops.GraphOps.pageRank(pairs, seeds = Seq("engine:spark"))
+      graft.ops.GraphOps.pageRank(kgPairs(s, dir), seeds = Seq("engine:spark"))
     }),
     "kg_neighbors_topk" -> ((s, dir) => {
       // "related entities": per-entity top-3 co-occurrence neighbors,
       // deterministic tie-break on the neighbor id; one bounded-partition
       // window over the tiny pair aggregate
-      val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
-      graft.ops.GraphOps.topNeighbors(pairs, k = 3)
+      graft.ops.GraphOps.topNeighbors(kgPairs(s, dir), k = 3)
     }),
     "kg_triangles" -> ((s, dir) => {
       // structural edge confidence: per-edge triangle support + integer
       // fixed-point neighborhood Jaccard; the wedge join runs on the tiny
       // pair aggregate (dict-bounded -> both joins broadcast)
-      val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
-      graft.ops.GraphOps.triangleSupport(pairs)
+      graft.ops.GraphOps.triangleSupport(kgPairs(s, dir))
     }),
     "kg_pmi_edges" -> ((s, dir) => {
       // PMI edge confidence: integer fixed-point lift over the pair
@@ -383,18 +385,14 @@ object SparkEntry {
       // step). Components run the same spec-proven alternating-star
       // rounds as dedup_clusters: ONE implementation for component
       // finding whether vertices are documents or KG entities.
-      val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
-      val top1 = graft.ops.GraphOps.topNeighbors(pairs, k = 1)
+      val top1 = graft.ops.GraphOps.topNeighbors(kgPairs(s, dir), k = 1)
       graft.ops.GraphOps.components(top1, srcCol = "node", tgtCol = "neighbor")
     }),
     "kg_ego" -> ((s, dir) => {
       // entity-neighborhood extraction: 3-hop ego ball around the hub
       // entity over the SAME top-1-strongest-neighbor graph kg_components
       // labels — frontier BFS, each round a broadcast join + anti-join
-      val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
-      val top1 = graft.ops.GraphOps.topNeighbors(pairs, k = 1)
+      val top1 = graft.ops.GraphOps.topNeighbors(kgPairs(s, dir), k = 1)
       graft.ops.GraphOps.egoSubgraph(top1, seed = "engine:spark", hops = 3,
         srcCol = "node", tgtCol = "neighbor")
     }),
@@ -628,46 +626,50 @@ object SparkEntry {
       val es0 = pipe.edges(dm)
       val es = es0.repartition(4, es0("label"))
       val out = workDir(s, "import")
-      val pg = new graft.sinks.PostgresCsvSink(ctx, out)
-      // node and edge writes are independent jobs over disjoint label files;
-      // overlap them so the edge stages back-fill the node write's task tail
-      // (guide §2.6). Layout maps touched are disjoint (nodeLayouts vs
-      // edgeLayouts), staging dirs are UUID-distinct, rename targets are
-      // disjoint file names: the schema's node and edge file labels are
-      // required disjoint before the fork.
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        pg.requireDisjointFileLabels(
-          ctx.specs.collect { case (c, sp) if sp.representedAs == "node" => c },
-          ctx.specs.collect { case (c, sp) if sp.representedAs == "edge" => sp.labelAsEdge.getOrElse(c) })
-        // materialize the shared dm cache once BEFORE forking, so the two
-        // concurrent first-actions don't race to compute the same blocks
-        dm.count()
-        val nF = Future { pg.writeNodes(ns) }
-        val eF = Future { pg.writeEdges(es) }
-        Await.result(nF, scala.concurrent.duration.Duration.Inf)
-        Await.result(eF, scala.concurrent.duration.Duration.Inf)
-      }
-      dm.unpersist(blocking = false)
-      // the other batch sinks share the SAME part grammar on disk; they
-      // reuse the probed layouts and only differ in script codegen
-      val neo = new graft.sinks.Neo4jCsvSink(ctx, out)
-      val ar = new graft.sinks.ArangoCsvSink(ctx, out)
-      val sq = new graft.sinks.SqliteCsvSink(ctx, out)
-      Seq(neo, ar, sq).foreach { sk =>
-        sk.nodeLayouts = pg.nodeLayouts; sk.edgeLayouts = pg.edgeLayouts
-      }
-      val partRows = (pg.nodeLayouts.values ++ pg.edgeLayouts.values).toSeq
-        .flatMap(lay => pg.partsOf(lay.fileLabel)).sorted.zipWithIndex
-        .map { case (p, i) => ("parts", i.toLong, p) }
-      def script(kind: String, text: String): Seq[(String, Long, String)] =
-        text.linesIterator.zipWithIndex.map { case (l, i) => (kind, i.toLong, l) }.toSeq
-      (partRows ++ script("neo4j", neo.constructImportCall()) ++
-        script("postgres", pg.constructImportCall()) ++
-        script("sqlite", sq.constructImportCall()) ++
-        script("arango", ar.constructImportCall()))
-        .toDF("kind", "seq", "line")
+      // every result row is driver-side data (part names, script lines),
+      // so the written files go before the row returns
+      try {
+        val pg = new graft.sinks.PostgresCsvSink(ctx, out)
+        // node and edge writes are independent jobs over disjoint label files;
+        // overlap them so the edge stages back-fill the node write's task tail
+        // (guide §2.6). Layout maps touched are disjoint (nodeLayouts vs
+        // edgeLayouts), staging dirs are UUID-distinct, rename targets are
+        // disjoint file names: the schema's node and edge file labels are
+        // required disjoint before the fork.
+        locally {
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.ExecutionContext.Implicits.global
+          pg.requireDisjointFileLabels(
+            ctx.specs.collect { case (c, sp) if sp.representedAs == "node" => c },
+            ctx.specs.collect { case (c, sp) if sp.representedAs == "edge" => sp.labelAsEdge.getOrElse(c) })
+          // materialize the shared dm cache once BEFORE forking, so the two
+          // concurrent first-actions don't race to compute the same blocks
+          dm.count()
+          val nF = Future { pg.writeNodes(ns) }
+          val eF = Future { pg.writeEdges(es) }
+          Await.result(nF, scala.concurrent.duration.Duration.Inf)
+          Await.result(eF, scala.concurrent.duration.Duration.Inf)
+        }
+        dm.unpersist(blocking = false)
+        // the other batch sinks share the SAME part grammar on disk; they
+        // reuse the probed layouts and only differ in script codegen
+        val neo = new graft.sinks.Neo4jCsvSink(ctx, out)
+        val ar = new graft.sinks.ArangoCsvSink(ctx, out)
+        val sq = new graft.sinks.SqliteCsvSink(ctx, out)
+        Seq(neo, ar, sq).foreach { sk =>
+          sk.nodeLayouts = pg.nodeLayouts; sk.edgeLayouts = pg.edgeLayouts
+        }
+        val partRows = (pg.nodeLayouts.values ++ pg.edgeLayouts.values).toSeq
+          .flatMap(lay => pg.partsOf(lay.fileLabel)).sorted.zipWithIndex
+          .map { case (p, i) => ("parts", i.toLong, p) }
+        def script(kind: String, text: String): Seq[(String, Long, String)] =
+          text.linesIterator.zipWithIndex.map { case (l, i) => (kind, i.toLong, l) }.toSeq
+        (partRows ++ script("neo4j", neo.constructImportCall()) ++
+          script("postgres", pg.constructImportCall()) ++
+          script("sqlite", sq.constructImportCall()) ++
+          script("arango", ar.constructImportCall()))
+          .toDF("kind", "seq", "line")
+      } finally dropWorkDir(s, out)
     }),
     "kg_rdf_reified" -> ((s, dir) => {
       // reified-edge triple table (reference RDF semantics: edges become
@@ -675,7 +677,9 @@ object SparkEntry {
       val pipe = KgPipeline.analytics(s)
       val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
       val es = pipe.edges(dm)
-      new graft.sinks.RdfSink(pipe.bcCtx.value, workDir(s, "rdf")).reifiedEdgeTriples(es)
+      // a table view only: reifiedEdgeTriples writes no file, so the sink
+      // gets no output dir
+      new graft.sinks.RdfSink(pipe.bcCtx.value, outDir = null).reifiedEdgeTriples(es)
     }),
     // the four dedup-family rows share ONE computed candidate artifact
     // (and one derived cluster artifact) per corpus dir

@@ -18,11 +18,15 @@ import org.apache.spark.sql.Dataset
   * adversarial dictionaries: when local distinct pairs exceed `flushAt`
   * the map drains to output (duplicate partials are merged by the same
   * downstream sum), so memory is O(flushAt) regardless of dictionary size.
+  *
+  * One kernel per table layout serves both public combiners: a dense
+  * long[] of counts at closed-dictionary sizes ([[DenseMaxDictCounts]]),
+  * the hash map above it.
   */
 object CoocCombine {
 
-  /** Per-doc capped+sorted rank selection shared with the expression path:
-    * ranks ascending; docs over `maxEntities` keep the top entities by
+  /** Per-doc capped+sorted rank selection of both kernels: ranks
+    * ascending; docs over `maxEntities` keep the top entities by
     * (score desc, rank asc), score = scoreUnit(rank) * n. */
   private[graft] def cappedSortedRanks(pm: Array[Long], su: Array[Double],
       maxEntities: Int): Array[Int] = {
@@ -63,32 +67,78 @@ object CoocCombine {
     }
   }
 
+  /** Dense gate for both combiners: at `|dict| <= DenseMaxDictCounts` the
+    * (a, b) pair domain is a long[] of dict² counts — 8 MB/task at 1024 —
+    * and one direct-indexed increment per pair replaces the ~6 ns
+    * open-addressing probe (the AhoCorasick dense-trie precedent). Above
+    * the gate the hash map keeps memory O(flushAt) for open dictionaries. */
+  val DenseMaxDictCounts = 1024
+
+  /** The same gate under the name the pair+rank-key combiner used when it
+    * had a dense kernel of its own. kgbench's start-up guard still reads
+    * both names; drop this one once that guard does. */
+  val DenseMaxDict = DenseMaxDictCounts
+
   /** `pmRows` is the fused working set's `pm` column (one packed array per
     * document). Returns PARTIAL (pair, cnt) counts — one small
     * `groupBy(pair).sum(cnt)` exchange completes the aggregate. */
-  /** Dense-counts gate for [[partialPairCounts]]: a long[] of dict² counts
-    * is 8 MB/task at 1024 — direct-indexed increments, no probing. Kept
-    * tighter than [[DenseMaxDict]] (counts are 64× wider than bits). */
-  val DenseMaxDictCounts = 1024
-
   def partialPairCounts(pmRows: Dataset[Array[Long]],
       bcDict: Broadcast[MentionDict], maxEntities: Int,
       flushAt: Int = 1 << 22, denseMax: Int = DenseMaxDictCounts): Dataset[(Long, Long)] = {
     val spark = pmRows.sparkSession
     import spark.implicits._
-    pmRows.mapPartitions { it =>
-      val nDict = bcDict.value.linkFor.length
-      if (nDict <= denseMax) densePairCounts(it, bcDict.value, maxEntities, nDict)
-      else hashPairCounts(it, bcDict.value, maxEntities, flushAt)
-    }
+    pmRows.mapPartitions(it =>
+      partials(it, bcDict.value, maxEntities, flushAt, denseMax, rankKeys = false))
   }
 
-  private def densePairCounts(it: Iterator[Array[Long]], dict: MentionDict,
-      maxEntities: Int, n: Int): Iterator[(Long, Long)] = {
+  /** Shared-scan combiner for the fused triples path: ONE pass over the
+    * packed mention sets emits BOTH key families the triple table needs,
+    * disambiguated by packing — rank PRESENCE as self-pairs `(r, r)` (a
+    * real co-occurrence pair is strictly `a < b` by [[cappedSortedRanks]]'
+    * ascending emission, so `hi == lo` is unambiguous), and the capped
+    * co-occurrence pairs as `(a, b)`. Counts are dropped: a triple is
+    * presence, not frequency, so the downstream aggregate is a plain
+    * `distinct` over the packed key, which
+    * [[graft.KgPipeline.triplesFromSets]] puts behind a barrier so this
+    * scan runs once per action no matter how many consumers sit above.
+    *
+    * Self keys cover ALL ranks of every doc (including singleton docs and
+    * ranks dropped by the per-doc cap — node presence is uncapped, matching
+    * [[partialRankSets]]); pair keys are [[partialPairCounts]]' keys, from
+    * the same kernel. */
+  def partialPairAndRankKeys(pmRows: Dataset[Array[Long]],
+      bcDict: Broadcast[MentionDict], maxEntities: Int,
+      flushAt: Int = 1 << 22, denseMax: Int = DenseMaxDict): Dataset[Long] = {
+    val spark = pmRows.sparkSession
+    import spark.implicits._
+    pmRows.mapPartitions(it =>
+      partials(it, bcDict.value, maxEntities, flushAt, denseMax, rankKeys = true).map(_._1))
+  }
+
+  /** The one per-partition pair combiner, in the layout the dictionary size
+    * picks. With `rankKeys` each doc also counts the self key `(r, r)` of
+    * every rank it holds. */
+  private def partials(it: Iterator[Array[Long]], dict: MentionDict, maxEntities: Int,
+      flushAt: Int, denseMax: Int, rankKeys: Boolean): Iterator[(Long, Long)] = {
+    val nDict = dict.linkFor.length
+    if (nDict <= denseMax) densePairs(it, dict, maxEntities, nDict, rankKeys)
+    else hashPairs(it, dict, maxEntities, flushAt, rankKeys)
+  }
+
+  private def densePairs(it: Iterator[Array[Long]], dict: MentionDict,
+      maxEntities: Int, n: Int, rankKeys: Boolean): Iterator[(Long, Long)] = {
     val su = dict.scoreUnitByRank
     val counts = new Array[Long](n * n)
     while (it.hasNext) {
       val pm = it.next()
+      if (rankKeys) {
+        var i = 0
+        while (i < pm.length) {
+          val r = (pm(i) >>> 32).toInt
+          counts(r * n + r) += 1
+          i += 1
+        }
+      }
       if (pm.length >= 2) {
         val arr = cappedSortedRanks(pm, su, maxEntities)
         val m = arr.length
@@ -118,138 +168,22 @@ object CoocCombine {
     }
   }
 
-  private def hashPairCounts(it: Iterator[Array[Long]], dict: MentionDict,
-      maxEntities: Int, flushAt: Int): Iterator[(Long, Long)] = {
-      val su = dict.scoreUnitByRank
-      var agg = new LongLongMap(1 << 16)
-      new Iterator[(Long, Long)] {
-        private var drained: Iterator[(Long, Long)] = Iterator.empty
-        private def pump(): Unit = {
-          while (!drained.hasNext && it.hasNext) {
-            val pm = it.next()
-            if (pm.length >= 2) {
-              val arr = cappedSortedRanks(pm, su, maxEntities)
-              val m = arr.length
-              var a = 0
-              while (a < m) {
-                val hi = arr(a).toLong << 32
-                var b = a + 1
-                while (b < m) { agg.inc(hi | arr(b).toLong); b += 1 }
-                a += 1
-              }
-              if (agg.size >= flushAt) {
-                drained = agg.iterator
-                agg = new LongLongMap(1 << 16)
-              }
-            }
-          }
-          if (!drained.hasNext && !it.hasNext && agg.size > 0) {
-            drained = agg.iterator
-            agg = new LongLongMap(4) // emptied; keeps the post-drain state clean
-          }
-        }
-        def hasNext: Boolean = { if (!drained.hasNext) pump(); drained.hasNext }
-        def next(): (Long, Long) = { if (!drained.hasNext) pump(); drained.next() }
-      }
-  }
-
-  /** Dense fast-path gate: at `|dict| <= DenseMaxDict` the (a, b) pair
-    * domain is dict² bits — ≤ 512 KB of bitset at 2048 — and one
-    * shift-or per pair replaces the ~6 ns open-addressing probe (the
-    * AhoCorasick dense-trie precedent; at 16M docs the pair stream is
-    * ~1.4G increments, so the probe cost is the combiner). Above the gate
-    * the hash map keeps memory O(flushAt) for open dictionaries. */
-  val DenseMaxDict = 2048
-
-  /** Shared-scan combiner for the fused triples path: ONE pass over the
-    * packed mention sets emits BOTH key families the triple table needs,
-    * disambiguated by packing — rank PRESENCE as self-pairs `(r, r)` (a
-    * real co-occurrence pair is strictly `a < b` by [[cappedSortedRanks]]'
-    * ascending emission, so `hi == lo` is unambiguous), and the capped
-    * co-occurrence pairs as `(a, b)`. Counts are not tracked: a triple is
-    * presence, not frequency, so the downstream aggregate is a plain
-    * `distinct` over the packed key, which
-    * [[graft.KgPipeline.triplesFromSets]] puts behind a barrier so this
-    * scan runs once per action no matter how many consumers sit above.
-    *
-    * Self keys cover ALL ranks of every doc (including singleton docs and
-    * ranks dropped by the per-doc cap — node presence is uncapped, matching
-    * [[partialRankSets]]); pair keys replicate [[partialPairCounts]]'
-    * emission exactly minus the counts. */
-  def partialPairAndRankKeys(pmRows: Dataset[Array[Long]],
-      bcDict: Broadcast[MentionDict], maxEntities: Int,
-      flushAt: Int = 1 << 22, denseMax: Int = DenseMaxDict): Dataset[Long] = {
-    val spark = pmRows.sparkSession
-    import spark.implicits._
-    pmRows.mapPartitions { it =>
-      val nDict = bcDict.value.linkFor.length
-      if (nDict <= denseMax) densePairAndRankKeys(it, bcDict.value, maxEntities, nDict)
-      else hashPairAndRankKeys(it, bcDict.value, maxEntities, flushAt)
-    }
-  }
-
-  /** Bitset variant: set bit `a*n + b` per pair (self-bit per rank), emit
-    * the set bits as packed keys at partition end. */
-  private def densePairAndRankKeys(it: Iterator[Array[Long]], dict: MentionDict,
-      maxEntities: Int, n: Int): Iterator[Long] = {
-    val su = dict.scoreUnitByRank
-    val bits = new Array[Long]((n * n + 63) >>> 6)
-    while (it.hasNext) {
-      val pm = it.next()
-      var i = 0
-      while (i < pm.length) {
-        val r = (pm(i) >>> 32).toInt
-        val idx = r * n + r
-        bits(idx >>> 6) |= 1L << (idx & 63)
-        i += 1
-      }
-      if (pm.length >= 2) {
-        val arr = cappedSortedRanks(pm, su, maxEntities)
-        val m = arr.length
-        var a = 0
-        while (a < m) {
-          val base = arr(a) * n
-          var b = a + 1
-          while (b < m) {
-            val idx = base + arr(b)
-            bits(idx >>> 6) |= 1L << (idx & 63)
-            b += 1
-          }
-          a += 1
-        }
-      }
-    }
-    new Iterator[Long] {
-      private val end = n * n
-      private def seekFrom(j0: Int): Int = {
-        var j = j0
-        while (j < end && (bits(j >>> 6) & (1L << (j & 63))) == 0L) j += 1
-        j
-      }
-      private var nextIdx = seekFrom(0)
-      def hasNext: Boolean = nextIdx < end
-      def next(): Long = {
-        val cur = nextIdx
-        nextIdx = seekFrom(cur + 1)
-        ((cur / n).toLong << 32) | (cur % n).toLong
-      }
-    }
-  }
-
-  private def hashPairAndRankKeys(it: Iterator[Array[Long]], dict: MentionDict,
-      maxEntities: Int, flushAt: Int): Iterator[Long] = {
+  private def hashPairs(it: Iterator[Array[Long]], dict: MentionDict,
+      maxEntities: Int, flushAt: Int, rankKeys: Boolean): Iterator[(Long, Long)] = {
     val su = dict.scoreUnitByRank
     var agg = new LongLongMap(1 << 16)
-    new Iterator[Long] {
+    new Iterator[(Long, Long)] {
       private var drained: Iterator[(Long, Long)] = Iterator.empty
       private def pump(): Unit = {
         while (!drained.hasNext && it.hasNext) {
           val pm = it.next()
-          var i = 0
-          while (i < pm.length) {
-            val r = pm(i) >>> 32
-            agg.inc(r << 32 | r)
-            i += 1
+          if (rankKeys) {
+            var i = 0
+            while (i < pm.length) {
+              val r = pm(i) >>> 32
+              agg.inc(r << 32 | r)
+              i += 1
+            }
           }
           if (pm.length >= 2) {
             val arr = cappedSortedRanks(pm, su, maxEntities)
@@ -269,11 +203,11 @@ object CoocCombine {
         }
         if (!drained.hasNext && !it.hasNext && agg.size > 0) {
           drained = agg.iterator
-          agg = new LongLongMap(4)
+          agg = new LongLongMap(4) // emptied; keeps the post-drain state clean
         }
       }
       def hasNext: Boolean = { if (!drained.hasNext) pump(); drained.hasNext }
-      def next(): Long = { if (!drained.hasNext) pump(); drained.next()._1 }
+      def next(): (Long, Long) = { if (!drained.hasNext) pump(); drained.next() }
     }
   }
 

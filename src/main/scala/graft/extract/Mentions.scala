@@ -225,50 +225,6 @@ object Mentions {
     }
   }
 
-  /** Co-occurring entity pairs emitted per document in the same narrow
-    * pass (doc-local entity set -> ordered pairs), then one tiny aggregate:
-    * (src, tgt, n_docs). Replaces a 2x-sort self-join of the mention table
-    * — at 1.5M docs the join took minutes, this takes seconds, and the
-    * shuffle is O(distinct pairs), not O(docs x pairs). */
-  def cooccurrencePairs(docs: Dataset[Doc], bcDict: Broadcast[MentionDict],
-      maxEntitiesPerDoc: Int = DefaultMaxEntitiesPerDoc): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val droppedDocs = spark.sparkContext.longAccumulator("cooccurrence_capped_docs")
-    val droppedEntities = spark.sparkContext.longAccumulator("cooccurrence_dropped_entities")
-    val pairs = docs.mapPartitions { it =>
-      val dict = bcDict.value
-      val counts = new Array[Long](dict.linkFor.length)
-      val touched = new Array[Int](dict.linkFor.length)
-      it.flatMap { doc =>
-        // distinct entity RANKS per doc (curie lexicographic order preserved
-        // via integer ranks — keeps a < b semantics without string sorting)
-        val nTouched = countDoc(dict, doc, counts, touched)
-        var arr = new Array[Int](nTouched)
-        val scores = new Array[Double](nTouched)
-        var i = 0
-        while (i < nTouched) {
-          val pi = touched(i)
-          arr(i) = dict.rankOf(pi)
-          scores(i) = dict.scoreUnitByRank(arr(i)) * clampN(counts(pi))
-          counts(pi) = 0
-          i += 1
-        }
-        // pair-emission cap: an open-dictionary entity-list page would emit
-        // O(n²) pairs; keep the top-scored entities (deterministic
-        // tie-break by rank) and count the drop
-        if (nTouched > maxEntitiesPerDoc) {
-          droppedDocs.add(1)
-          droppedEntities.add(nTouched - maxEntitiesPerDoc)
-          arr = topRanksByScore(arr, scores, maxEntitiesPerDoc)
-        } else java.util.Arrays.sort(arr)
-        for { a <- arr.indices.iterator; b <- (a + 1) until arr.length }
-          yield (dict.byRank(arr(a)).curie, dict.byRank(arr(b)).curie)
-      }
-    }.toDF("src", "tgt")
-    pairs.groupBy(col("src"), col("tgt")).agg(count(lit(1)).as("n_docs"))
-  }
-
   /** Co-occurring entity pairs derived from an UNSHUFFLED DocMention
     * dataset (straight from [[detectPerDoc]], possibly persisted): rows of
     * one doc are contiguous within a partition by construction, so per-doc
@@ -282,8 +238,9 @@ object Mentions {
     * doc_id reappears after its run ended — a re-shuffled input fails
     * loudly instead of silently emitting wrong pairs. Within a doc the
     * curies are already distinct; lexicographic sort reproduces the a < b
-    * pair order of [[cooccurrencePairs]] exactly, and the same
-    * `maxEntitiesPerDoc` cap applies (top score, curie tie-break). */
+    * pair order of [[graft.KgPipeline.cooccurrencePairsFromSets]] (rank
+    * order is curie order), and the same `maxEntitiesPerDoc` cap applies
+    * (top score, curie tie-break). */
   def cooccurrencePairsFromDocMentions(dm: Dataset[DocMention],
       maxEntitiesPerDoc: Int = DefaultMaxEntitiesPerDoc,
       guard: Boolean = true): DataFrame = {

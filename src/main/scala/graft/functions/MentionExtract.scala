@@ -29,9 +29,9 @@ import graft.extract.{MentionDict, Mentions}
   * struct element yields null entries in both arrays and is skipped.
   *
   * One output ROW PER DOCUMENT (pre-explode): doc boundaries are row
-  * boundaries, so downstream per-doc logic ([[CoocPackedPairs]]) needs no
-  * run-contiguity contract, and the cached working set pays the doc_id
-  * string once per document instead of once per mention.
+  * boundaries, so downstream per-doc logic ([[graft.extract.CoocCombine]])
+  * needs no run-contiguity contract, and the cached working set pays the
+  * doc_id string once per document instead of once per mention.
   */
 case class ExtractMentionsKT(kinds: Expression, texts: Expression,
     bcDict: Broadcast[MentionDict])
@@ -128,65 +128,6 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict]) extends Serializabl
       i += 1
     }
     true
-  }
-}
-
-/** Codegen'd per-document co-occurrence pair emission over a packed mention
-  * set (the [[ExtractMentionsKT]] output): returns `array<long>` of packed
-  * `(srcRank << 32) | tgtRank` pairs with `srcRank < tgtRank` — rank order
-  * == curie order, so this reproduces the string pipeline's `a < b` curie
-  * pair semantics exactly. Docs above `maxEntities` keep their top entities
-  * by (score desc, rank asc), score rederived from the broadcast dictionary
-  * as `scoreUnit(rank) * n` — identical cap semantics to
-  * [[Mentions.cooccurrencePairs]].
-  *
-  * Because the input row IS the document, there is no run-walking and no
-  * contiguity contract: this works on any (even shuffled) mention-set table.
-  * Capped-doc accounting: `filter(size(pm) > cap).count` on the input.
-  */
-case class CoocPackedPairs(child: Expression, bcDict: Broadcast[MentionDict],
-    maxEntities: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  @transient private lazy val helper = new CoocPairsWorker(bcDict, maxEntities)
-
-  override protected def nullSafeEval(input: Any): Any =
-    helper.pairs(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val h = ctx.addReferenceObj("coocPairsWorker", helper,
-        classOf[CoocPairsWorker].getName)
-      s"${ev.value} = $h.pairs($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CoocPackedPairs =
-    copy(child = newChild)
-}
-
-final class CoocPairsWorker(bcDict: Broadcast[MentionDict], maxEntities: Int)
-    extends Serializable {
-
-  private val empty = Array.emptyLongArray
-
-  def pairs(pm: ArrayData): ArrayData = {
-    val n = pm.numElements()
-    if (n < 2) return UnsafeArrayData.fromPrimitiveArray(empty)
-    // shared per-doc cap + sort semantics with the combiner path
-    val arr = graft.extract.CoocCombine.cappedSortedRanks(
-      pm.toLongArray(), bcDict.value.scoreUnitByRank, maxEntities)
-    val m = arr.length
-    val out = new Array[Long](m * (m - 1) / 2)
-    var k = 0
-    var a = 0
-    while (a < m) {
-      val hi = arr(a).toLong << 32
-      var b = a + 1
-      while (b < m) { out(k) = hi | arr(b).toLong; k += 1; b += 1 }
-      a += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 

@@ -32,7 +32,8 @@ object Streaming {
     * present at start is consumed, instead of processAllAvailable's polling
     * settle), stop the query, and return the sink table from the stream's
     * own session. Append output mode; `checkpointDir` holds the offsets
-    * and state store. */
+    * and state store while the query runs and is deleted once it stops
+    * (the memory sink keeps the rows). */
   def drainToMemory(stream: DataFrame, checkpointDir: String): DataFrame = {
     val name = "graft_drain_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = stream.writeStream.format("memory").queryName(name)
@@ -40,7 +41,12 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-    try q.awaitTermination() finally q.stop()
+    try q.awaitTermination()
+    finally {
+      q.stop()
+      val ckpt = new org.apache.hadoop.fs.Path(checkpointDir)
+      ckpt.getFileSystem(stream.sparkSession.sparkContext.hadoopConfiguration).delete(ckpt, true)
+    }
     stream.sparkSession.table(name)
   }
 

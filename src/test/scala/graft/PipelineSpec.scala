@@ -110,7 +110,7 @@ class PipelineSpec extends AnyFunSuite {
     docs.unpersist()
   }
 
-  test("pair+rank key combiner: dense bitset path == hash-map path") {
+  test("pair+rank key combiner: dense path == hash-map path") {
     // the analytics dict (22 terms) takes the dense path; denseMax = 0
     // forces the open-dictionary hash fallback on the same input — the
     // distinct key sets must agree exactly (self keys AND capped pairs)
@@ -136,6 +136,29 @@ class PipelineSpec extends AnyFunSuite {
         s"cap=$cap count totals diverge")
     }
     ms.unpersist(); docs.unpersist()
+  }
+
+  test("hash combiner flush drain: partials merge to the dense run's keys and totals") {
+    // flushAt = 3 drains the hash map after almost every doc, so the same
+    // key leaves a partition as several partials; the downstream distinct
+    // and sum must still give exactly the dense (unflushed) result
+    import graft.extract.CoocCombine
+    val docs = Corpus.synthesize(spark, 300, AnalyticsDomain.vocab).persist()
+    val pipe = graft.KgPipeline.analytics(spark)
+    val pm = pipe.mentionSets(docs).select(col("pm")).as[Array[Long]].persist()
+    val cap = Mentions.DefaultMaxEntitiesPerDoc
+    val denseKeys = CoocCombine.partialPairAndRankKeys(pm, pipe.bcDict, cap).collect()
+    val flushedKeys = CoocCombine
+      .partialPairAndRankKeys(pm, pipe.bcDict, cap, flushAt = 3, denseMax = 0).collect()
+    assert(flushedKeys.length > flushedKeys.distinct.length, "the flush must split some key")
+    assert(flushedKeys.toSet == denseKeys.toSet)
+    def totals(ds: org.apache.spark.sql.Dataset[(Long, Long)]) =
+      ds.collect().groupMapReduce(_._1)(_._2)(_ + _)
+    val dense = CoocCombine.partialPairCounts(pm, pipe.bcDict, cap)
+    val flushed = CoocCombine.partialPairCounts(pm, pipe.bcDict, cap, flushAt = 3, denseMax = 0)
+    assert(flushed.count() > flushed.map(_._1).distinct().count(), "the flush must split some pair")
+    assert(totals(flushed) == totals(dense))
+    pm.unpersist(); docs.unpersist()
   }
 
   test("triplesFromSets == triples(nodes, edges) under a tight per-doc entity cap") {
@@ -375,34 +398,20 @@ class PipelineSpec extends AnyFunSuite {
     val entries = (0 until 1000).map(i =>
       DictEntry(f"term$i%04d", f"e:$i%04d", "workload", prior = 1.0))
     val dict = MentionDict.build(entries)
-    val bc = spark.sparkContext.broadcast(dict)
+    val pipe = new KgPipeline(spark, AnalyticsDomain.context(), dict)
     val text = (0 until 1000).map(i => f"term$i%04d").mkString(" ")
     val docs = Seq(Doc("big", Seq(Span("text", text, null, 0)))).toDS()
-    val capped = Mentions.cooccurrencePairs(docs, bc)
+    val capped = pipe.cooccurrencePairsFromSets(pipe.mentionSets(docs))
     assert(capped.count() == 256L * 255 / 2)
     // equal scores -> deterministic tie-break keeps the lexicographically
     // smallest curies (rank order)
     val srcs = capped.select("src").distinct().as[String].collect()
     assert(srcs.forall(_ <= "e:0255"))
-    val dm = Mentions.detectPerDoc(docs, bc).coalesce(1)
+    val dm = Mentions.detectPerDoc(docs, pipe.bcDict).coalesce(1)
     assert(Mentions.cooccurrencePairsFromDocMentions(dm).count() == 256L * 255 / 2)
     // demo-sized docs are untouched by the cap
     val small = Seq(Doc("s", Seq(Span("text", "term0001 term0002 term0003", null, 0)))).toDS()
-    assert(Mentions.cooccurrencePairs(small, bc).count() == 3)
-    // the fused CoocPackedPairs expression applies the identical cap +
-    // tie-break: same pair count, same lexicographically-smallest survivors
-    import org.apache.spark.sql.GraftColumnBridge
-    val pmDf = docs.toDF().select(
-      GraftColumnBridge.column(graft.functions.ExtractMentionsKT(
-        GraftColumnBridge.expression(col("spans.kind")),
-        GraftColumnBridge.expression(col("spans.text")), bc)).as("pm"))
-    val fusedPairs = pmDf.select(explode(GraftColumnBridge.column(
-      graft.functions.CoocPackedPairs(GraftColumnBridge.expression(col("pm")),
-        bc, Mentions.DefaultMaxEntitiesPerDoc))).as("pair"))
-    assert(fusedPairs.count() == 256L * 255 / 2)
-    val maxSrcRank = fusedPairs.select(shiftright(col("pair"), 32).cast("int"))
-      .as[Int].collect().max
-    assert(dict.byRank(maxSrcRank).curie <= "e:0255")
+    assert(pipe.cooccurrencePairsFromSets(pipe.mentionSets(small)).count() == 3)
   }
 
   test("fused mention-set consumers tolerate arbitrary repartition (no contiguity contract)") {
