@@ -1,6 +1,8 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, FutureTask}
 import scala.collection.immutable.ListMap
+import scala.util.{Failure, Try}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -27,6 +29,10 @@ import graft.translate.Translate
   * commit), and a NEW session over
   * the same output directory resumes the seen state — idempotent re-runs
   * across JVMs, which the reference's in-memory Deduplicator cannot do.
+  * Within a call, the sink write and the next snapshots' data writes run
+  * at the same time; a snapshot's manifest, its commit point, is written
+  * only after the sink write has succeeded, so a failed write call leaves
+  * the seen state as it was.
   * Rel-as-node entities get the same treatment keyed on (label, node id)
   * (reference rel_as_node_seen, _deduplicate.py:83-111).
   *
@@ -107,9 +113,18 @@ final class KgSession(
     * resighted keys keep their stamp, every key in this batch (fresh or
     * resighted) refreshes to now, expired keys drop out, and the superseded
     * snapshot version is deleted — one live snapshot per key space, bounded
-    * by the TTL horizon. The cache is released once the commits have
-    * finished, so the call's input (scan, translation, dedup exchange) is
-    * evaluated exactly once. */
+    * by the TTL horizon.
+    *
+    * The consumers overlap: each space's next snapshot is prepared
+    * ([[CheckpointStore.prepare]]: data, footers, read-back frame) on a
+    * thread of its own while `use` runs on the caller's, so a call takes
+    * the longer of the two, not their sum. The commit point, each space's
+    * manifest, is published only after `use` has returned and every
+    * prepare has finished. If `use` or a prepare fails, the unpublished
+    * versions are deleted once every prepare has finished and the failure
+    * is rethrown: the seen state stays as it was. The cache is released
+    * after that, so the call's input (scan, translation, dedup exchange)
+    * is evaluated exactly once. */
   private def withFresh[T](spaces: Seq[(String, String)], keyed: DataFrame)(use: DataFrame => T): T = {
     val now = nowMs()
     val live = spaces.map { case (space, _) => space -> seenLive(space, now) }.toMap
@@ -118,9 +133,8 @@ final class KgSession(
     }.reduceOption(_ union _)
     val batch = keyed.cache()
     try {
-      val r = use(seenKeys.fold(batch)(s => batch.join(s, Seq("_k"), "left_anti")))
       val stamp = KgSession.perCall(now)
-      spaces.foreach { case (space, tag) =>
+      val pending = spaces.map { case (space, tag) =>
         val keys =
           if (tag.isEmpty) batch.select(col("_k"))
           else batch.filter(col("_k").startsWith(tag))
@@ -129,7 +143,20 @@ final class KgSession(
         val nextKeys = live(space).fold(incoming)(s =>
           s.join(incoming.select("_k"), Seq("_k"), "left_anti").union(incoming))
         val v = snapshot(space).fold(0)(_._1) + 1
-        val committed = store.commit(s"$space/v$v", nextKeys)
+        (space, v, KgSession.forked(store.prepare(s"$space/v$v", nextKeys)))
+      }
+      def settle(): Seq[Try[CheckpointStore.Prepared]] =
+        pending.map { case (_, _, task) => KgSession.await(task) }
+      def abandon(e: Throwable): Nothing = {
+        pending.foreach { case (space, v, _) => store.drop(s"$space/v$v") }
+        throw e
+      }
+      val r = try use(seenKeys.fold(batch)(s => batch.join(s, Seq("_k"), "left_anti")))
+        catch { case e: Throwable => settle(); abandon(e) }
+      val prepared = settle()
+      prepared.collectFirst { case Failure(e) => e }.foreach(abandon)
+      pending.zip(prepared).foreach { case ((space, v, _), p) =>
+        val committed = store.publish(p.get)
         store.drop(s"$space/v${v - 1}") // compaction: one live snapshot
         snapshots(space) = v -> committed
       }
@@ -518,6 +545,21 @@ object KgSession {
     * the plan by reference, where a literal would be compiled into the
     * generated code and make every call compile new classes. */
   private def perCall(v: Long): Column = udf(() => v).asNondeterministic()()
+
+  /** Runs `f` on a thread of its own, which inherits the caller's Spark
+    * local properties (job group, scheduler pool). Blocking Spark actions
+    * get a dedicated thread, not a shared pool; [[await]] joins it. */
+  private def forked[A](f: => A): FutureTask[A] = {
+    val task = new FutureTask[A](() => f)
+    val t = new Thread(task, "graft-seen-prepare")
+    t.setDaemon(true)
+    t.start()
+    task
+  }
+
+  /** Waits for a [[forked]] task; its failure, unwrapped. */
+  private def await[A](task: FutureTask[A]): Try[A] =
+    Try(task.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
 
   /** concat_ws: null parts are skipped. */
   private def concatWs(sep: String, parts: String*): String = parts.filter(_ != null).mkString(sep)

@@ -33,15 +33,22 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
 
   /** Write `df` as the stage snapshot + lineage manifest; returns the
     * read-back DataFrame (so downstream reads the committed snapshot, not
-    * the recomputed plan). The read-back takes the written frame's schema
-    * (made nullable, as Parquet stores it), so no schema is inferred from
-    * files this store just wrote. The manifest's per-file rows and bytes
-    * come from the committed files' Parquet footers and listing: O(files)
-    * on the driver, no scan of the snapshot. Overwrites any partial
-    * previous attempt — the manifest is written last, so a crash
-    * mid-write leaves the stage uncommitted and a rerun redoes it
-    * (idempotent). */
-  def commit(stage: String, df: DataFrame): DataFrame = {
+    * the recomputed plan). A commit is [[prepare]] then [[publish]]: the
+    * data, the footer reads and the read-back frame first, the manifest
+    * last. The read-back takes the written frame's schema (made nullable,
+    * as Parquet stores it), so no schema is inferred from files this store
+    * just wrote. The manifest's per-file rows and bytes come from the
+    * written files' Parquet footers and listing: O(files) on the driver,
+    * no scan of the snapshot. Overwrites any partial previous attempt —
+    * the manifest is the commit point, so a crash before it leaves the
+    * stage uncommitted and a rerun redoes it (idempotent). */
+  def commit(stage: String, df: DataFrame): DataFrame = publish(prepare(stage, df))
+
+  /** Everything of a commit but its commit point: writes `df`'s Parquet
+    * data, reads the footers, builds the manifest text and the read-back
+    * frame. The stage stays uncommitted until [[publish]]; [[drop]]
+    * discards a prepared stage that will not be published. */
+  def prepare(stage: String, df: DataFrame): CheckpointStore.Prepared = {
     val dir = stageDir(stage)
     val t0 = System.nanoTime()
     df.write.mode("overwrite").parquet(dir.toString)
@@ -64,11 +71,19 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
       s"""{"stage":${q(stage)},"wall_ms":$wallMs,"n_files":${files.length},
          |"total_rows":${perFile.map(_._2).sum},
          |"partitions":[${files.mkString(",")}]}""".stripMargin.replace("\n", "")
-    writeString(manifestPath(stage), manifest)
-    spark.read.schema(CheckpointStore.nullable(df.schema)).parquet(dir.toString)
+    new CheckpointStore.Prepared(stage, manifest,
+      spark.read.schema(CheckpointStore.nullable(df.schema)).parquet(dir.toString))
   }
 
-  /** Remove a committed snapshot (compaction); no-op when absent. */
+  /** The commit point of a [[prepare]]d stage: writes its manifest and
+    * returns its read-back frame. */
+  def publish(p: CheckpointStore.Prepared): DataFrame = {
+    writeString(manifestPath(p.stage), p.manifest)
+    p.frame
+  }
+
+  /** Remove a snapshot, committed (compaction) or only prepared; no-op
+    * when absent. */
   def drop(stage: String): Unit = {
     val dir = stageDir(stage)
     if (fs.exists(dir)) fs.delete(dir, true)
@@ -167,6 +182,10 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
 }
 
 object CheckpointStore {
+
+  /** A stage whose data is written and whose manifest is not. */
+  final class Prepared private[checkpoint] (private[checkpoint] val stage: String,
+      private[checkpoint] val manifest: String, private[checkpoint] val frame: DataFrame)
 
   /** The schema Spark's Parquet writer stores for `t`: every field, array
     * element and map value nullable (Spark's own `asNullable` is internal). */

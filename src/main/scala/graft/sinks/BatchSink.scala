@@ -500,24 +500,24 @@ object BatchSink {
     * `java.nio.file.Files.move` job silently required executors to share
     * the driver's POSIX mount. The staging dir lives UNDER `outDir` (same
     * filesystem — a cross-filesystem rename is a copy at best and an error
-    * on HDFS), and the rename pass is DISTRIBUTED: the driver lists the
-    * committed files and assigns target names (one listing + a cheap
-    * sort); the renames run as a Spark job with the driver's Hadoop conf
-    * shipped along, so a bulk import with 10⁵–10⁶ part files serializes on
-    * neither a driver loop nor a foreign-filesystem assumption. Renames
-    * are idempotent (a task retry finds the source gone and the target
-    * present). The one grammar constraint that keeps this a rename pass
-    * rather than pure commit-protocol naming: part numbering is contiguous
-    * per label and CONTINUES across sessions, which no task can know at
-    * commit time — assigning NNN needs the global per-label file list. */
+    * on HDFS). The driver lists the written files, assigns target names
+    * (one listing + a cheap sort) and renames them, one metadata call per
+    * part file; a lost or failed rename throws. That is one more driver
+    * pass of the order a write already has: Spark's v1
+    * `FileOutputCommitter.commitJob` has just merged every one of these
+    * files on the driver, while a rename job would cost a Spark job's
+    * fixed overhead per write call. The one grammar
+    * constraint that keeps this a rename pass rather than pure
+    * commit-protocol naming: part numbering is contiguous per label and
+    * CONTINUES across sessions, which no task can know at commit time —
+    * assigning NNN needs the global per-label file list. */
   def writePartitioned(spark: SparkSession, df: DataFrame, outDir: String, batchSize: Long,
       extension: String = "csv",
       fileLabels: Seq[String] => Map[String, String] = ls => ls.map(l => l -> l).toMap,
   ): Seq[String] = {
     import org.apache.hadoop.fs.Path
-    val hconf = spark.sparkContext.hadoopConfiguration
     val out = new Path(outDir)
-    val fs = out.getFileSystem(hconf)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(out)
     val tmp = new Path(out, "_graft_tmp_" + java.util.UUID.randomUUID().toString.take(8))
     try {
@@ -525,7 +525,6 @@ object BatchSink {
         .option("maxRecordsPerFile", batchSize)
         .partitionBy("label")
         .text(tmp.toString)
-      // plan the renames on the driver (names only — no I/O beyond listing);
       // `fileLabels` names each written label's files, and labels that share
       // a file label continue one part sequence
       val dirs = fs.listStatus(tmp).toSeq
@@ -533,7 +532,7 @@ object BatchSink {
         .map(d => unescapePartitionValue(d.getPath.getName.stripPrefix("label=")) -> d.getPath)
         .sortBy(_._1)
       val names = fileLabels(dirs.map(_._1))
-      val moves: Seq[(String, String)] = dirs.groupBy(d => names(d._1)).toSeq.flatMap {
+      val moves = dirs.groupBy(d => names(d._1)).toSeq.flatMap {
         case (label, group) =>
           val start = nextPartNumber(fs, out, label, extension)
           group.flatMap { case (_, dir) =>
@@ -541,31 +540,12 @@ object BatchSink {
               .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
               .map(_.getPath).sortBy(_.getName)
           }.zipWithIndex.map { case (f, i) =>
-            f.toString -> new Path(out, f"$label-part${start + i}%03d.$extension").toString
+            f -> new Path(out, f"$label-part${start + i}%03d.$extension")
           }
       }
-      if (moves.nonEmpty) {
-        val confSer = new SerializableHadoopConf(hconf)
-        val slices = math.min(moves.size, spark.sparkContext.defaultParallelism)
-        spark.sparkContext.parallelize(moves, slices).foreach { case (src, dst) =>
-          val sp = new Path(src); val dp = new Path(dst)
-          val efs = sp.getFileSystem(confSer.value)
-          if (!efs.exists(sp)) {
-            // a prior attempt already moved it — idempotent success, as long
-            // as the target is really there
-            if (!efs.exists(dp))
-              throw new IllegalStateException(s"rename lost: $src -> $dst")
-          } else {
-            // replace a leftover dp ONLY while sp still exists: a zombie or
-            // speculative twin whose source is gone must never delete the
-            // target its sibling just committed (ADVICE r4)
-            if (efs.exists(dp)) efs.delete(dp, false)
-            // a concurrent twin may still win between the checks: rename
-            // failure with the source gone and the target present IS success
-            if (!efs.rename(sp, dp) && !(efs.exists(dp) && !efs.exists(sp)))
-              throw new IllegalStateException(s"rename failed: $src -> $dst")
-          }
-        }
+      moves.foreach { case (src, dst) =>
+        if (!fs.exists(src)) throw new IllegalStateException(s"rename lost: $src -> $dst")
+        if (!fs.rename(src, dst)) throw new IllegalStateException(s"rename failed: $src -> $dst")
       }
       dirs.map(_._1)
     } finally fs.delete(tmp, true)

@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.util.LongAccumulator
+import graft.checkpoint.CheckpointStore
 import graft.model._
 import graft.model.Props.Props
 
@@ -196,12 +198,63 @@ class KgSessionSpec extends AnyFunSuite {
     s.writeNodes(spark.createDataset(Seq(RawNode("m1", "mirna", other),
       RawNode("m2", "mirna", Props.of("name" -> PV.str("b"))))))
     assert(partLines(s.outDir, "MicroRNA").map(_.split(";")(0)).sorted == List("m1", "m2"))
+    val store = new CheckpointStore(spark, s"${s.outDir}/_graft_checkpoint")
+    val before = store.committedVersions("seen_node_ids")
+    assert(before.length == 1)
     val ex = intercept[Exception] {
       s.writeNodesForce(spark.createDataset(Seq(forced("p3", other))))
     }
     val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).map(_.getMessage)
     assert(messages.exists(m => m != null &&
       m.contains("At least one node p3 of the class protein has more or fewer properties than another.")))
+    // the snapshot prepared beside the failed write (it reads only `_k`,
+    // so it succeeds) is never published: the seen state is unchanged
+    assert(store.committedVersions("seen_node_ids") == before)
+    val stageDirs = new java.io.File(s"${s.outDir}/_graft_checkpoint/stage=seen_node_ids").list()
+    assert(stageDirs.filter(_.startsWith("v")).toSet == Set(s"v${before.head}"))
+    s.writeNodesForce(spark.createDataset(Seq(forced("p3", declared))))
+    assert(partLines(s.outDir, "Protein").map(_.split(";")(0)).sorted == List("p1", "p2", "p3"))
+  }
+
+  test("a write call starts no Spark job outside a SQL execution") {
+    val s = session()
+    val sc = spark.sparkContext
+    val (group, last) = ("graft-write-call-jobs", "graft.spec.last")
+    val outside = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val seenLast = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = j.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
+          if (p.getProperty(last) != null) seenLast.countDown()
+          else if (p.getProperty("spark.sql.execution.id") == null) outside.add(j.jobId)
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "write calls")
+    try {
+      val directed = Props.of("directed" -> PV.bool(true))
+      def edges(i: Int) = spark.createDataset(Seq(
+        RawEdge(s"r$i", "p1", "p2", "phosphorylation", Props.empty),
+        RawEdge(s"t$i", "a", "b", "post_translational", directed)))
+      s.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"))))
+      s.writeEdges(edges(1))
+      // the second calls anti-join a live snapshot per key space
+      s.writeNodes(spark.createDataset(Seq(protein("p2"), protein("p3"))))
+      s.writeEdges(edges(2))
+      // listener events arrive in order: once this job's start is seen,
+      // every write call's job has been seen
+      sc.setLocalProperty(last, "1")
+      sc.parallelize(Seq(1), 1).count()
+      assert(seenLast.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(last, null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(outside.isEmpty, s"jobs ${outside.toArray.mkString(", ")} ran outside a SQL execution")
+    assert(partLines(s.outDir, "Protein").length == 3)
   }
 
   test("an open schema class written through writeNodes: header and cells from the row's props") {

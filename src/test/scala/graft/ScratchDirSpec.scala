@@ -28,4 +28,29 @@ class ScratchDirSpec extends AnyFunSuite {
       assert(scratch() -- before == Set.empty)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(corpus)
   }
+
+  test("ann_ivf_hist and kg_stream_nodes register their JVM-lived scratch dirs for deletion at exit") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val corpus = java.nio.file.Files.createTempDirectory("graft-corpus-").toFile
+    val vocab = AnalyticsDomain.vocab
+    (1 to 40).map(i => (i.toLong, (0 until 8).map(j => vocab((i * 5 + j) % vocab.size)).mkString(" ")))
+      .toDF("doc_id", "text").write.parquet(s"$corpus/documents.parquet")
+    (1 to 64).map(i => (i.toLong, Seq.tabulate(8)(j => ((i * 31 + j * 17) % 23 - 11) / 11f), i % 4))
+      .toDF("vec_id", "embedding", "label").write.parquet(s"$corpus/embeddings.parquet")
+    try {
+      for (q <- Seq("ann_ivf_hist", "kg_stream_nodes"))
+        assert(SparkEntry.queries(q)(spark, corpus.toString).collect().nonEmpty,
+          s"$q returned no rows")
+      // the memoized dirs of this corpus, as the rows above staged them
+      for (dir <- Seq(SparkEntry.ivfIndex(spark, corpus.toString),
+          SparkEntry.streamInputArtifact(spark, corpus.toString))) {
+        val p = new org.apache.hadoop.fs.Path(dir)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        assert(fs.exists(p))
+        assert(fs.cancelDeleteOnExit(p), s"$dir is not registered for deletion at exit")
+        fs.deleteOnExit(p)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(corpus)
+  }
 }
