@@ -3,8 +3,10 @@ package graft
 import java.util.concurrent.{ExecutionException, FutureTask}
 import scala.collection.immutable.ListMap
 import scala.util.{Failure, Try}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.checkpoint.CheckpointStore
 import graft.dedup.Dedup
@@ -29,10 +31,12 @@ import graft.translate.Translate
   * commit), and a NEW session over
   * the same output directory resumes the seen state — idempotent re-runs
   * across JVMs, which the reference's in-memory Deduplicator cannot do.
-  * Within a call, the sink write and the next snapshots' data writes run
-  * at the same time; a snapshot's manifest, its commit point, is written
-  * only after the sink write has succeeded, so a failed write call leaves
-  * the seen state as it was.
+  * Within a call, the batch is cached and built first; then the sink
+  * write and the next snapshots' data writes run at the same time, each
+  * in as many tasks as the batch's built size asks for (one per advisory
+  * partition size), not one per shuffle partition. A snapshot's manifest,
+  * its commit point, is written only after the sink write has succeeded,
+  * so a failed write call leaves the seen state as it was.
   * Rel-as-node entities get the same treatment keyed on (label, node id)
   * (reference rel_as_node_seen, _deduplicate.py:83-111).
   *
@@ -115,6 +119,17 @@ final class KgSession(
     * snapshot version is deleted — one live snapshot per key space, bounded
     * by the TTL horizon.
     *
+    * Materialize, then size (Lightweight Materialization, SIGMOD 2023):
+    * one action builds the cache before any consumer starts, so no
+    * consumer submits a cache-building job of its own. The cache's built
+    * size then sets each file write's task count, one per advisory-size
+    * slice ([[slices]]): `use` reads the batch in one per slice of its
+    * bytes, each next snapshot in one per slice of the live snapshot's
+    * file bytes plus the batch's. A small call thus writes one part file
+    * per label and one Parquet file per snapshot, and pays a write task's
+    * fixed cost (the serialized Hadoop conf, file and directory creation)
+    * once per write, not once per shuffle partition.
+    *
     * The consumers overlap: each space's next snapshot is prepared
     * ([[CheckpointStore.prepare]]: data, footers, read-back frame) on a
     * thread of its own while `use` runs on the caller's, so a call takes
@@ -133,6 +148,7 @@ final class KgSession(
     }.reduceOption(_ union _)
     val batch = keyed.cache()
     try {
+      val bytes = KgSession.materialize(batch)
       val stamp = KgSession.perCall(now)
       val pending = spaces.map { case (space, tag) =>
         val keys =
@@ -142,8 +158,10 @@ final class KgSession(
         val incoming = keys.withColumn("_ts", stamp)
         val nextKeys = live(space).fold(incoming)(s =>
           s.join(incoming.select("_k"), Seq("_k"), "left_anti").union(incoming))
-        val v = snapshot(space).fold(0)(_._1) + 1
-        (space, v, KgSession.forked(store.prepare(s"$space/v$v", nextKeys)))
+        val (v, liveBytes) = snapshot(space).fold((1, BigInt(0))) { case (n, s) =>
+          (n + 1, s.queryExecution.optimizedPlan.stats.sizeInBytes) } // its files' bytes
+        val sized = nextKeys.coalesce(slices(liveBytes + bytes))
+        (space, v, KgSession.forked(store.prepare(s"$space/v$v", sized)))
       }
       def settle(): Seq[Try[CheckpointStore.Prepared]] =
         pending.map { case (_, _, task) => KgSession.await(task) }
@@ -151,7 +169,8 @@ final class KgSession(
         pending.foreach { case (space, v, _) => store.drop(s"$space/v$v") }
         throw e
       }
-      val r = try use(seenKeys.fold(batch)(s => batch.join(s, Seq("_k"), "left_anti")))
+      val sliced = batch.coalesce(slices(bytes))
+      val r = try use(seenKeys.fold(sliced)(s => sliced.join(s, Seq("_k"), "left_anti")))
         catch { case e: Throwable => settle(); abandon(e) }
       val prepared = settle()
       prepared.collectFirst { case Failure(e) => e }.foreach(abandon)
@@ -162,6 +181,14 @@ final class KgSession(
       }
       r
     } finally batch.unpersist(blocking = false)
+  }
+
+  /** Partitions for a write of `bytes`: one per advisory-size slice
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), at least one. A
+    * narrow `coalesce` to this count never raises a frame's partitions. */
+  private def slices(bytes: BigInt): Int = {
+    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    ((bytes + advisory - 1) / advisory).max(1).min(Int.MaxValue).toInt
   }
 
   private def edgeKey(d: Dataset[KgEdge]) = d.withColumn("_k",
@@ -545,6 +572,16 @@ object KgSession {
     * the plan by reference, where a literal would be compiled into the
     * generated code and make every call compile new classes. */
   private def perCall(v: Long): Column = udf(() => v).asNondeterministic()()
+
+  /** Builds `df`'s cache with one action and returns the size it was built
+    * to: the cached relation's own count of its batches' bytes (the plan's
+    * estimate, should the cache not be loaded). */
+  private def materialize(df: DataFrame): BigInt = {
+    df.foreachPartition((_: Iterator[Row]) => ())
+    df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.computeStats().sizeInBytes
+    }.getOrElse(df.queryExecution.optimizedPlan.stats.sizeInBytes)
+  }
 
   /** Runs `f` on a thread of its own, which inherits the caller's Spark
     * local properties (job group, scheduler pool). Blocking Spark actions

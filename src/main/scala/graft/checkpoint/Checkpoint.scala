@@ -51,7 +51,9 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
   def prepare(stage: String, df: DataFrame): CheckpointStore.Prepared = {
     val dir = stageDir(stage)
     val t0 = System.nanoTime()
-    df.write.mode("overwrite").parquet(dir.toString)
+    // no `_SUCCESS` marker: the manifest is the commit point
+    df.write.mode("overwrite").option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(dir.toString)
     val wallMs = (System.nanoTime() - t0) / 1000000
     // per-file (= per committed partition) lineage rows; files without
     // rows (an empty partition's schema-only file) are not listed

@@ -42,12 +42,17 @@ final case class Rendered(_k: String, lines: Seq[Line])
   * `partitionBy(label)` write, so per-label grouping, batching
   * (`maxRecordsPerFile` = the reference's `batch_size`) and part numbering
   * are handled by the distributed commit protocol; a cheap driver-side pass
-  * renames committed files into the `{Label}-partNNN.csv` grammar. The
-  * shape is the same for nodes, edges and rel-as-nodes, and per-call values
-  * never enter generated code, because the library cannot size the
-  * caller's codegen cache (`spark.sql.codegen.cache.maxEntries` is a static
-  * session setting): the batch write path has to fit it, so every call
-  * after the first reuses the same generated classes.
+  * renames committed files into the `{Label}-partNNN.csv` grammar. Each
+  * write task writes one file per label it holds (more once a label passes
+  * `batch_size` in it), so a call's part files per label follow the
+  * write's task count, which `KgSession` sizes by the cached batch's bytes
+  * (one task per advisory partition size): a call below both `batch_size`
+  * and the advisory size writes one part file per label, as the reference
+  * does. The shape is the same for nodes, edges and rel-as-nodes, and
+  * per-call values never enter generated code, because the library cannot
+  * size the caller's codegen cache (`spark.sql.codegen.cache.maxEntries`
+  * is a static session setting): the batch write path has to fit it, so
+  * every call after the first reuses the same generated classes.
   *
   * A label whose properties the schema declares renders straight away. Any
   * other label (an open class, a forced or public write) renders pending:
@@ -521,8 +526,10 @@ object BatchSink {
     fs.mkdirs(out)
     val tmp = new Path(out, "_graft_tmp_" + java.util.UUID.randomUUID().toString.take(8))
     try {
+      // no `_SUCCESS` marker: the staging dir is deleted after the renames
       df.write.mode("overwrite")
         .option("maxRecordsPerFile", batchSize)
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .partitionBy("label")
         .text(tmp.toString)
       // `fileLabels` names each written label's files, and labels that share

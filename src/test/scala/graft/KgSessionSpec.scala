@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 import graft.checkpoint.CheckpointStore
 import graft.model._
@@ -219,15 +220,22 @@ class KgSessionSpec extends AnyFunSuite {
   test("a write call starts no Spark job outside a SQL execution") {
     val s = session()
     val sc = spark.sparkContext
-    val (group, last) = ("graft-write-call-jobs", "graft.spec.last")
+    val (group, last, call) = ("graft-write-call-jobs", "graft.spec.last", "graft.spec.call")
     val outside = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    // per job: its write call, and whether it runs a stage whose own RDD is
+    // a cached one (the stage that builds, or finds, the call's cache)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
     val seenLast = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val p = j.properties
         if (p != null && p.getProperty("spark.jobGroup.id") == group) {
           if (p.getProperty(last) != null) seenLast.countDown()
-          else if (p.getProperty("spark.sql.execution.id") == null) outside.add(j.jobId)
+          else {
+            if (p.getProperty("spark.sql.execution.id") == null) outside.add(j.jobId)
+            jobs.add(p.getProperty(call) -> j.stageInfos.exists(
+              _.rddInfos.headOption.exists(_.storageLevel != StorageLevel.NONE)))
+          }
         }
       }
     }
@@ -238,11 +246,12 @@ class KgSessionSpec extends AnyFunSuite {
       def edges(i: Int) = spark.createDataset(Seq(
         RawEdge(s"r$i", "p1", "p2", "phosphorylation", Props.empty),
         RawEdge(s"t$i", "a", "b", "post_translational", directed)))
-      s.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"))))
-      s.writeEdges(edges(1))
+      def inCall(i: Int)(write: => Unit): Unit = { sc.setLocalProperty(call, i.toString); write }
+      inCall(1)(s.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2")))))
+      inCall(2)(s.writeEdges(edges(1)))
       // the second calls anti-join a live snapshot per key space
-      s.writeNodes(spark.createDataset(Seq(protein("p2"), protein("p3"))))
-      s.writeEdges(edges(2))
+      inCall(3)(s.writeNodes(spark.createDataset(Seq(protein("p2"), protein("p3")))))
+      inCall(4)(s.writeEdges(edges(2)))
       // listener events arrive in order: once this job's start is seen,
       // every write call's job has been seen
       sc.setLocalProperty(last, "1")
@@ -250,11 +259,81 @@ class KgSessionSpec extends AnyFunSuite {
       assert(seenLast.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally {
       sc.setLocalProperty(last, null)
+      sc.setLocalProperty(call, null)
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
     assert(outside.isEmpty, s"jobs ${outside.toArray.mkString(", ")} ran outside a SQL execution")
     assert(partLines(s.outDir, "Protein").length == 3)
+    val calls = Seq("1", "2", "3", "4")
+    val perCall = jobs.toArray(Array.empty[(String, Boolean)]).toSeq.groupBy(_._1)
+    // the cache is built before its consumers start, so none of them
+    // submits a cache stage of its own
+    assert(calls.map(c => perCall(c).count(_._2)) == Seq(1, 1, 1, 1))
+    assert(calls.map(c => perCall(c).length) == Seq(6, 7, 9, 11))
+  }
+
+  test("a small call writes one part file per label and one Parquet file per seen snapshot") {
+    val s = session()
+    val directed = Props.of("directed" -> PV.bool(true))
+    s.writeNodes(spark.createDataset((1 to 20).map(i => protein(s"p$i"))))
+    s.writeEdges(spark.createDataset((1 to 20).flatMap(i => Seq(
+      RawEdge(s"r$i", s"p$i", s"p${i + 1}", "phosphorylation", Props.empty),
+      RawEdge(s"t$i", s"a$i", s"b$i", "post_translational", directed)))))
+    // the second nodes call's snapshot unions the live one with the batch
+    s.writeNodes(spark.createDataset((15 to 30).map(i => protein(s"p$i"))))
+    val parts = new java.io.File(s.outDir).list().filter(n => n.contains("-part") && !n.startsWith("."))
+      .sorted.toSeq
+    assert(parts == Seq("IS_SOURCE_OF-part000.csv", "IS_TARGET_OF-part000.csv",
+      "Phosphorylation-part000.csv", "PostTranslationalInteraction-part000.csv",
+      "Protein-part000.csv", "Protein-part001.csv"))
+    assert(partLines(s.outDir, "Protein").length == 30)
+    val store = new CheckpointStore(spark, s"${s.outDir}/_graft_checkpoint")
+    val spaces = Seq("seen_node_ids" -> 2, "seen_rel_keys" -> 1, "seen_edge_keys" -> 1)
+    spaces.foreach { case (space, v) =>
+      assert(store.committedVersions(space) == Seq(v))
+      val files = new java.io.File(s"${s.outDir}/_graft_checkpoint/stage=$space/v$v").list()
+      assert(files.count(_.endsWith(".parquet")) == 1, s"$space: ${files.mkString(", ")}")
+    }
+    val lineage = store.lineage().select("stage", "n_files", "total_rows").as[(String, Long, Long)]
+      .collect().sortBy(_._1).toSeq
+    assert(lineage == Seq(("seen_edge_keys/v1", 1L, 20L), ("seen_node_ids/v2", 1L, 30L),
+      ("seen_rel_keys/v1", 1L, 20L)))
+    // neither the snapshots nor the part-file staging leave a `_SUCCESS`
+    val success = Files.walk(java.nio.file.Path.of(s.outDir)).filter(_.getFileName.toString == "_SUCCESS")
+    try assert(success.count() == 0) finally success.close()
+  }
+
+  test("a call larger than the advisory partition size still writes several files") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def ids(lines: List[String]) = lines.map(_.split(";")(0))
+    def protParts(dir: String) = new java.io.File(dir).list().filter(_.startsWith("Protein-part")).sorted.toSeq
+    def snapshotFiles(dir: String, v: Int) =
+      new java.io.File(s"$dir/_graft_checkpoint/stage=seen_node_ids/v$v").list().count(_.endsWith(".parquet"))
+    def calls(s: KgSession)(between: => Unit): Unit = {
+      s.writeNodes(spark.createDataset((0 until 3000).map(i => protein(s"p$i"))))
+      between
+      s.writeNodes(spark.createDataset((2000 until 4000).map(i => protein(s"p$i"))))
+    }
+    val small = session()
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "4k")
+    try calls(small) {
+      val parts = protParts(small.outDir)
+      assert(parts.length > 1, parts.mkString(", "))
+      assert(parts == parts.indices.map(i => f"Protein-part$i%03d.csv"))
+      assert(snapshotFiles(small.outDir, 1) > 1)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val parts = protParts(small.outDir)
+    assert(parts == parts.indices.map(i => f"Protein-part$i%03d.csv"))
+    assert(snapshotFiles(small.outDir, 2) > 1)
+    // the second call drops the ids the first one wrote
+    val lines = partLines(small.outDir, "Protein")
+    assert(ids(lines).sorted == (0 until 4000).map(i => s"p$i").sorted)
+    val default = session()
+    calls(default)(())
+    assert(protParts(default.outDir) == Seq("Protein-part000.csv", "Protein-part001.csv"))
+    assert(lines.sorted == partLines(default.outDir, "Protein").sorted)
   }
 
   test("an open schema class written through writeNodes: header and cells from the row's props") {
