@@ -19,9 +19,7 @@ import graft.translate.Translate
   *  - every distinct/dedup runs over FLAT string/long columns with
   *    map-side partial aggregation (fat rows with array<struct> props
   *    would force ObjectHashAggregate's sort-based fallback — measured
-  *    15x slower at 300k docs); the one struct-min winner pass in the
-  *    string path is a SortAggregate by HashAggregateExec's buffer rules
-  *    (see [[nodes]]) — the fused path aggregates ints only;
+  *    15x slower at 300k docs); the fused path aggregates ints only;
   *  - property bags are attached AFTER the shuffles, in narrow maps;
   *  - the dictionary/ontology side is broadcast, never shuffled.
   * Total exchanges per run: doc-distinct, entity-distinct, co-occurrence
@@ -55,41 +53,22 @@ final class KgPipeline(
   /** Entity + document nodes, translated and globally deduped. The big
     * distincts run on thin string columns; fat property rows are built
     * only for the (small) distinct survivors. */
-  def nodes(dm: Dataset[DocMention]): Dataset[KgNode] = {
+  def nodes(dm: Dataset[DocMention]): Dataset[KgNode] =
     // ONE node per curie even when several surface aliases link to the same
-    // entity (reference global id uniqueness, _deduplicate.py:44-51): a
-    // deterministic (cls, surface) winner per curie: min(struct) with
-    // map-side partial aggregation in one shuffle. NOTE this pass is a
-    // SortAggregate, not HashAggregate: a struct (or string) min needs a
-    // variable-width aggregation buffer, which HashAggregateExec does not
-    // support, and the hash-friendly rewrite (distinct() on the three
-    // columns first, then min(struct) over the dictionary-bounded
-    // survivors) is merged straight back by RemoveRedundantAggregates
-    // (min is duplicate-insensitive, so Catalyst deletes the inner
-    // distinct). Accepted: this is the reference-parity path; the scale
-    // path (nodesFromSets) never aggregates structs over corpus-sized
-    // input - its big pass is a dictionary-bounded rank-set combiner.
-    val entityThin = dm.groupBy(col("curie"))
-      .agg(min(struct(col("cls"), col("surface"))).as("cs"))
-      .select(col("curie"), col("cs.cls").as("cls"), col("cs.surface").as("surface"))
-    nodesFrom(entityThin, Mentions.distinctDocIds(dm))
-  }
+    // entity (reference global id uniqueness, _deduplicate.py:44-51): every
+    // row of a curie carries its canonical (cls, surface), MentionDict.byRank
+    nodesFrom(dm.select(col("curie"), col("cls"), col("surface")).distinct(),
+      Mentions.distinctDocIds(dm))
 
-  /** Dictionary-bounded (curie, cls, surface) winners for a one-int-column
-    * `rank` frame (duplicates allowed): decode via the broadcast dictionary,
-    * then the same deterministic min(cls, surface) winner per curie as the
-    * string path — shared by the fused node and triples paths. */
+  /** (curie, cls, surface) rows for a one-int-column frame of DISTINCT
+    * entity `rank`s: each rank decodes to its canonical dictionary entry
+    * through the broadcast dictionary — shared by the fused node and
+    * triples paths. */
   private def entityThinFromRanks(ranks: DataFrame): DataFrame = {
     val bd = bcDict
-    ranks.distinct()
-      .as[Int]
+    ranks.as[Int]
       .map { r => val e = bd.value.byRank(r); (e.curie, e.cls, e.surface) }
       .toDF("curie", "cls", "surface")
-      // several surfaces (ranks) can share a curie: same min(cls, surface)
-      // winner as the string path, computed over dictionary-sized rows
-      .groupBy(col("curie"))
-      .agg(min(struct(col("cls"), col("surface"))).as("cs"))
-      .select(col("curie"), col("cs.cls").as("cls"), col("cs.surface").as("surface"))
   }
 
   /** Translated entity nodes for (curie, cls, surface) winner rows. */
@@ -229,12 +208,12 @@ final class KgPipeline(
   /** [[nodes]] over the mention-set table: the corpus-sized rank distinct
     * runs as a dictionary-bounded per-partition set collector
     * ([[graft.extract.CoocCombine.partialRankSets]] — no explode of the
-    * corpus mention stream, no per-mention hash probe); doc ids are
-    * one-per-row already. */
+    * corpus mention stream, no per-mention hash probe) plus one small
+    * distinct; doc ids are one-per-row already. */
   def nodesFromSets(ms: DataFrame): Dataset[KgNode] =
     nodesFrom(
       entityThinFromRanks(graft.extract.CoocCombine.partialRankSets(
-        ms.select(col("pm")).as[Array[Long]], bcDict).toDF("rank")),
+        ms.select(col("pm")).as[Array[Long]], bcDict).distinct().toDF("rank")),
       ms.select(col("doc_id")).as[String])
 
   /** [[mentionEdges]] over the mention-set table: explode + a projection
@@ -298,7 +277,9 @@ final class KgPipeline(
     *    re-scanned the cache per consumer). The barrier is a leaf — a free
     *    pushdown barrier. Without a checkpoint dir its blocks are local, so
     *    an executor loss fails the job; acceptable here because the data is
-    *    ≤ C(|dict|, 2) longs and job-level retry is cheap at that size;
+    *    ≤ C(|entities|, 2) longs and job-level retry is cheap at that size;
+    *  - entity rdf:type triples decode the barrier's self keys, distinct
+    *    entity ranks already: no exchange;
     *  - mention triples are explode + a 3-column select that decodes the
     *    rank by a projection through the broadcast dictionary (the KgEdge
     *    path built a props bag per row);

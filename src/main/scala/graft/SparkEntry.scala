@@ -225,9 +225,9 @@ object SparkEntry {
       // #3). Input is the PRE-dedup translated node stream: one entity
       // node per (doc, entity) plus one doc node per (doc, entity) row —
       // duplicate-heavy on purpose, so both salt phases do real work.
-      // The projected columns are all functions of the node id (the dict
-      // maps each curie to one (cls, preferred_id)), so the arbitrary
-      // dropDuplicates winner is invisible to the hash compare.
+      // Every row of one curie carries its canonical (cls, surface)
+      // (MentionDict.byRank), so duplicates of an id are identical rows:
+      // the arbitrary dropDuplicates winner is invisible to the hash compare.
       val pipe = KgPipeline.analytics(s)
       import s.implicits._
       // shared by the entity and doc branches below

@@ -75,13 +75,14 @@ final class AhoCorasick private (
     }
 
   /** Zero-allocation whole-word match counting for the extraction hot path:
-    * for each whole-word match of pattern `p`, `counts(p) += 1`, recording
-    * first-touches in `touched` (`counts` must be zeroed for the touched
-    * patterns on entry, as the callers' per-doc reset loop guarantees).
-    * Returns the updated touched length. Semantically identical to draining
-    * [[findWholeWords]] — the shared specs assert equality. */
-  def countWholeWords(text: String, counts: Array[Long], touched: Array[Int],
-      nTouched0: Int): Int = {
+    * for each whole-word match of pattern `p`, `counts(key(p)) += 1`,
+    * recording first-touched keys in `touched` (`counts` must be zeroed for
+    * them on entry, as the callers' per-doc reset loop guarantees). The
+    * extraction's `key` is [[MentionDict.rankOf]]. Returns the updated
+    * touched length. With the identity key, semantically identical to
+    * draining [[findWholeWords]] — the shared specs assert equality. */
+  def countWholeWords(text: String, key: Array[Int], counts: Array[Long],
+      touched: Array[Int], nTouched0: Int): Int = {
     var nTouched = nTouched0
     var state = 0
     var i = 0
@@ -96,8 +97,9 @@ final class AhoCorasick private (
         val start = i - patterns(p).length
         if ((start == 0 || !Character.isLetterOrDigit(text.charAt(start - 1))) &&
             (i == n || !Character.isLetterOrDigit(text.charAt(i)))) {
-          if (counts(p) == 0) { touched(nTouched) = p; nTouched += 1 }
-          counts(p) += 1
+          val k = key(p)
+          if (counts(k) == 0) { touched(nTouched) = k; nTouched += 1 }
+          counts(k) += 1
         }
         j += 1
       }
@@ -116,7 +118,7 @@ final class AhoCorasick private (
     * byte in [off, off+len) is < 0x80 — then byte positions == char
     * positions and ASCII `[A-Za-z0-9]` == `Character.isLetterOrDigit`,
     * so results are identical to the String walk (spec-asserted). */
-  def countWholeWordsAscii(base: AnyRef, off: Long, len: Int,
+  def countWholeWordsAscii(base: AnyRef, off: Long, len: Int, key: Array[Int],
       counts: Array[Long], touched: Array[Int], nTouched0: Int): Int = {
     import org.apache.spark.unsafe.Platform
     var nTouched = nTouched0
@@ -132,8 +134,9 @@ final class AhoCorasick private (
         val start = i - patterns(p).length
         if ((start == 0 || !isWordByte(Platform.getByte(base, off + start - 1))) &&
             (i == len || !isWordByte(Platform.getByte(base, off + i)))) {
-          if (counts(p) == 0) { touched(nTouched) = p; nTouched += 1 }
-          counts(p) += 1
+          val k = key(p)
+          if (counts(k) == 0) { touched(nTouched) = k; nTouched += 1 }
+          counts(k) += 1
         }
         j += 1
       }

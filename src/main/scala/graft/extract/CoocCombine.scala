@@ -67,9 +67,9 @@ object CoocCombine {
     }
   }
 
-  /** Dense gate for both combiners: at `|dict| <= DenseMaxDictCounts` the
-    * (a, b) pair domain is a long[] of dict² counts — 8 MB/task at 1024 —
-    * and one direct-indexed increment per pair replaces the ~6 ns
+  /** Dense gate for both combiners: at `|entities| <= DenseMaxDictCounts`
+    * (distinct curies) the (a, b) pair domain is a long[] of entities²
+    * counts — 8 MB/task at 1024 — and one increment per pair replaces the ~6 ns
     * open-addressing probe (the AhoCorasick dense-trie precedent). Above
     * the gate the hash map keeps memory O(flushAt) for open dictionaries. */
   val DenseMaxDictCounts = 1024
@@ -120,8 +120,8 @@ object CoocCombine {
     * every rank it holds. */
   private def partials(it: Iterator[Array[Long]], dict: MentionDict, maxEntities: Int,
       flushAt: Int, denseMax: Int, rankKeys: Boolean): Iterator[(Long, Long)] = {
-    val nDict = dict.linkFor.length
-    if (nDict <= denseMax) densePairs(it, dict, maxEntities, nDict, rankKeys)
+    val nEntities = dict.byRank.length
+    if (nEntities <= denseMax) densePairs(it, dict, maxEntities, nEntities, rankKeys)
     else hashPairs(it, dict, maxEntities, flushAt, rankKeys)
   }
 
@@ -212,17 +212,17 @@ object CoocCombine {
   }
 
   /** Per-partition DISTINCT-RANK collector over packed mention sets: the
-    * rank domain is dictionary-bounded, so a boolean array + touched list
+    * rank domain is entity-bounded, so a boolean array + touched list
     * replaces explode(all mentions) + partial HashAggregate (~110 ns/probe
     * over a corpus-sized row stream) — the exchange downstream carries at
-    * most nPartitions × |dict| ints. Callers still `.distinct()` the
+    * most nPartitions × |entities| ints. Callers still `.distinct()` the
     * result (this emits one rank per partition it appears in). */
   def partialRankSets(pmRows: Dataset[Array[Long]],
       bcDict: Broadcast[MentionDict]): Dataset[Int] = {
     val spark = pmRows.sparkSession
     import spark.implicits._
     pmRows.mapPartitions { it =>
-      val seen = new Array[Boolean](bcDict.value.linkFor.length)
+      val seen = new Array[Boolean](bcDict.value.byRank.length)
       val touched = new Array[Int](seen.length)
       var nt = 0
       while (it.hasNext) {

@@ -13,26 +13,29 @@ final case class DictEntry(surface: String, curie: String, cls: String, prior: D
 /** The broadcastable entity-linking dictionary: an Aho-Corasick automaton
   * over all surface forms plus per-pattern link metadata. Ambiguous surfaces
   * (same form, several entities) are resolved by highest prior, then
-  * lexicographic CURIE — deterministic by construction. */
+  * lexicographic CURIE — deterministic by construction. The one owner of
+  * the surface → entity decision: a rank is an entity (a distinct curie),
+  * so everything downstream of the trie count sees entities only. */
 final class MentionDict private (
     val trie: AhoCorasick,
     val linkFor: Array[DictEntry], // one winner per pattern index
 ) extends Serializable {
-  /** pattern index -> rank in curie lexicographic order (so integer-keyed
-    * hot loops can reproduce string-ordered outputs). */
-  @transient lazy val rankOf: Array[Int] = {
-    val order = linkFor.indices.sortBy(i => linkFor(i).curie)
-    val r = new Array[Int](linkFor.length)
-    order.zipWithIndex.foreach { case (pi, rank) => r(pi) = rank }
-    r
-  }
-  /** rank -> dictionary entry (inverse of rankOf). */
+  /** rank -> the entity's canonical entry, the min `(cls, surface)` over the
+    * surfaces its curie won: one per distinct curie, in curie order (so
+    * integer-keyed hot loops can reproduce string-ordered outputs). */
   @transient lazy val byRank: Array[DictEntry] =
-    linkFor.indices.sortBy(i => linkFor(i).curie).map(linkFor).toArray
-  /** rank -> per-occurrence score unit (prior x surface length): a mention's
-    * score is `scoreUnitByRank(rank) * n`, so the packed mention set need
-    * not carry it — executor-side consumers rederive it from the broadcast
-    * dictionary instead of paying 8 bytes/row of cache bandwidth. */
+    linkFor.groupBy(_.curie).values.map(_.minBy(e => (e.cls, e.surface)))
+      .toArray.sortBy(_.curie)
+  /** pattern index -> its entity's rank (aliases share one). */
+  @transient lazy val rankOf: Array[Int] = {
+    val rank = byRank.iterator.map(_.curie).zipWithIndex.toMap
+    linkFor.map(e => rank(e.curie))
+  }
+  /** rank -> per-occurrence score unit, the canonical entry's prior x
+    * surface length: an entity's score in a doc is `scoreUnitByRank(rank) *
+    * n`, n summed over its aliases, on both paths and in the per-doc cap.
+    * The packed mention set need not carry it (8 bytes/row of cache
+    * bandwidth): executor-side consumers rederive it from the dictionary. */
   @transient lazy val scoreUnitByRank: Array[Double] =
     byRank.map(e => e.prior * e.surface.length)
   /** rank -> curie as Catalyst's string type, for the codegen'd rank decode
@@ -181,43 +184,44 @@ object Mentions {
     }
   }
 
-  /** Trie-counts every text span of `doc` into `counts`, recording each
-    * newly hit pattern index in `touched`; returns the number touched. The
-    * caller reads `counts(touched(i))` for `i < n` and must zero them
-    * before the next doc. */
+  /** Trie-counts every text span of `doc` into `counts` by entity rank,
+    * recording each newly hit rank in `touched`; returns the number
+    * touched. The caller reads `counts(touched(i))` for `i < n` and must
+    * zero them before the next doc. */
   private def countDoc(dict: MentionDict, doc: Doc,
       counts: Array[Long], touched: Array[Int]): Int = {
     var nTouched = 0
     doc.spans.foreach { span =>
       if (span.kind == "text" && span.text != null)
-        nTouched = dict.trie.countWholeWords(span.text, counts, touched, nTouched)
+        nTouched = dict.trie.countWholeWords(span.text, dict.rankOf, counts, touched, nTouched)
     }
     nTouched
   }
 
   /** Occurrence mentions aggregated per document inside the same narrow
-    * pass (a per-doc hash map in the flatMap — no shuffle): one row per
-    * (doc, entity) with occurrence count and summed score. This is the
-    * string path's entry: downstream dedups operate on these thin rows. */
+    * pass (no shuffle): one row per (doc, entity) with the occurrence count
+    * summed over its aliases, its canonical `cls`/`surface` and its score.
+    * This is the string path's entry: downstream dedups operate on these
+    * thin rows. */
   def detectPerDoc(docs: Dataset[Doc], bcDict: Broadcast[MentionDict]): Dataset[DocMention] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[DocMention]
     docs.mapPartitions { it =>
       val dict = bcDict.value
       // integer-keyed occurrence counting, one DocMention built per distinct
       // entity (this pass is allocation-bound at 32 threads — keep it lean)
-      val counts = new Array[Long](dict.linkFor.length)
-      val touched = new Array[Int](dict.linkFor.length)
+      val counts = new Array[Long](dict.byRank.length)
+      val touched = new Array[Int](dict.byRank.length)
       it.flatMap { doc =>
         val nTouched = countDoc(dict, doc, counts, touched)
         val out = new Array[DocMention](nTouched)
         var i = 0
         while (i < nTouched) {
-          val pi = touched(i)
-          val e = dict.linkFor(pi)
-          val n = clampN(counts(pi))
+          val r = touched(i)
+          val e = dict.byRank(r)
+          val n = clampN(counts(r))
           out(i) = DocMention(doc.doc_id, e.curie, e.cls, e.surface, n,
-            e.prior * e.surface.length * n)
-          counts(pi) = 0
+            dict.scoreUnitByRank(r) * n)
+          counts(r) = 0
           i += 1
         }
         out
@@ -237,10 +241,11 @@ object Mentions {
     * hash of every doc-run it has closed (8 B per run) and raises if a
     * doc_id reappears after its run ended — a re-shuffled input fails
     * loudly instead of silently emitting wrong pairs. Within a doc the
-    * curies are already distinct; lexicographic sort reproduces the a < b
-    * pair order of [[graft.KgPipeline.cooccurrencePairsFromSets]] (rank
-    * order is curie order), and the same `maxEntitiesPerDoc` cap applies
-    * (top score, curie tie-break). */
+    * curies are distinct ([[detectPerDoc]] merges aliases), so no doc emits
+    * a self-pair; lexicographic sort reproduces the a < b pair order of
+    * [[graft.KgPipeline.cooccurrencePairsFromSets]] (rank order is curie
+    * order), and the same `maxEntitiesPerDoc` cap applies (top score,
+    * curie tie-break). */
   def cooccurrencePairsFromDocMentions(dm: Dataset[DocMention],
       maxEntitiesPerDoc: Int = DefaultMaxEntitiesPerDoc,
       guard: Boolean = true): DataFrame = {

@@ -12,8 +12,9 @@ import graft.extract.{MentionDict, Mentions}
 /** Codegen'd mention extraction over a document's two PARALLEL span arrays
   * `spans.kind` / `spans.text`: for each document row returns the PACKED
   * MENTION SET `array<long>` with one element `(rank << 32) | n` per
-  * distinct matched entity (curie-lex rank, per-doc occurrence count,
-  * first-touch order).
+  * distinct matched entity (entity rank, [[MentionDict.rankOf]]: several
+  * surface aliases of one curie pack as ONE element with their counts
+  * summed; per-doc occurrence count, first-touch order).
   *
   * This is the zero-allocation scale path for the adapter stage: the
   * Aho-Corasick walk runs directly over the span text's UTF8 bytes inside
@@ -60,14 +61,14 @@ case class ExtractMentionsKT(kinds: Expression, texts: Expression,
 
 /** The executor-side worker behind [[ExtractMentionsKT]] (shipped inside
   * the codegen references array; one instance per plan, thread-safe via
-  * per-thread scratch buffers sized to the dictionary). */
+  * per-thread scratch buffers sized to the dictionary's entity count). */
 final class MentionExtractor(bcDict: Broadcast[MentionDict]) extends Serializable {
 
   @transient private lazy val TEXT = UTF8String.fromString("text")
 
   private final class Scratch {
-    val counts = new Array[Long](bcDict.value.linkFor.length)
-    val touched = new Array[Int](bcDict.value.linkFor.length)
+    val counts = new Array[Long](bcDict.value.byRank.length)
+    val touched = new Array[Int](bcDict.value.byRank.length)
   }
   @transient private lazy val scratch = new ThreadLocal[Scratch] {
     override def initialValue(): Scratch = new Scratch
@@ -91,23 +92,23 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict]) extends Serializabl
         nTouched =
           if (dict.trie.isAsciiDense && isAscii(t))
             dict.trie.countWholeWordsAscii(t.getBaseObject, t.getBaseOffset,
-              t.numBytes, counts, touched, nTouched)
+              t.numBytes, dict.rankOf, counts, touched, nTouched)
           else // exact parity on non-ASCII text / dictionaries
-            dict.trie.countWholeWords(t.toString, counts, touched, nTouched)
+            dict.trie.countWholeWords(t.toString, dict.rankOf, counts, touched, nTouched)
       }
       si += 1
     }
     val out = new Array[Long](nTouched)
     var i = 0
     while (i < nTouched) {
-      val pi = touched(i)
-      val c = counts(pi)
+      val r = touched(i)
+      val c = counts(r)
       // saturate at Mentions.MaxOccurrencesPerDoc — the 32-bit count half of
       // the packed long; the string path clamps identically
-      out(i) = (dict.rankOf(pi).toLong << 32) |
+      out(i) = (r.toLong << 32) |
         (if (c > graft.extract.Mentions.MaxOccurrencesPerDoc)
            graft.extract.Mentions.MaxOccurrencesPerDoc else c)
-      counts(pi) = 0
+      counts(r) = 0
       i += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
@@ -132,12 +133,12 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict]) extends Serializabl
 }
 
 /** Codegen'd rank -> curie decode through the broadcast dictionary: ranks
-  * are dense (`0 until |dict|`), so the decode is one array index per row
+  * are dense (`0 until |entities|`), so the decode is one array index per row
   * into [[MentionDict.curieByRank]], with no hash probe and no
   * dictionary-sized table in the plan. The child is an int rank; a null
   * rank gives null. Every rank the pipeline decodes comes from
   * [[ExtractMentionsKT]], so an out-of-range rank is a broken contract: it
-  * raises, naming the rank and the dictionary size. */
+  * raises, naming the rank and the entity count. */
 case class RankCurie(child: Expression, bcDict: Broadcast[MentionDict])
     extends UnaryExpression {
 

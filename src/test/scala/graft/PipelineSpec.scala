@@ -4,11 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.{AnalyticsDomain, Corpus}
 import graft.extract.{AhoCorasick, DictEntry, MentionDict, Mentions}
+import graft.SparkTestBase.{bag, multiset}
 
 class PipelineSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
+
+  /** Two surfaces of one entity: `alpha` and `alphax` both link to `e:a`. */
+  private def aliasDict = MentionDict.build(Seq(
+    DictEntry("alpha", "e:a", "relational operator", 1.0),
+    DictEntry("alphax", "e:a", "relational operator", 1.0),
+    DictEntry("beta", "e:b", "storage structure", 1.0),
+    DictEntry("gamma", "e:c", "execution engine", 1.0)))
 
   test("aho-corasick finds overlapping + whole-word matches") {
     val ac = AhoCorasick.build(Seq("he", "she", "his", "hers"))
@@ -72,9 +80,9 @@ class PipelineSpec extends AnyFunSuite {
     val pipe = graft.KgPipeline.analytics(spark)
     val (ns, es, ts) = pipe.run(docs)
     val (nsF, esF, tsF) = pipe.runFused(docs)
-    assert(nsF.collect().toSet == ns.collect().toSet)
-    assert(esF.collect().toSet == es.collect().toSet)
-    assert(tsF.collect().toSet == ts.collect().toSet)
+    assert(bag(nsF) == bag(ns))
+    assert(bag(esF) == bag(es))
+    assert(bag(tsF) == bag(ts))
     docs.unpersist()
   }
 
@@ -103,10 +111,10 @@ class PipelineSpec extends AnyFunSuite {
       assert(bigLocal(qe.optimizedPlan).isEmpty, s"$name: optimized plan holds LocalRelation(s) ${bigLocal(qe.optimizedPlan)}")
     }
     val (_, es, ts) = pipe.run(docs)
-    val want = ts.collect().toSet
-    assert(want.exists(_.pred == "COOCCURS_WITH"), "corpus must produce co-occurrence triples")
-    assert(tsF.collect().toSet == want)
-    assert(esF.collect().toSet == es.collect().toSet)
+    val want = bag(ts)
+    assert(want.keys.exists(_.pred == "COOCCURS_WITH"), "corpus must produce co-occurrence triples")
+    assert(bag(tsF) == want)
+    assert(bag(esF) == bag(es))
     docs.unpersist()
   }
 
@@ -172,8 +180,8 @@ class PipelineSpec extends AnyFunSuite {
     val ns = pipe.nodesFromSets(ms)
     val es = pipe.mentionEdgesFromSets(ms)
       .union(pipe.cooccurrenceEdgesFromSets(ms, maxEntitiesPerDoc = 3))
-    val want = pipe.triples(ns, es).collect().toSet
-    val got = pipe.triplesFromSets(ms, maxEntitiesPerDoc = 3).collect().toSet
+    val want = bag(pipe.triples(ns, es))
+    val got = bag(pipe.triplesFromSets(ms, maxEntitiesPerDoc = 3))
     assert(got == want)
     ms.unpersist(); docs.unpersist()
   }
@@ -228,9 +236,9 @@ class PipelineSpec extends AnyFunSuite {
     val pipe = graft.KgPipeline.analytics(spark)
     val (ns, es, ts) = pipe.run(docs)
     val (nsF, esF, tsF) = pipe.runFused(docs)
-    assert(nsF.collect().toSet == ns.collect().toSet)
-    assert(esF.collect().toSet == es.collect().toSet)
-    assert(tsF.collect().toSet == ts.collect().toSet)
+    assert(bag(nsF) == bag(ns))
+    assert(bag(esF) == bag(es))
+    assert(bag(tsF) == bag(ts))
     docs.unpersist()
   }
 
@@ -282,7 +290,7 @@ class PipelineSpec extends AnyFunSuite {
         .groupBy(identity).map { case (p, os) => p -> os.size.toLong }
       val counts = new Array[Long](pats.length)
       val touched = new Array[Int](pats.length)
-      val n = ac.countWholeWords(t, counts, touched, 0)
+      val n = ac.countWholeWords(t, pats.indices.toArray, counts, touched, 0)
       val got = (0 until n).map(i => touched(i) -> counts(touched(i))).toMap
       assert(got == expected, s"pats=$pats text='$t'")
     }
@@ -412,6 +420,73 @@ class PipelineSpec extends AnyFunSuite {
     // demo-sized docs are untouched by the cap
     val small = Seq(Doc("s", Seq(Span("text", "term0001 term0002 term0003", null, 0)))).toDS()
     assert(pipe.cooccurrencePairsFromSets(pipe.mentionSets(small)).count() == 3)
+  }
+
+  test("alias dictionary: run, runFused and a per-curie reference agree as multisets") {
+    import graft.model.{Doc, Props, Span, Triple}
+    val dict = aliasDict
+    val pipe = new KgPipeline(spark, AnalyticsDomain.context(), dict)
+    val texts = Seq("d1" -> "alpha alphax beta", "d2" -> "alpha beta gamma")
+    val docs = texts.map { case (id, t) => Doc(id, Seq(Span("text", t, null, 0))) }.toDS()
+    // the reference: split into words, look each word up, count per curie
+    val entryOf = dict.linkFor.map(e => e.surface -> e).toMap
+    val perDoc = texts.map { case (d, t) =>
+      d -> t.split(" ").toSeq.flatMap(entryOf.get).groupMapReduce(_.curie)(_ => 1L)(_ + _)
+    }
+    val named = dict.linkFor.toSeq.groupBy(_.curie).map { case (c, es) =>
+      c -> es.map(e => (e.cls, e.surface)).min }
+    val typeOf = Map("relational operator" -> "RelationalOperator",
+      "storage structure" -> "StorageStructure", "execution engine" -> "ExecutionEngine")
+    val curies = perDoc.flatMap(_._2.keys).distinct
+    val pairs = perDoc.flatMap { case (_, cs) =>
+      val s = cs.keys.toSeq.sorted
+      for (i <- s.indices; j <- i + 1 until s.length) yield (s(i), s(j))
+    }.groupMapReduce(identity)(_ => 1L)(_ + _)
+    val wantNodes = curies.map(c => (c, named(c)._2)) ++ texts.map(t => (t._1, null))
+    val wantEdges =
+      perDoc.flatMap { case (d, cs) => cs.map { case (c, n) => (d, c, "MENTIONS", n.toString) } } ++
+        pairs.map { case ((a, b), n) => (a, b, "COOCCURS_WITH", n.toString) }
+    val wantTriples =
+      curies.map(c => Triple(c, "rdf:type", typeOf(named(c)._1))) ++
+        texts.map(t => Triple(t._1, "rdf:type", "Document")) ++
+        wantEdges.map { case (s, o, p, _) => Triple(s, p, o) }
+    assert(wantNodes.size == 5 && wantNodes.contains(("e:a", "alpha")))
+    assert(wantEdges.size == 8 && wantEdges.contains(("d1", "e:a", "MENTIONS", "2")))
+    assert(pairs == Map(("e:a", "e:b") -> 2L, ("e:a", "e:c") -> 1L, ("e:b", "e:c") -> 1L))
+    assert(wantTriples.size == 13 && wantTriples.distinct.size == 13)
+    for ((path, (ns, es, ts)) <- Seq("run" -> pipe.run(docs), "runFused" -> pipe.runFused(docs))) {
+      val gotNodes = ns.collect().toSeq.map(n =>
+        (n.id, Props.get(n.props, "name").map(_.s).orNull))
+      val gotEdges = es.collect().toSeq.map(e => (e.src, e.tgt, e.label, e.props.head.v.s))
+      assert(multiset(gotNodes) == multiset(wantNodes), path)
+      assert(multiset(gotEdges) == multiset(wantEdges), path)
+      assert(bag(ts) == multiset(wantTriples), path)
+    }
+    val wantPairs = multiset(pairs.toSeq.map { case ((a, b), n) => (a, b, n) })
+    def pairRows(df: org.apache.spark.sql.DataFrame) =
+      multiset(df.as[(String, String, Long)].collect().toSeq)
+    assert(pairRows(pipe.cooccurrencePairsFromSets(pipe.mentionSets(docs))) == wantPairs)
+    assert(pairRows(Mentions.cooccurrencePairsFromDocMentions(
+      pipe.docMentions(docs).coalesce(1))) == wantPairs)
+    spark.catalog.clearCache()
+  }
+
+  test("per-doc cap counts entities: an entity's score sums over its aliases") {
+    import graft.model.{Doc, Span, Triple}
+    val pipe = new KgPipeline(spark, AnalyticsDomain.context(), aliasDict)
+    val docs = Seq(Doc("d", Seq(Span("text", "alpha alphax beta gamma", null, 0)))).toDS()
+    // scores at cap 2: e:a = 5 x 2 (canonical surface alpha, two
+    // occurrences), e:b = 4 x 1, e:c = 5 x 1 — e:a and e:c are kept
+    val want = Seq(("e:a", "e:c", 1L))
+    def pairRows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, String, Long)].collect().toSeq
+    assert(pairRows(Mentions.cooccurrencePairsFromDocMentions(
+      pipe.docMentions(docs).coalesce(1), maxEntitiesPerDoc = 2)) == want)
+    val ms = pipe.mentionSets(docs)
+    assert(pairRows(pipe.cooccurrencePairsFromSets(ms, maxEntitiesPerDoc = 2)) == want)
+    assert(pipe.triplesFromSets(ms, maxEntitiesPerDoc = 2)
+      .filter(_.pred == "COOCCURS_WITH").collect().toSeq ==
+      Seq(Triple("e:a", "COOCCURS_WITH", "e:c")))
   }
 
   test("fused mention-set consumers tolerate arbitrary repartition (no contiguity contract)") {

@@ -22,6 +22,13 @@ object SparkTestBase {
     session
   }
 
+  /** `xs` as a multiset (element -> count): a parity check on multisets
+    * fails on a row emitted twice, which a `.toSet` compare passes. */
+  def multiset[T](xs: Seq[T]): Map[T, Int] = xs.groupMapReduce(identity)(_ => 1)(_ + _)
+
+  /** The rows of `ds` as a [[multiset]]. */
+  def bag[T](ds: org.apache.spark.sql.Dataset[T]): Map[T, Int] = multiset(ds.collect().toSeq)
+
   /** The standard test KgContext (schema + mini-biolink head ontology). */
   lazy val ctx: KgContext = KgContext.build(
     TestFixtures.resource("test_schema.yaml"),
