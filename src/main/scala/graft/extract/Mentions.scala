@@ -48,6 +48,8 @@ final class MentionDict private (
 
 object MentionDict {
   def build(entries: Seq[DictEntry]): MentionDict = {
+    entries.find(_.surface.isEmpty).foreach(e => throw new IllegalArgumentException(
+      s"dictionary entry $e has an empty surface, which would match between any two non-word characters"))
     val bySurface = entries.groupBy(_.surface).toSeq.sortBy(_._1)
     val winners = bySurface.map { case (_, es) =>
       es.minBy(e => (-e.prior, e.curie))

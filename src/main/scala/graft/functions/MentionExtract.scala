@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, U
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.{MentionDict, Mentions}
 
@@ -21,8 +20,7 @@ import graft.extract.{MentionDict, Mentions}
   * the Tungsten buffer (`Platform.getByte` — no `Doc`/`Span`/`String`
   * materialization, no encoder round-trip), which removes the object-churn
   * share of extraction that binds memory bandwidth at high core counts.
-  * Non-ASCII spans (or a non-ASCII dictionary) fall back to the String walk
-  * for exact parity with [[Mentions.detectPerDoc]] — spec-asserted.
+  * Every span takes that walk, ASCII or not, as [[Mentions.detectPerDoc]] does.
   *
   * Each input is a plain `GetArrayStructFields` extraction, so Catalyst's
   * nested schema pruning narrows the parquet ReadSchema to exactly those
@@ -89,12 +87,8 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict]) extends Serializabl
       if (!kinds.isNullAt(si) && !texts.isNullAt(si) &&
           kinds.getUTF8String(si).equals(TEXT)) {
         val t = texts.getUTF8String(si)
-        nTouched =
-          if (dict.trie.isAsciiDense && isAscii(t))
-            dict.trie.countWholeWordsAscii(t.getBaseObject, t.getBaseOffset,
-              t.numBytes, dict.rankOf, counts, touched, nTouched)
-          else // exact parity on non-ASCII text / dictionaries
-            dict.trie.countWholeWords(t.toString, dict.rankOf, counts, touched, nTouched)
+        nTouched = dict.trie.countWholeWords(t.getBaseObject, t.getBaseOffset,
+          t.numBytes, dict.rankOf, counts, touched, nTouched)
       }
       si += 1
     }
@@ -112,23 +106,6 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict]) extends Serializabl
       i += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  /** 8-byte-stride pure-ASCII test straight off the Tungsten buffer. */
-  private def isAscii(t: UTF8String): Boolean = {
-    val base = t.getBaseObject
-    val off = t.getBaseOffset
-    val n = t.numBytes
-    var i = 0
-    while (i + 8 <= n) {
-      if ((Platform.getLong(base, off + i) & 0x8080808080808080L) != 0L) return false
-      i += 8
-    }
-    while (i < n) {
-      if (Platform.getByte(base, off + i) < 0) return false
-      i += 1
-    }
-    true
   }
 }
 

@@ -26,20 +26,37 @@ class PipelineSpec extends AnyFunSuite {
     assert(ww.findWholeWords("scan join rescan scanjoin scan").toList.map(_._1) == List(0, 5, 26))
   }
 
-  test("dense goto table is gated on state count; sparse fallback matches (ADVICE r5)") {
-    // small ASCII dictionary: dense, and the sparse structures are dropped
-    val small = AhoCorasick.build(Seq("scan", "join"))
-    assert(small.isAsciiDense)
-    // over-threshold ASCII dictionary: must NOT build the 512 B/state dense
-    // table (1M states would be a ~0.5 GB broadcast) — and must still match
+  test("a dictionary past the old dense-table cap matches a naive matcher (ADVICE r5)") {
+    // 30k random 12-letter surfaces build about 280k states, past the 200k-state
+    // cap of the dense ASCII table the flat byte trie replaced
     val rng = new scala.util.Random(7)
     val big = (0 until 30000).map(_ => (0 until 12).map(_ => ('a' + rng.nextInt(26)).toChar).mkString).distinct
     val bigAc = AhoCorasick.build(big)
-    assert(!bigAc.isAsciiDense, "state count above DenseMaxStates must fall back to sparse")
     val probe = s"${big.head} xyz ${big.last} ${big.head}x"
     val hits = bigAc.findWholeWords(probe).toList.map { case (s, p) => (s, bigAc.patterns(p)) }
     assert(hits.map(_._2).toSet.subsetOf(Set(big.head, big.last)))
     assert(hits.count(_._2 == big.head) == 1) // "${big.head}x" is not whole-word
+    val probes = Seq(probe, big.take(40).mkString(" "), big.slice(40, 80).mkString("-"),
+      big.slice(80, 90).mkString, s"${big(90).drop(3)} ${big(91).take(9)}é ${big(92)}")
+    for (t <- probes)
+      assert(bigAc.findWholeWords(t).toList.sorted == PropGen.naiveWholeWords(big, t).sorted, s"text='$t'")
+  }
+
+  test("MentionDict.build rejects an empty surface, naming the entry") {
+    val e = intercept[IllegalArgumentException] {
+      MentionDict.build(Seq(DictEntry("scan", "op:scan", "c", 1.0), DictEntry("", "e:empty", "c", 1.0)))
+    }
+    assert(e.getMessage.contains("e:empty"))
+  }
+
+  test("detect reports char_start in UTF-16 units after non-ASCII text") {
+    val docs = Seq(
+      graft.model.Doc("d1", Seq(graft.model.Span("text", "é scan", null, 0))),
+      graft.model.Doc("d2", Seq(graft.model.Span("text", "𝐀 scan 😀 join", null, 0))),
+    ).toDS()
+    val bc = spark.sparkContext.broadcast(AnalyticsDomain.dict)
+    val got = Mentions.detect(docs, bc).collect().map(m => (m.doc_id, m.curie, m.char_start)).toSet
+    assert(got == Set(("d1", "op:scan", 2), ("d2", "op:scan", 3), ("d2", "op:join", 11)))
   }
 
   test("LongLongMap stores key 0 and the rank-distinct contract raises on duplicates (ADVICE r5)") {
@@ -247,14 +264,14 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.GraftColumnBridge
     val docs = Seq(
       Doc("d1", Seq(Span("text", "scan join scan", null, 0))),
-      // non-ASCII TEXT with an ASCII dict: the span-level String fallback
+      // non-ASCII text next to ASCII and non-ASCII matches
       Doc("d2", Seq(Span("text", "naïve scan—join héllo scan", null, 0),
         Span("img", null, "m1", 1))),
       Doc("d3", Seq(Span("text", "héllo join héllo", null, 0))),
       Doc("d4", Seq(Span("img", null, "m2", 0))), // no text at all
     ).toDS()
-    // case A: ASCII dictionary (dense byte walk on ASCII spans);
-    // case B: non-ASCII dictionary (sparse automaton, String walk always)
+    // case A: ASCII dictionary; case B: non-ASCII dictionary. Both walk the
+    // span bytes in place, ASCII spans or not
     val dicts = Seq(
       MentionDict.build(Seq(DictEntry("scan", "C:1", "c", 1.0), DictEntry("join", "C:2", "c", 0.5))),
       MentionDict.build(Seq(DictEntry("héllo", "C:9", "c", 1.0), DictEntry("scan", "C:1", "c", 1.0))),
@@ -276,13 +293,15 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("countWholeWords == findWholeWords drain (dense ASCII and sparse non-ASCII)") {
+  test("countWholeWords == findWholeWords drain (one byte walk, ASCII and non-ASCII)") {
     val cases = Seq(
       Seq("scan", "join", "scan join") -> Seq(
         "scan join rescan scanjoin scan", "scan", "", "join scan join"),
       Seq("he", "she", "his", "hers") -> Seq("he said she sells his hers", "ushers"),
-      // non-ASCII patterns exercise the sparse fallback automaton
       Seq("héllo", "wörld") -> Seq("héllo wörld héllo", "xhéllo héllo!", "héllowörld"),
+      // CJK and supplementary-plane surfaces, one a suffix of another
+      Seq("データ", "𝐀lpha", "lpha", "données") -> Seq("データ 𝐀lpha données",
+        "xデータ lpha 𝐀lpha!", "donnéesdonnées données😀", "𝐀𝐀lpha lphaé"),
     )
     for ((pats, texts) <- cases; t <- texts) {
       val ac = AhoCorasick.build(pats)

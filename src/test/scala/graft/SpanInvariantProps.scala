@@ -22,24 +22,37 @@ object PropGen {
     "scans" -> "op:scan", "joins" -> "op:join", "tables" -> "store:table",
     "cols" -> "store:column")
 
-  /** The analytics dictionary plus [[aliases]], each alias in its curie's
+  /** Non-ASCII surfaces of analytics entities, for [[nonAsciiDict]]. */
+  val nonAsciiAliases: Vector[(String, String)] = Vector(
+    "jöin" -> "op:join", "tåble" -> "store:table")
+
+  /** The analytics dictionary plus `extra` surfaces, each in its curie's
     * schema class: several surfaces per entity. */
-  def aliasDict: MentionDict = {
+  private def withAliases(extra: Seq[(String, String)]): MentionDict = {
     val base = AnalyticsDomain.dictionary.map { case (s, c, cu) => DictEntry(s, cu, c, 1.0) }
     val clsOf = base.map(e => e.curie -> e.cls).toMap
-    MentionDict.build(base ++ aliases.map { case (s, cu) => DictEntry(s, cu, clsOf(cu), 1.0) })
+    MentionDict.build(base ++ extra.map { case (s, cu) => DictEntry(s, cu, clsOf(cu), 1.0) })
   }
 
-  /** The analytics pipeline and its alias twin, over the same schema. */
+  def aliasDict: MentionDict = withAliases(aliases)
+
+  /** The analytics dictionary plus [[nonAsciiAliases]]: the fused path's
+    * in-place byte walk then matches multi-byte surfaces. */
+  def nonAsciiDict: MentionDict = withAliases(nonAsciiAliases)
+
+  /** The analytics pipeline and its alias and non-ASCII twins, over the same
+    * schema. */
   def pipelines(spark: org.apache.spark.sql.SparkSession): Seq[KgPipeline] =
-    Seq(KgPipeline.analytics(spark), new KgPipeline(spark, AnalyticsDomain.context(), aliasDict))
+    Seq(KgPipeline.analytics(spark),
+      new KgPipeline(spark, AnalyticsDomain.context(), aliasDict),
+      new KgPipeline(spark, AnalyticsDomain.context(), nonAsciiDict))
 
   // alias surfaces are plain fillers to the analytics dictionary
   val dictTerm: Gen[String] =
-    Gen.oneOf(AnalyticsDomain.dictionary.map(_._1) ++ aliases.map(_._1))
+    Gen.oneOf(AnalyticsDomain.dictionary.map(_._1) ++ (aliases ++ nonAsciiAliases).map(_._1))
   // fillers chosen to be adversarial for whole-word matching: dictionary
-  // terms as substrings (rescan/joinx) and non-ASCII words that force the
-  // sparse/String fallbacks
+  // terms as substrings (rescan/joinx) and non-ASCII words that put
+  // multi-byte code points next to match edges
   val fillerAscii: Gen[String] =
     Gen.oneOf("a", "the", "big", "data", "rescan", "joinx", "scanjoin", "x")
   val fillerUnicode: Gen[String] =
@@ -48,6 +61,24 @@ object PropGen {
     Gen.frequency(4 -> dictTerm, 2 -> fillerAscii, 1 -> fillerUnicode)
   val sentence: Gen[String] =
     Gen.chooseNum(0, 24).flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))
+
+  /** The reference whole-word matcher: every (UTF-16 start, pattern index)
+    * where the pattern's chars stand at that index of `text` and no letter
+    * or digit char touches either end. */
+  def naiveWholeWords(pats: Seq[String], text: String): Seq[(Int, Int)] =
+    naiveAll(pats, text).filter { case (start, p) =>
+      val end = start + pats(p).length
+      (start == 0 || !Character.isLetterOrDigit(text.charAt(start - 1))) &&
+      (end == text.length || !Character.isLetterOrDigit(text.charAt(end)))
+    }
+
+  /** Every (UTF-16 start, pattern index) where the pattern's chars stand. */
+  def naiveAll(pats: Seq[String], text: String): Seq[(Int, Int)] =
+    for {
+      start <- 0 until text.length
+      p <- pats.indices
+      if text.regionMatches(start, pats(p), 0, pats(p).length)
+    } yield (start, p)
 
   private val textSpan: Gen[(String, String, String)] =
     sentence.map(t => ("text", t, null: String))
@@ -79,16 +110,23 @@ object TrieProps extends Properties("Trie") {
       .map(_.distinct.filter(_.nonEmpty))
       .suchThat(_.nonEmpty)
 
+  /** Counts of the one byte walk, by pattern index. */
+  private def counts(n: Int, count: (Array[Long], Array[Int]) => Int): Map[Int, Long] = {
+    val cs = new Array[Long](n)
+    val touched = new Array[Int](n)
+    val k = count(cs, touched)
+    (0 until k).map(i => touched(i) -> cs(touched(i))).toMap
+  }
+
+  private def byPattern(ms: Seq[(Int, Int)]): Map[Int, Long] =
+    ms.groupBy(_._2).map { case (p, os) => p -> os.size.toLong }
+
   property("countWholeWords == findWholeWords drain, any dictionary x any text") =
     forAll(patterns, PropGen.sentence) { (pats, text) =>
       val ac = AhoCorasick.build(pats)
-      val expected = ac.findWholeWords(text).toList.map(_._2)
-        .groupBy(identity).map { case (p, os) => p -> os.size.toLong }
-      val counts = new Array[Long](pats.length)
-      val touched = new Array[Int](pats.length)
-      val n = ac.countWholeWords(text, pats.indices.toArray, counts, touched, 0)
-      val got = (0 until n).map(i => touched(i) -> counts(touched(i))).toMap
-      got == expected
+      val ids = pats.indices.toArray
+      counts(pats.length, ac.countWholeWords(text, ids, _, _, 0)) ==
+        byPattern(ac.findWholeWords(text).toList)
     }
 
   property("findAll positions: every reported match is literally present") =
@@ -97,6 +135,52 @@ object TrieProps extends Properties("Trie") {
       ac.findAll(text).forall { case (start, p) =>
         text.regionMatches(start, ac.patterns(p), 0, ac.patterns(p).length)
       }
+    }
+
+  // ASCII, accented, CJK and supplementary-plane surfaces, several of them
+  // substrings of others, and gaps that are word chars, non-word chars or
+  // nothing at all
+  private val intlWord: Gen[String] = Gen.oneOf("alpha", "𝐀lpha", "lpha", "données",
+    "donnée", "データ", "デ", "タ", "😀", "a😀", "é", "ß", "scan", "naïve", "中文", "中",
+    "Ωmega", "x1")
+  private val intlGap: Gen[String] =
+    Gen.oneOf(" ", " ", "", "-", "!", "\u00a0", "é", "𝐀", "😀", "5")
+  private val intlDict: Gen[List[String]] =
+    Gen.chooseNum(1, 10).flatMap(n => Gen.listOfN(n, intlWord)).map(_.distinct)
+  private val intlText: Gen[String] =
+    Gen.chooseNum(0, 16).flatMap(n => Gen.listOfN(n, Gen.zip(intlWord, intlGap)))
+      .map(_.map { case (w, g) => w + g }.mkString)
+
+  property("non-ASCII dictionaries and texts: counts and UTF-16 offsets == a naive matcher") =
+    forAll(intlDict, intlText) { (pats, text) =>
+      val ac = AhoCorasick.build(pats)
+      val ids = pats.indices.toArray
+      val want = PropGen.naiveWholeWords(pats, text)
+      val utf8 = org.apache.spark.unsafe.types.UTF8String.fromString(text)
+      ac.findWholeWords(text).toList.sorted == want.sorted &&
+      ac.findAll(text).toList.sorted == PropGen.naiveAll(pats, text).sorted &&
+      counts(pats.length, ac.countWholeWords(text, ids, _, _, 0)) == byPattern(want) &&
+      counts(pats.length, ac.countWholeWords(utf8.getBaseObject, utf8.getBaseOffset,
+        utf8.numBytes, ids, _, _, 0)) == byPattern(want)
+    }
+
+  // stray continuation bytes, truncated sequences, overlong forms ("A" as
+  // C1 81), an encoded surrogate and bytes that never occur in UTF-8
+  private val junk: Gen[Array[Byte]] = Gen.oneOf(Seq(0x80), Seq(0xc3), Seq(0xe3, 0x83),
+    Seq(0xf0, 0x9d), Seq(0xff), Seq(0xc1, 0x81), Seq(0xe0, 0x80, 0x80), Seq(0xed, 0xa0, 0x80),
+    Seq(0xc3, 0xa9, 0xa9)).map(_.map(_.toByte).toArray)
+  private val malformed: Gen[Array[Byte]] =
+    Gen.chooseNum(0, 16).flatMap(n => Gen.listOfN(n, Gen.frequency(
+      3 -> Gen.zip(intlWord, intlGap).map { case (w, g) => (w + g).getBytes("UTF-8") },
+      1 -> junk))).map(_.toArray.flatten)
+
+  property("malformed UTF-8 bytes are non-word chars, as their decoded U+FFFD") =
+    forAll(intlDict, malformed) { (pats, bytes) =>
+      val ac = AhoCorasick.build(pats)
+      val decoded = new String(bytes, "UTF-8")
+      counts(pats.length, ac.countWholeWords(bytes,
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length, pats.indices.toArray, _, _, 0)) ==
+        byPattern(PropGen.naiveWholeWords(pats, decoded))
     }
 }
 
