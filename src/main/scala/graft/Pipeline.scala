@@ -22,8 +22,11 @@ import graft.translate.Translate
   *    15x slower at 300k docs); the fused path aggregates ints only;
   *  - property bags are attached AFTER the shuffles, in narrow maps;
   *  - the dictionary/ontology side is broadcast, never shuffled.
-  * Total exchanges per run: doc-distinct, entity-distinct, co-occurrence
-  * join+aggregate — all over thin rows.
+  * Total shuffle exchanges per run: on the string path ([[run]]) the
+  * entity distinct and the co-occurrence aggregate, both over thin rows
+  * (doc ids are run-distinct, no shuffle); on the fused triple table
+  * ([[triplesFromSets]]) ONE, the key-block exchange, which carries
+  * (map tasks × partitions) sorted `long[]` blocks rather than rows.
   */
 final class KgPipeline(
     spark: SparkSession,
@@ -266,18 +269,23 @@ final class KgPipeline(
     * `triples(nodesFromSets(ms), mentionEdgesFromSets(ms) union
     * cooccurrenceEdgesFromSets(ms))` (spec-proven, PipelineSpec); the plan
     * is the win:
-    *  - rank presence AND co-occurrence pairs come from ONE shared combiner
-    *    scan ([[graft.extract.CoocCombine.partialPairAndRankKeys]] — ranks
-    *    ride as self-pairs, unambiguous because real pairs are strictly
-    *    a < b): the distinct packed keys are dictionary-bounded and sit
-    *    behind a [[Barrier]], so the corpus-sized scan + combiner + distinct
-    *    exchange run ONCE per action no matter how many consumers sit above
-    *    (measured: AQE did NOT stage-reuse the three analyzer-cloned copies
-    *    of the object-operator subtree, so plan-level sharing alone
-    *    re-scanned the cache per consumer). The barrier is a leaf — a free
-    *    pushdown barrier. Without a checkpoint dir its blocks are local, so
-    *    an executor loss fails the job; acceptable here because the data is
-    *    ≤ C(|entities|, 2) longs and job-level retry is cheap at that size;
+    *  - rank presence AND co-occurrence pairs come from ONE shared key scan
+    *    ([[graft.extract.CoocCombine.distinctPairAndRankKeys]] — ranks ride
+    *    as self-pairs, unambiguous because real pairs are strictly a < b).
+    *    Its exchange ships sorted per-partition key blocks routed by
+    *    partition id, not rows, and no HashAggregate runs over the keys.
+    *    The distinct packed keys are dictionary-bounded and sit behind a
+    *    [[Barrier]] as sorted `long[]` runs (8 B per key, exploded by each
+    *    consumer), so the corpus-sized scan + key exchange run ONCE per
+    *    action no matter how many consumers sit above (measured: AQE did
+    *    NOT stage-reuse analyzer-cloned copies of an object-operator
+    *    subtree, so plan-level sharing alone re-scanned the cache per
+    *    consumer). The exchange lives in the barrier's RDD lineage, outside
+    *    any AQE plan, so the lazy barrier runs nothing while the plan is
+    *    built. The barrier is a leaf — a free pushdown barrier. Without a
+    *    checkpoint dir its blocks are local, so an executor loss fails the
+    *    job; acceptable here because the data is ≤ C(|entities|, 2) longs
+    *    and job-level retry is cheap at that size;
     *  - entity rdf:type triples decode the barrier's self keys, distinct
     *    entity ranks already: no exchange;
     *  - mention triples are explode + a 3-column select that decodes the
@@ -292,10 +300,9 @@ final class KgPipeline(
   def triplesFromSets(ms: DataFrame,
       maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): Dataset[Triple] = {
     val typeMap = typedLit(labelTypeMap)
-    val distinctKeys = graft.extract.CoocCombine.partialPairAndRankKeys(
-        ms.select(col("pm")).as[Array[Long]], bcDict, maxEntitiesPerDoc)
-      .toDF("k").distinct()
-    val keys = Barrier(distinctKeys)
+    val keys = Barrier(graft.extract.CoocCombine.distinctPairAndRankKeys(
+        ms.select(col("pm")).as[Array[Long]], bcDict, maxEntitiesPerDoc).toDF("ks"))
+      .select(explode(col("ks")).as("k"))
     val hi = shiftright(col("k"), 32).cast("int")
     val lo = col("k").bitwiseAND(lit(0xffffffffL)).cast("int")
     val entityThin = entityThinFromRanks(keys.filter(hi === lo).select(hi.as("rank")))

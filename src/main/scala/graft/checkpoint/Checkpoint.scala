@@ -80,7 +80,7 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
   /** The commit point of a [[prepare]]d stage: writes its manifest and
     * returns its read-back frame. */
   def publish(p: CheckpointStore.Prepared): DataFrame = {
-    writeString(manifestPath(p.stage), p.manifest)
+    graft.DriverFiles.write(fs, manifestPath(p.stage), p.manifest)
     p.frame
   }
 
@@ -160,12 +160,6 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
         buf.toList
       }
     spark.read.json(spark.createDataset(rows))
-  }
-
-  private def writeString(p: Path, s: String): Unit = {
-    val os = fs.create(p, true)
-    try os.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
   }
 
   private def readString(p: Path): String = {

@@ -50,12 +50,25 @@ object MentionDict {
   def build(entries: Seq[DictEntry]): MentionDict = {
     entries.find(_.surface.isEmpty).foreach(e => throw new IllegalArgumentException(
       s"dictionary entry $e has an empty surface, which would match between any two non-word characters"))
-    val bySurface = entries.groupBy(_.surface).toSeq.sortBy(_._1)
-    val winners = bySurface.map { case (_, es) =>
-      es.minBy(e => (-e.prior, e.curie))
+    // one stable sort puts each surface's winner first, ahead of its
+    // losers; a linear pass keeps the first entry of every surface
+    val sorted = entries.toArray
+    java.util.Arrays.sort(sorted, winnerFirst)
+    val winners = sorted.iterator.zipWithIndex
+      .collect { case (e, i) if i == 0 || e.surface != sorted(i - 1).surface => e }.toArray
+    new MentionDict(AhoCorasick.build(winners.map(_.surface).toSeq), winners)
+  }
+
+  /** Surface ascending; within a surface the highest prior first
+    * (`Double.compare` on the negated prior), then the smallest curie.
+    * Full ties keep input order (the sort is stable). */
+  private val winnerFirst: java.util.Comparator[DictEntry] = (a, b) => {
+    val s = a.surface.compareTo(b.surface)
+    if (s != 0) s
+    else {
+      val p = java.lang.Double.compare(-a.prior, -b.prior)
+      if (p != 0) p else a.curie.compareTo(b.curie)
     }
-    val trie = AhoCorasick.build(winners.map(_.surface))
-    new MentionDict(trie, winners.toArray)
   }
 }
 

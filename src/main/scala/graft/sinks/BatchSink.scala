@@ -582,9 +582,7 @@ object BatchSink {
     val hp = new org.apache.hadoop.fs.Path(dir, fileName)
     val fs = hp.getFileSystem(hadoopConf())
     fs.mkdirs(dir)
-    val os = fs.create(hp, true)
-    try os.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    graft.DriverFiles.write(fs, hp, content)
     hp.toString
   }
 

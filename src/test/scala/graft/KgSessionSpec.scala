@@ -361,6 +361,41 @@ class KgSessionSpec extends AnyFunSuite {
     assert(rows.count(_.startsWith("p3;")) == 1)
   }
 
+  test("driver-written manifests, headers and import scripts leave no .crc sidecar") {
+    val dir = Files.createTempDirectory("graft-crc-").toString
+    val a = new KgSession(spark, SparkTestBase.ctx, dir)
+    a.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"))))
+    a.writeEdges(spark.createDataset(Seq(RawEdge("r1", "p1", "p2", "phosphorylation", Props.empty))))
+    a.writeImportCall()
+    val b = new KgSession(spark, SparkTestBase.ctx, dir)
+    b.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p3"))))
+    b.writeImportCall()
+    def driverFile(name: String) =
+      name == "_manifest.json" || name.endsWith("-header.csv") || name.endsWith("-import-call.sh")
+    val names = {
+      import scala.jdk.CollectionConverters._
+      val w = Files.walk(java.nio.file.Path.of(dir))
+      try w.iterator().asScala.map(_.getFileName.toString).toList finally w.close()
+    }
+    assert(names.count(driverFile) >= 5, names.mkString(", "))
+    val sidecars = names.filter(n => n.startsWith(".") && n.endsWith(".crc") && driverFile(n.drop(1).dropRight(4)))
+    assert(sidecars.isEmpty, sidecars.mkString(", "))
+    // the manifests still read, and the resumed session deduped against them
+    val store = new CheckpointStore(spark, s"$dir/_graft_checkpoint")
+    assert(store.lineage().count() > 0)
+    assert(partLines(dir, "Protein").map(_.takeWhile(_ != ';')).sorted == List("p1", "p2", "p3"))
+    // a sidecar from an earlier checksummed write is dropped with the old content
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val p = new org.apache.hadoop.fs.Path(dir, "x.json")
+    val os = fs.create(p, true)
+    try os.write("old".getBytes("UTF-8")) finally os.close()
+    assert(fs.exists(fs.getChecksumFile(p)))
+    DriverFiles.write(fs, p, "new content")
+    assert(!fs.exists(fs.getChecksumFile(p)))
+    val in = fs.open(p)
+    try assert(new String(in.readAllBytes(), "UTF-8") == "new content") finally in.close()
+  }
+
   test("rel-as-node entities are session-deduped across writeEdges calls") {
     val s = session()
     val raw = spark.createDataset(Seq(

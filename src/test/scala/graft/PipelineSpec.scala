@@ -18,6 +18,20 @@ class PipelineSpec extends AnyFunSuite {
     DictEntry("beta", "e:b", "storage structure", 1.0),
     DictEntry("gamma", "e:c", "execution engine", 1.0)))
 
+  /** A pipeline over 5000 surfaces, above both dense combiner gates, so the
+    * fused path runs the hash combiners; with a sparse vocabulary (one word
+    * in three a surface) that keeps the string path's pair count small. */
+  private def hashBranchPipeline(): (KgPipeline, IndexedSeq[String]) = {
+    import graft.extract.CoocCombine
+    val surfaces = (0 until 5000).map(i => f"kw$i%04d")
+    assert(surfaces.size > CoocCombine.DenseMaxDict && surfaces.size > CoocCombine.DenseMaxDictCounts)
+    val classes = AnalyticsDomain.dictionary.map(_._2).distinct
+    val dict = MentionDict.build(surfaces.zipWithIndex.map { case (s, i) =>
+      DictEntry(s, s"e:$s", classes(i % classes.size), 1.0) })
+    (new KgPipeline(spark, AnalyticsDomain.context(), dict),
+      surfaces.take(600) ++ surfaces.take(600).map(_ + "x") ++ surfaces.take(600).map("y" + _))
+  }
+
   test("aho-corasick finds overlapping + whole-word matches") {
     val ac = AhoCorasick.build(Seq("he", "she", "his", "hers"))
     val all = ac.findAll("ushers").toList.map { case (s, p) => (s, ac.patterns(p)) }
@@ -106,18 +120,9 @@ class PipelineSpec extends AnyFunSuite {
   test("fused plans hold no dictionary-sized LocalRelation (hash-combiner dictionary)") {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
     import graft.extract.CoocCombine
-    // 5000 surfaces: above both dense combiner gates, so the fused path runs
-    // the hash combiners; a decode table of this size would be re-walked by
-    // every Catalyst rule on every query
-    val surfaces = (0 until 5000).map(i => f"kw$i%04d")
-    assert(surfaces.size > CoocCombine.DenseMaxDict && surfaces.size > CoocCombine.DenseMaxDictCounts)
-    val classes = AnalyticsDomain.dictionary.map(_._2).distinct
-    val dict = MentionDict.build(surfaces.zipWithIndex.map { case (s, i) =>
-      DictEntry(s, s"e:$s", classes(i % classes.size), 1.0) })
-    val pipe = new KgPipeline(spark, AnalyticsDomain.context(), dict)
-    // a sparse vocabulary (one word in three a surface) keeps the string
-    // path's pair count small
-    val vocab = surfaces.take(600) ++ surfaces.take(600).map(_ + "x") ++ surfaces.take(600).map("y" + _)
+    // a decode table of the hash-branch dictionary's size would be
+    // re-walked by every Catalyst rule on every query
+    val (pipe, vocab) = hashBranchPipeline()
     val docs = Corpus.synthesize(spark, 300, vocab, seed = 11).persist()
     def bigLocal(plan: LogicalPlan): Seq[Int] =
       plan.collectWithSubqueries { case l: LocalRelation if l.data.size > 64 => l.data.size }
@@ -230,6 +235,55 @@ class PipelineSpec extends AnyFunSuite {
       // conf in place so later tests keep exercising the default branch
       spark.conf.set("spark.graft.barrier", "local")
       ms.unpersist(); docs.unpersist()
+    }
+  }
+
+  test("key-block exchange: blocks reach only their own reduce partition; distinct keys == the map side's") {
+    // a tiny flushAt makes every doc flush several blocks per partition and
+    // 13 partitions make a wrong routing (e.g. Murmur3 on the block id)
+    // land a block on a partition other than its id
+    import graft.extract.CoocCombine
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val (hashPipe, hashVocab) = hashBranchPipeline()
+    val cases = Seq(
+      ("analytics dense", graft.KgPipeline.analytics(spark), AnalyticsDomain.vocab, CoocCombine.DenseMaxDictCounts),
+      ("analytics hash", graft.KgPipeline.analytics(spark), AnalyticsDomain.vocab, 0),
+      ("5000-surface hash", hashPipe, hashVocab, CoocCombine.DenseMaxDictCounts))
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    try {
+      for ((name, pipe, vocab, denseMax) <- cases) {
+        val docs = Corpus.synthesize(spark, 300, vocab, seed = 11)
+        val pm = pipe.mentionSets(docs).select(col("pm")).as[Array[Long]].persist()
+        val cap = 3
+        val want = CoocCombine.partialPairAndRankKeys(pm, pipe.bcDict, cap, flushAt = 5, denseMax = denseMax)
+          .distinct().collect().toSet
+        assert(want.exists(k => (k >>> 32) != (k & 0xffffffffL)), s"$name: pair keys present")
+        val blocks = CoocCombine.routedKeyBlocks(pm, pipe.bcDict, cap, flushAt = 5, denseMax = denseMax)
+          .mapPartitionsWithIndex((i, it) => it.map { case (p, b) =>
+            (i, p, b.length, b.sliding(2).forall(w => w.length < 2 || w(0) < w(1))) })
+          .collect()
+        assert(blocks.length > 13, s"$name: the flush must split the keys into many blocks")
+        assert(blocks.forall(b => b._1 == b._2), s"$name: misrouted (partition, block id): " +
+          blocks.filter(b => b._1 != b._2).map(b => (b._1, b._2)).distinct.mkString(" "))
+        assert(blocks.forall(_._4), s"$name: every block is sorted and distinct")
+        assert(blocks.map(_._1).distinct.length > 1, s"$name: blocks spread over partitions")
+        for (barrier <- Seq("local", "auto")) {
+          spark.conf.set("spark.graft.barrier", barrier)
+          val runs = Barrier(CoocCombine.distinctPairAndRankKeys(pm, pipe.bcDict, cap,
+            flushAt = 5, denseMax = denseMax)).collect()
+          assert(runs.forall(r => r.sliding(2).forall(w => w.length < 2 || w(0) < w(1))),
+            s"$name/$barrier: every run is sorted and distinct")
+          val got = runs.flatten
+          assert(got.length == got.distinct.length, s"$name/$barrier: keys leave the reduce side distinct")
+          assert(got.toSet == want, s"$name/$barrier")
+        }
+        pm.unpersist()
+      }
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
+      spark.conf.set("spark.graft.barrier", "local")
     }
   }
 

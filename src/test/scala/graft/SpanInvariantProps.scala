@@ -182,6 +182,29 @@ object TrieProps extends Properties("Trie") {
         org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length, pats.indices.toArray, _, _, 0)) ==
         byPattern(PropGen.naiveWholeWords(pats, decoded))
     }
+
+  // few surfaces and curies so surfaces repeat, equal priors, both zeros
+  private val dictEntries: Gen[List[DictEntry]] = Gen.chooseNum(1, 24).flatMap(n => Gen.listOfN(n,
+    for {
+      surface <- Gen.oneOf("scan", "join", "scanx", "données", "a")
+      curie <- Gen.oneOf("e:1", "e:2", "e:10", "e:b")
+      cls <- Gen.oneOf("c1", "c2")
+      prior <- Gen.oneOf(0.0, -0.0, 0.5, 1.0, 1.0, -1.0)
+    } yield DictEntry(surface, curie, cls, prior)))
+
+  /** The winner pick `MentionDict.build` had before its one-sort pass. */
+  private def groupByWinners(entries: Seq[DictEntry]): Seq[DictEntry] =
+    entries.groupBy(_.surface).toSeq.sortBy(_._1).map { case (_, es) => es.minBy(e => (-e.prior, e.curie)) }
+
+  property("MentionDict.build winners and pattern order == the groupBy/minBy pick") =
+    forAll(dictEntries) { entries =>
+      // a case-class compare takes -0.0 == 0.0; the raw bits do not
+      def exact(es: Seq[DictEntry]) =
+        es.map(e => (e.surface, e.curie, e.cls, java.lang.Double.doubleToRawLongBits(e.prior)))
+      val dict = MentionDict.build(entries)
+      val want = groupByWinners(entries)
+      exact(dict.linkFor.toSeq) == exact(want) && dict.trie.patterns.toSeq == want.map(_.surface)
+    }
 }
 
 object SpanPipelineProps extends Properties("SpanPipeline") {

@@ -32,9 +32,11 @@ object Explain {
         val docs = spark.read.parquet(dir).as[graft.model.Doc]
         KgPipeline.analytics(spark).mentionSets(docs).explain("formatted")
       } else if (name == "fused_triples") {
-        // the fused triple table over the mention-set cache: the rank+pair
-        // combiner must appear ONCE (checkpointed distinct); mention/doc
-        // branches are thin cache selects + broadcast joins
+        // the fused triple table over the mention-set cache: every key
+        // consumer must read ONE checkpointed RDD; mention/doc
+        // branches are thin cache selects + broadcast joins. The key-block
+        // exchange runs in that RDD's lineage, outside the Catalyst plan,
+        // so its lineage prints after the plan.
         import spark.implicits._
         val dir = BenchPipeline.ensureInput(spark, 2000)
         val docs = spark.read.parquet(dir).as[graft.model.Doc]
@@ -42,6 +44,10 @@ object Explain {
         val ms = pipe.mentionSets(docs).persist()
         ms.count()
         pipe.triplesFromSets(ms).explain("formatted")
+        println("== key-block exchange (RDD lineage) ==")
+        println(graft.extract.CoocCombine.distinctPairAndRankKeys(
+          ms.select(org.apache.spark.sql.functions.col("pm")).as[Array[Long]], pipe.bcDict,
+          graft.extract.Mentions.DefaultMaxEntitiesPerDoc).rdd.toDebugString)
       } else SparkEntry.queries.get(name) match {
         case Some(fn) => fn(spark, sfDir).explain("formatted")
         case None     => println(s"unknown query $name")
