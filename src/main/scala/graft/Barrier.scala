@@ -2,18 +2,29 @@ package graft
 
 import org.apache.spark.sql.Dataset
 
-/** The one lineage barrier in main: every materialization of a shared
-  * intermediate (an operator's multi-consumer frame, an iterative round,
-  * a per-corpus artifact) goes through `Barrier`, so one rule decides how
-  * it is stored:
+/** The one lineage barrier in main, and the one owner of every frame main
+  * materializes and hands out: every materialization of a shared
+  * intermediate (an operator's multi-consumer frame, an iterative round, a
+  * per-corpus artifact, a returned working set or pivot base, a session's
+  * accumulated set) goes through `Barrier`, so one rule decides how it is
+  * stored:
   *
   *  - with a SparkContext checkpoint dir configured (cluster operation)
   *    and `spark.graft.barrier` not forced to `local`, the barrier is a
   *    RELIABLE lazy `Dataset.checkpoint` — on executor loss the cluster FS
   *    re-serves the blocks, recomputing and failing nothing;
-  *  - otherwise (the sandbox default) a lazy `localCheckpoint` — blocks
-  *    are freed by the ContextCleaner once the dataset is unreachable (no
-  *    CacheManager entry to leak, unlike `persist`).
+  *  - otherwise (the sandbox default) a lazy `localCheckpoint`.
+  *
+  * Neither leaves a CacheManager entry: the blocks are freed by the
+  * ContextCleaner once the dataset is unreachable, so no caller has to
+  * release a barriered frame (a `persist` would live until the application
+  * ends). A cache a method uses only itself is not a barrier: that method
+  * persists it and unpersists it in a `finally` (`SourceHygieneSpec`).
+  *
+  * Both branches evaluate the input once (BarrierSpec). A lazy reliable
+  * `checkpoint` alone only marks the RDD, so its write job re-runs the
+  * whole plan after the first action; checkpointing a local checkpoint
+  * instead lets that write read the first action's blocks.
   *
   * `spark.graft.barrier=local` opts a cluster out (and lets tests restore
   * the default after exercising the reliable branch). Both branches are
@@ -26,9 +37,10 @@ import org.apache.spark.sql.Dataset
 object Barrier {
   def apply[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
+    val local = ds.localCheckpoint(eager = false)
     if (spark.sparkContext.getCheckpointDir.isDefined
         && spark.conf.get("spark.graft.barrier", "auto") != "local")
-      ds.checkpoint(eager = false)
-    else ds.localCheckpoint(eager = false)
+      local.checkpoint(eager = false)
+    else local
   }
 }

@@ -78,7 +78,6 @@ object BenchSkew {
     val (_, _, ts) = pipe.runFused(docs)
     val nTriples = ts.count()
     val sec = (System.nanoTime() - t0) / 1e9
-    spark.sharedState.cacheManager.clearCache()
     Thread.sleep(500) // let the listener drain
     val rep = stageSkewReport(stats)
     val dominant = {

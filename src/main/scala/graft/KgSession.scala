@@ -288,11 +288,12 @@ final class KgSession(
   private var accEdges: Option[Dataset[KgEdge]] = None
 
   /** In-memory path: accumulate translated entities (deduped across calls,
-    * like the reference's `add`, _core.py:463-481). Accumulated sets are
-    * cached and materialized before the seen snapshot advances. */
+    * like the reference's `add`, _core.py:463-481). Each call's fresh set
+    * goes behind a [[Barrier]], built (one count) before the seen snapshot
+    * advances; the blocks live as long as the session holds the set. */
   def addNodes(raw: Dataset[RawNode]): Unit =
     dedupNodesAgainstSeen(Translate.nodes(raw, bcCtx)) { fresh =>
-      val kept = fresh.cache()
+      val kept = Barrier(fresh)
       kept.count()
       accNodes = Some(accNodes.map(_.union(kept)).getOrElse(kept))
     }
@@ -301,7 +302,7 @@ final class KgSession(
     val entities = Translate.edges(raw, bcCtx).cache()
     try {
       dedupRelsAgainstSeen(entities.filter(_.rel != null).map(_.rel)) { rels =>
-        val kept = rels.cache()
+        val kept = Barrier(rels)
         kept.count()
         val relNodes = kept.map(_.node)
         val relEdges = kept.flatMap(r => Seq(r.sourceEdge, r.targetEdge))
@@ -309,26 +310,20 @@ final class KgSession(
         accEdges = Some(accEdges.map(_.union(relEdges)).getOrElse(relEdges))
       }
       dedupEdgesAgainstSeen(entities.filter(_.edge != null).map(_.edge)) { plain =>
-        val kept = plain.cache()
+        val kept = Barrier(plain)
         kept.count()
         accEdges = Some(accEdges.map(_.union(kept)).getOrElse(kept))
       }
     } finally entities.unpersist(blocking = false)
   }
 
-  private var frameBases: Seq[DataFrame] = Nil
-
   /** Per-label property-pivoted frames (reference `to_df`, in_memory path).
-    * The frames of one call share a persisted base projection; a repeat
-    * call releases the previous call's bases (no cache growth across
-    * calls — the frames a caller still holds just recompute). */
-  def toDf(): ListMap[String, DataFrame] = {
-    frameBases.foreach(_.unpersist(blocking = false))
-    val n = accNodes.map(Tables.nodeFramesWithHandle(ctx, _))
-    val e = accEdges.map(Tables.edgeFramesWithHandle(ctx, _))
-    frameBases = (n.toSeq ++ e.toSeq).map(_._2)
-    n.map(_._1).getOrElse(ListMap.empty) ++ e.map(_._1).getOrElse(ListMap.empty)
-  }
+    * The frames of one call share a barriered base projection
+    * ([[Tables.nodeFrames]]), freed once the caller drops the frames, so
+    * repeated calls grow no cache and earlier frames stay valid. */
+  def toDf(): ListMap[String, DataFrame] =
+    accNodes.map(Tables.nodeFrames(ctx, _)).getOrElse(ListMap.empty) ++
+      accEdges.map(Tables.edgeFrames(ctx, _)).getOrElse(ListMap.empty)
 
   /** (nodesDF, edgesDF) pair — the networkx-analogue representation. */
   def toGraph(): (DataFrame, DataFrame) = (
@@ -345,20 +340,8 @@ final class KgSession(
     * (source_id, target_id, relationship_label). */
   def toNetworkx(): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions._
-    // release the previous call's persisted bases, same policy as toDf()
-    // (repeated toNetworkx()/getKg() calls must not grow cache memory;
-    // frames a caller still holds just recompute) — ADVICE r6
-    frameBases.foreach(_.unpersist(blocking = false))
-    frameBases = Nil
-    val nodesDf = accNodes.flatMap { ns =>
-      val (frames, base) = Tables.nodeFramesWithHandle(ctx, ns)
-      frameBases = frameBases :+ base
-      frames.values.map(df => df.select(col("node_id"), col("node_label"),
-        to_json(struct(df.columns.filterNot(Set("node_id", "node_label"))
-          .map(col).toIndexedSeq: _*)).as("attrs")))
-        .reduceOption(_ unionByName _)
-    }.getOrElse(Seq.empty[(String, String, String)]
-      .toDF("node_id", "node_label", "attrs"))
+    val nodesDf = accNodes.flatMap(Tables.nodeAttrs(ctx, _))
+      .getOrElse(Seq.empty[(String, String, String)].toDF("node_id", "node_label", "attrs"))
     val edgesDf = accEdges.map(_.toDF().select(
       col("src").as("source_id"),
       col("tgt").as("target_id"),

@@ -21,7 +21,10 @@ import graft.translate.Translate
   *    would force ObjectHashAggregate's sort-based fallback — measured
   *    15x slower at 300k docs); the fused path aggregates ints only;
   *  - property bags are attached AFTER the shuffles, in narrow maps;
-  *  - the dictionary/ontology side is broadcast, never shuffled.
+  *  - the dictionary/ontology side is broadcast, never shuffled;
+  *  - a run's working set (the extraction output every consumer reads)
+  *    sits behind ONE [[Barrier]]: extracted once, and its blocks freed
+  *    once the returned datasets are unreachable — nothing to release.
   * Total shuffle exchanges per run: on the string path ([[run]]) the
   * entity distinct and the co-occurrence aggregate, both over thin rows
   * (doc ids are run-distinct, no shuffle); on the fused triple table
@@ -128,7 +131,7 @@ final class KgPipeline(
       propsCol(("n", col("n"), "int")).as("props"),
     ).as[KgEdge]
 
-  /** Co-occurrence edges derived from the (persisted) DocMention table —
+  /** Co-occurrence edges derived from the (barriered) DocMention table —
     * no second corpus scan / trie pass; see
     * [[Mentions.cooccurrencePairsFromDocMentions]] for the contiguity
     * contract. This is the path [[run]] uses: one extraction pass feeds
@@ -170,11 +173,11 @@ final class KgPipeline(
   }
 
   /** Full run: (nodes, mention+cooc edges, triples). The extraction output
-    * is persisted and feeds every downstream consumer — the corpus is
-    * scanned (and the trie run) exactly ONCE per run. */
+    * sits behind a [[Barrier]] and feeds every downstream consumer — the
+    * corpus is scanned (and the trie run) exactly ONCE per run, and its
+    * blocks are freed once the returned datasets are unreachable. */
   def run(docs: Dataset[Doc]): (Dataset[KgNode], Dataset[KgEdge], Dataset[Triple]) = {
-    val dm = docMentions(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dm = Barrier(docMentions(docs))
     val ns = nodes(dm)
     val es = edges(dm)
     (ns, es, triples(ns, es))
@@ -263,7 +266,7 @@ final class KgPipeline(
       propsCol(("n_docs", col("n_docs"), "int")).as("props"),
     ).as[KgEdge]
 
-  /** [[triples]] built STRAIGHT from the packed mention-set cache — no
+  /** [[triples]] built STRAIGHT from the packed mention sets — no
     * KgNode/KgEdge row building, no property bags, no count aggregation (a
     * triple is presence, not frequency). Output identical to
     * `triples(nodesFromSets(ms), mentionEdgesFromSets(ms) union
@@ -279,22 +282,22 @@ final class KgPipeline(
     *    consumer), so the corpus-sized scan + key exchange run ONCE per
     *    action no matter how many consumers sit above (measured: AQE did
     *    NOT stage-reuse analyzer-cloned copies of an object-operator
-    *    subtree, so plan-level sharing alone re-scanned the cache per
-    *    consumer). The exchange lives in the barrier's RDD lineage, outside
-    *    any AQE plan, so the lazy barrier runs nothing while the plan is
-    *    built. The barrier is a leaf — a free pushdown barrier. Without a
-    *    checkpoint dir its blocks are local, so an executor loss fails the
-    *    job; acceptable here because the data is ≤ C(|entities|, 2) longs
-    *    and job-level retry is cheap at that size;
+    *    subtree, so plan-level sharing alone re-scanned the mention sets
+    *    per consumer). The exchange lives in the barrier's RDD lineage,
+    *    outside any AQE plan, so the lazy barrier runs nothing while the
+    *    plan is built. The barrier is a leaf — a free pushdown barrier.
+    *    Without a checkpoint dir its blocks are local, so an executor loss
+    *    fails the job; acceptable here because the data is
+    *    ≤ C(|entities|, 2) longs and job-level retry is cheap at that size;
     *  - entity rdf:type triples decode the barrier's self keys, distinct
     *    entity ranks already: no exchange;
     *  - mention triples are explode + a 3-column select that decodes the
     *    rank by a projection through the broadcast dictionary (the KgEdge
     *    path built a props bag per row);
-    *  - doc rdf:type triples are a doc_id-only cache read (nested-column
-    *    pruned) + the same broadcast anti-join as the node path — the
-    *    constant obj is resolved on the driver from the SAME translation
-    *    tables ([[labelTypeMap]]), so parity cannot drift;
+    *  - doc rdf:type triples are a doc_id projection of the mention sets
+    *    + the same broadcast anti-join as the node path — the constant obj
+    *    is resolved on the driver from the SAME translation tables
+    *    ([[labelTypeMap]]), so parity cannot drift;
     *  - co-occurrence triples decode the distinct pairs only (no n_docs
     *    sum — the aggregate the edge path pays is dropped, not pruned). */
   def triplesFromSets(ms: DataFrame,
@@ -335,9 +338,10 @@ final class KgPipeline(
     * (spec-proven). The triple table is built by
     * [[triplesFromSets]] (same rows as `triples(ns, es)`, shared-scan
     * plan); `ns`/`es` stay lazy, so a triples-only consumer never pays the
-    * entity-row builds. */
+    * entity-row builds. The mention sets sit behind a [[Barrier]], so the
+    * trie pass runs once per run and no CacheManager entry outlives it. */
   def runFused(docs: Dataset[Doc]): (Dataset[KgNode], Dataset[KgEdge], Dataset[Triple]) = {
-    val ms = mentionSets(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ms = Barrier(mentionSets(docs))
     val ns = nodesFromSets(ms)
     val es = mentionEdgesFromSets(ms).union(cooccurrenceEdgesFromSets(ms))
     (ns, es, triplesFromSets(ms))

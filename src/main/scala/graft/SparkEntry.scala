@@ -297,7 +297,7 @@ object SparkEntry {
         .map(_.id)
       val nodes0 = graft.translate.Translate.nodes(
         graft.extract.Mentions.toRawNodesWithDocs(
-          graft.extract.Mentions.detect(docs, pipe.bcDict)), pipe.bcCtx)
+          graft.extract.Mentions.detect(docs, pipe.bcDict), pipe.bcDict), pipe.bcCtx)
       // ttl = null: unbounded state is exact, which the batch-twin oracle
       // needs (the TTL path has its own spec)
       val adds = Streaming.nodeAddsStream(nodes0, prevIds, ttl = null)
@@ -573,18 +573,11 @@ object SparkEntry {
     }),
     "kg_node_frame" -> ((s, dir) => {
       // in-memory KG materialization (reference in_memory/_pandas.py):
-      // pivoted per-label frame for one class. The deduped node table is
-      // barriered so the frame machinery's label probe + frame scan run
-      // one pipeline pass, not two
+      // pivoted per-label frame for one class. The frames' own barrier
+      // makes the label probe + frame scan one pipeline pass, not two
       val pipe = KgPipeline.analytics(s)
-      val ns = Barrier(pipe.nodes(pipe.docMentions(kgDocs(s, dir))))
-      // single-frame consumer: release the shared frame base immediately —
-      // it buys nothing when only one label's frame is read, and holding
-      // it would leak a CacheManager entry per invocation (ADVICE r7 #1);
-      // the returned frame recomputes from the checkpointed ns in one scan
-      val (frames, base) = graft.sinks.Tables.nodeFramesWithHandle(pipe.bcCtx.value, ns)
-      base.unpersist(blocking = false)
-      frames("relational operator")
+      val ns = pipe.nodes(pipe.docMentions(kgDocs(s, dir)))
+      graft.sinks.Tables.nodeFrames(pipe.bcCtx.value, ns)("relational operator")
         .select(col("node_id"), col("node_label"), col("name"))
     }),
     "kg_edge_frame" -> ((s, dir) => {
@@ -593,16 +586,9 @@ object SparkEntry {
       // four relationship columns PLUS one column per property)
       val pipe = KgPipeline.analytics(s)
       val dm = Barrier(pipe.docMentions(kgDocs(s, dir)))
-      // barrier the edge union too: the frame machinery's label probe and
-      // the returned frame's scan are two consumers, and the co-occurrence
-      // pair aggregate is expensive enough that re-deriving it from the dm
-      // checkpoint per consumer measurably loses to replaying the
-      // (edge-sized) checkpoint blocks
-      val es = Barrier(pipe.edges(dm))
-      // single-frame consumer: release the shared base (see kg_node_frame)
-      val (frames, base) = graft.sinks.Tables.edgeFramesWithHandle(pipe.bcCtx.value, es)
-      base.unpersist(blocking = false)
-      frames("COOCCURS_WITH")
+      // the label probe and the returned frame both read the frames' own
+      // barrier, so the co-occurrence pair aggregate runs once
+      graft.sinks.Tables.edgeFrames(pipe.bcCtx.value, pipe.edges(dm))("COOCCURS_WITH")
         .select(col("source_id"), col("target_id"),
           col("relationship_label"), col("n_docs"))
     }),
@@ -660,7 +646,6 @@ object SparkEntry {
           Await.result(nF, scala.concurrent.duration.Duration.Inf)
           Await.result(eF, scala.concurrent.duration.Duration.Inf)
         }
-        dm.unpersist(blocking = false)
         // the other batch sinks share the SAME part grammar on disk; they
         // reuse the probed layouts and only differ in script codegen
         val neo = new graft.sinks.Neo4jCsvSink(ctx, out)
@@ -679,7 +664,7 @@ object SparkEntry {
           script("sqlite", sq.constructImportCall()) ++
           script("arango", ar.constructImportCall()))
           .toDF("kind", "seq", "line")
-      } finally dropWorkDir(s, out)
+      } finally { dm.unpersist(blocking = false); dropWorkDir(s, out) }
     }),
     "kg_rdf_reified" -> ((s, dir) => {
       // reified-edge triple table (reference RDF semantics: edges become

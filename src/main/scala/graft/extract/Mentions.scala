@@ -26,6 +26,13 @@ final class MentionDict private (
   @transient lazy val byRank: Array[DictEntry] =
     linkFor.groupBy(_.curie).values.map(_.minBy(e => (e.cls, e.surface)))
       .toArray.sortBy(_.curie)
+  /** `curie`'s rank: a binary search of [[byRank]], which is in curie
+    * order. */
+  def rankOfCurie(curie: String): Int =
+    byRank.view.map(_.curie).search(curie) match {
+      case scala.collection.Searching.Found(r) => r
+      case _ => throw new NoSuchElementException(s"$curie is not a dictionary entity")
+    }
   /** pattern index -> its entity's rank (aliases share one). */
   @transient lazy val rankOf: Array[Int] = {
     val rank = byRank.iterator.map(_.curie).zipWithIndex.toMap
@@ -350,12 +357,18 @@ object Mentions {
   /** Entity AND document nodes from text mentions, one narrow pass: per
     * occurrence, the CURIE entity node plus its document's node (the
     * streaming twin of the batch path's entity-distinct + doc-distinct —
-    * downstream cross-batch dedup collapses the repeats). */
-  def toRawNodesWithDocs(mentions: Dataset[Mention]): Dataset[RawNode] = {
+    * downstream cross-batch dedup collapses the repeats). The entity node
+    * takes its canonical `(cls, surface)` from the dictionary
+    * ([[MentionDict.byRank]]), as on the batch paths, whichever alias
+    * matched; the matched surface stays on the [[Mention]] as provenance. */
+  def toRawNodesWithDocs(mentions: Dataset[Mention],
+      bcDict: Broadcast[MentionDict]): Dataset[RawNode] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[RawNode]
     mentions.filter(_.cls != "media").flatMap { m =>
+      val dict = bcDict.value
+      val e = dict.byRank(dict.rankOfCurie(m.curie))
       Seq(
-        RawNode(m.curie, m.cls, Props.of("name" -> PV.str(m.surface))),
+        RawNode(e.curie, e.cls, Props.of("name" -> PV.str(e.surface))),
         RawNode(m.doc_id, "document", Props.empty))
     }
   }

@@ -115,32 +115,33 @@ object AnnOps {
     // per iteration); persist the input once so iterations read the cache,
     // not the source scan
     val cached = embeddings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cents = ivfCentroids(cached, nList)
-    var t = 0
-    while (t < iters) {
-      val sums = ivfAssign(cached, cents)
-        .select(col("ivf_cid"),
-          posexplode(quantize(col("embedding"))).as(Seq("pos", "x")))
-        .groupBy(col("ivf_cid"), col("pos"))
-        .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
-        .collect()
-      val byCid = sums.groupBy(_.getInt(0))
-      cents = cents.map { case (cid, oldQ, oldNorm) =>
-        byCid.get(cid) match {
-          case Some(rows) =>
-            val q = new Array[Long](oldQ.length)
-            rows.foreach { r =>
-              q(r.getInt(1)) = rhaz(r.getLong(2).toDouble / r.getLong(3))
-            }
-            val norm = math.sqrt(q.map(x => x.toDouble * x).sum)
-            if (norm == 0.0) (cid, oldQ, oldNorm) else (cid, q, norm)
-          case None => (cid, oldQ, oldNorm) // empty list: keep previous
+    try {
+      var cents = ivfCentroids(cached, nList)
+      var t = 0
+      while (t < iters) {
+        val sums = ivfAssign(cached, cents)
+          .select(col("ivf_cid"),
+            posexplode(quantize(col("embedding"))).as(Seq("pos", "x")))
+          .groupBy(col("ivf_cid"), col("pos"))
+          .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
+          .collect()
+        val byCid = sums.groupBy(_.getInt(0))
+        cents = cents.map { case (cid, oldQ, oldNorm) =>
+          byCid.get(cid) match {
+            case Some(rows) =>
+              val q = new Array[Long](oldQ.length)
+              rows.foreach { r =>
+                q(r.getInt(1)) = rhaz(r.getLong(2).toDouble / r.getLong(3))
+              }
+              val norm = math.sqrt(q.map(x => x.toDouble * x).sum)
+              if (norm == 0.0) (cid, oldQ, oldNorm) else (cid, q, norm)
+            case None => (cid, oldQ, oldNorm) // empty list: keep previous
+          }
         }
+        t += 1
       }
-      t += 1
-    }
-    cached.unpersist(blocking = false)
-    cents
+      cents
+    } finally cached.unpersist(blocking = false)
   }
 
   /** IVF list assignment: each vector goes to its max-cosine centroid

@@ -33,17 +33,12 @@ final class NetworkxSink(
   private var edgesWritten = false
 
   def writeNodes(nodes: Dataset[KgNode]): Unit = {
-    val (frames, base) = Tables.nodeFramesWithHandle(ctx, nodes)
-    val all = frames.values.map(df => df.select(col("node_id"), col("node_label"),
-      to_json(struct(df.columns.toIndexedSeq.filterNot(Set("node_id", "node_label")).map(col): _*))
-        .as("attrs")))
-    if (all.nonEmpty) {
-      all.reduce(_ unionByName _).write
+    Tables.nodeAttrs(ctx, nodes).foreach { all =>
+      all.write
         .mode(if (nodesWritten) "append" else "overwrite")
         .parquet(s"$graphDir/nodes.parquet")
       nodesWritten = true
     }
-    base.unpersist(blocking = false)
   }
 
   def writeEdges(edges: Dataset[KgEdge]): Unit = {

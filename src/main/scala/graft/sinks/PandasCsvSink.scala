@@ -85,15 +85,11 @@ final class PandasCsvSink(
   }
 
   def writeNodes(nodes: Dataset[KgNode]): Unit = {
-    val (frames, base) = Tables.nodeFramesWithHandle(ctx, nodes)
-    frames.foreach { case (label, df) => writeFrame(label, df, "node_id") }
-    base.unpersist(blocking = false)
+    Tables.nodeFrames(ctx, nodes).foreach { case (label, df) => writeFrame(label, df, "node_id") }
   }
 
   def writeEdges(edges: Dataset[KgEdge]): Unit = {
-    val (frames, base) = Tables.edgeFramesWithHandle(ctx, edges)
-    frames.foreach { case (label, df) => writeFrame(label, df, "source_id") }
-    base.unpersist(blocking = false)
+    Tables.edgeFrames(ctx, edges).foreach { case (label, df) => writeFrame(label, df, "source_id") }
   }
 
   def writeRelAsNodes(ds: Dataset[RelAsNode]): Unit = {

@@ -16,102 +16,62 @@ import graft.model._
 object Tables {
 
   /** Pivot a node Dataset into per-label DataFrames with one column per
-    * declared (or first-row) property.
-    *
-    * Scale shape: layout discovery is ONE job — a single
-    * `groupBy(label).agg(first(props))` pass yields both the label list and
-    * the first-row layouts for schema-undeclared labels (the previous
-    * per-label `filter + head()` loop ran N full scans for N labels, an
-    * anti-pattern at hundreds of labels). The returned frames are lazy
-    * filters over one persisted projection, so materializing all of them
-    * costs one cached scan, not N table scans. Callers that fully
-    * materialize should use [[nodeFramesWithHandle]] and unpersist the
-    * handle when done. */
+    * declared (or first-row) property; the frames carry the injected
+    * id/preferred_id too (reference frames are json_normalize of the full
+    * property dict). See [[pivot]] for the scale shape. */
   def nodeFrames(ctx: KgContext, nodes: Dataset[KgNode]): ListMap[String, DataFrame] =
-    nodeFramesWithHandle(ctx, nodes)._1
-
-  /** [[nodeFrames]] plus the persisted base the frames read from — callers
-    * that consume every frame eagerly should unpersist it afterwards. */
-  def nodeFramesWithHandle(ctx: KgContext, nodes: Dataset[KgNode])
-      : (ListMap[String, DataFrame], DataFrame) = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    // thin-row discipline (VERDICT r1): the label probe is a codegen'd
-    // distinct on one string column; the fat first(props)
-    // ObjectHashAggregate runs ONLY over labels the schema does not
-    // declare — for a fully-declared schema no props row is ever
-    // aggregated
-    // ONE pass for label list + first-row layouts (the node stream crosses
-    // an object boundary, so the previous separate "thin" label distinct
-    // built full rows anyway — see BatchSink.probeNodeLayouts)
-    val firstRows = nodes.groupBy(col("label")).agg(first(col("props")).as("props"))
-      .as[(String, Seq[Prop])].collect().sortBy(_._1)
-    val labels = firstRows.map(_._1)
-    val firsts: Map[String, Seq[Prop]] = firstRows.toMap
-    val base = nodes.select(
-      col("id").as("node_id"),
-      col("label").as("node_label"),
-      map_from_entries(transform(col("props"),
-        p => struct(p.getField("k"), coalesce(p.getField("v").getField("s"),
-          array_join(p.getField("v").getField("arr"), "|"))))).as("_p"),
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val frames = ListMap(labels.toIndexedSeq.map { label =>
-      // declared props + the injected id/preferred_id (reference frames
-      // carry them: json_normalize of the full property dict)
-      val keys: Seq[(String, String)] = ctx.spec(label).map(_.properties.toSeq).filter(_.nonEmpty)
+    pivot(nodes.select(col("id").as("node_id"), col("label").as("node_label"),
+        col("props").as("_p")), "node_label",
+      (label, bag) => ctx.spec(label).map(_.properties.toSeq).filter(_.nonEmpty)
         .map(_ ++ Seq("id" -> "str", "preferred_id" -> "str"))
-        .getOrElse(firsts(label).map(p => p.k -> p.v.t))
-      val sub = base.filter(col("node_label") === label)
-      val withProps = keys.foldLeft(sub) { case (df, (k, t)) =>
-        val raw = element_at(col("_p"), k)
-        val typed = t match {
-          case "int" | "long" | "integer"             => raw.cast("long")
-          case "float" | "double" | "dbl"             => raw.cast("double")
-          case "bool" | "boolean"                     => lower(raw).cast("boolean")
-          case _                                      => raw
-        }
-        df.withColumn(k, typed)
-      }
-      label -> withProps.drop("_p")
-    }: _*)
-    (frames, base)
-  }
+        .getOrElse(bag.map(p => p.k -> p.v.t)))
 
-  def edgeFrames(ctx: KgContext, edges: Dataset[KgEdge]): ListMap[String, DataFrame] =
-    edgeFramesWithHandle(ctx, edges)._1
-
-  /** Same one-persisted-projection shape as [[nodeFramesWithHandle]], and
-    * the same property pivot: the reference's edge frames are
+  /** The edge side of [[nodeFrames]]: the reference's edge frames are
     * `json_normalize(get_dict())` — the four fixed relationship columns
     * PLUS one column per property (in_memory/_pandas.py:87-95; VERDICT r3
-    * flagged that this side dropped the property bag). Declared property
-    * types drive the column casts; schema-undeclared labels fall back to
-    * first-row runtime types, discovered in the same single
-    * groupBy/first(props) job as the label list. */
-  def edgeFramesWithHandle(ctx: KgContext, edges: Dataset[KgEdge])
-      : (ListMap[String, DataFrame], DataFrame) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // same one-pass label+firsts aggregate as the node side
-    val firstRows = edges.groupBy(col("label")).agg(first(col("props")).as("props"))
-      .as[(String, Seq[Prop])].collect().sortBy(_._1)
-    val labels = firstRows.map(_._1)
-    val firsts: Map[String, Seq[Prop]] = firstRows.toMap
-    val base = edges.select(
-      col("relId").as("relationship_id"),
-      col("src").as("source_id"),
-      col("tgt").as("target_id"),
-      col("label").as("relationship_label"),
-      map_from_entries(transform(col("props"),
-        p => struct(p.getField("k"), coalesce(p.getField("v").getField("s"),
-          array_join(p.getField("v").getField("arr"), "|"))))).as("_p"),
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val frames = ListMap(labels.toIndexedSeq.map { label =>
-      val keys: Seq[(String, String)] = ctx.schemaClassForEdgeLabel(label)
+    * flagged that this side dropped the property bag). */
+  def edgeFrames(ctx: KgContext, edges: Dataset[KgEdge]): ListMap[String, DataFrame] =
+    pivot(edges.select(col("relId").as("relationship_id"), col("src").as("source_id"),
+        col("tgt").as("target_id"), col("label").as("relationship_label"), col("props").as("_p")),
+      "relationship_label", (label, bag) => ctx.schemaClassForEdgeLabel(label)
         .flatMap(ctx.spec).map(_.properties.toSeq).filter(_.nonEmpty)
-        .getOrElse(firsts(label).map(p => p.k -> p.v.t))
-      val sub = base.filter(col("relationship_label") === label)
-      val withProps = keys.foldLeft(sub) { case (df, (k, t)) =>
+        .getOrElse(bag.map(p => p.k -> p.v.t)))
+
+  /** Every node frame as one `(node_id, node_label, attrs)` frame, `attrs`
+    * the JSON of the frame's property columns: the shape the NetworkX
+    * loader reads (`nx.from_pandas_edgelist` plus node attributes). None
+    * without nodes. */
+  def nodeAttrs(ctx: KgContext, nodes: Dataset[KgNode]): Option[DataFrame] =
+    nodeFrames(ctx, nodes).values.map(df => df.select(col("node_id"), col("node_label"),
+      to_json(struct(df.columns.toIndexedSeq.filterNot(Set("node_id", "node_label")).map(col): _*))
+        .as("attrs"))).reduceOption(_ unionByName _)
+
+  /** Per-label frames over `rows`, whose `_p` column is the property bag:
+    * one frame per `labelCol` value, with one column per `(key, type)` that
+    * `keysOf(label, its first row's bag)` names — declared property types
+    * drive the casts, schema-undeclared labels fall back to first-row
+    * runtime types.
+    *
+    * Scale shape: `rows` goes behind one [[graft.Barrier]], and ONE job —
+    * a single `groupBy(label).agg(first(_p))` over it, which yields both
+    * the label list and the first-row layouts — evaluates the input and
+    * builds the barrier (the previous per-label `filter + head()` loop ran
+    * N full scans for N labels, an anti-pattern at hundreds of labels).
+    * Every frame is a lazy filter over the barrier that pivots only its
+    * own rows, so materializing all of them re-reads the barrier, never
+    * the input; its blocks are freed once the frames are unreachable. */
+  private def pivot(rows: DataFrame, labelCol: String,
+      keysOf: (String, Seq[Prop]) => Seq[(String, String)]): ListMap[String, DataFrame] = {
+    import rows.sparkSession.implicits._
+    val base = graft.Barrier(rows)
+    val firstRows = base.groupBy(col(labelCol)).agg(first(col("_p")))
+      .as[(String, Seq[Prop])].collect().sortBy(_._1)
+    ListMap(firstRows.toIndexedSeq.map { case (label, firstBag) =>
+      val sub = base.filter(col(labelCol) === label)
+        .withColumn("_p", map_from_entries(transform(col("_p"),
+          p => struct(p.getField("k"), coalesce(p.getField("v").getField("s"),
+            array_join(p.getField("v").getField("arr"), "|"))))))
+      val withProps = keysOf(label, firstBag).foldLeft(sub) { case (df, (k, t)) =>
         val raw = element_at(col("_p"), k)
         val typed = t match {
           case "int" | "long" | "integer" => raw.cast("long")
@@ -123,7 +83,6 @@ object Tables {
       }
       label -> withProps.drop("_p")
     }: _*)
-    (frames, base)
   }
 
   /** Per-label entity counts + schema presence — the schema-info reflection

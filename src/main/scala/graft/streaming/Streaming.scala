@@ -148,7 +148,7 @@ object Streaming {
     dedupNodesStream(
       graft.translate.Translate.nodes(
         graft.extract.Mentions.toRawNodesWithDocs(
-          graft.extract.Mentions.detect(docs, bcDict)), bcCtx),
+          graft.extract.Mentions.detect(docs, bcDict), bcDict), bcCtx),
       ttl)
 
   /** Edge half of the streaming KG slice: the SAME batch adapter code

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.corpus.{AnalyticsDomain, Corpus}
 import graft.extract.{AhoCorasick, DictEntry, MentionDict, Mentions}
@@ -541,7 +542,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(pairRows(pipe.cooccurrencePairsFromSets(pipe.mentionSets(docs))) == wantPairs)
     assert(pairRows(Mentions.cooccurrencePairsFromDocMentions(
       pipe.docMentions(docs).coalesce(1))) == wantPairs)
-    spark.catalog.clearCache()
+  }
+
+  test("alias dictionary: streamed entity nodes take the canonical name, as run/runFused do") {
+    import graft.model.{Doc, Span}
+    val pipe = new KgPipeline(spark, AnalyticsDomain.context(), aliasDict)
+    // e:a is matched only by its alias in d1; its canonical surface is alpha
+    val docs = Seq(Doc("d1", Seq(Span("text", "alphax beta", null, 0))),
+      Doc("d2", Seq(Span("text", "gamma alphax alpha", null, 0)))).toDS()
+    val docLabel = pipe.ctxRef.inputLabelToClass("document")
+    def entities(ns: Dataset[graft.model.KgNode]) = ns.collect().filter(_.label != docLabel).toSet
+    val streamed = entities(graft.translate.Translate.nodes(
+      Mentions.toRawNodesWithDocs(Mentions.detect(docs, pipe.bcDict), pipe.bcDict), pipe.bcCtx))
+    assert(streamed.map(_.id) == Set("e:a", "e:b", "e:c"))
+    assert(streamed == entities(pipe.nodes(pipe.docMentions(docs))))
+    assert(streamed == entities(pipe.runFused(docs)._1))
   }
 
   test("per-doc cap counts entities: an entity's score sums over its aliases") {

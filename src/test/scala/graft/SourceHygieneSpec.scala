@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Scala sources are plain text: a raw control byte in a string literal
   * makes grep and ripgrep classify the file as binary and skip it, so such
   * bytes are written as escapes (`"\u0001"`) instead. Main has one lineage
-  * barrier, [[Barrier]]: no other main source checkpoints a dataset. */
+  * barrier, [[Barrier]]: no other main source checkpoints a dataset, and
+  * every frame main materializes and hands out goes through it; a cache
+  * that one block uses only itself is released in that block's `finally`. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private def scalaSources(root: String, atLeast: Int): Vector[java.nio.file.Path] = {
@@ -67,6 +69,31 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(bad.isEmpty, bad.mkString(
       s"${bad.size} raw checkpoint call(s); route them through graft.Barrier:\n", "\n", ""))
+  }
+
+  test("every persist( / .cache() in main is unpersisted in a finally of the block that binds it") {
+    val site = """\.persist\(|\.cache\(\)""".r
+    val binding = """\bval\s+(\w+)\s*=""".r
+    val bad = for {
+      f <- scalaSources("src/main/scala", atLeast = 40)
+      text = stripComments(new String(Files.readAllBytes(f), "UTF-8"))
+      m <- site.findAllMatchIn(text).toVector
+      // the val the cached frame is bound to: the last one opened before the call
+      b = binding.findAllMatchIn(text.substring(0, m.start)).toVector.last
+      // the block that binds it ends where the brace depth drops below its start
+      end = {
+        var depth = 0; var i = b.start
+        while (i < text.length && depth >= 0) {
+          if (text(i) == '{') depth += 1 else if (text(i) == '}') depth -= 1
+          i += 1
+        }
+        i
+      }
+      released = (s"""finally\\s*(\\{[^}]*)?\\b${b.group(1)}\\.unpersist\\(""").r
+      if released.findFirstIn(text.substring(m.end, end)).isEmpty
+    } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${b.group(1)}"
+    assert(bad.isEmpty, bad.mkString(s"${bad.size} cache(s) with no owner; unpersist them in a " +
+      "finally of the block that uses them, or hand the frame out through graft.Barrier:\n", "\n", ""))
   }
 
   test("no .scala file under src/ contains a control byte other than tab, LF or CR") {

@@ -218,13 +218,11 @@ object SpanPipelineProps extends Properties("SpanPipeline") {
     forAll(PropGen.corpus) { docs =>
       import spark.implicits._
       val ds = spark.createDataset(docs)
-      val ok = PropGen.pipelines(spark).forall { pipe =>
+      PropGen.pipelines(spark).forall { pipe =>
         val (ns, es, ts) = pipe.run(ds)
         val (nsF, esF, tsF) = pipe.runFused(ds)
         bag(nsF) == bag(ns) && bag(esF) == bag(es) && bag(tsF) == bag(ts)
       }
-      spark.catalog.clearCache() // both runs persist their working sets
-      ok
     }
 
   property("detectPerDoc == detect aggregated; fused ExtractMentions decodes to the same rows") =

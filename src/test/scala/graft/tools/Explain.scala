@@ -32,16 +32,17 @@ object Explain {
         val docs = spark.read.parquet(dir).as[graft.model.Doc]
         KgPipeline.analytics(spark).mentionSets(docs).explain("formatted")
       } else if (name == "fused_triples") {
-        // the fused triple table over the mention-set cache: every key
-        // consumer must read ONE checkpointed RDD; mention/doc
-        // branches are thin cache selects + broadcast joins. The key-block
+        // the fused triple table over the barriered mention sets, as
+        // runFused builds it: every key consumer must read ONE checkpointed
+        // RDD; mention/doc branches are thin selects over the mention-set
+        // barrier (a Scan ExistingRDD leaf) + broadcast joins. The key-block
         // exchange runs in that RDD's lineage, outside the Catalyst plan,
         // so its lineage prints after the plan.
         import spark.implicits._
         val dir = BenchPipeline.ensureInput(spark, 2000)
         val docs = spark.read.parquet(dir).as[graft.model.Doc]
         val pipe = KgPipeline.analytics(spark)
-        val ms = pipe.mentionSets(docs).persist()
+        val ms = Barrier(pipe.mentionSets(docs))
         ms.count()
         pipe.triplesFromSets(ms).explain("formatted")
         println("== key-block exchange (RDD lineage) ==")
