@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one lineage barrier in main, and the one owner of every frame main
   * materializes and hands out: every materialization of a shared
@@ -33,14 +35,33 @@ import org.apache.spark.sql.Dataset
   * triggers jobs (the lmScore lesson); a caller that needs it built now
   * runs one action on it. `SourceHygieneSpec` keeps raw checkpoint calls
   * out of the rest of main.
+  *
+  * Each checkpoint's input stays reachable for as long as the checkpoint's
+  * RDD is, which every plan and job that reads the barrier holds. The
+  * first job to finish over a barrier checkpoints it and drops its lineage,
+  * and with it the input plan's SQL-metric accumulators; a job still
+  * computing the barrier would then report metrics the driver no longer
+  * has, and they would be lost (BarrierSpec). The input plan also holds its
+  * broadcasts, which are freed with the barrier.
   */
 object Barrier {
   def apply[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
-    val local = ds.localCheckpoint(eager = false)
+    val local = keep(ds, ds.localCheckpoint(eager = false))
     if (spark.sparkContext.getCheckpointDir.isDefined
         && spark.conf.get("spark.graft.barrier", "auto") != "local")
-      local.checkpoint(eager = false)
+      keep(local, local.checkpoint(eager = false))
     else local
+  }
+
+  /** Checkpoint RDD -> the dataset it checkpoints; weak in the key only. */
+  private val inputs = java.util.Collections.synchronizedMap(new java.util.WeakHashMap[RDD[_], Dataset[_]]())
+
+  private def keep[T](in: Dataset[T], out: Dataset[T]): Dataset[T] = {
+    out.queryExecution.logical.foreach {
+      case r: LogicalRDD => inputs.put(r.rdd, in)
+      case _ =>
+    }
+    out
   }
 }

@@ -46,6 +46,10 @@ import graft.translate.Translate
   * TTL (exact-within-horizon). Superseded snapshot versions are deleted
   * after each commit, so disk usage is one TTL-bounded snapshot per key
   * space, not a monotone version history.
+  *
+  * Output: every file a session writes (part files, snapshots, manifests,
+  * headers, the import script) goes through [[OutputFs]], so a local
+  * outDir gets no `.crc` sidecars and its writes start no `chmod` process.
   */
 final class KgSession(
     val spark: SparkSession,

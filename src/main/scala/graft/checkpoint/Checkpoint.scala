@@ -16,15 +16,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * stage) is never recomputed. The trait boundary is swappable for real
   * `spark.read.format("iceberg")` in production.
   *
-  * All filesystem access goes through the Hadoop `FileSystem` resolved from
-  * `rootDir` (ADVICE r5): an `s3a://`/`hdfs://` root works and no streams
-  * are leaked — the previous java.nio implementation silently required a
-  * POSIX mount and leaked `Files.list`/`Files.walk` fds.
+  * All filesystem access goes through the Hadoop `FileSystem` that
+  * [[graft.OutputFs]] resolves for `rootDir` (ADVICE r5): an
+  * `s3a://`/`hdfs://` root works and no streams are leaked — the previous
+  * java.nio implementation silently required a POSIX mount and leaked
+  * `Files.list`/`Files.walk` fds. A local root is written through the
+  * owner's raw local FS, snapshot data included: no `.crc` sidecars and
+  * no `chmod` process per file or directory.
   */
 final class CheckpointStore(spark: SparkSession, rootDir: String) {
 
   private val root = new Path(rootDir)
-  private def fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fs: FileSystem = graft.OutputFs.fs(root, conf)
 
   private def stageDir(stage: String): Path = new Path(root, s"stage=$stage")
   private def manifestPath(stage: String): Path = new Path(stageDir(stage), "_manifest.json")
@@ -52,12 +56,12 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
     val dir = stageDir(stage)
     val t0 = System.nanoTime()
     // no `_SUCCESS` marker: the manifest is the commit point
-    df.write.mode("overwrite").option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    df.write.options(graft.OutputFs.writeOptions(dir.toString, conf)).mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(dir.toString)
     val wallMs = (System.nanoTime() - t0) / 1000000
     // per-file (= per committed partition) lineage rows; files without
     // rows (an empty partition's schema-only file) are not listed
-    val conf = spark.sparkContext.hadoopConfiguration
     val perFile = fs.listStatus(dir).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map { st =>
@@ -80,7 +84,7 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
   /** The commit point of a [[prepare]]d stage: writes its manifest and
     * returns its read-back frame. */
   def publish(p: CheckpointStore.Prepared): DataFrame = {
-    graft.DriverFiles.write(fs, manifestPath(p.stage), p.manifest)
+    graft.OutputFs.write(manifestPath(p.stage), p.manifest, conf)
     p.frame
   }
 

@@ -16,7 +16,11 @@ final case class LabelLayout(
     propTypes: Vector[String], // declared or runtime type string per key
     labelsCell: String,        // node-only: rendered :LABEL cell
     skipId: Boolean,           // edge-only: omit id column
-)
+) {
+  /** `propKeys` as a set, built once per layout (per task on an executor),
+    * not once per rendered line. */
+  @transient lazy val propKeySet: Set[String] = propKeys.toSet
+}
 
 /** One line of a bulk-import part file. `label` is a one-letter kind tag
   * (see [[BatchSink]]) followed by the internal label; a null `label`
@@ -389,7 +393,7 @@ abstract class BatchSink(val ctx: KgContext, val outDir: String) extends EntityS
   /** Part files of a label, sorted (for import-call assembly). */
   def partsOf(fileLabel: String): Seq[String] = {
     val out = new org.apache.hadoop.fs.Path(outDir)
-    val fs = out.getFileSystem(BatchSink.hadoopConf())
+    val fs = graft.OutputFs.fs(out, BatchSink.hadoopConf())
     if (!fs.exists(out)) return Nil
     val re = (java.util.regex.Pattern.quote(fileLabel) + "-part\\d+\\.csv").r
     fs.listStatus(out).iterator.map(_.getPath.getName)
@@ -499,6 +503,10 @@ object BatchSink {
     * labels (identity by default) and may reject them before any rename;
     * the staging directory is removed either way.
     *
+    * A local `outDir` is written through [[graft.OutputFs]]: the write job
+    * takes its options and the driver its handle, so neither the staging
+    * write nor the renames create a `.crc` sidecar or spawn a `chmod`.
+    *
     * Cluster-safe commit (VERDICT r3 #2): every filesystem operation goes
     * through the Hadoop `FileSystem` API resolved from the OUTPUT path —
     * HDFS, S3A/GCS connectors and local files all work, where the previous
@@ -522,12 +530,13 @@ object BatchSink {
   ): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val out = new Path(outDir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = graft.OutputFs.fs(out, conf)
     fs.mkdirs(out)
     val tmp = new Path(out, "_graft_tmp_" + java.util.UUID.randomUUID().toString.take(8))
     try {
       // no `_SUCCESS` marker: the staging dir is deleted after the renames
-      df.write.mode("overwrite")
+      df.write.options(graft.OutputFs.writeOptions(tmp.toString, conf)).mode("overwrite")
         .option("maxRecordsPerFile", batchSize)
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .partitionBy("label")
@@ -572,17 +581,14 @@ object BatchSink {
     java.net.URLDecoder.decode(s.replace("+", "%2B"), "UTF-8")
 
   /** Small driver-written artifacts (headers, import scripts) — also via
-    * the Hadoop API so they land next to the part files on any filesystem.
-    * Takes (outDir, fileName) and joins them with Hadoop `Path`, NOT
-    * java.nio `Paths.get`, which collapses the `//` in URI outDirs
-    * (`s3a://bucket/dir` -> `s3a:/bucket/dir`, losing the authority —
-    * ADVICE r4). Returns the full path written. */
+    * the Hadoop API ([[graft.OutputFs.write]]) so they land next to the
+    * part files on any filesystem. Takes (outDir, fileName) and joins them
+    * with Hadoop `Path`, NOT java.nio `Paths.get`, which collapses the `//`
+    * in URI outDirs (`s3a://bucket/dir` -> `s3a:/bucket/dir`, losing the
+    * authority — ADVICE r4). Returns the full path written. */
   def writeDriverFile(outDir: String, fileName: String, content: String): String = {
-    val dir = new org.apache.hadoop.fs.Path(outDir)
-    val hp = new org.apache.hadoop.fs.Path(dir, fileName)
-    val fs = hp.getFileSystem(hadoopConf())
-    fs.mkdirs(dir)
-    graft.DriverFiles.write(fs, hp, content)
+    val hp = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(outDir), fileName)
+    graft.OutputFs.write(hp, content, hadoopConf())
     hp.toString
   }
 
@@ -590,12 +596,17 @@ object BatchSink {
   def checkConsistent(props: Props, lay: LabelLayout, what: String, label: String): Unit =
     inconsistency(props, lay, what, label).foreach(msg => throw new IllegalStateException(msg))
 
-  /** The consistency check's message, when the check fails. */
+  /** The consistency check's message, when the check fails: when the
+    * row's key set differs from the layout's. Set equality is checked as
+    * inclusion both ways, so a consistent row allocates no set. */
   def inconsistency(props: Props, lay: LabelLayout, what: String, label: String): Option[String] = {
-    val keys = props.map(_.k).toSet
-    if (keys == lay.propKeys.toSet) None
-    else Some(s"At least one $what of the class $label has more or fewer properties than another. " +
-      s"Reference properties: ${lay.propKeys.mkString(",")}, entity properties: ${keys.mkString(",")}.")
+    val ref = lay.propKeySet
+    if (props.forall(p => ref.contains(p.k)) && ref.forall(k => props.exists(_.k == k))) None
+    else {
+      val keys = props.map(_.k).toSet
+      Some(s"At least one $what of the class $label has more or fewer properties than another. " +
+        s"Reference properties: ${lay.propKeys.mkString(",")}, entity properties: ${keys.mkString(",")}.")
+    }
   }
 
   /** Neo4j header type suffix (reference: graph/_neo4j.py:105-125). */

@@ -34,20 +34,23 @@ final class NetworkxSink(
 
   def writeNodes(nodes: Dataset[KgNode]): Unit = {
     Tables.nodeAttrs(ctx, nodes).foreach { all =>
-      all.write
+      val dir = s"$graphDir/nodes.parquet"
+      all.write.options(graft.OutputFs.writeOptions(dir, BatchSink.hadoopConf()))
         .mode(if (nodesWritten) "append" else "overwrite")
-        .parquet(s"$graphDir/nodes.parquet")
+        .parquet(dir)
       nodesWritten = true
     }
   }
 
   def writeEdges(edges: Dataset[KgEdge]): Unit = {
+    val dir = s"$graphDir/edges.parquet"
     edges.select(
       col("src").as("source_id"),
       col("tgt").as("target_id"),
       col("label").as("relationship_label"),
-    ).write.mode(if (edgesWritten) "append" else "overwrite")
-      .parquet(s"$graphDir/edges.parquet")
+    ).write.options(graft.OutputFs.writeOptions(dir, BatchSink.hadoopConf()))
+      .mode(if (edgesWritten) "append" else "overwrite")
+      .parquet(dir)
     edgesWritten = true
   }
 

@@ -52,19 +52,17 @@ final class PandasCsvSink(
     // Paths.get collapses URI authorities, and appends must work where the
     // store has no POSIX append — the merged file is rebuilt and renamed in)
     val out = new Path(outDir)
-    val fs = out.getFileSystem(BatchSink.hadoopConf())
+    val conf = BatchSink.hadoopConf()
+    val fs = graft.OutputFs.fs(out, conf)
     fs.mkdirs(out)
     val target = new Path(out, s"$stem.csv")
     val tmp = new Path(out, "_graft_csv_tmp_" + java.util.UUID.randomUUID().toString.take(8))
-    indexed.coalesce(1).write.mode("overwrite")
-      .option("header", existingRows == 0).option("sep", delimiter).csv(tmp.toString)
+    indexed.coalesce(1).write.options(graft.OutputFs.writeOptions(tmp.toString, conf))
+      .mode("overwrite").option("header", existingRows == 0).option("sep", delimiter).csv(tmp.toString)
     fs.listStatus(tmp).find(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .foreach { st =>
-        if (existingRows == 0) {
-          if (fs.exists(target)) fs.delete(target, false)
-          if (!fs.rename(st.getPath, target))
-            throw new IllegalStateException(s"rename failed: ${st.getPath} -> $target")
-        } else {
+        if (existingRows == 0) graft.OutputFs.replace(fs, st.getPath, target)
+        else {
           // append-free accumulate: concat existing + new into a sibling,
           // then swap — works on object stores without append support
           val merged = new Path(tmp, s"$stem.merged.csv")
@@ -74,9 +72,7 @@ final class PandasCsvSink(
             try org.apache.hadoop.io.IOUtils.copyBytes(is, os, 65536, false)
             finally is.close()
           } finally os.close()
-          fs.delete(target, false)
-          if (!fs.rename(merged, target))
-            throw new IllegalStateException(s"rename failed: $merged -> $target")
+          graft.OutputFs.replace(fs, merged, target)
         }
       }
     fs.delete(tmp, true)

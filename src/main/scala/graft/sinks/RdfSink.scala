@@ -301,7 +301,8 @@ final class RdfSink(
   private def rewriteParts(transform: String => Option[String]): Unit = {
     import org.apache.hadoop.fs.Path
     val out = new Path(outDir)
-    val fs = out.getFileSystem(BatchSink.hadoopConf())
+    val conf = BatchSink.hadoopConf()
+    val fs = graft.OutputFs.fs(out, conf)
     if (!fs.exists(out) || !fs.getFileStatus(out).isDirectory) return
     fs.listStatus(out).iterator
       .filter(st => st.isFile && st.getPath.getName.endsWith(s".$ext"))
@@ -313,12 +314,8 @@ final class RdfSink(
           finally is.close()
         transform(body).foreach { wrapped =>
           val tmp = new Path(out, st.getPath.getName + "._hdr_tmp")
-          val os = fs.create(tmp, true)
-          try os.write(wrapped.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally os.close()
-          fs.delete(st.getPath, false)
-          if (!fs.rename(tmp, st.getPath))
-            throw new IllegalStateException(s"rename failed: $tmp -> ${st.getPath}")
+          graft.OutputFs.write(tmp, wrapped, conf)
+          graft.OutputFs.replace(fs, tmp, st.getPath)
         }
       }
   }

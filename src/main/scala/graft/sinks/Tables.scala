@@ -153,7 +153,11 @@ object RdfNTriples {
   }
 
   def write(ctx: KgContext, nodes: Dataset[KgNode], edges: Dataset[KgEdge], outDir: String): Unit = {
-    nodeTriples(ctx, nodes).write.mode("overwrite").text(outDir + "/nodes.nt")
-    edgeTriples(ctx, edges).write.mode("overwrite").text(outDir + "/edges.nt")
+    val conf = nodes.sparkSession.sparkContext.hadoopConfiguration
+    Seq(nodeTriples(ctx, nodes) -> "/nodes.nt", edgeTriples(ctx, edges) -> "/edges.nt").foreach {
+      case (lines, name) =>
+        lines.write.options(graft.OutputFs.writeOptions(outDir + name, conf)).mode("overwrite")
+          .text(outDir + name)
+    }
   }
 }

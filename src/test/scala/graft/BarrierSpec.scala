@@ -1,15 +1,23 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkInternals
 import graft.corpus.{AnalyticsDomain, Corpus}
 import graft.model._
 import graft.SparkTestBase.bag
 
 /** [[Barrier]] owns every frame main materializes and hands out: it
-  * evaluates its input once on both branches, and the frames main returns
-  * leave no CacheManager entry behind. */
+  * evaluates its input once on both branches, the frames main returns
+  * leave no CacheManager entry behind, and a barrier's input plan, with its
+  * SQL metrics, lives exactly as long as the barrier. */
 class BarrierSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestBase.spark
@@ -44,6 +52,82 @@ class BarrierSpec extends AnyFunSuite {
     }
   }
 
+  /** A barrier over a filtered range, the ids of its input plan's
+    * row-count metrics, and a weak reference to that plan. Built in a
+    * method of its own, so that once it returns no stack slot of the
+    * caller holds the input plan. */
+  private def barrierOfFilter() = {
+    val src = spark.range(0, 1000, 1, 2).filter($"id" % 3 =!= 0)
+    val b = Barrier(src)
+    val plan = src.queryExecution.executedPlan
+    val ids = plan.collect { case p if p.metrics.contains("numOutputRows") => p.metrics("numOutputRows").id }
+    (b, ids.toSet, new java.lang.ref.WeakReference(plan))
+  }
+
+  test("a barriered plan keeps its SQL metrics after another job checkpoints it and a GC runs") {
+    // a job still running over the barrier reports its source plan's
+    // metrics after a second job has checkpointed the barrier (dropping its
+    // lineage) and a GC has run: the accumulators must still be there
+    val errors = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-barrier-metrics", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage + Option(e.getThrown).fold("")(" " + _.getMessage)
+        if (msg.contains("accumulator")) errors.add(msg)
+      }
+    }
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    appender.start()
+    root.addAppender(appender)
+    val (b, rowMetrics, _) = barrierOfFilter()
+    val reported = new AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        t.taskInfo.accumulables.foreach { a =>
+          if (rowMetrics(a.id)) a.update.foreach(u => reported.addAndGet(u.asInstanceOf[Long]))
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val slow = new Thread(() => {
+      b.mapPartitions { it =>
+        val n = it.size.toLong // computes and stores this barrier partition
+        BarrierSpec.computed.countDown()
+        BarrierSpec.release.await(60, TimeUnit.SECONDS)
+        Iterator(n)
+      }.collect()
+    })
+    try {
+      slow.start()
+      assert(BarrierSpec.computed.await(60, TimeUnit.SECONDS))
+      // reads the stored blocks, then checkpoints the barrier
+      assert(b.count() == 666)
+      System.gc(); System.gc()
+      BarrierSpec.release.countDown()
+      slow.join(60000)
+      SparkInternals.drainListenerBus(spark.sparkContext)
+    } finally {
+      BarrierSpec.release.countDown()
+      root.removeAppender(appender)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(errors.isEmpty, errors.toArray.take(3).mkString("\n"))
+    assert(rowMetrics.nonEmpty)
+    assert(reported.get > 0, "no numOutputRows of the barriered plan was reported")
+  }
+
+  test("a barrier's input plan is freed with the barrier") {
+    def counted() = { val (b, _, plan) = barrierOfFilter(); assert(b.count() == 666); plan }
+    val plan = counted()
+    // a GC clears the barrier's key; the next barrier built drops its
+    // entry, and a second GC frees the input
+    val freed = (1 to 20).exists { _ =>
+      System.gc(); Thread.sleep(50)
+      Barrier(spark.range(1))
+      System.gc()
+      plan.get == null
+    }
+    assert(freed, "the input plan of an unreachable barrier is still reachable")
+  }
+
   test("runs, add calls, toDf and toNetworkx leave the CacheManager as they found it") {
     def cached = SparkInternals.cachedEntries(spark)
     val before = cached
@@ -75,4 +159,11 @@ class BarrierSpec extends AnyFunSuite {
     assert(rows(second) == want)
     assert(cached == before, "toDf / toNetworkx")
   }
+}
+
+object BarrierSpec {
+  // task-side gates of the metrics spec: tasks run in this JVM, so the
+  // closures reach these through the object, not through a serialized copy
+  val computed = new CountDownLatch(2)
+  val release = new CountDownLatch(1)
 }

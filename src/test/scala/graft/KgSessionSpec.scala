@@ -361,8 +361,16 @@ class KgSessionSpec extends AnyFunSuite {
     assert(rows.count(_.startsWith("p3;")) == 1)
   }
 
-  test("driver-written manifests, headers and import scripts leave no .crc sidecar") {
-    val dir = Files.createTempDirectory("graft-crc-").toString
+  private def walk(dir: String): List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val w = Files.walk(java.nio.file.Path.of(dir))
+    try w.iterator().asScala.toList finally w.close()
+  }
+
+  test("a local outDir gets no .crc sidecar and default permissions on any file or dir") {
+    import org.apache.hadoop.fs.permission.FsPermission
+    // the session creates the outDir itself, so its mode is the library's too
+    val dir = Files.createTempDirectory("graft-crc-").resolve("out").toString
     val a = new KgSession(spark, SparkTestBase.ctx, dir)
     a.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"))))
     a.writeEdges(spark.createDataset(Seq(RawEdge("r1", "p1", "p2", "phosphorylation", Props.empty))))
@@ -370,30 +378,90 @@ class KgSessionSpec extends AnyFunSuite {
     val b = new KgSession(spark, SparkTestBase.ctx, dir)
     b.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p3"))))
     b.writeImportCall()
-    def driverFile(name: String) =
-      name == "_manifest.json" || name.endsWith("-header.csv") || name.endsWith("-import-call.sh")
-    val names = {
-      import scala.jdk.CollectionConverters._
-      val w = Files.walk(java.nio.file.Path.of(dir))
-      try w.iterator().asScala.map(_.getFileName.toString).toList finally w.close()
-    }
-    assert(names.count(driverFile) >= 5, names.mkString(", "))
-    val sidecars = names.filter(n => n.startsWith(".") && n.endsWith(".crc") && driverFile(n.drop(1).dropRight(4)))
+    val paths = walk(dir)
+    val names = paths.map(_.getFileName.toString)
+    val kinds = Seq[(String, String => Boolean)](
+      "part file" -> (n => n.contains("-part") && n.endsWith(".csv")),
+      "snapshot file" -> (_.endsWith(".parquet")),
+      "manifest" -> (_ == "_manifest.json"),
+      "header" -> (_.endsWith("-header.csv")),
+      "import script" -> (_.endsWith("-import-call.sh")))
+    kinds.foreach { case (kind, is) => assert(names.exists(is), s"no $kind in ${names.mkString(", ")}") }
+    val sidecars = names.filter(_.endsWith(".crc"))
     assert(sidecars.isEmpty, sidecars.mkString(", "))
+    val umask = FsPermission.getUMask(spark.sparkContext.hadoopConfiguration)
+    def mode(p: FsPermission) = p.applyUMask(umask).toString
+    val wrong = paths.flatMap { p =>
+      val want = mode(if (Files.isDirectory(p)) FsPermission.getDirDefault else FsPermission.getFileDefault)
+      val got = java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      if (got == want) None else Some(s"$p: $got, want $want")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
     // the manifests still read, and the resumed session deduped against them
     val store = new CheckpointStore(spark, s"$dir/_graft_checkpoint")
     assert(store.lineage().count() > 0)
     assert(partLines(dir, "Protein").map(_.takeWhile(_ != ';')).sorted == List("p1", "p2", "p3"))
     // a sidecar from an earlier checksummed write is dropped with the old content
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, "x.json")
-    val os = fs.create(p, true)
+    val header = new org.apache.hadoop.fs.Path(dir, "Protein-header.csv")
+    val os = fs.create(header, true)
     try os.write("old".getBytes("UTF-8")) finally os.close()
-    assert(fs.exists(fs.getChecksumFile(p)))
-    DriverFiles.write(fs, p, "new content")
-    assert(!fs.exists(fs.getChecksumFile(p)))
-    val in = fs.open(p)
-    try assert(new String(in.readAllBytes(), "UTF-8") == "new content") finally in.close()
+    assert(fs.exists(fs.getChecksumFile(header)))
+    b.writeImportCall()
+    assert(!fs.exists(fs.getChecksumFile(header)))
+    val in = fs.open(header)
+    try assert(new String(in.readAllBytes(), "UTF-8").startsWith(":ID;")) finally in.close()
+  }
+
+  test("a four-call session and its import call into a local outDir start no process there") {
+    import scala.jdk.CollectionConverters._
+    // a real path: Hadoop names the canonical path in its `chmod` command
+    val dir = Files.createTempDirectory("graft-spawn-").toRealPath().toString
+    val s = new KgSession(spark, SparkTestBase.ctx, dir)
+    val directed = Props.of("directed" -> PV.bool(true))
+    def edges(i: Int) = spark.createDataset(Seq(
+      RawEdge(s"r$i", "p1", "p2", "phosphorylation", Props.empty),
+      RawEdge(s"t$i", "a", "b", "post_translational", directed)))
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withoutStackTrace()
+    rec.start()
+    try {
+      s.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"))))
+      s.writeEdges(edges(1))
+      s.writeNodes(spark.createDataset(Seq(protein("p2"), protein("p3"))))
+      s.writeEdges(edges(2))
+      s.writeImportCall()
+    } finally rec.stop()
+    val dump = Files.createTempFile("graft-spawn-", ".jfr")
+    try {
+      rec.dump(dump)
+      val spawns = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command")).filter(c => c != null && c.contains(dir))
+      assert(spawns.isEmpty,
+        s"${spawns.size} process starts name the outDir: ${spawns.take(3).mkString("; ")}")
+    } finally { rec.close(); Files.delete(dump) }
+    assert(partLines(dir, "Protein").length == 3)
+  }
+
+  test("an outDir whose snapshots carry .crc sidecars still resumes its seen keys") {
+    val dir = Files.createTempDirectory("graft-crc-resume-").toString
+    new KgSession(spark, SparkTestBase.ctx, dir)
+      .writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"))))
+    // rewrite every checkpoint file through the default, checksummed local FS
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val files = walk(s"$dir/_graft_checkpoint").filter(Files.isRegularFile(_))
+    files.foreach { f =>
+      val bytes = Files.readAllBytes(f)
+      val os = fs.create(new org.apache.hadoop.fs.Path(f.toUri), true)
+      try os.write(bytes) finally os.close()
+    }
+    assert(files.exists(_.getFileName.toString.endsWith(".parquet")))
+    assert(walk(dir).count(_.getFileName.toString.endsWith(".crc")) == files.length)
+    val b = new KgSession(spark, SparkTestBase.ctx, dir)
+    b.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"), protein("p3"))))
+    assert(partLines(dir, "Protein").map(_.takeWhile(_ != ';')).sorted == List("p1", "p2", "p3"))
+    assert(seenKeys(dir, "seen_node_ids") == Set("p1", "p2", "p3"))
   }
 
   test("rel-as-node entities are session-deduped across writeEdges calls") {

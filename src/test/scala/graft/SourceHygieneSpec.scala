@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * bytes are written as escapes (`"\u0001"`) instead. Main has one lineage
   * barrier, [[Barrier]]: no other main source checkpoints a dataset, and
   * every frame main materializes and hands out goes through it; a cache
-  * that one block uses only itself is released in that block's `finally`. */
+  * that one block uses only itself is released in that block's `finally`.
+  * Every write under `sinks/` and `checkpoint/` goes through
+  * [[OutputFs]], the one owner of the output filesystem. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private def scalaSources(root: String, atLeast: Int): Vector[java.nio.file.Path] = {
@@ -94,6 +96,23 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${b.group(1)}"
     assert(bad.isEmpty, bad.mkString(s"${bad.size} cache(s) with no owner; unpersist them in a " +
       "finally of the block that uses them, or hand the frame out through graft.Barrier:\n", "\n", ""))
+  }
+
+  test("every write under sinks/ and checkpoint/ goes through graft.OutputFs") {
+    // a DataFrameWriter (`.write` with no argument list) must take the
+    // owner's options first; a filesystem handle comes from the owner only
+    val writer = """\.write\b(?!\s*\()""".r
+    val owned = """\A\s*\.options\((graft\.)?OutputFs\.writeOptions\(""".r
+    val handle = """getFileSystem\(|FileSystem\.(get|getLocal|newInstance)\(""".r
+    val bad = for {
+      dir <- Seq("src/main/scala/graft/sinks", "src/main/scala/graft/checkpoint")
+      f <- scalaSources(dir, atLeast = 0)
+      text = stripComments(new String(Files.readAllBytes(f), "UTF-8"))
+      m <- writer.findAllMatchIn(text).filter(m => owned.findPrefixOf(text.substring(m.end)).isEmpty) ++
+        handle.findAllMatchIn(text)
+    } yield s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+    assert(bad.isEmpty, bad.mkString(s"${bad.size} write(s) around graft.OutputFs; take " +
+      "OutputFs.writeOptions on the writer and OutputFs.fs for a handle:\n", "\n", ""))
   }
 
   test("no .scala file under src/ contains a control byte other than tab, LF or CR") {

@@ -14,4 +14,7 @@ object SparkInternals {
     * until someone unpersists them. */
   def cachedEntries(spark: SparkSession): Int =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.numCachedEntries
+
+  /** Blocks until every event posted so far has reached the listeners. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
