@@ -31,10 +31,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `spark.graft.barrier=local` opts a cluster out (and lets tests restore
   * the default after exercising the reliable branch). Both branches are
   * spec-proven result-identical (PipelineSpec). Lazy in both cases: the
-  * barrier materializes with the first action, so building a plan never
-  * triggers jobs (the lmScore lesson); a caller that needs it built now
-  * runs one action on it. `SourceHygieneSpec` keeps raw checkpoint calls
-  * out of the rest of main.
+  * barrier's blocks are computed by the first action (the lmScore lesson),
+  * and a caller that needs it built now runs one action on it. Building a
+  * barrier over an exchange-free input (such as `runFused`'s mention sets)
+  * starts no job; over an input with an exchange it does, as under AQE
+  * `localCheckpoint(eager = false)` executes its input's physical plan, and
+  * with it every query stage below the last one (BarrierSpec).
+  * `SourceHygieneSpec` keeps raw checkpoint calls out of the rest of main.
   *
   * Each checkpoint's input stays reachable for as long as the checkpoint's
   * RDD is, which every plan and job that reads the barrier holds. The

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.AnalyticsDomain
 import graft.extract.{DocMention, MentionDict, Mentions}
@@ -73,17 +73,17 @@ final class KgPipeline(
   private def entityThinFromRanks(ranks: DataFrame): DataFrame = {
     val bd = bcDict
     ranks.as[Int]
-      .map { r => val e = bd.value.byRank(r); (e.curie, e.cls, e.surface) }
+      .map { r => val e = bd.value.byRank(r); (e.curie, e.cls, e.surface) }(KgPipeline.Thin)
       .toDF("curie", "cls", "surface")
   }
 
   /** Translated entity nodes for (curie, cls, surface) winner rows. */
   private def entityNodes(entityThin: DataFrame): Dataset[KgNode] =
     Translate.nodes(entityThin
-      .as[(String, String, String)]
+      .as(KgPipeline.Thin)
       .map { case (curie, cls, surface) =>
         RawNode(curie, cls, Props.of("name" -> PV.str(surface)))
-      }, bcCtx)
+      }(ModelEncoders.rawNode), bcCtx)
 
   private def nodesFrom(entityThin: DataFrame, docIds: Dataset[String]): Dataset[KgNode] = {
     // global cross-label id dedup (reference semantics): both branches are
@@ -129,7 +129,7 @@ final class KgPipeline(
       col("curie").as("tgt"),
       lit(edgeLabel("mentions")).as("label"),
       propsCol(("n", col("n"), "int")).as("props"),
-    ).as[KgEdge]
+    ).as(ModelEncoders.kgEdge)
 
   /** Co-occurrence edges derived from the (barriered) DocMention table —
     * no second corpus scan / trie pass; see
@@ -143,7 +143,7 @@ final class KgPipeline(
       col("tgt"),
       lit(edgeLabel("cooccurs")).as("label"),
       propsCol(("n_docs", col("n_docs"), "int")).as("props"),
-    ).as[KgEdge]
+    ).as(ModelEncoders.kgEdge)
 
   /** The string path's edge set: MENTIONS plus COOCCURS_WITH, both from
     * the one extraction pass in `dm`. */
@@ -166,9 +166,9 @@ final class KgPipeline(
       col("id").as("subj"),
       lit("rdf:type").as("pred"),
       coalesce(element_at(typeMap, col("label")), col("label")).as("obj"),
-    ).as[Triple]
+    ).as(ModelEncoders.triple)
     val edgeTriples = edges.select(
-      col("src").as("subj"), col("label").as("pred"), col("tgt").as("obj")).as[Triple]
+      col("src").as("subj"), col("label").as("pred"), col("tgt").as("obj")).as(ModelEncoders.triple)
     typeTriples.union(edgeTriples)
   }
 
@@ -232,7 +232,7 @@ final class KgPipeline(
         curieOf(shiftright(col("p"), 32).cast("int")).as("tgt"),
         lit(edgeLabel("mentions")).as("label"),
         propsCol(("n", col("p").bitwiseAND(lit(0xffffffffL)), "int")).as("props"),
-      ).as[KgEdge]
+      ).as(ModelEncoders.kgEdge)
 
   /** Co-occurrence pairs `(src, tgt, n_docs)` over the mention-set table,
     * `src < tgt` by curie: per-doc pair emission and the partial count run
@@ -264,7 +264,7 @@ final class KgPipeline(
       col("tgt"),
       lit(edgeLabel("cooccurs")).as("label"),
       propsCol(("n_docs", col("n_docs"), "int")).as("props"),
-    ).as[KgEdge]
+    ).as(ModelEncoders.kgEdge)
 
   /** [[triples]] built STRAIGHT from the packed mention sets — no
     * KgNode/KgEdge row building, no property bags, no count aggregation (a
@@ -314,7 +314,7 @@ final class KgPipeline(
       lit("rdf:type").as("pred"),
       coalesce(element_at(typeMap, col("label")), col("label")).as("obj"))
     val docType = ctxRef.inputLabelToClass.get("document") match {
-      case None => spark.emptyDataset[Triple].toDF()
+      case None => spark.emptyDataset(ModelEncoders.triple).toDF()
       case Some(cls) =>
         // KgNode.make keeps the class name as the label, so the rdf:type
         // obj of every document node is one driver-resolved constant
@@ -330,7 +330,7 @@ final class KgPipeline(
         curieOf(shiftright(col("p"), 32).cast("int")).as("obj"))
     val coocTriples = keys.filter(hi =!= lo)
       .select(curieOf(hi).as("subj"), lit(edgeLabel("cooccurs")).as("pred"), curieOf(lo).as("obj"))
-    entityType.union(docType).union(mentionTriples).union(coocTriples).as[Triple]
+    entityType.union(docType).union(mentionTriples).union(coocTriples).as(ModelEncoders.triple)
   }
 
   /** [[run]] on the fused mention-set path — the path the throughput
@@ -349,6 +349,9 @@ final class KgPipeline(
 }
 
 object KgPipeline {
+
+  /** (curie, cls, surface) rows of the fused node builders. */
+  private val Thin = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
 
   /** One pipeline per (SparkContext, config): the schema/ontology parse,
     * trie build and the two broadcasts are CONSTANTS of the domain, not

@@ -16,6 +16,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * stage) is never recomputed. The trait boundary is swappable for real
   * `spark.read.format("iceberg")` in production.
   *
+  * A versioned stage (`<stage>/v<N>`) is an append-only log, Iceberg's
+  * append snapshots plus data-file rewrites: each version writes only its
+  * own rows, and its manifest names the versions whose files make up its
+  * snapshot, read as one scan over their directories. A version either
+  * appends its files to the snapshot before it or, as a compaction,
+  * rebases: it holds the whole snapshot and drops the versions below it.
+  * Publishing a version retires the one before it (its manifest, and its
+  * data once no version reads it), so only the head stays committed, and a
+  * crash on either side of a manifest leaves a head whose snapshot is
+  * whole. A version whose manifest names no versions (written before the
+  * log) is a whole snapshot by itself.
+  *
   * All filesystem access goes through the Hadoop `FileSystem` that
   * [[graft.OutputFs]] resolves for `rootDir` (ADVICE r5): an
   * `s3a://`/`hdfs://` root works and no streams are leaked — the previous
@@ -52,7 +64,13 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
     * data, reads the footers, builds the manifest text and the read-back
     * frame. The stage stays uncommitted until [[publish]]; [[drop]]
     * discards a prepared stage that will not be published. */
-  def prepare(stage: String, df: DataFrame): CheckpointStore.Prepared = {
+  def prepare(stage: String, df: DataFrame): CheckpointStore.Prepared[DataFrame] =
+    new CheckpointStore.Prepared(stage, write(stage, df, ""), () => (),
+      spark.read.schema(CheckpointStore.nullable(df.schema)).parquet(stageDir(stage).toString))
+
+  /** Writes `df` as `stage`'s data and returns its manifest text, whose
+    * fields end with `extra`. */
+  private def write(stage: String, df: DataFrame, extra: String): String = {
     val dir = stageDir(stage)
     val t0 = System.nanoTime()
     // no `_SUCCESS` marker: the manifest is the commit point
@@ -73,20 +91,69 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
     val files = perFile.map { case (name, rows, bytes) =>
       s"""{"file":${q(name)},"rows":$rows,"bytes":$bytes}"""
     }
-    val manifest =
-      s"""{"stage":${q(stage)},"wall_ms":$wallMs,"n_files":${files.length},
-         |"total_rows":${perFile.map(_._2).sum},
-         |"partitions":[${files.mkString(",")}]}""".stripMargin.replace("\n", "")
-    new CheckpointStore.Prepared(stage, manifest,
-      spark.read.schema(CheckpointStore.nullable(df.schema)).parquet(dir.toString))
+    s"""{"stage":${q(stage)},"wall_ms":$wallMs,"n_files":${files.length},
+       |"total_rows":${perFile.map(_._2).sum},
+       |"partitions":[${files.mkString(",")}]$extra}""".stripMargin.replace("\n", "")
   }
 
-  /** The commit point of a [[prepare]]d stage: writes its manifest and
-    * returns its read-back frame. */
-  def publish(p: CheckpointStore.Prepared): DataFrame = {
+  /** The commit point of a prepared stage or version: writes its manifest,
+    * then retires what it supersedes, and returns its read-back. */
+  def publish[A](p: CheckpointStore.Prepared[A]): A = {
     graft.OutputFs.write(manifestPath(p.stage), p.manifest, conf)
-    p.frame
+    p.retire()
+    p.result
   }
+
+  // ------------------------------------------------------ versioned stages
+
+  /** The committed head of the versioned stage `stage` (its `v<N>`
+    * sub-stages), its snapshot read as one frame with `schema`; lists the
+    * stage once. A crash between a publish and its retirement leaves
+    * superseded versions committed: they are retired here. */
+  def head(stage: String, schema: StructType): Option[CheckpointStore.Version] = {
+    val committed = committedVersions(stage)
+    committed.lastOption.map { n =>
+      val reads = readsOf(stage, n)
+      committed.init.foreach(v => retire(stage, v, keepData = reads.contains(v)))
+      CheckpointStore.Version(n, reads, readVersions(stage, reads, Some(schema)))
+    }
+  }
+
+  /** Prepares the version after `prev` (`v1` without one) of the versioned
+    * stage `stage`. It appends `df`'s files to `prev`'s snapshot, or, with
+    * `rebase`, holds `df` alone: a compaction, whose publish then drops
+    * every lower version. Its manifest names the versions whose files make
+    * up its snapshot; publishing it retires `prev`, which keeps its data
+    * when the new version still reads it. [[drop]] discards a prepared
+    * version that will not be published. */
+  def prepareVersion(stage: String, prev: Option[CheckpointStore.Version], df: DataFrame,
+      rebase: Boolean): CheckpointStore.Prepared[CheckpointStore.Version] = {
+    val n = prev.fold(1)(_.n + 1)
+    val reads = if (rebase) Seq(n) else prev.fold(Seq.empty[Int])(_.reads) :+ n
+    val manifest = write(s"$stage/v$n", df, s""","versions":[${reads.mkString(",")}]""")
+    val supersede = () =>
+      if (rebase) versionDirs(stage).filter(_ < n).foreach(v => drop(s"$stage/v$v"))
+      else prev.foreach(p => retire(stage, p.n, keepData = true))
+    new CheckpointStore.Prepared(s"$stage/v$n", manifest, supersede, CheckpointStore.Version(n, reads,
+      readVersions(stage, reads, Some(CheckpointStore.nullable(df.schema)))))
+  }
+
+  /** A superseded version leaves the snapshot: its manifest goes, and its
+    * data too unless the head still reads it. */
+  private def retire(stage: String, v: Int, keepData: Boolean): Unit =
+    if (keepData) fs.delete(manifestPath(s"$stage/v$v"), false) else drop(s"$stage/v$v")
+
+  /** The versions whose files make up committed version `n` of `stage`:
+    * the ones its manifest names, or `n` alone (a version whose manifest
+    * names none holds its whole snapshot). */
+  private def readsOf(stage: String, n: Int): Seq[Int] =
+    CheckpointStore.Versions.findFirstMatchIn(readString(manifestPath(s"$stage/v$n")))
+      .fold(Seq(n))(_.group(1).split(',').map(_.toInt).toSeq)
+
+  /** The snapshot made up of versions `reads` of `stage`: one scan over
+    * their directories. */
+  private def readVersions(stage: String, reads: Seq[Int], schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(reads.map(v => stageDir(s"$stage/v$v").toString): _*)
 
   /** Remove a snapshot, committed (compaction) or only prepared; no-op
     * when absent. */
@@ -95,11 +162,15 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
     if (fs.exists(dir)) fs.delete(dir, true)
   }
 
-  /** Read a committed snapshot (stage must be committed). With the
+  /** Read a committed snapshot (stage must be committed); a version of a
+    * versioned stage reads every version its manifest names. With the
     * snapshot's `schema` given, no schema is inferred from its files. */
   def read(stage: String, schema: Option[StructType] = None): DataFrame = {
     require(isCommitted(stage), s"stage $stage is not committed")
-    schema.fold(spark.read)(spark.read.schema).parquet(stageDir(stage).toString)
+    stage match {
+      case CheckpointStore.VersionStage(base, n) => readVersions(base, readsOf(base, n.toInt), schema)
+      case _ => schema.fold(spark.read)(spark.read.schema).parquet(stageDir(stage).toString)
+    }
   }
 
   /** Read the committed snapshot, or compute + commit it. */
@@ -133,18 +204,21 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
       .toSeq.sorted
   }
 
-  /** Committed `v<N>` sub-snapshots of a versioned stage (e.g. the
-    * KgSession seen-set key spaces): compaction deletes superseded
-    * versions, so the live version is `committedVersions(space).maxOption`
+  /** Committed `v<N>` versions of a versioned stage (e.g. the KgSession
+    * seen-set key spaces). Publishing a version retires the one before, so
+    * this is the head alone (a crash can leave more; the head is the max),
     * and lower numbers may be holes. */
-  def committedVersions(stage: String): Seq[Int] = {
+  def committedVersions(stage: String): Seq[Int] =
+    versionDirs(stage).filter(n => isCommitted(s"$stage/v$n"))
+
+  /** Every `v<N>` directory of a versioned stage, committed or not. */
+  private def versionDirs(stage: String): Seq[Int] = {
     val base = stageDir(stage)
     if (!fs.exists(base)) return Nil
     fs.listStatus(base).iterator
       .map(_.getPath.getName)
       .collect { case s if s.startsWith("v") && s.length > 1 && s.drop(1).forall(_.isDigit) =>
         s.drop(1).toInt }
-      .filter(n => isCommitted(s"$stage/v$n"))
       .toSeq.sorted
   }
 
@@ -183,9 +257,18 @@ final class CheckpointStore(spark: SparkSession, rootDir: String) {
 
 object CheckpointStore {
 
-  /** A stage whose data is written and whose manifest is not. */
-  final class Prepared private[checkpoint] (private[checkpoint] val stage: String,
-      private[checkpoint] val manifest: String, private[checkpoint] val frame: DataFrame)
+  /** A stage whose data is written and whose manifest is not; `result` is
+    * what its publish returns, `retire` what the publish then removes. */
+  final class Prepared[A] private[checkpoint] (private[checkpoint] val stage: String,
+      private[checkpoint] val manifest: String, private[checkpoint] val retire: () => Unit,
+      private[checkpoint] val result: A)
+
+  /** Committed version `n` of a versioned stage: the versions whose files
+    * make up its snapshot (`n` last) and that snapshot as one frame. */
+  final case class Version(n: Int, reads: Seq[Int], frame: DataFrame)
+
+  private val Versions = "\"versions\":\\[([0-9,]+)\\]".r
+  private val VersionStage = "(.+)/v([0-9]+)".r
 
   /** The schema Spark's Parquet writer stores for `t`: every field, array
     * element and map value nullable (Spark's own `asNullable` is internal). */

@@ -25,7 +25,7 @@ object Dedup {
 
   /** Per-label edge dedup on coalesce(relId, src_tgt). */
   def edges(ds: Dataset[KgEdge]): Dataset[KgEdge] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[KgEdge]
+    implicit val enc = ModelEncoders.kgEdge
     ds.withColumn("_k", coalesce(col("relId"), concat_ws("_", col("src"), col("tgt"))))
       .dropDuplicates("label", "_k")
       .drop("_k")
@@ -35,7 +35,7 @@ object Dedup {
   /** Rel-as-node dedup keyed on (node label, reified node id)
     * (reference: _deduplicate.py:83-111). */
   def relAsNodes(ds: Dataset[RelAsNode]): Dataset[RelAsNode] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[RelAsNode]
+    implicit val enc = ModelEncoders.relAsNode
     ds.withColumn("_lbl", col("node.label"))
       .withColumn("_id", col("node.id"))
       .dropDuplicates("_lbl", "_id")
@@ -48,7 +48,7 @@ object Dedup {
     * Equivalent result to [[nodes]]; use when a handful of hub ids dominate.
     */
   def nodesSalted(ds: Dataset[KgNode], saltBuckets: Int = 64): Dataset[KgNode] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[KgNode]
+    implicit val enc = ModelEncoders.kgNode
     ds.withColumn("_salt", pmod(spark_partition_id(), lit(saltBuckets)))
       .dropDuplicates("id", "_salt") // phase 1: per-salt distinct (map-side heavy)
       .drop("_salt")

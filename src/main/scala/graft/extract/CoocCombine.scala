@@ -3,7 +3,7 @@ package graft.extract
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Per-partition combiners for packed co-occurrence pairs — the
   * replacement for explode → partial HashAggregate on the corpus-sized pair
@@ -91,15 +91,17 @@ object CoocCombine {
   def partialPairCounts(pmRows: Dataset[Array[Long]],
       bcDict: Broadcast[MentionDict], maxEntities: Int,
       flushAt: Int = 1 << 22, denseMax: Int = DenseMaxDictCounts): Dataset[(Long, Long)] = {
-    val spark = pmRows.sparkSession
-    import spark.implicits._
     pmRows.mapPartitions { it =>
       val dict = bcDict.value
       val n = dict.byRank.length
       if (n <= denseMax) densePairs(it, dict, maxEntities, n, rankKeys = false)
       else hashPairs(it, dict, maxEntities, flushAt)
-    }
+    }(PairCount)
   }
+
+  /** (pair, cnt) rows, derived once (a product encoder walks its type by
+    * reflection on every derivation). */
+  private val PairCount = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
   /** Shared-scan key kernel of the fused triples path: ONE pass over the
     * packed mention sets emits BOTH key families the triple table needs,

@@ -116,6 +116,10 @@ final case class DocMention(
   */
 object Mentions {
 
+  // derived once, on the driver (tasks call this object's helpers)
+  private lazy val MentionEncoder = org.apache.spark.sql.Encoders.product[Mention]
+  private lazy val DocMentionEncoder = org.apache.spark.sql.Encoders.product[DocMention]
+
   /** Default cap on distinct entities per document for co-occurrence pair
     * emission. Pair output is quadratic in per-doc entities; against an
     * open 10⁶-term dictionary a single entity-list page would otherwise
@@ -184,7 +188,7 @@ object Mentions {
   }
 
   def detect(docs: Dataset[Doc], bcDict: Broadcast[MentionDict]): Dataset[Mention] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Mention]
+    implicit val enc = MentionEncoder
     docs.mapPartitions { it =>
       val dict = bcDict.value
       it.flatMap { doc =>
@@ -226,7 +230,7 @@ object Mentions {
     * This is the string path's entry: downstream dedups operate on these
     * thin rows. */
   def detectPerDoc(docs: Dataset[Doc], bcDict: Broadcast[MentionDict]): Dataset[DocMention] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[DocMention]
+    implicit val enc = DocMentionEncoder
     docs.mapPartitions { it =>
       val dict = bcDict.value
       // integer-keyed occurrence counting, one DocMention built per distinct
@@ -363,7 +367,7 @@ object Mentions {
     * matched; the matched surface stays on the [[Mention]] as provenance. */
   def toRawNodesWithDocs(mentions: Dataset[Mention],
       bcDict: Broadcast[MentionDict]): Dataset[RawNode] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[RawNode]
+    implicit val enc = ModelEncoders.rawNode
     mentions.filter(_.cls != "media").flatMap { m =>
       val dict = bcDict.value
       val e = dict.byRank(dict.rankOfCurie(m.curie))
@@ -375,7 +379,7 @@ object Mentions {
 
   /** Document->entity mention edges. */
   def toMentionEdges(mentions: Dataset[Mention], inputLabel: String = "mentions"): Dataset[RawEdge] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[RawEdge]
+    implicit val enc = ModelEncoders.rawEdge
     mentions.filter(_.cls != "media").map { m =>
       RawEdge(null, m.doc_id, m.curie, inputLabel, Props.empty)
     }

@@ -177,3 +177,17 @@ object Py {
     }
   }
 }
+
+/** The model's product encoders, each derived once: `Encoders.product`
+  * walks its type by Scala reflection on every call, which every typed
+  * operator of a write call or a fused plan build would otherwise pay. */
+object ModelEncoders {
+  import org.apache.spark.sql.{Encoder, Encoders}
+  val rawNode: Encoder[RawNode] = Encoders.product[RawNode]
+  val rawEdge: Encoder[RawEdge] = Encoders.product[RawEdge]
+  val kgNode: Encoder[KgNode] = Encoders.product[KgNode]
+  val kgEdge: Encoder[KgEdge] = Encoders.product[KgEdge]
+  val relAsNode: Encoder[RelAsNode] = Encoders.product[RelAsNode]
+  val entity: Encoder[Entity] = Encoders.product[Entity]
+  val triple: Encoder[Triple] = Encoders.product[Triple]
+}

@@ -60,7 +60,7 @@ object Translate {
   /** Translate node tuples; input labels with no schema class are dropped
     * (account for them with [[missingTypes]]). */
   def nodes(ds: Dataset[RawNode], bc: Broadcast[KgContext]): Dataset[KgNode] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[KgNode]
+    implicit val enc = ModelEncoders.kgNode
     ds.flatMap { rn =>
       val ctx = bc.value
       ctx.inputLabelToClass.get(rn.inputLabel) match {
@@ -90,13 +90,13 @@ object Translate {
   def constNodes(df: DataFrame, idCol: String, inputLabel: String,
       bc: Broadcast[KgContext]): Dataset[KgNode] = {
     import org.apache.spark.sql.functions._
-    implicit val enc = org.apache.spark.sql.Encoders.product[KgNode]
+    implicit val enc = ModelEncoders.kgNode
     val ctx = bc.value // driver-side resolution; nothing label-sized ships
     ctx.inputLabelToClass.get(inputLabel) match {
       case None => df.sparkSession.emptyDataset[KgNode]
       case Some(_) if ctx.config.strictMode =>
         val encS = org.apache.spark.sql.Encoders.STRING
-        val encRaw = org.apache.spark.sql.Encoders.product[RawNode]
+        val encRaw = ModelEncoders.rawNode
         nodes(df.select(col(idCol)).as[String](encS)
           .map(id => RawNode(id, inputLabel, Props.empty))(encRaw), bc)
       case Some(cls) =>
@@ -132,7 +132,7 @@ object Translate {
   /** Translate edge tuples into edges or reified rel-as-node triplets
     * (reference: _translate.py:179-295). */
   def edges(ds: Dataset[RawEdge], bc: Broadcast[KgContext]): Dataset[Entity] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Entity]
+    implicit val enc = ModelEncoders.entity
     ds.flatMap { re =>
       val ctx = bc.value
       if (ctx.config.strictMode) {

@@ -8,7 +8,7 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkInternals
 import graft.corpus.{AnalyticsDomain, Corpus}
 import graft.model._
@@ -50,6 +50,35 @@ class BarrierSpec extends AnyFunSuite {
         assert(files > 0, "the reliable branch wrote no checkpoint files")
       }
     }
+  }
+
+  /** Spark jobs that building `b` starts on this thread. */
+  private def jobsToBuild(b: => Unit): Long = {
+    val (sc, key) = (spark.sparkContext, "graft.spec.barrier-build")
+    val started = new AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(key) != null) started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, "1")
+    try { b; SparkInternals.drainListenerBus(sc) } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    started.get
+  }
+
+  test("building a barrier starts no job over an exchange-free input; over an exchange it does") {
+    val docs = spark.createDataset(Seq(
+      Doc("d1", Seq(Span("text", "aspirin treats headache", null, 0))),
+      Doc("d2", Seq(Span("text", "ibuprofen and aspirin", null, 0)))))
+    // runFused's mention sets: no exchange below the barrier
+    val ms = KgPipeline.analytics(spark).mentionSets(docs)
+    assert(jobsToBuild(Barrier(ms)) == 0)
+    // under AQE, building a local checkpoint runs every query stage of its input
+    val grouped = spark.range(0, 200, 1, 4).groupBy(($"id" % 7).as("k")).count()
+    assert(jobsToBuild(Barrier(grouped)) > 0)
   }
 
   /** A barrier over a filtered range, the ids of its input plan's

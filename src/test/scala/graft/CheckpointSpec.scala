@@ -51,6 +51,28 @@ class CheckpointSpec extends AnyFunSuite {
     assert(store.committedVersions("seen_node_ids").maxOption.contains(3))
   }
 
+  test("a versioned stage reads its head's versions as one snapshot; head retires what a crash left") {
+    val root = Files.createTempDirectory("graft-ckpt-").toString
+    val store = new CheckpointStore(spark, root)
+    def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().sorted.toSeq
+    val v1 = store.publish(store.prepareVersion("log", None, spark.range(0, 3).toDF("id"), rebase = false))
+    val v2 = store.publish(store.prepareVersion("log", Some(v1), spark.range(3, 5).toDF("id"), rebase = false))
+    assert(v2.reads == Seq(1, 2) && store.committedVersions("log") == Seq(2))
+    assert(ids(v2.frame) == (0L until 5L) && ids(store.read("log/v2")) == (0L until 5L))
+    // a crash between v2's manifest and v1's retirement leaves v1 committed
+    Files.writeString(java.nio.file.Paths.get(root, "stage=log", "v1", "_manifest.json"),
+      """{"stage":"log/v1","versions":[1]}""")
+    assert(store.committedVersions("log") == Seq(1, 2))
+    val head = store.head("log", new org.apache.spark.sql.types.StructType().add("id", "long")).get
+    assert(head.n == 2 && head.reads == Seq(1, 2) && ids(head.frame) == (0L until 5L))
+    assert(store.committedVersions("log") == Seq(2))
+    // a rebase holds the whole snapshot and drops the versions below it
+    val v3 = store.publish(store.prepareVersion("log", Some(head),
+      head.frame.union(spark.range(5, 6).toDF("id")), rebase = true))
+    assert(v3.reads == Seq(3) && ids(store.read("log/v3")) == (0L until 6L))
+    assert(new java.io.File(root, "stage=log").list().toSeq == Seq("v3"))
+  }
+
   test("lineage manifests expose per-partition rows") {
     val root = Files.createTempDirectory("graft-ckpt-").toString
     val store = new CheckpointStore(spark, root)

@@ -37,10 +37,10 @@ class KgSessionSpec extends AnyFunSuite {
     rows
   }
 
+  /** The keys of a key space's seen log, read through its head version. */
   private def seenKeys(dir: String, space: String): Set[String] = {
-    val base = s"$dir/_graft_checkpoint/stage=$space"
-    val live = new java.io.File(base).list().filter(_.startsWith("v")).map(_.drop(1).toInt).max
-    spark.read.parquet(s"$base/v$live").select("_k").as[String].collect().toSet
+    val store = new CheckpointStore(spark, s"$dir/_graft_checkpoint")
+    store.read(s"$space/v${store.committedVersions(space).max}").select("_k").as[String].collect().toSet
   }
 
   test("duplicates are dropped across successive add calls (first wins)") {
@@ -212,7 +212,7 @@ class KgSessionSpec extends AnyFunSuite {
     // so it succeeds) is never published: the seen state is unchanged
     assert(store.committedVersions("seen_node_ids") == before)
     val stageDirs = new java.io.File(s"${s.outDir}/_graft_checkpoint/stage=seen_node_ids").list()
-    assert(stageDirs.filter(_.startsWith("v")).toSet == Set(s"v${before.head}"))
+    assert(stageDirs.filter(_.startsWith("v")).toSet == (1 to before.head).map(v => s"v$v").toSet)
     s.writeNodesForce(spark.createDataset(Seq(forced("p3", declared))))
     assert(partLines(s.outDir, "Protein").map(_.split(";")(0)).sorted == List("p1", "p2", "p3"))
   }
@@ -270,7 +270,7 @@ class KgSessionSpec extends AnyFunSuite {
     // the cache is built before its consumers start, so none of them
     // submits a cache stage of its own
     assert(calls.map(c => perCall(c).count(_._2)) == Seq(1, 1, 1, 1))
-    assert(calls.map(c => perCall(c).length) == Seq(6, 7, 9, 11))
+    assert(calls.map(c => perCall(c).length) == Seq(5, 6, 6, 7))
   }
 
   test("a small call writes one part file per label and one Parquet file per seen snapshot") {
@@ -280,7 +280,7 @@ class KgSessionSpec extends AnyFunSuite {
     s.writeEdges(spark.createDataset((1 to 20).flatMap(i => Seq(
       RawEdge(s"r$i", s"p$i", s"p${i + 1}", "phosphorylation", Props.empty),
       RawEdge(s"t$i", s"a$i", s"b$i", "post_translational", directed)))))
-    // the second nodes call's snapshot unions the live one with the batch
+    // the second nodes call appends its fresh keys to the node log
     s.writeNodes(spark.createDataset((15 to 30).map(i => protein(s"p$i"))))
     val parts = new java.io.File(s.outDir).list().filter(n => n.contains("-part") && !n.startsWith("."))
       .sorted.toSeq
@@ -290,15 +290,22 @@ class KgSessionSpec extends AnyFunSuite {
     assert(partLines(s.outDir, "Protein").length == 30)
     val store = new CheckpointStore(spark, s"${s.outDir}/_graft_checkpoint")
     val spaces = Seq("seen_node_ids" -> 2, "seen_rel_keys" -> 1, "seen_edge_keys" -> 1)
-    spaces.foreach { case (space, v) =>
-      assert(store.committedVersions(space) == Seq(v))
-      val files = new java.io.File(s"${s.outDir}/_graft_checkpoint/stage=$space/v$v").list()
-      assert(files.count(_.endsWith(".parquet")) == 1, s"$space: ${files.mkString(", ")}")
+    spaces.foreach { case (space, head) =>
+      assert(store.committedVersions(space) == Seq(head))
+      // the base and each delta: one Parquet file per version
+      (1 to head).foreach { v =>
+        val files = new java.io.File(s"${s.outDir}/_graft_checkpoint/stage=$space/v$v").list()
+        assert(files.count(_.endsWith(".parquet")) == 1, s"$space/v$v: ${files.mkString(", ")}")
+      }
     }
+    assert(seenKeys(s.outDir, "seen_node_ids") == (1 to 30).map(i => s"p$i").toSet)
+    // the head's manifest describes its own files and names the versions it reads
     val lineage = store.lineage().select("stage", "n_files", "total_rows").as[(String, Long, Long)]
       .collect().sortBy(_._1).toSeq
-    assert(lineage == Seq(("seen_edge_keys/v1", 1L, 20L), ("seen_node_ids/v2", 1L, 30L),
+    assert(lineage == Seq(("seen_edge_keys/v1", 1L, 20L), ("seen_node_ids/v2", 1L, 10L),
       ("seen_rel_keys/v1", 1L, 20L)))
+    assert(store.lineage().filter($"stage" === "seen_node_ids/v2").select("versions")
+      .as[Seq[Long]].head() == Seq(1L, 2L))
     // neither the snapshots nor the part-file staging leave a `_SUCCESS`
     val success = Files.walk(java.nio.file.Path.of(s.outDir)).filter(_.getFileName.toString == "_SUCCESS")
     try assert(success.count() == 0) finally success.close()
@@ -462,6 +469,117 @@ class KgSessionSpec extends AnyFunSuite {
     b.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"), protein("p3"))))
     assert(partLines(dir, "Protein").map(_.takeWhile(_ != ';')).sorted == List("p1", "p2", "p3"))
     assert(seenKeys(dir, "seen_node_ids") == Set("p1", "p2", "p3"))
+  }
+
+  /** Each label's part-file lines as a multiset, and each header file. */
+  private def artifacts(dir: String): Map[String, Map[String, Int]] =
+    new java.io.File(dir).listFiles().toSeq.filter(_.isFile).map(_.getName)
+      .collect {
+        case n if n.contains("-part") => n.substring(0, n.indexOf("-part")) -> n
+        case n if n.endsWith("-header.csv") => n -> n
+      }
+      .groupBy(_._1).map { case (label, fs) => label -> SparkTestBase.multiset(fs.flatMap { case (_, n) =>
+        Files.readAllLines(java.nio.file.Path.of(dir, n)).toArray(Array.empty[String]).toSeq
+      }) }
+
+  private val seenSchema = new org.apache.spark.sql.types.StructType()
+    .add("_k", "string").add("_ts", "long")
+
+  test("a crash between a delta's data and its manifest resumes like an uninterrupted session") {
+    val directed = Props.of("directed" -> PV.bool(true))
+    def edges(ids: Seq[Int]) = spark.createDataset(ids.flatMap(i => Seq(
+      RawEdge(s"r$i", s"p$i", s"p${i + 1}", "phosphorylation", Props.empty),
+      RawEdge(s"t$i", s"a$i", s"b$i", "post_translational", directed))))
+    def nodes(ids: Seq[Int]) = spark.createDataset(ids.map(i => protein(s"p$i")))
+    val calls: Seq[KgSession => Unit] = Seq(
+      _.writeNodes(nodes(1 to 4)), _.writeEdges(edges(1 to 3)),
+      _.writeNodes(nodes(3 to 8)), _.writeEdges(edges(2 to 6)))
+    val whole = session()
+    calls.foreach(_(whole))
+    whole.writeImportCall()
+
+    val dir = Files.createTempDirectory("graft-crash-").toString
+    val a = new KgSession(spark, SparkTestBase.ctx, dir)
+    calls.take(2).foreach(_(a))
+    // the third call wrote its node delta and died before the manifest
+    val store = new CheckpointStore(spark, s"$dir/_graft_checkpoint")
+    val head = store.head("seen_node_ids", seenSchema)
+    store.prepareVersion("seen_node_ids", head,
+      (3 to 8).map(i => s"p$i").toDF("_k").withColumn("_ts", org.apache.spark.sql.functions.lit(0L)),
+      rebase = false)
+    assert(new java.io.File(s"$dir/_graft_checkpoint/stage=seen_node_ids/v2").isDirectory)
+    assert(store.committedVersions("seen_node_ids") == Seq(1))
+    val b = new KgSession(spark, SparkTestBase.ctx, dir)
+    calls.drop(2).foreach(_(b))
+    b.writeImportCall()
+
+    Seq("seen_node_ids", "seen_rel_keys", "seen_edge_keys").foreach { space =>
+      assert(seenKeys(dir, space) == seenKeys(whole.outDir, space), space)
+    }
+    assert(seenKeys(dir, "seen_node_ids") == (1 to 8).map(i => s"p$i").toSet)
+    assert(artifacts(dir) == artifacts(whole.outDir))
+    assert(artifacts(dir)("Protein").keys.map(_.takeWhile(_ != ';')).toSet == seenKeys(dir, "seen_node_ids"))
+  }
+
+  test("the call after MaxVersions versions compacts the log into one version of the live keys") {
+    var clock = 0L
+    val s = new KgSession(spark, SparkTestBase.ctx, Files.createTempDirectory("graft-compact-").toString,
+      seenTtlMs = Some(1000L), nowMs = () => clock)
+    val store = new CheckpointStore(spark, s"${s.outDir}/_graft_checkpoint")
+    def call(i: Int): Unit = {
+      clock = 200L * i
+      // each call re-sends p0, so it stays live; p<i> is seen once
+      s.writeNodes(spark.createDataset(Seq(protein("p0"), protein(s"p$i"))))
+    }
+    (0 until KgSession.MaxVersions).foreach(call)
+    val logDir = new java.io.File(s"${s.outDir}/_graft_checkpoint/stage=seen_node_ids")
+    assert(logDir.list().toSet == (1 to KgSession.MaxVersions).map(v => s"v$v").toSet)
+    assert(seenKeys(s.outDir, "seen_node_ids") == (0 until KgSession.MaxVersions).map(i => s"p$i").toSet)
+    val k = KgSession.MaxVersions
+    call(k)
+    // cut-off 200k - 1000: keys last seen before call k - 5 expired
+    val live = (Seq(0) ++ (k - 5 to k)).map(i => s"p$i").toSet
+    assert(logDir.list().toSeq == Seq(s"v${k + 1}"))
+    assert(store.committedVersions("seen_node_ids") == Seq(k + 1))
+    assert(seenKeys(s.outDir, "seen_node_ids") == live)
+    val rows = store.read(s"seen_node_ids/v${k + 1}").as[(String, Long)].collect().toMap
+    assert(rows == live.map(id => id -> (if (id == "p0") 200L * k
+      else 200L * id.drop(1).toInt)).toMap)
+    // the compacted log still dedups, and the next call appends to it
+    clock = 200L * (k + 1)
+    s.writeNodes(spark.createDataset(Seq(protein(s"p$k"), protein("p1"))))
+    assert(partLines(s.outDir, "Protein").count(_.startsWith("p1;")) == 2)
+    assert(partLines(s.outDir, "Protein").count(_.startsWith(s"p$k;")) == 1)
+    assert(logDir.list().toSet == Set(s"v${k + 1}", s"v${k + 2}"))
+
+    // without a TTL the compacted version is the union of the disjoint deltas
+    val plain = session()
+    (0 to k).foreach(i => plain.writeNodes(spark.createDataset(Seq(protein(s"p$i"), protein(s"p${i + 1}")))))
+    val plainStore = new CheckpointStore(spark, s"${plain.outDir}/_graft_checkpoint")
+    assert(plainStore.committedVersions("seen_node_ids") == Seq(k + 1))
+    val keys = plainStore.read(s"seen_node_ids/v${k + 1}").select("_k").as[String].collect().toSeq
+    assert(keys.sorted == (0 to k + 1).map(i => s"p$i").sorted)
+    assert(partLines(plain.outDir, "Protein").length == k + 2)
+  }
+
+  test("an outDir holding one whole seen snapshot from before the log resumes and appends") {
+    val dir = Files.createTempDirectory("graft-whole-snapshot-").toString
+    val store = new CheckpointStore(spark, s"$dir/_graft_checkpoint")
+    // the earlier layout: one compacted snapshot, its manifest naming no versions
+    store.commit("seen_node_ids/v3", Seq("p1", "p2").toDF("_k")
+      .withColumn("_ts", org.apache.spark.sql.functions.lit(5L)))
+    assert(store.lineage().columns.toSeq.intersect(Seq("versions")).isEmpty)
+    val s = new KgSession(spark, SparkTestBase.ctx, dir)
+    s.writeNodes(spark.createDataset(Seq(protein("p1"), protein("p2"), protein("p3"))))
+    assert(partLines(dir, "Protein").map(_.takeWhile(_ != ';')) == List("p3"))
+    assert(store.committedVersions("seen_node_ids") == Seq(4))
+    assert(seenKeys(dir, "seen_node_ids") == Set("p1", "p2", "p3"))
+    assert(new java.io.File(s"$dir/_graft_checkpoint/stage=seen_node_ids").list().sorted.toSeq ==
+      Seq("v3", "v4"))
+    new KgSession(spark, SparkTestBase.ctx, dir)
+      .writeNodes(spark.createDataset(Seq(protein("p2"), protein("p4"))))
+    assert(partLines(dir, "Protein").map(_.takeWhile(_ != ';')).sorted == List("p3", "p4"))
+    assert(seenKeys(dir, "seen_node_ids") == Set("p1", "p2", "p3", "p4"))
   }
 
   test("rel-as-node entities are session-deduped across writeEdges calls") {
@@ -707,11 +825,13 @@ class KgSessionSpec extends AnyFunSuite {
     val ids = s.toDf()("protein").select("node_id").as[String].collect().sorted.toSeq
     assert(ids == Seq("a", "b", "b", "c"),
       s"'b' must re-emit after expiry, 'a' must stay deduped; got $ids")
-    // compaction: exactly ONE live snapshot version remains on disk
+    // the base and two deltas remain on disk; only the head is committed
     val base = java.nio.file.Paths.get(s"$outDir/_graft_checkpoint/stage=seen_node_ids")
     import scala.jdk.CollectionConverters._
-    val versions = Files.list(base).iterator().asScala.map(_.getFileName.toString).toList
-    assert(versions == List("v3"), s"superseded snapshots must be compacted away, got $versions")
+    val versions = Files.list(base).iterator().asScala.map(_.getFileName.toString).toList.sorted
+    assert(versions == List("v1", "v2", "v3"), s"the base and two deltas, got $versions")
+    assert(new CheckpointStore(spark, s"$outDir/_graft_checkpoint").committedVersions("seen_node_ids") ==
+      Seq(3))
     // and a NEW session over the same outDir resumes from the compacted max
     clock = 1300L
     val s2 = new KgSession(spark, SparkTestBase.ctx, outDir,
